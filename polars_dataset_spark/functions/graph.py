@@ -9,13 +9,22 @@ when A~B and B~C but A is also C's only link to the kept set.
 
 Algorithm: alternating large-star / small-star contraction
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC 2014 — public). Each round is one shuffle (groupBy(u) + join
-back); the edge set monotonically contracts toward star graphs
-(every node → its component's minimum id) in O(log^2 n) rounds —
-on the chain graphs used in tests, ~log n doubling steps, never the
-O(diameter) rounds naive label propagation would need. All DataFrame
-ops: the only driver-side values are the per-round convergence
-fingerprint (2 longs) — nothing scales with |V| or |E| on the driver.
+SoCC 2014 — public). The edge set monotonically contracts toward a
+star forest (every node → its component's minimum id) in O(log^2 n)
+rounds — on the chain graphs used in tests, ~log n doubling steps,
+never the O(diameter) rounds naive label propagation would need.
+
+Each round is ONE Spark action — its eager checkpoint — and two
+shuffles: one keyed on u that deduplicates the symmetric edge view and
+feeds large-star's window, one keyed on v for small-star's window. The
+convergence test rides that job as ``Observation`` metrics: large-star's
+window also counts each node's smaller and larger neighbours, which
+decides EXACTLY whether the round's input was already a star forest,
+the fixpoint of both contractions. So a star input costs one round,
+and ``max_iter`` counts the rounds that change the edges (plus the one
+that confirms). All DataFrame ops: the only values the Spark driver
+reads are two observed longs per round — nothing scales with |V| or
+|E| there.
 
 Scale notes (100 TB / 1000-executor framing):
 - Each round's shuffle is keyed on node id; skewed degree (one hub
@@ -35,23 +44,31 @@ Scale notes (100 TB / 1000-executor framing):
   is raw (no upstream dedup), pass ``pre_contract=True`` — one salted
   two-level-min + AQE-skew-splittable-join large-star round before the
   window loop (the r9 docstring's prose escape hatch, now code).
-- ``localCheckpoint`` (eager) truncates lineage each round; without it
-  the plan doubles per iteration and the optimizer re-walks ~2^rounds
-  nodes.
+- ``pin`` (eager) truncates lineage each round; without it the plan
+  doubles per iteration and the optimizer re-walks ~2^rounds nodes.
+  The pinned edges are not deduplicated (the next round's first
+  shuffle does that), so a round stores at most twice the distinct
+  edges of its input.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import logging
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from polars_dataset_spark.session import pin
+
+_log = logging.getLogger(__name__)
 
 __all__ = ["connected_components", "dedup_by_components", "chain_edges", "pagerank"]
 
 
 def _canonicalize(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Undirected edges stored once as (u, v) with u < v, distinct."""
+    """Undirected edges as (u, v) with u < v; duplicates are left to
+    large-star's deduplicating shuffle."""
     e = edges.select(
         F.least(F.col(id_a), F.col(id_b)).cast("long").alias("u"),
         F.greatest(F.col(id_a), F.col(id_b)).cast("long").alias("v"),
@@ -59,34 +76,52 @@ def _canonicalize(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
     return (
         e.filter(F.col("u") != F.col("v"))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
     )
 
 
-def _large_star(e: DataFrame) -> DataFrame:
+# both directions of every edge (u, v), in one narrow projection
+_SYMMETRIC = "inline(array(named_struct('u', u, 'v', v), named_struct('u', v, 'v', u)))"
+
+
+def _large_star(e: DataFrame, obs: Observation) -> DataFrame:
     """Connect every neighbor w > c to min(N(c) ∪ {c}), for every center c.
-    Input and output are canonical (u < v, distinct): the emitted link
-    (w, m) always has m < w, so (m, w) is already canonical.
+    Input and output are canonical (u < v), duplicates allowed: the
+    symmetric view is deduplicated right after its shuffle on u, which
+    already clusters (u, v), so the distinct and the window share one
+    exchange. The emitted link (w, m) always has m < w, so (m, w) is
+    already canonical.
 
-    One window-min over the symmetric view instead of groupBy+join-back
+    One window over the symmetric view instead of groupBy+join-back
     (r9): the same rows move (all of sym keyed on u) but the separate
-    mins exchange and the join disappear — each contraction round was
-    paying ~4 exchanges of fixed scheduling overhead where 1 suffices.
-    The traded-away piece is AQE's ability to skew-split the join-back
-    for a pathological hub key; see the module docstring for why degree
-    is bounded in this engine's pipelines and what to do when it
-    isn't."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    w = Window.partitionBy("u")
-    # No distinct here: duplicate (m, w) links from different centers are
-    # bounded by deg(w) and the small-star that always follows ends in a
-    # distinct — one less shuffle per round.
-    return (
-        sym.withColumn("m", F.least(F.col("u"), F.min("v").over(w)))
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("m").alias("u"), F.col("v"))
-        .filter(F.col("u") != F.col("v"))
+    mins exchange and the join disappear. The traded-away piece is
+    AQE's ability to skew-split the join-back for a pathological hub
+    key; see the module docstring for why degree is bounded in this
+    engine's pipelines and what to do when it isn't.
+
+    The same window counts u's smaller (``lt``) and larger (``gt``)
+    neighbors, and ``obs`` records, on the round's own job, the input's
+    edge count and its STAR VIOLATIONS: nodes that are neither a root
+    (lt = 0) nor a leaf of one smaller root (lt = 1, gt = 0). On
+    canonical, distinct edges zero violations ⟺ the input is a forest
+    of stars rooted at their minimum (a leaf's one neighbor has gt ≥ 1,
+    so it is a root; a root's neighbors have lt ≥ 1, so they are
+    leaves) — the fixpoint of both contractions. ``v = mn`` picks one
+    row per node, so violations count nodes."""
+    sym = e.selectExpr(_SYMMETRIC).repartition("u").distinct()
+    win = sym.selectExpr(
+        "u",
+        "v",
+        "min(v) OVER (PARTITION BY u) AS mn",
+        "count_if(v < u) OVER (PARTITION BY u) AS lt",
+        "count_if(v > u) OVER (PARTITION BY u) AS gt",
+    ).observe(
+        obs,
+        F.expr("count_if(u < v)").alias("edges"),
+        F.expr(
+            "count_if(v = mn AND NOT (lt = 0 OR (lt = 1 AND gt = 0)))"
+        ).alias("violations"),
     )
+    return win.where("v > u").selectExpr("least(u, mn) AS u", "v")
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -99,17 +134,15 @@ def _small_star(e: DataFrame) -> DataFrame:
     Window-min + explode instead of groupBy+join+union (r9, see
     _large_star): per edge (u, v) with neighborhood min m, emit (m, u)
     (link the smaller neighbor) and (m, v) (link the center); the
-    center link is emitted once per edge instead of once per center,
-    and the closing distinct collapses the repeats."""
-    w = Window.partitionBy("v")
+    center link is emitted once per edge instead of once per center.
+    No distinct: the next round's large-star collapses the repeats on
+    the shuffle it makes anyway, so the output is at most twice the
+    input's rows."""
     return (
-        e.withColumn("m", F.min("u").over(w))
-        .select(
-            F.col("m").alias("u"),
-            F.explode(F.array(F.col("u"), F.col("v"))).alias("v"),
+        e.selectExpr(
+            "min(u) OVER (PARTITION BY v) AS u", "explode(array(u, v)) AS v"
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .where("u != v")
     )
 
 
@@ -122,8 +155,8 @@ def _large_star_salted(e: DataFrame, n_salt: int = 64) -> DataFrame:
     shatters any hub (its neighbors re-key to the component min), after
     which the cheaper window-min rounds run on bounded-degree edges.
     Same contract as `_large_star`: canonical in, links (m, w) with
-    m < w out, duplicates tolerated by the small-star that follows."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    m < w out, duplicates left to the loop's first large-star."""
+    sym = e.selectExpr(_SYMMETRIC)
     lvl1 = sym.groupBy(
         "u", F.pmod(F.xxhash64("v"), F.lit(n_salt)).alias("__salt")
     ).agg(F.min("v").alias("__v1"))
@@ -136,46 +169,21 @@ def _large_star_salted(e: DataFrame, n_salt: int = 64) -> DataFrame:
         sym.join(mins, on="u")
         .filter(F.col("v") > F.col("u"))
         .select(F.col("__m").alias("u"), F.col("v"))
-        .filter(F.col("u") != F.col("v"))
     )
 
 
-def _fingerprint(e: DataFrame) -> tuple[int, int, bool]:
-    """(edge count, order-insensitive xor hash, is-star) — ONE job.
-
-    The first two drive the no-change convergence fallback; the third
-    is the EXACT star-shape test, folded entirely into the same
-    aggregate (r10, VERDICT r9 #5 — the previous round ran a separate
-    ``intersect().isEmpty()`` job whenever v-uniqueness held):
-
-    star union (min-rooted depth-1 forests) on canonical u < v edges
-      ⟺ (a) every v has exactly one parent: n == count_distinct(v)
-        (b) no node is both parent and child: |U ∩ V| = 0, and by
-            inclusion–exclusion over the exploded node view
-            |U ∩ V| = nd_u + nd_v − nd_all — so (b) is just
-            nd_u + nd_v == nd_all, an aggregate, not a set op.
-    (a)+(b) ⟹ single-parent + parents-never-children + u < v canonical
-    ⟹ depth-1 trees rooted at their minimum — the fixpoint of both
-    contractions. The explode doubles the rows entering the partial
-    agg (still one shuffle of pre-aggregated partials); no extra job,
-    no extra round."""
-    ex = e.select(
-        F.xxhash64("u", "v").alias("hh"),
-        F.col("u"),
-        F.col("v"),
-        F.posexplode(F.array("u", "v")).alias("pos", "node"),
-    )
-    row = ex.agg(
-        F.count(F.when(F.col("pos") == 0, 1)).alias("n"),
-        F.coalesce(
-            F.bit_xor(F.when(F.col("pos") == 0, F.col("hh"))), F.lit(0)
-        ).alias("h"),
-        F.count_distinct(F.when(F.col("pos") == 1, F.col("v"))).alias("nv"),
-        F.count_distinct(F.when(F.col("pos") == 0, F.col("u"))).alias("nu"),
-        F.count_distinct("node").alias("nall"),
-    ).first()
-    n, nv, nu, nall = int(row["n"]), int(row["nv"]), int(row["nu"]), int(row["nall"])
-    return n, int(row["h"]), n == nv and nu + nv == nall
+def _observed(obs: Observation, out: DataFrame) -> tuple[int, int]:
+    """(distinct edges, star violations) of a round's input, read from the
+    metrics its checkpoint job recorded. No metrics row comes back when
+    no task ran; that is read as zero violations only if the round's
+    output — empty exactly when its input is — has no edges."""
+    try:
+        m = obs.get
+    except Py4JJavaError:
+        if not out.isEmpty():
+            raise
+        return 0, 0
+    return int(m["edges"]), int(m["violations"])
 
 
 def connected_components(
@@ -192,6 +200,16 @@ def connected_components(
     Isolated nodes (absent from ``edges``) are absent from the result —
     join back ``how="left"`` + ``coalesce(component, id)`` if needed.
 
+    Each round is ONE Spark action: large-star then small-star,
+    materialized by an eager ``pin``, whose job also reports (via
+    ``Observation``) whether the round's INPUT was already a star
+    forest. If it was, the output equals the input and the loop stops,
+    so a star input costs one round. ``max_iter`` bounds the rounds
+    that change the edges: at most ``max_iter`` of them plus the one
+    that confirms convergence, else ``RuntimeError``. With DEBUG on the
+    ``polars_dataset_spark`` logger, each round logs its input's edge
+    count and violating nodes (no extra job).
+
     ``pre_contract=True``: run ONE salted two-level-min large-star
     round (`_large_star_salted`) before the window-min loop — the
     escape hatch for RAW edge sources whose degree distribution is
@@ -202,64 +220,32 @@ def connected_components(
     pipelines bound degree upstream, and the extra round costs a fixed
     ~2 exchanges.
     """
-    # eager=False: the fingerprint action doubles as the checkpoint
-    # materialization — one job per round, not two. (Pairing two
-    # contractions per checkpoint was tried and is a net LOSS: the
-    # unrolled plan doubles in depth and Catalyst's per-round planning
-    # cost grows superlinearly with plan size, outweighing the saved
-    # fixed overhead.)
+    # One checkpoint per round: pairing two contractions per checkpoint
+    # was tried and is a net LOSS (the unrolled plan doubles in depth and
+    # Catalyst's planning cost grows superlinearly with plan size).
     e = _canonicalize(edges, id_a, id_b)
     if pre_contract:
-        # distinct so the first fingerprint sees canonical multiplicity
-        # (the in-loop contractions get theirs from small-star's own)
-        e = _large_star_salted(e).distinct()
-    e = pin(e)
-    n, h, star = _fingerprint(e)
-    # Near-dup pair graphs are often ALREADY star unions (tiny
-    # diameter); the star test is exact and FREE inside the fingerprint
-    # aggregate, so converged inputs skip the loop outright and each
-    # loop round is exactly ONE job (contraction + checkpoint
-    # materialization + convergence + star test, all one action).
-    prev = (n, h)
-    if not star:
-        # Convergence-check CADENCE (r12 optimization): the loop is
-        # driver-latency-bound, not compute-bound — each _fingerprint is
-        # a driver action that AQE splits into several jobs (measured at
-        # sf0.1: ~6 jobs per round, 98 jobs total for 114 tasks; the
-        # tasks are trivial, the job round-trips are the wall). Check
-        # after round 1 (chain/star inputs often converge immediately),
-        # then every SECOND round: checkpoints stay per-round (plans
-        # stay flat — this is NOT the pairing-per-checkpoint variant the
-        # note below rejects), but half the driver actions disappear.
-        # Contractions are idempotent on star graphs, so one overshoot
-        # round past convergence changes nothing but wasted (trivial)
-        # tasks; the star test stays exact.
-        rounds_done = 0
-        converged = False
-        while rounds_done < max_iter:
-            step = 1 if rounds_done == 0 else min(2, max_iter - rounds_done)
-            for _ in range(step):
-                e = pin(_small_star(_large_star(e)))
-                rounds_done += 1
-            n, h, star = _fingerprint(e)
-            if star or (n, h) == prev:
-                # star-shaped = fixpoint of both contractions: stop the
-                # round the graph converges ((n, h) == prev kept as the
-                # hash-equality fallback — it can only fire on an
-                # already-star set)
-                converged = True
-                break
-            prev = (n, h)
-        if not converged:
-            raise RuntimeError(
-                f"connected_components: no convergence in {max_iter} rounds"
-            )
+        e = _large_star_salted(e)
+    for rnd in range(1, max_iter + 2):
+        obs = Observation()
+        e = pin(_small_star(_large_star(e, obs)), eager=True)
+        n_edges, violations = _observed(obs, e)
+        _log.debug(
+            "connected_components round %d: %d edges, %d violating nodes",
+            rnd, n_edges, violations,
+        )
+        if violations == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: no convergence in {max_iter} rounds"
+        )
     # Converged star graphs: a non-root's minimum neighbor IS the root,
     # and the root's own minimum is itself — both covered by
     # least(node, min over neighbors) on the symmetric view.
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return sym.groupBy("u").agg(F.min("v").alias("mv")).select(
-        F.col("u").alias("id"), F.least(F.col("u"), F.col("mv")).alias("component")
+    sym = e.selectExpr(_SYMMETRIC)
+    return sym.groupBy("u").agg(F.min("v").alias("mv")).selectExpr(
+        "u AS id", "least(u, mv) AS component"
     )
 
 

@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds this package: Python workers must import it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
@@ -36,6 +39,9 @@ def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | 
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # connected_components pins every round: delete a reliable
+        # checkpoint's files once its DataFrame is garbage-collected
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # keep stderr clean for harness-captured artifacts (bench tails):
         # the [Stage N:==>] console progress writer is stderr-only noise
         .config("spark.ui.showConsoleProgress", "false")
@@ -59,13 +65,26 @@ def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | 
             os.environ.get("SPARK_GRAFT_ARROW_MAX_BYTES", str(64 * 1024 * 1024)),
         )
     )
-    alloc = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                         "conf", "fairscheduler.xml")
+    alloc = os.path.join(_PACKAGE_PARENT, "conf", "fairscheduler.xml")
     if os.path.exists(alloc):  # declared pools: no per-pool builder warnings
         builder = builder.config("spark.scheduler.allocation.file", alloc)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _share_package_path(spark)
     return spark
+
+
+def _share_package_path(spark: SparkSession) -> None:
+    """Put this package's parent directory on the Python workers'
+    ``PYTHONPATH``. Workers start in the JVM's cwd with only Spark's own
+    path, so a Spark driver that found the package anywhere but its cwd would
+    fail every Python UDF with ``ModuleNotFoundError``. Each UDF carries
+    ``SparkContext.environment`` to its workers, read when the UDF is
+    created, so this also holds for a session built elsewhere."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
 
 
 def pin(df, eager: bool = False):
@@ -121,7 +140,9 @@ def ensure_parallelism(df, min_parts: int | None = None):
 
 def apply_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine defaults to an externally provided
-    session (e.g. the verification driver's). Only touches dynamic confs."""
+    session (e.g. one a host application built). Only touches dynamic
+    confs, plus the Python workers' path to this package."""
+    _share_package_path(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")

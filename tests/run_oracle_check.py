@@ -9,12 +9,13 @@ Usage: python tests/run_oracle_check.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from polars_dataset_spark.session import get_spark
 from polars_dataset_spark.sources.tables import TABLES

@@ -2,7 +2,11 @@
 next-steps #7): the realistic near-dup regime (many tiny clusters) must
 converge in a couple of star-contraction rounds, while the adversarial
 path graph needs more — both bounds pinned so a regression in either
-regime shows up as a round-count change, not just a slow bench."""
+regime shows up as a round-count change, not just a slow bench. The
+jobs each call submits are budgeted the same way, and the per-round
+DEBUG log is checked to cost none."""
+
+import logging
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,3 +39,57 @@ def test_path_graph_needs_more_rounds_but_converges(spark):
     out = connected_components(edges, max_iter=25)
     comps = {r["component"] for r in out.collect()}
     assert comps == {0}
+
+
+def _jobs_of(spark, fn):
+    """Jobs Spark submitted while ``fn`` ran: the DAG scheduler's job-id
+    watermark before and after (one client thread)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - j0
+
+
+def _star_edges(spark):
+    rows = [(0, i) for i in range(1, 5)] + [(10, j) for j in range(11, 14)]
+    return spark.createDataFrame(rows, "id_a long, id_b long")
+
+
+# Jobs connected_components submits while it is built: one eager checkpoint
+# per round, whose two shuffles AQE submits as jobs of their own. The
+# small-cluster graph takes three rounds (two contract, one confirms);
+# a star input takes the confirming round only.
+CC_JOB_BUDGET = {"small_clusters": 10, "star": 3}
+
+
+def test_cc_job_budget(spark):
+    _, small = _small_cluster_edges(spark)
+    star = _star_edges(spark)
+    jobs = {
+        "small_clusters": _jobs_of(spark, lambda: connected_components(small)),
+        "star": _jobs_of(spark, lambda: connected_components(star)),
+    }
+    assert all(jobs[k] <= CC_JOB_BUDGET[k] for k in jobs), jobs
+
+
+def _logged_rounds(caplog):
+    return [r.args for r in caplog.records if r.name.startswith("polars_dataset_spark")]
+
+
+def test_cc_logs_each_round_at_no_job_cost(spark, caplog):
+    _, edges = _small_cluster_edges(spark)
+    with caplog.at_level(logging.WARNING, logger="polars_dataset_spark"):
+        quiet = _jobs_of(spark, lambda: connected_components(edges))
+    assert not _logged_rounds(caplog)
+    with caplog.at_level(logging.DEBUG, logger="polars_dataset_spark"):
+        loud = _jobs_of(spark, lambda: connected_components(edges))
+    assert loud == quiet
+    # (round, distinct input edges, violating nodes) for 100 chains
+    # a-b-c-d: b and c break the star property, then only b (the round-1
+    # output is a-b, a-c, b-d), then none: the third round confirms
+    assert _logged_rounds(caplog) == [(1, 300, 200), (2, 300, 100), (3, 300, 0)]
+
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="polars_dataset_spark"):
+        connected_components(_star_edges(spark))
+    assert _logged_rounds(caplog) == [(1, 7, 0)]  # star input: one round

@@ -3,11 +3,12 @@ so the documented examples cannot rot (r8 VERDICT #8). Each block runs in
 its own namespace; they call ``get_spark()`` themselves (getOrCreate
 reuses the test session) and must not stop the session."""
 
+import os
 import re
 
 import pytest
 
-README = "/root/repo/README.md"
+README = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "README.md")
 
 
 def _ci_blocks() -> "list[tuple[str, str]]":
