@@ -1054,9 +1054,14 @@ class Dataset:
 
         from polars_dataset_spark.session import pin
 
+        taken = set(self._df.columns)
         for name, q in qs.items():
             if not 0.0 <= q <= 1.0:
                 raise ValueError(f"rolling_quantiles: {name}: q={q} not in [0, 1]")
+            # collision guard (ADVICE r13), checked before the eager pin:
+            # the output schema must not silently carry a duplicate field
+            if name in taken:
+                raise ValueError(f"rolling_quantiles: output column {name!r} already exists")
         if window_size < 1:
             raise ValueError("rolling_quantiles: window_size must be >= 1")
         w1 = window_size - 1

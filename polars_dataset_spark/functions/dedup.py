@@ -12,6 +12,9 @@ survives 100 TB:
 - SimHash — :func:`simhash` (token hashes JVM-side, the 64-bit sign-sum in
   one Arrow-batched pandas UDF); near-duplicates found by Hamming-band
   blocking + exact ``bit_count(xor)`` verify.
+  The same banding serves every 64-bit media fingerprint (image,
+  audio, video): :func:`banded_neardup_pairs` for pairs and
+  :class:`BandedIndex` for the persisted arriving-vs-corpus index.
 - n-gram Jaccard — character-shingle variant of the MinHash path.
 - :func:`embedding_neardup` — cosine near-dup over an embedding column via
   random-hyperplane LSH buckets + exact cosine verify.
@@ -67,6 +70,9 @@ __all__ = [
     "drop_frequent_lines",
     "edit_distance_join",
     "cdc_chunks",
+    "BandedIndex",
+    "banded_neardup_pairs",
+    "banded_filter_against",
     "append_to_banded_index",
 ]
 
@@ -544,38 +550,6 @@ def band_key_structs(sig_col: str, max_hamming: int) -> "list":
     return keys
 
 
-def append_to_banded_index(index, sigs: DataFrame, sig_col: str = "__sig") -> None:
-    """Union new 64-bit signatures into ANY persisted banded index IN
-    PLACE — the incremental half of continuous ingestion for every
-    modality (Image/Audio/VideoNeardupIndex all share the
-    ``(chunk int, key long, __csig long)`` layout and a
-    ``max_hamming`` attribute; stream batch N+1 must dedup against
-    batch N's survivors, not just the original corpus).
-
-    Cache-swap contract (same as ``_swap_cache``): the merged frame is
-    materialized via eager ``localCheckpoint`` (truncating lineage, so
-    a year of appends doesn't accumulate a union tree) BEFORE the old
-    blocks release; only the new batch's banded rows are deduplicated
-    (batch-sized shuffle — the standing index is never re-shuffled).
-    At crawl scale prefer a parquet layout bucketed by (chunk, key)
-    and compact appended band files offline."""
-    new_banded = (
-        sigs.filter(F.col(sig_col).isNotNull())
-        .select(F.col(sig_col).alias("__csig"))
-        .distinct()
-        .select(
-            "__csig",
-            F.explode(
-                F.array(*band_key_structs("__csig", index.max_hamming))
-            ).alias("bk"),
-        )
-        .select("bk.chunk", "bk.key", "__csig")
-    )
-    merged = pin(index.banded.union(new_banded), eager=True)
-    index.banded.unpersist(blocking=False)
-    index.banded = merged
-
-
 def hamming_band_pairs(
     df: DataFrame,
     id_col: str,
@@ -597,12 +571,7 @@ def hamming_band_pairs(
     (shift/mask/bit_count). Callers whose signature is expensive to
     compute should persist ``df`` first — the band self-join scans it
     twice."""
-    keys = band_key_structs(sig_col, max_hamming)  # validates k eagerly
-    banded = df.select(
-        id_col,
-        sig_col,
-        F.explode(F.array(*keys)).alias("bk"),
-    ).select(id_col, sig_col, "bk.chunk", "bk.key")
+    banded = _band_rows(df, sig_col, max_hamming, id_col, sig_col)
     a = banded.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("h_a"), "chunk", "key")
     b = banded.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("h_b"), "chunk", "key")
     return (
@@ -613,6 +582,171 @@ def hamming_band_pairs(
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+def _band_rows(df: DataFrame, sig_col: str, max_hamming: int, *cols: str) -> DataFrame:
+    """One row per pigeonhole band of ``sig_col``: ``(*cols, chunk, key)``.
+    Validates ``max_hamming`` eagerly (:func:`band_key_structs`)."""
+    bk = F.explode(F.array(*band_key_structs(sig_col, max_hamming))).alias("bk")
+    return df.select(*cols, bk).select(*cols, "bk.chunk", "bk.key")
+
+
+def _hash_ids(
+    df: DataFrame, fingerprint, fingerprint_kwargs: dict, id_col: str, content_col: str
+) -> DataFrame:
+    """``(id, __sig)`` rows: the 64-bit ``fingerprint`` of every blob."""
+    return fingerprint(
+        df.select(id_col, content_col),
+        content_col=content_col,
+        out_col="__sig",
+        **fingerprint_kwargs,
+    ).select(id_col, "__sig")
+
+
+def _index_rows(sigs: DataFrame, sig_col: str, max_hamming: int) -> DataFrame:
+    """Distinct non-null signatures in the index layout
+    ``(chunk, key, __csig)``."""
+    csig = (
+        sigs.filter(F.col(sig_col).isNotNull())
+        .select(F.col(sig_col).alias("__csig"))
+        .distinct()
+    )
+    return _band_rows(csig, "__csig", max_hamming, "__csig").select(
+        "chunk", "key", "__csig"
+    )
+
+
+def banded_neardup_pairs(
+    df: DataFrame,
+    fingerprint,
+    id_col: str,
+    content_col: str,
+    max_hamming: int,
+    **fingerprint_kwargs,
+) -> DataFrame:
+    """All pairs of blobs whose 64-bit ``fingerprint`` signatures lie
+    within ``max_hamming`` bits (:func:`hamming_band_pairs`).
+    ``fingerprint`` is a map pass ``(df, content_col, out_col,
+    **fingerprint_kwargs) -> df``; null signatures (undecodable blobs)
+    never pair. The signatures are persisted across the band self-join,
+    so each blob is decoded once; the cache is then swapped onto the
+    output-sized pair frame."""
+    hashed = (
+        _hash_ids(df, fingerprint, fingerprint_kwargs, id_col, content_col)
+        .filter("__sig IS NOT NULL")
+        .persist()
+    )
+    pairs = hamming_band_pairs(
+        hashed, id_col=id_col, sig_col="__sig", max_hamming=max_hamming
+    )
+    return _swap_cache(pairs, hashed)
+
+
+class BandedIndex:
+    """Persisted banded signature index of a STATIC media corpus, for
+    every 64-bit perceptual fingerprint (image, audio, video; the text
+    MinHash index is :class:`NeardupIndex`). The corpus is decoded and
+    hashed once; every arriving batch pays only its own decode plus one
+    band equi-join.
+
+    ``banded`` is |corpus| * (max_hamming + 1) rows of ``(chunk int,
+    key long, __csig long)``. Probes are always hashed with the
+    ``fingerprint`` and ``fingerprint_kwargs`` the index was built with,
+    so a build-time normalization (e.g. image Exif orientation) always
+    reaches the probes. At crawl scale write ``banded`` to parquet
+    bucketed by ``(chunk, key)`` and the per-batch probe join is
+    exchange-free on the corpus side."""
+
+    def __init__(
+        self, banded: DataFrame, max_hamming: int, fingerprint, fingerprint_kwargs: dict
+    ):
+        self.banded = banded
+        self.max_hamming = max_hamming
+        self.fingerprint = fingerprint
+        self.fingerprint_kwargs = fingerprint_kwargs
+
+    @classmethod
+    def build(
+        cls,
+        corpus: DataFrame,
+        fingerprint,
+        content_col: str = "content",
+        max_hamming: int = 3,
+        **fingerprint_kwargs,
+    ) -> "BandedIndex":
+        """Fingerprint + band ``corpus`` once (decode is the dominant
+        cost), persisted and materialized for repeated probes."""
+        hashed = fingerprint(
+            corpus.select(content_col),
+            content_col=content_col,
+            out_col="__csig",
+            **fingerprint_kwargs,
+        )
+        banded = _index_rows(hashed, "__csig", max_hamming).persist()
+        banded.count()
+        return cls(banded, max_hamming, fingerprint, fingerprint_kwargs)
+
+    def hash(
+        self, batch: DataFrame, id_col: str = "media_id", content_col: str = "content"
+    ) -> DataFrame:
+        """``(id, __sig)`` rows of ``batch``, hashed the way the index
+        was built."""
+        return _hash_ids(batch, self.fingerprint, self.fingerprint_kwargs, id_col, content_col)
+
+    def dup_ids(self, hashed: DataFrame, id_col: str) -> DataFrame:
+        """Ids of ``(id, __sig)`` rows within ``max_hamming`` bits of
+        ANY indexed signature (pigeonhole recall 1)."""
+        probes = _band_rows(
+            hashed.filter("__sig IS NOT NULL"), "__sig", self.max_hamming, id_col, "__sig"
+        )
+        ham = F.bit_count(F.col("__sig").bitwiseXOR(F.col("__csig")))
+        return (
+            probes.join(self.banded, on=["chunk", "key"])
+            .filter(ham <= self.max_hamming)
+            .select(id_col)
+            .distinct()
+        )
+
+    def filter_against(
+        self, batch: DataFrame, id_col: str = "media_id", content_col: str = "content"
+    ) -> DataFrame:
+        """Drop every ``batch`` row within ``max_hamming`` bits of ANY
+        indexed blob. Rows that fail to decode are KEPT: an undecodable
+        blob is not evidence of duplication."""
+        dupes = self.dup_ids(self.hash(batch, id_col, content_col), id_col)
+        return batch.join(dupes, on=id_col, how="left_anti")
+
+    def append(self, sigs: DataFrame, sig_col: str = "__sig") -> None:
+        """Union new signatures into the persisted index IN PLACE, so
+        stream batch N+1 dedups against batch N's survivors too.
+
+        Cache-swap contract (same as ``_swap_cache``): the merged frame
+        is materialized via eager ``localCheckpoint`` (truncating
+        lineage, so a year of appends doesn't accumulate a union tree)
+        BEFORE the old blocks release; only the new batch's banded rows
+        are deduplicated (batch-sized shuffle — the standing index is
+        never re-shuffled)."""
+        new_banded = _index_rows(sigs, sig_col, self.max_hamming)
+        merged = pin(self.banded.union(new_banded), eager=True)
+        self.banded.unpersist(blocking=False)
+        self.banded = merged
+
+    def unpersist(self) -> None:
+        self.banded.unpersist(blocking=False)
+
+
+def banded_filter_against(
+    batch: DataFrame,
+    index: BandedIndex,
+    id_col: str = "media_id",
+    content_col: str = "content",
+) -> DataFrame:
+    """:meth:`BandedIndex.filter_against` with the batch first — the
+    shape of ``image/audio/video_filter_against``."""
+    return index.filter_against(batch, id_col, content_col)
+
+
+append_to_banded_index = BandedIndex.append
 
 
 def simhash_dedup(

@@ -18,6 +18,10 @@ candidate join that never goes all-pairs. Text has SimHash
   Hamming distance ``max_hamming`` MUST agree on at least one whole
   chunk, so the band join has recall exactly 1 (not probabilistic) and
   shuffle volume ~ N * chunks, never N^2.
+- the corpus index (``build_image_index``, ``image_filter_against``,
+  ``append_to_image_index``, ``ImageNeardupIndex``) is the shared
+  :class:`dedup.BandedIndex`; it keeps the ``algo`` and
+  ``orientation_normalize`` it was built with for its probes.
 
 Decoding reuses the in-repo pure-python codecs (reference capability
 envelope: `/root/reference/polars_dataset.py` has no media surface; this
@@ -35,6 +39,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.functions.dedup import (
+    BandedIndex,
+    append_to_banded_index,
+    banded_filter_against,
+    banded_neardup_pairs,
+)
 
 
 def _decode_image_auto(data: bytes) -> "np.ndarray | None":
@@ -161,6 +172,8 @@ def _image_hash(
 ) -> DataFrame:
     from polars_dataset_spark.session import ensure_parallelism
 
+    if algo not in _HASH_FNS:
+        raise ValueError(f"algo must be one of {sorted(_HASH_FNS)}, got {algo!r}")
     hash_fn = _HASH_FNS[algo]
     df = ensure_parallelism(df)
     out_schema = T.StructType(
@@ -235,75 +248,20 @@ def image_neardup_pairs(
     orientation_normalize: bool = False,
     algo: str = "dhash",
 ) -> DataFrame:
-    """Near-duplicate image pairs: dHash + pigeonhole Hamming banding.
-
-    Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b`` and
-    ``hamming <= max_hamming``. Recall is exactly 1 for the threshold
-    (pigeonhole over ``max_hamming + 1`` signature chunks); shuffle is
-    one band join ~ N * chunks rows — the same scale shape as the
-    SimHash text path, never all-pairs.
-
-    The (id, dhash) projection is persisted across the band self-join:
-    without it each join branch re-decodes every image — the decode IS
-    the dominant cost at crawl scale (same persist contract as
-    ``simhash_dedup``; the cache is swapped onto the output-sized pair
-    frame before returning)."""
-    from polars_dataset_spark.functions.dedup import _swap_cache, hamming_band_pairs
-
-    if algo not in _HASH_FNS:
-        raise ValueError(f"algo must be one of {sorted(_HASH_FNS)}, got {algo!r}")
-    hashed = (
-        _image_hash(
-            df.select(id_col, content_col),
-            content_col=content_col,
-            out_col="__sig",
-            orientation_normalize=orientation_normalize,
-            algo=algo,
-        )
-        .filter("__sig IS NOT NULL")
-        .select(id_col, "__sig")
-        .persist()
+    """Near-duplicate image pairs: perceptual hash (``algo``: dHash or
+    pHash) + pigeonhole Hamming banding, as ``(id_a, id_b, hamming)``
+    with ``id_a < id_b`` and ``hamming <= max_hamming`` — recall exactly
+    1 for the threshold, shuffle ~ N * chunks rows, never all-pairs
+    (:func:`dedup.banded_neardup_pairs`)."""
+    return banded_neardup_pairs(
+        df,
+        _image_hash,
+        id_col,
+        content_col,
+        max_hamming,
+        orientation_normalize=orientation_normalize,
+        algo=algo,
     )
-    pairs = hamming_band_pairs(
-        hashed, id_col=id_col, sig_col="__sig", max_hamming=max_hamming
-    )
-    return _swap_cache(pairs, hashed)
-
-
-class ImageNeardupIndex:
-    """Precomputed signature index of a STATIC image corpus — the
-    continuous-ingestion half of image dedup (the analogue of the text
-    path's ``NeardupIndex``): the corpus is decoded and hashed ONCE;
-    every arriving batch pays only its own decode plus one band
-    equi-join against the index.
-
-    ``banded`` is |corpus| * (max_hamming + 1) rows of
-    ``(chunk int, key long, __csig long)`` — at crawl scale write it to
-    parquet bucketed by ``(chunk, key)`` and the per-batch probe join
-    is exchange-free on the corpus side."""
-
-    def __init__(
-        self,
-        banded: DataFrame,
-        max_hamming: int,
-        algo: str,
-        orientation_normalize: bool = False,
-    ):
-        self.banded = banded
-        self.max_hamming = max_hamming
-        self.algo = algo
-        # probes must hash with the SAME normalization the index was
-        # built with, or rotated duplicates silently miss (ADVICE r9)
-        self.orientation_normalize = orientation_normalize
-
-    def unpersist(self) -> None:
-        self.banded.unpersist(blocking=False)
-
-
-def _band_key_cols(sig_col: str, max_hamming: int):
-    from polars_dataset_spark.functions.dedup import band_key_structs
-
-    return band_key_structs(sig_col, max_hamming)
 
 
 def build_image_index(
@@ -312,103 +270,20 @@ def build_image_index(
     max_hamming: int = 3,
     algo: str = "dhash",
     orientation_normalize: bool = False,
-) -> ImageNeardupIndex:
-    """Hash + band a static image corpus once (decode is the dominant
-    cost — it runs exactly one time here), persisted for repeated
-    probes."""
-    from pyspark.sql import functions as F
-
-    if algo not in _HASH_FNS:
-        raise ValueError(f"algo must be one of {sorted(_HASH_FNS)}, got {algo!r}")
-    hashed = (
-        _image_hash(
-            corpus.select(content_col),
-            content_col=content_col,
-            out_col="__csig",
-            orientation_normalize=orientation_normalize,
-            algo=algo,
-        )
-        .filter("__csig IS NOT NULL")
-        .select("__csig")
-        .distinct()
-    )
-    banded = (
-        hashed.select(
-            "__csig",
-            F.explode(F.array(*_band_key_cols("__csig", max_hamming))).alias("bk"),
-        )
-        .select("bk.chunk", "bk.key", "__csig")
-        .persist()
-    )
-    banded.count()
-    return ImageNeardupIndex(banded, max_hamming, algo, orientation_normalize)
-
-
-def _hash_for_index(
-    batch: DataFrame, index: ImageNeardupIndex, id_col: str, content_col: str
-) -> DataFrame:
-    """(id, __sig) rows hashed EXACTLY the way the index was built
-    (same algo, same orientation normalization)."""
-    return _image_hash(
-        batch.select(id_col, content_col),
-        content_col=content_col,
-        out_col="__sig",
-        orientation_normalize=index.orientation_normalize,
-        algo=index.algo,
-    ).select(id_col, "__sig")
-
-
-def _dup_probe_ids(
-    hashed: DataFrame, index: ImageNeardupIndex, id_col: str
-) -> DataFrame:
-    """Ids of probe rows within ``index.max_hamming`` bits of ANY corpus
-    signature — one band equi-join against the persisted index."""
-    from pyspark.sql import functions as F
-
-    probes = hashed.filter("__sig IS NOT NULL").select(
-        id_col,
-        "__sig",
-        F.explode(F.array(*_band_key_cols("__sig", index.max_hamming))).alias("bk"),
-    ).select(id_col, "__sig", "bk.chunk", "bk.key")
-    ham = F.bit_count(F.col("__sig").bitwiseXOR(F.col("__csig")))
-    return (
-        probes.join(index.banded, on=["chunk", "key"])
-        .filter(ham <= index.max_hamming)
-        .select(id_col)
-        .distinct()
+) -> BandedIndex:
+    """Hash + band a static image corpus once
+    (:meth:`dedup.BandedIndex.build`); probes reuse the same ``algo``
+    and orientation normalization."""
+    return BandedIndex.build(
+        corpus,
+        _image_hash,
+        content_col,
+        max_hamming,
+        orientation_normalize=orientation_normalize,
+        algo=algo,
     )
 
 
-def image_filter_against(
-    batch: DataFrame,
-    index: ImageNeardupIndex,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Drop every batch image within ``index.max_hamming`` bits of ANY
-    corpus image (pigeonhole recall 1, same guarantee as the pair path).
-    Batch rows that fail to decode are KEPT — an undecodable blob is not
-    evidence of duplication; route gated formats through ``media_probe``
-    instead. Cost per batch: one map-only decode pass + one band
-    equi-join against the persisted index."""
-    hashed = _hash_for_index(batch, index, id_col, content_col)
-    dupes = _dup_probe_ids(hashed, index, id_col)
-    return batch.join(dupes, on=id_col, how="left_anti")
-
-
-def append_to_image_index(index: ImageNeardupIndex, sigs: DataFrame, sig_col: str = "__sig") -> None:
-    """Union new signatures into the persisted banded index IN PLACE —
-    the incremental half of continuous ingestion (stream batch N+1 must
-    dedup against batch N's survivors, not just the original corpus).
-
-    Cache-swap contract (same as ``simhash_dedup``/``_swap_cache``):
-    the merged frame is materialized via eager ``localCheckpoint``
-    (truncating lineage, so a year of appends doesn't accumulate a
-    union tree) BEFORE the old blocks release; only the new batch's
-    banded rows are deduplicated (batch-sized shuffle — the standing
-    index is never re-shuffled). At crawl scale prefer the parquet
-    layout documented on :class:`ImageNeardupIndex` and compact
-    appended band files offline."""
-    from polars_dataset_spark.functions.dedup import append_to_banded_index
-
-    append_to_banded_index(index, sigs, sig_col=sig_col)
+ImageNeardupIndex = BandedIndex
+image_filter_against = banded_filter_against
+append_to_image_index = append_to_banded_index

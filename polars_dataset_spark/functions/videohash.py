@@ -40,6 +40,10 @@ undecodable blobs fingerprint as null — not evidence of anything, never paired
 Everything is one map-only Arrow pass; the pair step is the shared
 banded equi-join, never all-pairs.
 
+Only the kernel, the map pass and the ``max_hamming = 4`` default
+live here; the corpus index (``build_video_index``,
+``video_filter_against``, ``VideoNeardupIndex``) is :class:`dedup.BandedIndex`.
+
 Reference envelope: `/root/reference/polars_dataset.py` has no video
 surface; this is the driver-mandated multimodal dedup family.
 """
@@ -51,8 +55,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from polars_dataset_spark.functions.dedup import (
+    BandedIndex,
+    banded_filter_against,
+    banded_neardup_pairs,
+)
 
 _N_SEGS = 8
 _N_COLS = 9  # 9 thumbnail columns -> 8 adjacent diffs per segment
@@ -127,101 +136,18 @@ def video_neardup_pairs(
     """All video pairs within ``max_hamming`` signature bits, as
     ``(id_a, id_b, hamming)`` with ``id_a < id_b`` — colorspace
     re-encodes / spatial rescales / frame-rate changes / brightness
-    shifts of the same clip land at distance ~0. Decode runs ONCE per
-    blob (hashed frame persisted); the pair step is the shared
-    pigeonhole band join, shuffle ∝ N·(k+1) banded rows, never
-    all-pairs."""
-    from polars_dataset_spark.functions.dedup import _swap_cache, hamming_band_pairs
-
-    hashed = (
-        video_fingerprint(df.select(id_col, content_col), content_col=content_col)
-        .filter(F.col("videohash").isNotNull())
-        .select(id_col, "videohash")
-        .persist()
-    )
-    pairs = hamming_band_pairs(
-        hashed, id_col=id_col, sig_col="videohash", max_hamming=max_hamming
-    )
-    return _swap_cache(pairs, hashed)
-
-
-class VideoNeardupIndex:
-    """Persisted banded signature index of a STATIC video corpus — the
-    video member of the arriving-vs-corpus dedup family (text:
-    ``NeardupIndex``, image: ``ImageNeardupIndex``, audio:
-    ``AudioNeardupIndex``). ``banded`` is |corpus| * (max_hamming + 1)
-    rows of ``(chunk int, key long, __csig long)``; at crawl scale
-    write it to parquet bucketed by ``(chunk, key)`` and the per-batch
-    probe join is exchange-free on the corpus side."""
-
-    def __init__(self, banded: DataFrame, max_hamming: int):
-        self.banded = banded
-        self.max_hamming = max_hamming
-
-    def unpersist(self) -> None:
-        self.banded.unpersist(blocking=False)
+    shifts of the same clip land at distance ~0
+    (:func:`dedup.banded_neardup_pairs`)."""
+    return banded_neardup_pairs(df, video_fingerprint, id_col, content_col, max_hamming)
 
 
 def build_video_index(
     corpus: DataFrame, content_col: str = "content", max_hamming: int = 4
-) -> VideoNeardupIndex:
-    """Fingerprint + band a static video corpus ONCE (decode is the
-    dominant cost — it runs exactly one time here), persisted for
-    repeated probes."""
-    from polars_dataset_spark.functions.dedup import band_key_structs
-
-    hashed = (
-        video_fingerprint(corpus.select(content_col), content_col=content_col)
-        .filter(F.col("videohash").isNotNull())
-        .select(F.col("videohash").alias("__csig"))
-        .distinct()
-    )
-    banded = (
-        hashed.select(
-            "__csig",
-            F.explode(F.array(*band_key_structs("__csig", max_hamming))).alias("bk"),
-        )
-        .select("bk.chunk", "bk.key", "__csig")
-        .persist()
-    )
-    banded.count()
-    return VideoNeardupIndex(banded, max_hamming)
+) -> BandedIndex:
+    """Fingerprint + band a static video corpus once
+    (:meth:`dedup.BandedIndex.build`)."""
+    return BandedIndex.build(corpus, video_fingerprint, content_col, max_hamming)
 
 
-def video_filter_against(
-    batch: DataFrame,
-    index: VideoNeardupIndex,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Drop every batch clip within ``index.max_hamming`` bits of ANY
-    corpus clip (pigeonhole recall 1): re-encoded / rescaled /
-    retimed / brightness-shifted copies of corpus video never reach
-    the sink. Batch rows that fail to decode (or are shorter than the
-    fingerprint minimum) are KEPT — not evidence of duplication. Cost
-    per batch: one map-only decode pass + one band equi-join against
-    the persisted index."""
-    from polars_dataset_spark.functions.dedup import band_key_structs
-
-    hashed = video_fingerprint(
-        batch.select(id_col, content_col), content_col=content_col, out_col="__sig"
-    ).select(id_col, "__sig")
-    probes = (
-        hashed.filter("__sig IS NOT NULL")
-        .select(
-            id_col,
-            "__sig",
-            F.explode(
-                F.array(*band_key_structs("__sig", index.max_hamming))
-            ).alias("bk"),
-        )
-        .select(id_col, "__sig", "bk.chunk", "bk.key")
-    )
-    ham = F.bit_count(F.col("__sig").bitwiseXOR(F.col("__csig")))
-    dupes = (
-        probes.join(index.banded, on=["chunk", "key"])
-        .filter(ham <= index.max_hamming)
-        .select(id_col)
-        .distinct()
-    )
-    return batch.join(dupes, on=id_col, how="left_anti")
+VideoNeardupIndex = BandedIndex
+video_filter_against = banded_filter_against

@@ -326,6 +326,22 @@ def run_stream_to_memory(
         q.stop()  # no-op on the (normal) already-terminated path
 
 
+def _drain(stream_df: DataFrame, apply_batch, checkpoint_path: "str | None") -> "object":
+    """Start ``stream_df`` draining into ``apply_batch`` through
+    ``foreachBatch`` and return the started StreamingQuery (callers own
+    ``processAllAvailable``/``stop``).
+
+    availableNow: drain-everything-then-terminate. All callers feed a
+    fully-materialized file listing and drain once; self-termination
+    makes the caller's defensive stop() a no-op instead of a job-group
+    cancellation (which races the Python-worker fork handshake under
+    concurrent load — the bench's BrokenPipeError source)."""
+    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
+    if checkpoint_path:
+        writer = writer.option("checkpointLocation", checkpoint_path)
+    return writer.start()
+
+
 def stream_merge_upsert(
     stream_df: DataFrame,
     target_path: str,
@@ -373,15 +389,7 @@ def stream_merge_upsert(
         merged.write.mode("overwrite").parquet(f"{target_path}__staging")
         swap_state(spark, target_path)
 
-    # availableNow: drain-everything-then-terminate. All callers feed a
-    # fully-materialized file listing and drain once; self-termination
-    # makes the caller's defensive stop() a no-op instead of a job-group
-    # cancellation (which races the Python-worker fork handshake under
-    # concurrent load — the bench's BrokenPipeError source).
-    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
-    if checkpoint_path:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    return writer.start()
+    return _drain(stream_df, apply_batch, checkpoint_path)
 
 
 def stream_neardup_filter(
@@ -424,180 +432,43 @@ def stream_neardup_filter(
         )
         out.write.mode("append").parquet(sink_path)
 
-    # availableNow: drain-everything-then-terminate. All callers feed a
-    # fully-materialized file listing and drain once; self-termination
-    # makes the caller's defensive stop() a no-op instead of a job-group
-    # cancellation (which races the Python-worker fork handshake under
-    # concurrent load — the bench's BrokenPipeError source).
-    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
-    if checkpoint_path:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    return writer.start()
+    return _drain(stream_df, apply_batch, checkpoint_path)
 
 
-def stream_image_filter(
+def _stream_media_filter(
     stream_df: DataFrame,
-    index: "object",  # functions.imagehash.ImageNeardupIndex
-    sink_path: str,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    checkpoint_path: str | None = None,
-    update_index: bool = True,
-) -> "object":
-    """Continuous-ingestion image dedup: every micro-batch of arriving
-    image blobs is perceptually hashed ONCE (decode is the dominant
-    cost), band-probed against the persisted signature index
-    (:func:`functions.imagehash.build_image_index`), and only images
-    with no corpus near-duplicate are appended to the parquet sink —
-    then (``update_index=True``) the SURVIVORS' signatures are unioned
-    into the index, so batch N+1 dedups against batch N's survivors,
-    not just the original corpus (the incremental twin of
-    :func:`stream_neardup_filter`, VERDICT r9 #6). Undecodable blobs
-    are KEPT and never indexed (not evidence of duplication).
-
-    ``foreachBatch`` for the same reason as the text twin: the
-    per-image verdict collapses exploded band candidates back to one
-    row per image, and the batch body IS the batch-tested
-    :func:`image_filter_against` probe — stream ≡ sequential-batch by
-    construction. Per-batch cost: one map-only decode pass, one band
-    equi-join, and (append) one batch-sized band build + eager
-    localCheckpoint of the union — the standing index is never
-    re-shuffled. Intra-batch duplicates both survive (filter-against
-    semantics; run :func:`image_neardup_pairs` inside the batch if you
-    need intra-batch dedup too). Returns the started StreamingQuery."""
-    from polars_dataset_spark.functions.imagehash import (
-        _dup_probe_ids,
-        _hash_for_index,
-        append_to_image_index,
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = _hash_for_index(batch_df, index, id_col, content_col).persist()
-        dupes = _dup_probe_ids(hashed, index, id_col)
-        batch_df.join(dupes, on=id_col, how="left_anti").write.mode(
-            "append"
-        ).parquet(sink_path)
-        if update_index:
-            surviving = hashed.join(dupes, on=id_col, how="left_anti")
-            append_to_image_index(index, surviving)
-        hashed.unpersist(blocking=False)
-
-    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
-    if checkpoint_path:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    return writer.start()
-
-
-def _stream_banded_media_filter(
-    stream_df: DataFrame,
-    index: "object",
-    fingerprint_fn,
-    sink_path: str,
-    id_col: str,
-    content_col: str,
-    checkpoint_path: "str | None",
-    update_index: bool,
-) -> "object":
-    """Shared continuous-ingestion dedup loop for any modality whose
-    index uses the banded 64-bit layout (audio/video; the image twin
-    predates this helper and keeps its own hash-config plumbing).
-    Per micro-batch: fingerprint ONCE (decode dominates), band-probe
-    the persisted index, append only no-near-dup survivors to the
-    parquet sink, then (``update_index=True``) union the survivors'
-    signatures into the index via the shared eager-localCheckpoint
-    cache swap — batch N+1 dedups against batch N's survivors, the
-    standing index never re-shuffles, stream ≡ sequential-batch by
-    construction. Undecodable / too-short blobs are KEPT and never
-    indexed (not evidence of duplication)."""
-    from polars_dataset_spark.functions.dedup import (
-        append_to_banded_index,
-        band_key_structs,
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = (
-            fingerprint_fn(
-                batch_df.select(id_col, content_col),
-                content_col=content_col,
-                out_col="__sig",
-            )
-            .select(id_col, "__sig")
-            .persist()
-        )
-        probes = (
-            hashed.filter("__sig IS NOT NULL")
-            .select(
-                id_col,
-                "__sig",
-                F.explode(
-                    F.array(*band_key_structs("__sig", index.max_hamming))
-                ).alias("bk"),
-            )
-            .select(id_col, "__sig", "bk.chunk", "bk.key")
-        )
-        ham = F.bit_count(F.col("__sig").bitwiseXOR(F.col("__csig")))
-        dupes = (
-            probes.join(index.banded, on=["chunk", "key"])
-            .filter(ham <= index.max_hamming)
-            .select(id_col)
-            .distinct()
-        )
-        batch_df.join(dupes, on=id_col, how="left_anti").write.mode(
-            "append"
-        ).parquet(sink_path)
-        if update_index:
-            surviving = hashed.join(dupes, on=id_col, how="left_anti")
-            append_to_banded_index(index, surviving)
-        hashed.unpersist(blocking=False)
-
-    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
-    if checkpoint_path:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    return writer.start()
-
-
-def stream_audio_filter(
-    stream_df: DataFrame,
-    index: "object",  # functions.audiohash.AudioNeardupIndex
+    index: "object",  # functions.dedup.BandedIndex
     sink_path: str,
     id_col: str = "media_id",
     content_col: str = "content",
     checkpoint_path: "str | None" = None,
-    update_index: bool = True,
 ) -> "object":
-    """Continuous-ingestion audio dedup against the persisted
-    fingerprint index (:func:`functions.audiohash.build_audio_index`)
-    — the audio twin of :func:`stream_image_filter`; see
-    :func:`_stream_banded_media_filter` for the per-batch contract.
+    """Continuous-ingestion media dedup for any modality (the index's
+    own fingerprint decides: image, audio or video). Per micro-batch:
+    fingerprint ONCE (decode dominates), band-probe the persisted
+    :class:`functions.dedup.BandedIndex`, append only blobs with no
+    indexed near-duplicate to the parquet sink, then append the
+    survivors' signatures to the index, so batch N+1 dedups against
+    batch N's survivors too. The batch body is the batch-tested
+    :meth:`BandedIndex.filter_against` probe, so stream ≡
+    sequential-batch by construction; the standing index is never
+    re-shuffled. Undecodable blobs are KEPT and never indexed;
+    intra-batch duplicates both survive (filter-against semantics).
     Returns the started StreamingQuery."""
-    from polars_dataset_spark.functions.audiohash import audio_fingerprint
 
-    return _stream_banded_media_filter(
-        stream_df, index, audio_fingerprint, sink_path, id_col,
-        content_col, checkpoint_path, update_index,
-    )
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        hashed = index.hash(batch_df, id_col, content_col).persist()
+        dupes = index.dup_ids(hashed, id_col)
+        batch_df.join(dupes, on=id_col, how="left_anti").write.mode(
+            "append"
+        ).parquet(sink_path)
+        index.append(hashed.join(dupes, on=id_col, how="left_anti"))
+        hashed.unpersist(blocking=False)
+
+    return _drain(stream_df, apply_batch, checkpoint_path)
 
 
-def stream_video_filter(
-    stream_df: DataFrame,
-    index: "object",  # functions.videohash.VideoNeardupIndex
-    sink_path: str,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    checkpoint_path: "str | None" = None,
-    update_index: bool = True,
-) -> "object":
-    """Continuous-ingestion video dedup against the persisted temporal-
-    signature index (:func:`functions.videohash.build_video_index`) —
-    the video twin of :func:`stream_image_filter`; see
-    :func:`_stream_banded_media_filter` for the per-batch contract.
-    Returns the started StreamingQuery."""
-    from polars_dataset_spark.functions.videohash import video_fingerprint
-
-    return _stream_banded_media_filter(
-        stream_df, index, video_fingerprint, sink_path, id_col,
-        content_col, checkpoint_path, update_index,
-    )
+stream_image_filter = stream_audio_filter = stream_video_filter = _stream_media_filter
 
 
 def stream_heavy_hitters(
@@ -673,7 +544,6 @@ def stream_heavy_hitters(
             sub = sorted(counters.values(), reverse=True)[k]
             counters = {i: c - sub for i, c in counters.items() if c > sub}
         rows = sorted(counters.items())
-        cache["state"] = rows
         # pandas input -> Arrow local relation: ONE partition, one small
         # file (a python-list relation would inherit defaultParallelism
         # partitions, and coalesce(1) over those measures ~6 s here)
@@ -683,13 +553,8 @@ def stream_heavy_hitters(
         )
         merged.write.mode("overwrite").parquet(f"{state_path}__staging")
         swap_state(spark, state_path)
+        # only after the durable swap: a failed batch must not leave
+        # the next one merging onto state that never reached disk
+        cache["state"] = rows
 
-    # availableNow: drain-everything-then-terminate. All callers feed a
-    # fully-materialized file listing and drain once; self-termination
-    # makes the caller's defensive stop() a no-op instead of a job-group
-    # cancellation (which races the Python-worker fork handshake under
-    # concurrent load — the bench's BrokenPipeError source).
-    writer = stream_df.writeStream.trigger(availableNow=True).foreachBatch(apply_batch)
-    if checkpoint_path:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    return writer.start()
+    return _drain(stream_df, apply_batch, checkpoint_path)

@@ -1,10 +1,9 @@
-"""Regression pins for the four ADVICE r10 findings (fixed in r11):
+"""Regression pins for the ADVICE r10 findings fixed in r11:
 header/meta-labelled utf-16 without a BOM must keep its first char
 (html.py), /Encrypt past a fixed 2 KiB trailer window must be seen
-(pdf.py — pinned in test_pdf15.py), the audio fingerprint must derive
-all 64 bits from inside the 200-3200 Hz design band (audiohash.py),
-and the sf10 merge tool must not cite pre-change evidence for
-R-touched names (tools/merge_sf10_artifact.py)."""
+(pdf.py — pinned in test_pdf15.py), and the audio fingerprint must
+derive all 64 bits from inside the 200-3200 Hz design band
+(audiohash.py)."""
 
 from polars_dataset_spark.functions.html import decode_html, resolve_charset
 

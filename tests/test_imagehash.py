@@ -300,3 +300,116 @@ def test_image_index_filter_against(spark):
     kept = sorted(r.media_id for r in image_filter_against(batch, idx).collect())
     assert kept == [11, 12]
     idx.unpersist()
+
+
+def test_hamming_band_pairs_nondivisor_k_recall_exact(spark):
+    """Brute-force parity at k=2 and k=4 (3 and 5 chunks — neither
+    divides 64): banding must still find EXACTLY the pairs within k."""
+    from polars_dataset_spark.functions.dedup import hamming_band_pairs
+
+    rng = np.random.default_rng(11)
+    sigs = [int(s) for s in rng.integers(-(1 << 63), 1 << 63, size=32, dtype=np.int64)]
+
+    def xor64(a: int, mask: int) -> int:
+        v = (a ^ mask) & 0xFFFFFFFFFFFFFFFF
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    # plant pairs whose differing bits live in the HIGH remainder bits
+    # the old floor-width banding left uncovered (bits 60..63 for k=2)
+    sigs[1] = sigs[0]
+    sigs[2] = xor64(sigs[0], (1 << 62) | (1 << 63))
+    sigs[3] = xor64(sigs[0], (1 << 0) | (1 << 61) | (1 << 63))
+    sigs[5] = xor64(sigs[4], (1 << 60) | (1 << 61) | (1 << 62) | (1 << 63))
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(sigs)], "id long, sig long"
+    )
+    for k in (2, 4):
+        got = {
+            (r.id_a, r.id_b, r.hamming)
+            for r in hamming_band_pairs(df, "id", "sig", max_hamming=k).collect()
+        }
+        want = {
+            (i, j, _ham(sigs[i], sigs[j]))
+            for i in range(len(sigs))
+            for j in range(i + 1, len(sigs))
+            if _ham(sigs[i], sigs[j]) <= k
+        }
+        assert got == want, k
+    assert (0, 2, 2) in want or _ham(sigs[0], sigs[2]) <= 4  # planted pair reached
+
+
+def test_band_keys_bit_identical_for_divisor_k(spark):
+    """For k+1 | 64 the fold-remainder rewrite must produce the SAME
+    (chunk, key) rows as the historical fixed-width formula — persisted
+    banded image indexes were built with the old keys."""
+    from pyspark.sql import functions as F
+
+    from polars_dataset_spark.functions.dedup import band_key_structs
+
+    sigs = [0, -1, 123456789012345, -987654321987654321, 1 << 62]
+    df = spark.createDataFrame([(s,) for s in sigs], "sig long")
+    # k=0 excluded: the OLD formula's mask (1<<64)-1 overflows a long —
+    # the rewrite (no mask on the last chunk) is what makes k=0 legal
+    for k in (1, 3, 7):
+        chunks, width = k + 1, 64 // (k + 1)
+        old = [
+            F.struct(
+                F.lit(c).alias("chunk"),
+                F.shiftrightunsigned(F.col("sig"), c * width)
+                .bitwiseAND(F.lit((1 << width) - 1))
+                .alias("key"),
+            )
+            for c in range(chunks)
+        ]
+        rows = df.select(
+            "sig",
+            F.array(*band_key_structs("sig", k)).alias("new"),
+            F.array(*old).alias("old"),
+        ).collect()
+        for r in rows:
+            assert r.new == r.old, (k, r.sig)
+
+
+def test_image_index_orientation_flag_respected(spark):
+    """Index built with orientation_normalize=True must normalize its
+    PROBES too: a rotated+Exif-tagged re-encode of a corpus image is a
+    duplicate and must drop."""
+    from polars_dataset_spark.functions.imagehash import (
+        build_image_index,
+        image_filter_against,
+    )
+    from polars_dataset_spark.functions.jpeg import encode_jpeg_gray
+
+    img = _base()
+    jpg_up = encode_jpeg_gray(img)
+    jpg_rot = encode_jpeg_gray(np.rot90(img, -1).copy())
+    spliced = jpg_rot[:2] + _orientation_app1(8) + jpg_rot[2:]
+
+    corpus = spark.createDataFrame(
+        [(0, bytearray(jpg_up))], "media_id long, content binary"
+    )
+    yy, xx = np.mgrid[0:24, 0:32]
+    novel = ((xx + yy) % 2).astype(np.float64)
+    batch = spark.createDataFrame(
+        [
+            (10, bytearray(spliced)),  # rotated duplicate of corpus img
+            (11, bytearray(encode_jpeg_gray(novel))),
+        ],
+        "media_id long, content binary",
+    )
+
+    idx_raw = build_image_index(corpus, orientation_normalize=False)
+    assert idx_raw.fingerprint_kwargs["orientation_normalize"] is False
+    kept_raw = sorted(
+        r.media_id for r in image_filter_against(batch, idx_raw).collect()
+    )
+    idx_raw.unpersist()
+    assert kept_raw == [10, 11]  # raw dHash can't see through rotation
+
+    idx_norm = build_image_index(corpus, orientation_normalize=True)
+    assert idx_norm.fingerprint_kwargs["orientation_normalize"] is True
+    kept_norm = sorted(
+        r.media_id for r in image_filter_against(batch, idx_norm).collect()
+    )
+    idx_norm.unpersist()
+    assert kept_norm == [11]  # normalized probe catches the rotation

@@ -157,3 +157,13 @@ def test_invalid_args(spark):
         ds.rolling_quantiles("v", {"out": 0.5}, 0)
     with pytest.raises(ValueError, match="not in"):
         ds.rolling_quantiles("v", {"out": 1.5}, 3)
+
+
+def test_output_name_collision_raises(spark):
+    """A ``qs`` output name that is already a column must raise, not
+    produce a schema with a duplicate field (ADVICE r13)."""
+    sdf = spark.createDataFrame(_frame(n=10))
+    ds = Dataset(sdf, index="x", id_vars=["g"])
+    for name in ("v", "g", "x"):
+        with pytest.raises(ValueError, match="already exists"):
+            ds.rolling_quantiles("v", {"p50": 0.5, name: 0.9}, 3)

@@ -365,6 +365,51 @@ def test_stream_heavy_hitters_state_guarantees(spark, tmp_path):
         assert est >= true[item] - phi * n
 
 
+def test_stream_heavy_hitters_failed_swap_keeps_memory_state_durable(
+    spark, tmp_path, monkeypatch
+):
+    """The in-session MG state cache advances only after the durable
+    state swap: a batch whose swap fails must not leak into the next
+    batch's merge. Batch 1's swap raises; batch 2 (disjoint items)
+    swaps normally, so the durable state is batch 2's summary alone."""
+    from collections import Counter
+
+    from polars_dataset_spark.streaming import ops, state_fs
+
+    captured = {}
+    monkeypatch.setattr(
+        ops,
+        "_drain",
+        lambda stream_df, apply_batch, checkpoint_path: captured.update(
+            apply_batch=apply_batch
+        ),
+    )
+    real_swap = state_fs.swap_state
+    fail = {"on": True}
+
+    def flaky_swap(spark, target_path):
+        if fail["on"]:
+            raise OSError("injected swap failure")
+        real_swap(spark, target_path)
+
+    monkeypatch.setattr(state_fs, "swap_state", flaky_swap)
+
+    b1_items = ["a"] * 5 + ["b"] * 3
+    b2_items = ["x"] * 4 + ["y"] * 2
+    b1 = spark.createDataFrame([(i,) for i in b1_items], "item string")
+    b2 = spark.createDataFrame([(i,) for i in b2_items], "item string")
+    state = str(tmp_path / "mg_state")
+    ops.stream_heavy_hitters(b1, "item", state, phi=0.2)  # k = 4 counters
+    apply_batch = captured["apply_batch"]
+    with pytest.raises(OSError, match="injected"):
+        apply_batch(b1, 0)
+    fail["on"] = False
+    apply_batch(b2, 1)
+    got = {r.item: r.est for r in spark.read.parquet(state).collect()}
+    # <= k distinct items: the MG summary of batch 2 is its exact counts
+    assert got == dict(Counter(b2_items))
+
+
 def test_stream_neardup_filter_matches_batch(spark, sf_dir, tmp_path):
     """Continuous-ingestion fuzzy dedup: streaming arriving documents
     against a static corpus index must keep exactly the documents the
@@ -546,7 +591,6 @@ def test_stream_image_filter_matches_batch_and_appends(spark, tmp_path):
 
     from polars_dataset_spark.functions.gif import encode_gif_gray
     from polars_dataset_spark.functions.imagehash import (
-        _hash_for_index,
         append_to_image_index,
         build_image_index,
         image_filter_against,
@@ -589,7 +633,7 @@ def test_stream_image_filter_matches_batch_and_appends(spark, tmp_path):
         kept = image_filter_against(bdf, idx_b)
         expect += [r.media_id for r in kept.collect()]
         append_to_image_index(
-            idx_b, _hash_for_index(kept, idx_b, "media_id", "content")
+            idx_b, idx_b.hash(kept, "media_id", "content")
         )
     idx_b.unpersist()
     assert sorted(expect) == [11, 12, 21]  # the fixture's designed verdicts
