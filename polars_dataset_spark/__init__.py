@@ -26,7 +26,11 @@ filters, prunes columns and picks join strategies); Python kernels are
 confined to the genuinely custom numerics.
 """
 
-from polars_dataset_spark.core import Dataset
+from polars_dataset_spark import worker_zipimport
+
+worker_zipimport.install()  # no-op outside a PySpark worker
+
+from polars_dataset_spark.core import Dataset  # noqa: E402
 from polars_dataset_spark.sources.datafile import Datafile
 from polars_dataset_spark.session import get_spark
 

@@ -1,23 +1,25 @@
 """Deduplication operators for training-data pipelines (SURVEY §2.4).
 
-Five families, each with the candidate-generation / exact-verify split that
-survives 100 TB:
+Every fuzzy dedup bands signatures into candidate buckets, then verifies
+each candidate EXACTLY before anything drops, so pair work is bounded by
+bucket size, never |docs|². There are two banded paths:
 
-- :func:`exact_dedup` — hash group-by on (normalized) content. One shuffle.
-- MinHash + LSH — :func:`minhash_signatures` (JVM-side, no UDF: shingles →
-  ``xxhash64`` per seed → ``array_min``), banded into buckets
-  (:func:`minhash_lsh_candidates`); candidate pairs are verified with the
-  EXACT Jaccard on shingle sets before anything is dropped. Pair blow-up is
-  bounded by bucket size, never |docs|².
-- SimHash — :func:`simhash` (token hashes JVM-side, the 64-bit sign-sum in
-  one Arrow-batched pandas UDF); near-duplicates found by Hamming-band
-  blocking + exact ``bit_count(xor)`` verify.
-  The same banding serves every 64-bit media fingerprint (image,
-  audio, video): :func:`banded_neardup_pairs` for pairs and
-  :class:`BandedIndex` for the persisted arriving-vs-corpus index.
-- n-gram Jaccard — character-shingle variant of the MinHash path.
-- :func:`embedding_neardup` — cosine near-dup over an embedding column via
-  random-hyperplane LSH buckets + exact cosine verify.
+- **MinHash** (Jaccard over shingle sets): :func:`minhash_signatures`
+  signs; ``_lsh_pairs`` bands both sides, equi-joins on the band key and
+  verifies Jaccard on the shingle sets joined back. It serves the
+  self-join (:func:`minhash_lsh_candidates`, :func:`minhash_dedup`,
+  :func:`ngram_jaccard_pairs`), the cross-join (:func:`fuzzy_join`) and
+  the probe of a static corpus (:func:`neardup_filter_against`) against
+  a :class:`NeardupIndex`, which carries its LSH parameters.
+- **Hamming** (any 64-bit fingerprint): :func:`band_key_structs` cuts
+  ``max_hamming + 1`` pigeonhole chunks (recall exactly 1) and
+  ``bit_count(a XOR b)`` verifies — :func:`hamming_band_pairs`,
+  :func:`banded_neardup_pairs` and the persisted :class:`BandedIndex`.
+  Both SimHash dedups and the image, audio and video hashes ride it.
+
+Also :func:`exact_dedup` (one hash group-by; run it before any fuzzy
+pass) and :func:`embedding_neardup` (random-hyperplane buckets + exact
+cosine verify).
 
 Representative selection everywhere is "keep the smallest id among
 near-duplicates": any row with a confirmed duplicate of smaller id drops.
@@ -41,10 +43,11 @@ from polars_dataset_spark.session import pin
 def _swap_cache(result: DataFrame, intermediate: DataFrame) -> DataFrame:
     """Move the cache from a big intermediate onto the (small) result:
     persist + materialize the result, then free the intermediate's blocks.
-    Without this, every LSH call in a long-lived session leaks an
-    input-sized cache entry (signatures/shingles) for the session
-    lifetime; after the swap only an output-sized entry remains, and the
-    ContextCleaner drops it once the caller releases the frame."""
+    Without the swap every LSH call would hold an input-sized cache entry
+    (signatures/shingles); after it only an output-sized entry remains.
+    That entry is NOT freed when the caller drops the frame: ``persist``
+    registers the plan with Spark's CacheManager, which holds it until
+    ``unpersist``/``clearCache`` or the end of the session."""
     result = result.persist()
     result.count()
     intermediate.unpersist(blocking=False)
@@ -149,40 +152,18 @@ def minhash_signatures(
     shingle_kind: str = "token",
     shingles_col: str = "shingles",
     sig_col: str = "minhash",
-    impl: str = "vectorized",
     seed: int = 42,
 ) -> DataFrame:
     """Attach shingle set + MinHash signature (array<long>).
 
-    ``impl="vectorized"`` (default): ONE ``xxhash64`` per shingle JVM-side,
-    then the ``num_hashes`` signature lanes are derived as affine re-mixes
-    ``h_j = a_j·h + b_j (mod 2^64)`` with odd seeded multipliers, min'd per
-    lane in a single Arrow-batched numpy op — the standard one-strong-hash
-    + universal-family construction, ~10× faster than ``impl="expr"``
-    (``num_hashes`` separate interpreted ``transform`` passes) with the
-    same collision statistics. Map-only either way; shuffles only appear
-    downstream in the band join.
+    ONE 64-bit hash per shingle, then the ``num_hashes`` signature lanes
+    are derived as affine re-mixes ``h_j = a_j·h + b_j (mod 2^64)`` with
+    odd seeded multipliers, min'd per lane in a single Arrow-batched
+    numpy op — the standard one-strong-hash + universal-family
+    construction. Map-only; shuffles only appear downstream in the band
+    join. Every MinHash op here signs through this one function, so
+    equal parameters always give equal signatures.
     """
-    if impl == "expr":
-        sh = (token_shingles if shingle_kind == "token" else char_shingles)(
-            F.col(text_col), shingle_size
-        )
-        tmp = df.withColumn(shingles_col, sh)
-
-        def hasher(j: int):
-            # NB: a bound default (lambda s, j=j: ...) would make the lambda
-            # 2-ary, and pyspark's `transform` passes the ARRAY INDEX as the
-            # second argument — silently shadowing the seed. Keep it 1-ary.
-            return lambda s: F.xxhash64(s, F.lit(j))
-
-        sig = F.array(
-            *[
-                F.array_min(F.transform(F.col(shingles_col), hasher(j)))
-                for j in range(num_hashes)
-            ]
-        )
-        return tmp.withColumn(sig_col, sig)
-
     from polars_dataset_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # shingle+sign is the heavy map stage
@@ -255,9 +236,7 @@ def _band_keys(
 ) -> DataFrame:
     """Explode a signature frame into LSH bucket keys ``(id, band, bh)``:
     each band of ``num_hashes/bands`` signature lanes hashes to one
-    64-bit bucket key. Shared by the self-join (minhash_lsh_candidates),
-    the cross-join (fuzzy_join) and the static-index (neardup) variants
-    so all three land identical texts in identical buckets."""
+    64-bit bucket key, so identical texts land in identical buckets."""
     rows = num_hashes // bands
     return sigd.select(
         F.col(id_col),
@@ -280,6 +259,48 @@ def _band_keys(
     ).select(id_col, "bk.band", "bk.bh")
 
 
+def _lsh_pairs(
+    sig_a: DataFrame,
+    id_a: str,
+    sig_b: DataFrame,
+    id_b: str,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """Verified MinHash LSH pairs ``(id_a, id_b, jaccard)`` between two
+    :func:`minhash_signatures` frames, lazily. Band rows carry ONLY
+    ``(id, band, bh)``: shuffling the shingle arrays ``bands`` times
+    through the join would dominate the operator, so the distinct
+    candidate pairs join back to one copy of each side's shingle sets for
+    the exact verify. Callers persist the signature frames (each is read
+    twice)."""
+
+    def side(sig, id_col, out, sh):
+        banded = _band_keys(sig, id_col, num_hashes, bands)
+        return (
+            banded.select(F.col(id_col).alias(out), "band", "bh"),
+            sig.select(F.col(id_col).alias(out), F.col("shingles").alias(sh)),
+        )
+
+    band_a, sh_a = side(sig_a, id_a, "id_a", "sh_a")
+    band_b, sh_b = side(sig_b, id_b, "id_b", "sh_b")
+    cand = (
+        band_a.join(band_b, on=["band", "bh"])
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    return (
+        cand.join(sh_a, on="id_a")
+        .join(sh_b, on="id_b")
+        .withColumn("jaccard", F.round(inter / union, 6))
+        .filter(F.col("jaccard") >= F.lit(threshold))
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -300,45 +321,13 @@ def minhash_lsh_candidates(
     volume is |docs|·bands, never |docs|². Every candidate is then verified
     with the exact Jaccard over the true shingle sets; only pairs ≥
     ``threshold`` survive."""
-    sigd = minhash_signatures(
-        df.select(id_col, text_col),
-        text_col,
-        num_hashes=num_hashes,
-        shingle_size=shingle_size,
-        shingle_kind=shingle_kind,
-    ).persist()  # referenced twice below (banding + verify): pay the
-    # shingle/signature pass once; MEMORY_AND_DISK default spills safely
-    # Band rows carry ONLY (id, band, band_hash): shuffling the shingle
-    # arrays 16× through the self-join would dominate the whole operator —
-    # instead the (small) candidate pair set joins back to one copy of the
-    # shingle sets for the exact verify.
-    banded = _band_keys(sigd, id_col, num_hashes, bands)
-
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
-    pairs = (
-        a.join(b, on=["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    shingle_sets = sigd.select(F.col(id_col), F.col("shingles"))
-    pairs = (
-        pairs.join(
-            shingle_sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
-            on="id_a",
-        ).join(
-            shingle_sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
-            on="id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    verified = (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    lsh = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
+    # banding + verify both read it; MEMORY_AND_DISK spills safely
+    sigd = lsh.sign(df, id_col, text_col).persist()
+    # Catalyst pushes id_a < id_b below the candidate dedup into the band join
+    verified = _lsh_pairs(
+        sigd, id_col, sigd, id_col, num_hashes, bands, threshold
+    ).filter(F.col("id_a") < F.col("id_b"))
     # near-dup pairs are small by contract — cache those, free the
     # input-sized signature/shingle cache
     return _swap_cache(verified, sigd)
@@ -371,27 +360,19 @@ def simhash_dedup_portable(
     engine can replay the exact same simhashes, pair set, and survivor
     set, value-for-value.
 
-    Construction (classic Charikar, tf-weighted): explode tokens →
-    per-(doc, token) counts → 64 codegen'd ± vote sums → the 64 sign bits
-    packed into ``max_hamming + 1`` SMALL integer chunks (16-bit here, so
-    no 64-bit overflow anywhere under ANSI mode). Candidates must agree
-    on ≥1 chunk (pigeonhole — recall is EXACTLY 1 for hamming ≤ k, not
-    probabilistic), verified with ``bit_count(xor)`` over the chunks.
-    Same two-shuffle + band-join scale shape as :func:`simhash_dedup`;
-    the fast path hashes Arrow-side instead and stays rows-only."""
+    Construction (classic Charikar, tf-weighted): tokens → per-(doc,
+    token) counts → 64 ± vote sums → the 64 sign bits packed into one
+    ``long`` (bit ``i`` = sign of vote ``i``). Pairs come from
+    :func:`hamming_band_pairs`: shifts, masks and ``bit_count`` on a
+    long never overflow under ANSI mode, and for ``max_hamming=3`` its
+    four band keys are exactly the 16-bit chunks the SQL oracle states.
+    The fast path (:func:`simhash_dedup`) hashes Arrow-side instead."""
     from polars_dataset_spark.session import ensure_parallelism
-
-    chunks = max_hamming + 1
-    if 64 % chunks:
-        raise ValueError("max_hamming + 1 must divide 64")
-    width = 64 // chunks
-    if width > 30:
-        raise ValueError("chunk width must fit an int: max_hamming >= 2 required")
 
     df = ensure_parallelism(df)
 
     # The whole signature — tokenize, md5 per UNIQUE token, 64 tf-weighted
-    # vote sums, sign-bit chunk packing — is ONE map-only Arrow batch
+    # vote sums, sign-bit packing — is ONE map-only Arrow batch
     # (earlier revisions tried explode + 64 codegen'd sums: correct, but
     # Catalyst analysis + janino compile of the 64-expression aggregate
     # cost ~10 s per cold plan, dwarfing the data). Bit semantics are the
@@ -400,12 +381,8 @@ def simhash_dedup_portable(
     # ASCII-\s+ split of space-trimmed lower text, with a '' token for
     # empty docs (DuckDB string_split parity). Python touches each unique
     # token once per batch; votes are numpy (unpackbits + reduceat).
-    out_type = T.StructType(
-        [T.StructField(f"ch{k}", T.IntegerType()) for k in range(chunks)]
-    )
-
-    @F.pandas_udf(out_type)
-    def simhash_chunks(texts: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf(T.LongType())
+    def portable_simhash(texts: pd.Series) -> pd.Series:
         import hashlib
         import re
 
@@ -415,9 +392,7 @@ def simhash_dedup_portable(
             norm = ws.sub(" ", (s or "").strip(" ").lower())
             toks_per_doc.append(norm.split(" ") if norm else [""])
         if not toks_per_doc:
-            return pd.DataFrame(
-                {f"ch{k}": pd.array([], dtype="int32") for k in range(chunks)}
-            )
+            return pd.Series([], dtype="int64")
         lens = np.fromiter(map(len, toks_per_doc), dtype=np.int64, count=len(toks_per_doc))
         starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
         flat = np.concatenate([np.asarray(t, dtype=object) for t in toks_per_doc])
@@ -429,65 +404,16 @@ def simhash_dedup_portable(
             )
         signs = np.unpackbits(digests, axis=1).astype(np.int32) * 2 - 1  # (uniq, 64)
         votes = np.add.reduceat(signs[inv], starts, axis=0)  # (docs, 64)
-        pos = votes > 0
-        out = {}
-        for k in range(chunks):
-            val = np.zeros(len(toks_per_doc), dtype=np.int32)
-            for p in range(width):
-                val |= pos[:, k * width + p].astype(np.int32) << p
-            out[f"ch{k}"] = val
-        return pd.DataFrame(out)
+        # bit i of the long = sign of vote i (little-endian bit order)
+        packed = np.packbits(votes > 0, axis=1, bitorder="little")
+        return pd.Series(np.ascontiguousarray(packed).view("<i8").ravel())
 
-    sh = (
-        df.select(F.col(id_col), simhash_chunks(F.col(text_col)).alias("__s"))
-        .select(
-            F.col(id_col),
-            *[F.col(f"__s.ch{k}").alias(f"__ch{k}") for k in range(chunks)],
-        )
-        .persist()
-    )
-
-    banded = sh.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(k).alias("chunk"), F.col(f"__ch{k}").alias("val"))
-                    for k in range(chunks)
-                ]
-            )
-        ).alias("__b"),
-    ).select(id_col, "__b.chunk", "__b.val")
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["chunk", "val"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sha = sh.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"__ch{k}").alias(f"__a{k}") for k in range(chunks)],
-    )
-    shb = sh.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"__ch{k}").alias(f"__b{k}") for k in range(chunks)],
-    )
-    ham = sum(
-        [
-            F.bit_count(F.col(f"__a{k}").bitwiseXOR(F.col(f"__b{k}")))
-            for k in range(chunks)
-        ],
-        F.lit(0),
-    )
-    pairs = (
-        cand.join(sha, "id_a")
-        .join(shb, "id_b")
-        .filter(ham <= max_hamming)
-        .select("id_b")
-        .distinct()
-    )
-    out = df.join(pairs.withColumnRenamed("id_b", id_col), on=id_col, how="left_anti")
+    sh = df.select(
+        F.col(id_col), portable_simhash(F.col(text_col)).alias("__sig")
+    ).persist()
+    pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="__sig", max_hamming=max_hamming)
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    out = df.join(losers, on=id_col, how="left_anti")
     return _swap_cache(out, sh)
 
 
@@ -755,15 +681,18 @@ def simhash_dedup(
     text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup removal by SimHash: candidates from Hamming-band blocking
-    (:func:`hamming_band_pairs` — pigeonhole, recall exactly 1), verified
-    with exact ``bit_count(a XOR b) <= k``. Drops the larger id of each
-    pair."""
-    # persist: the banded self-join references this frame twice and the
-    # simhash UDF would otherwise run once per branch
-    sh = simhash(df.select(id_col, text_col), text_col).select(id_col, "simhash").persist()
-    pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="simhash", max_hamming=max_hamming)
-    losers = _swap_cache(pairs.select(F.col("id_b").alias(id_col)).distinct(), sh)
+    """Near-dup removal by SimHash: :func:`banded_neardup_pairs` with
+    :func:`simhash` as the fingerprint (pigeonhole banding, recall
+    exactly 1, exact ``bit_count(a XOR b) <= k`` verify). Drops the
+    larger id of each pair."""
+    pairs = banded_neardup_pairs(
+        df,
+        lambda d, content_col, out_col: simhash(d, content_col, out_col),
+        id_col,
+        text_col,
+        max_hamming,
+    )
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, on=id_col, how="left_anti")
 
 
@@ -923,37 +852,15 @@ def fuzzy_join(
     the scale shape for entity resolution / benchmark-contamination
     lookup between corpora — never the |L|·|R| cross join."""
 
-    def prep(df, id_col, text_col, out_id):
-        sigd = minhash_signatures(
-            df.select(F.col(id_col).alias(out_id), F.col(text_col).alias("__t")),
-            "__t",
-            num_hashes=num_hashes,
-            shingle_size=shingle_size,
-            shingle_kind=shingle_kind,
-        ).persist()
-        banded = _band_keys(sigd, out_id, num_hashes, bands)
-        return sigd, banded
-
-    sig_l, band_l = prep(left, left_id, left_text, "__lid")
-    sig_r, band_r = prep(right, right_id, right_text, "__rid")
-    pairs = (
-        band_l.join(band_r, on=["band", "bh"])
-        .select("__lid", "__rid")
-        .dropDuplicates(["__lid", "__rid"])
-    )
-    pairs = pairs.join(
-        sig_l.select("__lid", F.col("shingles").alias("sh_a")), on="__lid"
-    ).join(sig_r.select("__rid", F.col("shingles").alias("sh_b")), on="__rid")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select(
-            F.col("__lid").alias(left_id + "_l"),
-            F.col("__rid").alias(right_id + "_r"),
-            "jaccard",
-        )
+    lsh = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
+    sig_l = lsh.sign(left, left_id, left_text).persist()
+    sig_r = lsh.sign(right, right_id, right_text).persist()
+    out = _lsh_pairs(
+        sig_l, left_id, sig_r, right_id, num_hashes, bands, threshold
+    ).select(
+        F.col("id_a").alias(left_id + "_l"),
+        F.col("id_b").alias(right_id + "_r"),
+        "jaccard",
     )
     # materialize the (small) pair result via localCheckpoint — unlike a
     # bare persist it is ContextCleaner-collected when the caller drops
@@ -966,20 +873,43 @@ def fuzzy_join(
 
 
 class NeardupIndex:
-    """Pre-signed LSH index of a static corpus
-    (:func:`build_neardup_index`): band bucket keys ``banded``
-    ``(__cid, band, bh)`` and shingle sets ``shingles``
-    ``(__cid, __csh)``. ``unpersist()`` releases the backing caches
-    when the index is retired."""
+    """Pre-signed MinHash LSH index of a static corpus
+    (:func:`build_neardup_index`), carrying the LSH parameters it was
+    built with: probes always sign through :meth:`sign`, so a probe can
+    never band with parameters the index was not built with. Without a
+    corpus it is just the parameters and :meth:`sign`, which the
+    self-join and the cross-join sign both their sides with.
 
-    def __init__(self, banded: DataFrame, shingles: DataFrame, _sig: DataFrame):
-        self.banded = banded
-        self.shingles = shingles
-        self._sig = _sig
+    ``sig`` is the persisted signed corpus ``(__cid, text, shingles,
+    minhash)``; ``banded`` is its persisted band keys ``(__cid, band,
+    bh)``, which the probe's band explode of ``sig`` reads from the
+    cache. Unlike :class:`BandedIndex`, band rows carry no shingles: the
+    verify joins the shingle sets back after candidate dedup.
+    ``unpersist()`` releases both caches when the index is retired."""
+
+    def __init__(
+        self, num_hashes: int, bands: int, shingle_size: int, shingle_kind: str
+    ):
+        self.num_hashes = num_hashes
+        self.bands = bands
+        self.shingle_size = shingle_size
+        self.shingle_kind = shingle_kind
+        self.sig = self.banded = None  # set by build_neardup_index
+
+    def sign(self, df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        """``(id, text, shingles, minhash)`` of ``df``, signed the way
+        the index was built."""
+        return minhash_signatures(
+            df.select(id_col, text_col),
+            text_col,
+            num_hashes=self.num_hashes,
+            shingle_size=self.shingle_size,
+            shingle_kind=self.shingle_kind,
+        )
 
     def unpersist(self) -> None:
         self.banded.unpersist()
-        self._sig.unpersist()
+        self.sig.unpersist()
 
 
 def build_neardup_index(
@@ -991,11 +921,9 @@ def build_neardup_index(
     shingle_size: int = 3,
     shingle_kind: str = "token",
 ) -> NeardupIndex:
-    """Precompute the LSH side of a STATIC reference corpus once:
-    returns ``(banded, shingles)`` — the band bucket keys
-    ``(__cid, band, bh)`` and the shingle sets ``(__cid, __csh)`` —
-    signed with the same seeded hash family as every other MinHash op
-    here, so identical texts land in identical buckets.
+    """Sign and band a STATIC reference corpus once, with the same seeded
+    hash family as every other MinHash op here, so identical texts land
+    in identical buckets.
 
     This is the piece that makes continuous-ingestion dedup scale: the
     corpus (the big side) is shingled and signed ONE time, then every
@@ -1006,16 +934,11 @@ def build_neardup_index(
     read back. At 100 TB the banded frame is |corpus|·bands rows of
     three longs — write it bucketed by ``(band, bh)`` and the per-batch
     probe join is exchange-free on the corpus side."""
-    sigd = minhash_signatures(
-        corpus.select(F.col(id_col).alias("__cid"), F.col(text_col).alias("__t")),
-        "__t",
-        num_hashes=num_hashes,
-        shingle_size=shingle_size,
-        shingle_kind=shingle_kind,
-    ).persist()
-    banded = _band_keys(sigd, "__cid", num_hashes, bands).persist()
-    shingles = sigd.select("__cid", F.col("shingles").alias("__csh"))
-    return NeardupIndex(banded, shingles, sigd)
+    index = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
+    corpus = corpus.select(F.col(id_col).alias("__cid"), text_col)
+    index.sig = index.sign(corpus, "__cid", text_col).persist()
+    index.banded = _band_keys(index.sig, "__cid", num_hashes, bands).persist()
+    return index
 
 
 def neardup_filter_against(
@@ -1024,42 +947,19 @@ def neardup_filter_against(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    shingle_kind: str = "token",
 ) -> DataFrame:
     """Drop every row of ``docs`` whose text is a near-duplicate (exact
     shingle Jaccard ≥ ``threshold``) of ANY document in the pre-built
     reference index (:func:`build_neardup_index`) — dedup of new data
     against an existing corpus, the row-filter complement of
     :func:`fuzzy_join`'s pair output. All other ``docs`` columns pass
-    through. LSH parameters must match the ones the index was built
-    with (same defaults)."""
-    banded_c, shingles_c = index.banded, index.shingles
-    sig_d = minhash_signatures(
-        docs.select(F.col(id_col).alias("__did"), F.col(text_col).alias("__t")),
-        "__t",
-        num_hashes=num_hashes,
-        shingle_size=shingle_size,
-        shingle_kind=shingle_kind,
-    ).persist()
-    banded_d = _band_keys(sig_d, "__did", num_hashes, bands)
-    cand = (
-        banded_d.join(banded_c, on=["band", "bh"])
-        .select("__did", "__cid")
-        .dropDuplicates(["__did", "__cid"])
+    through. ``docs`` is signed with the index's own LSH parameters."""
+    sig_d = index.sign(docs, id_col, text_col).persist()
+    pairs = _lsh_pairs(
+        sig_d, id_col, index.sig, "__cid", index.num_hashes, index.bands, threshold
     )
-    ver = cand.join(
-        sig_d.select("__did", F.col("shingles").alias("__dsh")), on="__did"
-    ).join(shingles_c, on="__cid")
-    inter = F.size(F.array_intersect("__dsh", "__csh")).cast("double")
-    union = F.size(F.array_union("__dsh", "__csh")).cast("double")
     hit = pin(
-        ver.filter(F.round(inter / union, 6) >= F.lit(threshold))
-        .select(F.col("__did").alias(id_col))
-        .distinct(),
-        eager=True,
+        pairs.select(F.col("id_a").alias(id_col)).distinct(), eager=True
     )  # output-sized pin; frees sig_d safely
     sig_d.unpersist()
     return docs.join(hit, on=id_col, how="left_anti")

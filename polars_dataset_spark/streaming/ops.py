@@ -400,7 +400,6 @@ def stream_neardup_filter(
     text_col: str = "text",
     threshold: float = 0.8,
     checkpoint_path: str | None = None,
-    **lsh_kwargs,
 ) -> "object":
     """Continuous-ingestion fuzzy dedup: every micro-batch of arriving
     documents is MinHash-LSH probed against a PRE-BUILT static corpus
@@ -417,18 +416,14 @@ def stream_neardup_filter(
     :func:`neardup_filter_against`, so stream ≡ batch by construction.
     Per-batch cost: signatures for the batch only, one bucket equi-join
     against the index (broadcast-sized batch side), exact verify on
-    candidates. State lives in the (static) index, not the stream —
+    candidates. Each batch is signed with the index's own LSH
+    parameters. State lives in the (static) index, not the stream —
     nothing grows with stream lifetime."""
     from polars_dataset_spark.functions.dedup import neardup_filter_against
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = neardup_filter_against(
-            batch_df,
-            index,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            **lsh_kwargs,
+            batch_df, index, id_col=id_col, text_col=text_col, threshold=threshold
         )
         out.write.mode("append").parquet(sink_path)
 

@@ -628,6 +628,38 @@ def test_neardup_filter_against_index(spark):
     empty_idx.unpersist()
 
 
+# Near-duplicates planted against a corpus indexed with NON-default LSH
+# parameters (char 5-grams, 8 bands): a probe that signed with the defaults
+# (token 3-grams, 16 bands) would share no band key with the index.
+NEARDUP_CORPUS = [
+    (100, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (101, "large language models train on deduplicated web corpora at scale"),
+    (102, "spark executes distributed queries over columnar parquet files"),
+]
+NEARDUP_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog near the river banks"),
+    (2, "an entirely different sentence about cooking pasta with tomato sauce"),
+    (3, "large language models train on deduplicated web corpora at scale"),
+    (4, "spark executes distributed queries over columnar parquet file"),
+]
+
+
+def test_neardup_probe_uses_index_lsh_parameters(spark):
+    from polars_dataset_spark.functions import (
+        build_neardup_index,
+        neardup_filter_against,
+    )
+
+    corpus = spark.createDataFrame(NEARDUP_CORPUS, "doc_id long, text string")
+    docs = spark.createDataFrame(NEARDUP_DOCS, "doc_id long, text string")
+    idx = build_neardup_index(corpus, shingle_kind="char", shingle_size=5, bands=8)
+    try:
+        out = neardup_filter_against(docs, idx, threshold=0.8)
+        assert sorted(r.doc_id for r in out.collect()) == [2]
+    finally:
+        idx.unpersist()
+
+
 def test_audio_spectrogram_tone_peaks(spark):
     """STFT spectrogram: a pure tone's magnitude must peak at its
     frequency bin (bin = f/rate * frame_size), both per-frame and in the

@@ -6,6 +6,10 @@ checkpoints are cleaned once unreachable."""
 import os
 import subprocess
 import sys
+import zipfile
+import zipimport
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -57,3 +61,53 @@ def test_workers_import_package_from_any_cwd(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     worker_file = proc.stdout.strip().splitlines()[-1]
     assert worker_file.startswith(os.path.join(REPO, "polars_dataset_spark"))
+
+
+def _write_zip(path, names):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name in names:
+            zf.writestr(name, "X = 1\n")
+
+
+def test_zipimporter_rereads_only_a_changed_archive(tmp_path):
+    """An importer re-reads its archive's directory on the first
+    invalidation and whenever the archive changes on disk, never when it
+    is unchanged."""
+    from polars_dataset_spark.worker_zipimport import invalidate_caches
+
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, ["a.py"])
+    imp = zipimport.zipimporter(archive)
+    invalidate_caches(imp)
+    files = imp._files
+    invalidate_caches(imp)
+    invalidate_caches(imp)
+    assert imp._files is files  # unchanged archive: not re-read
+
+    _write_zip(archive, ["a.py", "b.py"])
+    invalidate_caches(imp)
+    assert imp._files is not files
+    assert "b.py" in imp._files and imp.find_spec("b") is not None
+
+
+def test_worker_zipimporter_patched_by_package_import(spark):
+    """Importing the package in a Python worker installs the stat-checked
+    invalidation; the driver's zipimporter is left as it is."""
+    if sys.version_info >= (3, 13):
+        pytest.skip("zipimporter invalidation is lazy from CPython 3.13")
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        import polars_dataset_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        method = zipimport.zipimporter.invalidate_caches
+        yield pd.DataFrame({"module": [method.__module__]})
+
+    got = spark.range(1, numPartitions=1).mapInPandas(probe, "module string").first()
+    assert got.module == "polars_dataset_spark.worker_zipimport"
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"

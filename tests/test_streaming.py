@@ -450,6 +450,37 @@ def test_stream_neardup_filter_matches_batch(spark, sf_dir, tmp_path):
     idx.unpersist()
 
 
+def test_stream_neardup_filter_uses_index_lsh_parameters(
+    spark, tmp_path, monkeypatch
+):
+    """Each micro-batch is signed with the LSH parameters the index was
+    built with (char 5-grams, 8 bands here), not the defaults: the planted
+    near-duplicates never reach the sink."""
+    from polars_dataset_spark.functions import build_neardup_index
+    from polars_dataset_spark.streaming import ops
+
+    from tests.test_functions import NEARDUP_CORPUS, NEARDUP_DOCS
+
+    captured = {}
+    monkeypatch.setattr(
+        ops,
+        "_drain",
+        lambda stream_df, apply_batch, checkpoint_path: captured.update(
+            apply_batch=apply_batch
+        ),
+    )
+    corpus = spark.createDataFrame(NEARDUP_CORPUS, "doc_id long, text string")
+    docs = spark.createDataFrame(NEARDUP_DOCS, "doc_id long, text string")
+    idx = build_neardup_index(corpus, shingle_kind="char", shingle_size=5, bands=8)
+    sink = str(tmp_path / "survivors")
+    try:
+        ops.stream_neardup_filter(docs, idx, sink, threshold=0.8)
+        captured["apply_batch"](docs, 0)
+        assert sorted(r.doc_id for r in spark.read.parquet(sink).collect()) == [2]
+    finally:
+        idx.unpersist()
+
+
 def test_stream_merge_upsert_file_scheme_path(spark, tmp_path):
     """The state swap must run through the Hadoop FileSystem API, not
     os.path: an EXPLICIT file:-scheme target (os.path.exists() is False

@@ -5,10 +5,10 @@ in r9 per VERDICT r8 #3).
 Runs each named query in ONE fresh session, ``--reps`` times
 back-to-back (default 3), and reports every rep plus the warm min (min
 over reps 2+). The first rep carries JIT/codegen and is reported but
-never compared. Queries run in the order given — for the shared-cache
-trio (q64/q162/q176) pass them in canonical order (q64 first) so the
-subtree payer is deterministic, or probe ONE of them solo to measure
-its cache-cold cost.
+never compared. Before every rep the tool clears Spark's cache
+(``catalog.clearCache``) and unpersists every persistent RDD, so a rep
+measures the query's uncached cost and never re-hits what an earlier rep
+or query persisted or pinned. JIT and codegen stay warm.
 
 Usage:
     python tools/warm_solo.py q63_connected_components [q176_...] \
@@ -26,6 +26,15 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def clear_caches(spark) -> None:
+    """Drop cached tables/plans and every persistent RDD (persisted or
+    ``localCheckpoint``-pinned), as ``perfbench/run.py`` does between
+    passes."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
 
 
 def main() -> int:
@@ -55,6 +64,7 @@ def main() -> int:
     for name in args:
         times = []
         for _ in range(reps):
+            clear_caches(spark)
             t0 = time.perf_counter()
             suite.QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
