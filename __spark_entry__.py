@@ -37,59 +37,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # (VERDICT r05 items 2+4): every round the window spends (a) its first
 # rows on queries a past round scored RED without a later green, then
 # (b) never-driver-checked queries (new additions), then (c) a standing
-# RE-CHECK budget — previously-green queries, refactor-touched ones
-# first (code changed AFTER their last driver row), then oldest-checked
-# first — so no query's driver row goes stale indefinitely.  New-query
+# RE-CHECK budget — previously-green queries, oldest-checked first — so
+# no query's driver row goes stale indefinitely.  New-query
 # additions per round must leave >= 10 window rows for group (c); with
 # 199 green rows and ~40 re-check slots/round the full suite re-verifies
 # every ~5 rounds.
-#
-# Queries whose implementation changed AFTER their last driver row —
-# {name: last round whose driver rows PREDATE the change} (the driver
-# scores at END of round, after commits, so a change in round N is
-# covered by round-N rows: record N-1). Fronted in the re-check group
-# ONLY while their last driver row is <= that round; the next green row
-# expires the entry on its own (ADVICE r6: the previous unconditional
-# list never expired and permanently ate ~17 rotation slots).
-#
-# Round 12 touched (all r11-era entries expired on their r11 green
-# rows): urls.py's query regex is now fragment-safe (q179/q207/q215/
-# q223/q227 share the parse path, oracles updated in lockstep);
-# robots.py merges same-specificity groups per RFC 9309 §2.2.1
-# (q218/q225); pii.py's SSN area class covers 001-899\{666}
-# (q221); sitemap.py inflates bounded (q222); q224 materializes via
-# localCheckpoint; pdf.py decrypts permissions-only encrypted files
-# before extraction and tracks generation numbers (q205/q211/q216);
-# warc.py gained the writer (q228 shares the module); the q130/q141
-# ORACLES were restated with the cross-side AllPairs prefix filter
-# (same value set, needs a fresh driver row on the new SQL).
-# Fronted for a fresh driver row; entries self-expire on their next
-# green row.
-# Round 12 session 3: warc.py parse/write gained the http_location
-# surface (q206/q210/q228/q231/q236 share the module; outputs verified
-# unchanged at sf0.01, fresh driver rows wanted anyway).
-_REFACTOR_TOUCHED: dict[str, int] = {
-    "q206_warc_ingest": 11,
-    "q210_html_to_text": 11,
-    "q231_warc_roundtrip": 11,
-    "q236_warc_revisit_dedup": 11,
-    "q130_fuzzy_join": 11,
-    "q141_neardup_vs_corpus": 11,
-    "q179_url_filter": 11,
-    "q205_pdf_probe": 11,
-    "q207_url_canonicalize": 11,
-    "q211_pdf_text": 11,
-    "q215_outlink_frontier": 11,
-    "q216_pdf15_text": 11,
-    "q218_robots_frontier": 11,
-    "q221_pii_scrub": 11,
-    "q222_sitemap_entries": 11,
-    "q223_anchor_inlinks": 11,
-    "q224_jsonl_roundtrip": 11,
-    "q225_fetch_schedule": 11,
-    "q227_cdxj_surt": 11,
-    "q228_warc_range_fetch": 11,
-}
 
 
 def _qnum(name: str) -> int:
@@ -144,14 +96,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     most need a driver row: (1) queries a past round scored RED with no
     later green, (2) queries with no driver row ever (newest additions
     included automatically), (3) the standing re-check rotation of green
-    queries — refactor-touched first, then oldest driver row first —
-    so every row is eventually re-verified without hand edits."""
+    queries, oldest driver row first — so every row is eventually
+    re-verified without hand edits."""
     all_q = dict(suite.QUERIES)
     failed, green, last_round = _driver_history()
-    # stale-touched = code changed in round R but last driver row <= R
-    stale_touched = {
-        n for n, rnd in _REFACTOR_TOUCHED.items() if last_round.get(n, 0) <= rnd
-    }
 
     def key(n: str):
         if n in failed:
@@ -160,12 +108,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             tier = 1
         else:
             tier = 2
-        return (
-            tier,
-            0 if n in stale_touched else 1,
-            last_round.get(n, 0),
-            _qnum(n),
-        )
+        return (tier, last_round.get(n, 0), _qnum(n))
 
     return {n: all_q[n] for n in sorted(all_q, key=key)}
 

@@ -14,8 +14,13 @@ bucket size, never |docs|². There are two banded paths:
 - **Hamming** (any 64-bit fingerprint): :func:`band_key_structs` cuts
   ``max_hamming + 1`` pigeonhole chunks (recall exactly 1) and
   ``bit_count(a XOR b)`` verifies — :func:`hamming_band_pairs`,
-  :func:`banded_neardup_pairs` and the persisted :class:`BandedIndex`.
+  :func:`banded_neardup_pairs` and the pinned :class:`BandedIndex`.
   Both SimHash dedups and the image, audio and video hashes ride it.
+
+Results are pinned (:func:`~polars_dataset_spark.session.pin`), so the
+ContextCleaner frees them once the caller drops the frame; a signature
+intermediate read twice in one call is persisted and released in a
+``finally`` block before the call returns.
 
 Also :func:`exact_dedup` (one hash group-by; run it before any fuzzy
 pass) and :func:`embedding_neardup` (random-hyperplane buckets + exact
@@ -37,21 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from polars_dataset_spark.functions.text import tokenize
-from polars_dataset_spark.session import pin
-
-
-def _swap_cache(result: DataFrame, intermediate: DataFrame) -> DataFrame:
-    """Move the cache from a big intermediate onto the (small) result:
-    persist + materialize the result, then free the intermediate's blocks.
-    Without the swap every LSH call would hold an input-sized cache entry
-    (signatures/shingles); after it only an output-sized entry remains.
-    That entry is NOT freed when the caller drops the frame: ``persist``
-    registers the plan with Spark's CacheManager, which holds it until
-    ``unpersist``/``clearCache`` or the end of the session."""
-    result = result.persist()
-    result.count()
-    intermediate.unpersist(blocking=False)
-    return result
+from polars_dataset_spark.session import pin, unpin
 
 __all__ = [
     "exact_dedup",
@@ -324,13 +315,16 @@ def minhash_lsh_candidates(
     lsh = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
     # banding + verify both read it; MEMORY_AND_DISK spills safely
     sigd = lsh.sign(df, id_col, text_col).persist()
-    # Catalyst pushes id_a < id_b below the candidate dedup into the band join
-    verified = _lsh_pairs(
-        sigd, id_col, sigd, id_col, num_hashes, bands, threshold
-    ).filter(F.col("id_a") < F.col("id_b"))
-    # near-dup pairs are small by contract — cache those, free the
-    # input-sized signature/shingle cache
-    return _swap_cache(verified, sigd)
+    try:
+        # Catalyst pushes id_a < id_b below the candidate dedup into the
+        # band join; near-dup pairs are small by contract
+        return pin(
+            _lsh_pairs(sigd, id_col, sigd, id_col, num_hashes, bands, threshold)
+            .filter(F.col("id_a") < F.col("id_b")),
+            eager=True,
+        )
+    finally:
+        sigd.unpersist(blocking=False)
 
 
 def minhash_dedup(
@@ -411,10 +405,12 @@ def simhash_dedup_portable(
     sh = df.select(
         F.col(id_col), portable_simhash(F.col(text_col)).alias("__sig")
     ).persist()
-    pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="__sig", max_hamming=max_hamming)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    out = df.join(losers, on=id_col, how="left_anti")
-    return _swap_cache(out, sh)
+    try:
+        pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="__sig", max_hamming=max_hamming)
+        losers = pin(pairs.select(F.col("id_b").alias(id_col)).distinct(), eager=True)
+    finally:
+        sh.unpersist(blocking=False)
+    return df.join(losers, on=id_col, how="left_anti")
 
 
 @F.pandas_udf(T.LongType())
@@ -555,21 +551,24 @@ def banded_neardup_pairs(
     ``fingerprint`` is a map pass ``(df, content_col, out_col,
     **fingerprint_kwargs) -> df``; null signatures (undecodable blobs)
     never pair. The signatures are persisted across the band self-join,
-    so each blob is decoded once; the cache is then swapped onto the
-    output-sized pair frame."""
+    so each blob is decoded once; the output-sized pair frame is
+    pinned."""
     hashed = (
         _hash_ids(df, fingerprint, fingerprint_kwargs, id_col, content_col)
         .filter("__sig IS NOT NULL")
         .persist()
     )
-    pairs = hamming_band_pairs(
-        hashed, id_col=id_col, sig_col="__sig", max_hamming=max_hamming
-    )
-    return _swap_cache(pairs, hashed)
+    try:
+        pairs = hamming_band_pairs(
+            hashed, id_col=id_col, sig_col="__sig", max_hamming=max_hamming
+        )
+        return pin(pairs, eager=True)
+    finally:
+        hashed.unpersist(blocking=False)
 
 
 class BandedIndex:
-    """Persisted banded signature index of a STATIC media corpus, for
+    """Pinned banded signature index of a STATIC media corpus, for
     every 64-bit perceptual fingerprint (image, audio, video; the text
     MinHash index is :class:`NeardupIndex`). The corpus is decoded and
     hashed once; every arriving batch pays only its own decode plus one
@@ -601,15 +600,14 @@ class BandedIndex:
         **fingerprint_kwargs,
     ) -> "BandedIndex":
         """Fingerprint + band ``corpus`` once (decode is the dominant
-        cost), persisted and materialized for repeated probes."""
+        cost), pinned for repeated probes."""
         hashed = fingerprint(
             corpus.select(content_col),
             content_col=content_col,
             out_col="__csig",
             **fingerprint_kwargs,
         )
-        banded = _index_rows(hashed, "__csig", max_hamming).persist()
-        banded.count()
+        banded = pin(_index_rows(hashed, "__csig", max_hamming), eager=True)
         return cls(banded, max_hamming, fingerprint, fingerprint_kwargs)
 
     def hash(
@@ -643,22 +641,21 @@ class BandedIndex:
         return batch.join(dupes, on=id_col, how="left_anti")
 
     def append(self, sigs: DataFrame, sig_col: str = "__sig") -> None:
-        """Union new signatures into the persisted index IN PLACE, so
+        """Union new signatures into the pinned index IN PLACE, so
         stream batch N+1 dedups against batch N's survivors too.
 
-        Cache-swap contract (same as ``_swap_cache``): the merged frame
-        is materialized via eager ``localCheckpoint`` (truncating
-        lineage, so a year of appends doesn't accumulate a union tree)
-        BEFORE the old blocks release; only the new batch's banded rows
-        are deduplicated (batch-sized shuffle — the standing index is
-        never re-shuffled)."""
+        The merged frame is pinned eagerly (truncating lineage, so a
+        year of appends doesn't accumulate a union tree) BEFORE the old
+        generation is unpinned; only the new batch's banded rows are
+        deduplicated (batch-sized shuffle — the standing index is never
+        re-shuffled)."""
         new_banded = _index_rows(sigs, sig_col, self.max_hamming)
         merged = pin(self.banded.union(new_banded), eager=True)
-        self.banded.unpersist(blocking=False)
+        unpin(self.banded)
         self.banded = merged
 
     def unpersist(self) -> None:
-        self.banded.unpersist(blocking=False)
+        unpin(self.banded)
 
 
 def banded_filter_against(
@@ -855,21 +852,18 @@ def fuzzy_join(
     lsh = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
     sig_l = lsh.sign(left, left_id, left_text).persist()
     sig_r = lsh.sign(right, right_id, right_text).persist()
-    out = _lsh_pairs(
-        sig_l, left_id, sig_r, right_id, num_hashes, bands, threshold
-    ).select(
-        F.col("id_a").alias(left_id + "_l"),
-        F.col("id_b").alias(right_id + "_r"),
-        "jaccard",
-    )
-    # materialize the (small) pair result via localCheckpoint — unlike a
-    # bare persist it is ContextCleaner-collected when the caller drops
-    # the frame, so repeated fuzzy_join calls don't accumulate cached
-    # blocks for the session lifetime — then free the input-sized caches
-    out = pin(out, eager=True)
-    sig_l.unpersist()
-    sig_r.unpersist()
-    return out
+    try:
+        out = _lsh_pairs(
+            sig_l, left_id, sig_r, right_id, num_hashes, bands, threshold
+        ).select(
+            F.col("id_a").alias(left_id + "_l"),
+            F.col("id_b").alias(right_id + "_r"),
+            "jaccard",
+        )
+        return pin(out, eager=True)
+    finally:
+        sig_l.unpersist()
+        sig_r.unpersist()
 
 
 class NeardupIndex:
@@ -955,13 +949,13 @@ def neardup_filter_against(
     :func:`fuzzy_join`'s pair output. All other ``docs`` columns pass
     through. ``docs`` is signed with the index's own LSH parameters."""
     sig_d = index.sign(docs, id_col, text_col).persist()
-    pairs = _lsh_pairs(
-        sig_d, id_col, index.sig, "__cid", index.num_hashes, index.bands, threshold
-    )
-    hit = pin(
-        pairs.select(F.col("id_a").alias(id_col)).distinct(), eager=True
-    )  # output-sized pin; frees sig_d safely
-    sig_d.unpersist()
+    try:
+        pairs = _lsh_pairs(
+            sig_d, id_col, index.sig, "__cid", index.num_hashes, index.bands, threshold
+        )
+        hit = pin(pairs.select(F.col("id_a").alias(id_col)).distinct(), eager=True)
+    finally:
+        sig_d.unpersist()
     return docs.join(hit, on=id_col, how="left_anti")
 
 

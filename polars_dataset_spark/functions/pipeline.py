@@ -10,11 +10,8 @@ reports. Every stage is the library operator — this module only composes.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from polars_dataset_spark.functions.dedup import (
     exact_dedup,
@@ -27,8 +24,9 @@ from polars_dataset_spark.functions.text import (
     with_quality_score,
     with_token_count,
 )
+from polars_dataset_spark.session import pin
 
-__all__ = ["clean_corpus", "clean_corpus_scope", "corpus_report"]
+__all__ = ["clean_corpus", "corpus_report"]
 
 
 def clean_corpus(
@@ -40,7 +38,6 @@ def clean_corpus(
     fuzzy_threshold: float = 0.8,
     token_mode: str = "bpe",
     transitive: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
     """Filter → dedup → account. Returns the surviving rows with
     ``lang_pred``, ``quality`` and ``n_tokens`` columns attached.
@@ -49,43 +46,21 @@ def clean_corpus(
     dedup: connected components over the near-duplicate pair graph, one
     representative kept per CLUSTER — the right semantics when chains
     A~B~C occur (the one-pass rule can over-delete); costs O(log n)
-    extra contraction rounds over the (small) pair graph only.
-
-    ``persist=False`` skips the MEMORY_AND_DISK barrier before the fuzzy
-    stage (see inline comment) — only useful when the caller persists or
-    checkpoints the frame itself.
-
-    Cache lifecycle: the persisted frame is NOT the returned frame, so
-    ``result.unpersist()`` would not release it. The handle is exposed
-    as ``result._corpus_cache`` — **capture it immediately from the
-    direct return value**: any subsequent transformation
-    (select/filter/join) returns a NEW DataFrame without the attribute
-    (ADVICE r8). Call ``.unpersist()`` on it when the result has been
-    materialized/written and the session lives on (long-lived sessions
-    otherwise accumulate one cache entry per ``clean_corpus`` call, and
-    Spark's CacheManager substitutes a live entry into ANY later plan
-    that rebuilds the same lineage). Prefer :func:`clean_corpus_scope`
-    when the consumption window is lexically scoped — it owns the
-    release so no handle bookkeeping is needed."""
+    extra contraction rounds over the (small) pair graph only."""
     staged = with_quality_score(docs, text_col)
     staged = staged.filter(F.col("quality") >= min_quality)
     staged = with_language_id(staged, text_col)
     if languages:
         staged = staged.filter(F.col("lang_pred").isin(list(languages)))
     staged = exact_dedup(staged, subset=text_col, id_col=id_col)
-    cached = None
-    if persist:
-        # the fuzzy stage consumes this frame TWICE — once to build LSH
-        # signatures/candidates, once as the probe side of the loser
-        # anti-join — and without a materialization barrier Catalyst
-        # recomputes the whole score→filter→lang→dedup lineage on BOTH
-        # branches (and re-derives the quality score inside the pushed
-        # predicate).  MEMORY_AND_DISK, not localCheckpoint: spills under
-        # pressure, keeps lineage for fault recovery, and at 100 TB the
-        # filtered+deduped corpus is the frame every downstream stage
-        # wants materialized anyway.  (r7 VERDICT: the scoring pipeline
-        # appeared ~110× in q60's plan text via the probe-branch rescan.)
-        staged = cached = staged.persist(StorageLevel.MEMORY_AND_DISK)
+    # the fuzzy stage consumes this frame TWICE — once to build LSH
+    # signatures/candidates, once as the probe side of the loser
+    # anti-join — and without a materialization barrier Catalyst
+    # recomputes the whole score→filter→lang→dedup lineage on BOTH
+    # branches (r7 VERDICT: the scoring pipeline appeared ~110× in q60's
+    # plan text). The lazy pin is filled by the LSH stage's first job and
+    # freed with the result.
+    staged = pin(staged)
     if transitive:
         pairs = minhash_lsh_candidates(
             staged, id_col=id_col, text_col=text_col, threshold=fuzzy_threshold
@@ -95,27 +70,7 @@ def clean_corpus(
         staged = minhash_dedup(
             staged, id_col=id_col, text_col=text_col, threshold=fuzzy_threshold
         )
-    out = with_token_count(staged, text_col, mode=token_mode)
-    # expose the persisted handle for release (see docstring: the
-    # returned frame's own unpersist() cannot reach it)
-    out._corpus_cache = cached
-    return out
-
-
-@contextmanager
-def clean_corpus_scope(docs: DataFrame, **kwargs):
-    """``with clean_corpus_scope(docs, ...) as clean:`` — same result as
-    :func:`clean_corpus`, but the MEMORY_AND_DISK barrier is released on
-    exit, so long-lived sessions (notebooks, services) cannot leak one
-    cache entry per call and callers need not capture ``_corpus_cache``
-    before transforming the result (ADVICE r8)."""
-    out = clean_corpus(docs, **kwargs)
-    try:
-        yield out
-    finally:
-        cached = getattr(out, "_corpus_cache", None)
-        if cached is not None:
-            cached.unpersist()
+    return with_token_count(staged, text_col, mode=token_mode)
 
 
 def corpus_report(clean: DataFrame) -> DataFrame:

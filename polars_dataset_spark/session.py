@@ -88,15 +88,27 @@ def _share_package_path(spark: SparkSession) -> None:
 
 
 def pin(df, eager: bool = False):
-    """Materialize an intermediate and truncate its lineage — the
-    engine's single chokepoint for every iterative/fan-out checkpoint
-    (redirects, connected components, pagerank, semantic_dedup, funnel,
-    prefix sums, chunked rolling windows).
+    """Materialize a frame and truncate its lineage — the engine's single
+    owner of materialization (dedup results, redirects, connected
+    components, pagerank, semantic_dedup, funnel, prefix sums, chunked
+    rolling windows).
 
-    Default: ``localCheckpoint`` — blocks live on executors, which is
-    fast but NOT fault-tolerant: losing an executor after the pin fails
-    downstream actions instead of recomputing (fine in local mode and
-    for short-lived results). For cluster runs set
+    The rule every operator follows:
+
+    - A function's **result** is ``pin(result, eager=True)``. Spark's
+      ContextCleaner frees a pin once the caller drops the frame; it
+      never frees a ``persist``, which the CacheManager holds until
+      ``unpersist``/``clearCache``.
+    - An **intermediate** that a function reads twice in one call stays
+      a ``persist``; its ``unpersist`` goes in a ``finally`` block.
+    - **Index objects** (``NeardupIndex``, ``BandedIndex``) keep an
+      explicit ``unpersist``; a pinned index releases through
+      :func:`unpin`.
+
+    Default: ``localCheckpoint`` — blocks live on executors (spilling
+    to disk), which is fast but NOT fault-tolerant: losing an executor
+    after the pin fails downstream actions instead of recomputing (fine
+    in local mode and for short-lived results). For cluster runs set
     ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` to switch every site to
     reliable-storage ``checkpoint()`` (requires a checkpoint dir:
     ``spark.checkpoint.dir`` / ``SparkContext.setCheckpointDir``, or
@@ -115,6 +127,17 @@ def pin(df, eager: bool = False):
             sc.setCheckpointDir(cdir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def unpin(df, blocking: bool = False) -> None:
+    """Free the blocks of a frame returned by :func:`pin` now, instead of
+    when the ContextCleaner collects it. ``DataFrame.unpersist`` cannot:
+    it only asks the CacheManager, which never saw the pin. The frame
+    must be the pin's own return value (its plan is the pinned RDD)."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError(f"unpin needs a frame returned by pin, got {plan.nodeName()}")
+    plan.rdd().unpersist(blocking)
 
 
 def ensure_parallelism(df, min_parts: int | None = None):

@@ -440,7 +440,7 @@ def _stream_media_filter(
 ) -> "object":
     """Continuous-ingestion media dedup for any modality (the index's
     own fingerprint decides: image, audio or video). Per micro-batch:
-    fingerprint ONCE (decode dominates), band-probe the persisted
+    fingerprint ONCE (decode dominates), band-probe the pinned
     :class:`functions.dedup.BandedIndex`, append only blobs with no
     indexed near-duplicate to the parquet sink, then append the
     survivors' signatures to the index, so batch N+1 dedups against
@@ -453,12 +453,14 @@ def _stream_media_filter(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hashed = index.hash(batch_df, id_col, content_col).persist()
-        dupes = index.dup_ids(hashed, id_col)
-        batch_df.join(dupes, on=id_col, how="left_anti").write.mode(
-            "append"
-        ).parquet(sink_path)
-        index.append(hashed.join(dupes, on=id_col, how="left_anti"))
-        hashed.unpersist(blocking=False)
+        try:
+            dupes = index.dup_ids(hashed, id_col)
+            batch_df.join(dupes, on=id_col, how="left_anti").write.mode(
+                "append"
+            ).parquet(sink_path)
+            index.append(hashed.join(dupes, on=id_col, how="left_anti"))
+        finally:
+            hashed.unpersist(blocking=False)
 
     return _drain(stream_df, apply_batch, checkpoint_path)
 

@@ -7,12 +7,10 @@
 2. Pass-2 skip state leaked on blank lines INSIDE a dropped subtree —
    the remainder of the supposedly-dropped region re-entered the deduped
    text (ADVICE r8 #2).
-3. `clean_corpus_scope` owns the persist barrier's lifecycle (ADVICE r8
-   #3: `result._corpus_cache` vanished on any transformation).
-4. `connected_components` early-exits when the edge set is already a
+3. `connected_components` early-exits when the edge set is already a
    min-rooted star union (VERDICT r8 #4) — and must NOT mistake a
    v-unique chain for a star.
-5. `Datafile.load` on a missing path returns None WITHOUT raising a JVM
+4. `Datafile.load` on a missing path returns None WITHOUT raising a JVM
    AnalysisException (no 30-line Java stack in logs, VERDICT r8 #4/#7).
 """
 
@@ -65,20 +63,6 @@ def test_dedupe_skip_survives_blank_line_inside_subtree():
     # leak back; the kept first dump's copy survives
     assert ded.count("md5") == 1
     assert ded.count("Scan parquet") == 1
-
-
-def test_clean_corpus_scope_releases_cache(spark, sf_dir):
-    from polars_dataset_spark.functions import clean_corpus_scope
-    from polars_dataset_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    with clean_corpus_scope(docs, min_quality=0.3) as clean:
-        handle = clean._corpus_cache
-        assert handle is not None
-        n = clean.count()
-        assert n > 0
-        assert handle.storageLevel.useMemory  # live inside the scope
-    assert not handle.storageLevel.useMemory  # released on exit
 
 
 def test_star_input_skips_contraction(spark):

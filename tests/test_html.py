@@ -171,7 +171,7 @@ def test_warc_to_text_to_clean_corpus_end_to_end(spark):
     records -> HTML filter -> text -> clean_corpus survivors."""
     from pyspark.sql import functions as F
 
-    from polars_dataset_spark.functions.pipeline import clean_corpus_scope
+    from polars_dataset_spark.functions.pipeline import clean_corpus
 
     prose = (
         "The quick brown fox jumps over the lazy dog while the band "
@@ -204,8 +204,8 @@ def test_warc_to_text_to_clean_corpus_end_to_end(spark):
     assert rows["http://a.example/1"].text.startswith("The quick brown fox")
     assert "Home" not in rows["http://a.example/1"].text
     docs = corpus.select(F.col("target_uri").alias("doc_id"), "text")
-    with clean_corpus_scope(docs, min_quality=0.0, languages=None) as clean:
-        kept = sorted(r.doc_id for r in clean.select("doc_id").collect())
+    clean = clean_corpus(docs, min_quality=0.0, languages=None)
+    kept = sorted(r.doc_id for r in clean.select("doc_id").collect())
     # the near-duplicate pair /1 ~ /2 loses one member; /3 differs enough
     assert len(kept) == 2 and "http://b.example/3" in kept
 

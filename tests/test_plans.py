@@ -145,12 +145,6 @@ def test_suite_wide_scale_red_flag_audit(spark, sf_dir):
     # of those two shapes, with warm-solo runtimes cited from
     # BENCH_SERIAL/this round's session:
     dup_allowed = {
-        # quality>=0.5 pushdown copies inside the ONE kept cache dump
-        # (r8: clean_corpus persists before the fuzzy stage; the
-        # detector dedupes repeated InMemoryRelation dumps and AQE
-        # initial-plan echoes, so this is the honest single-computation
-        # count — was 110 pre-persist)
-        "q60_clean_corpus": 24,
         # isnotnull(domain) pushdown re-derives the host regex in the
         # pushed filter; projection side is CSE'd (_common_expr) (0.7 s)
         "q179_url_filter": 9,
