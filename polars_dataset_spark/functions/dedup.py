@@ -18,9 +18,9 @@ bucket size, never |docs|². There are two banded paths:
   Both SimHash dedups and the image, audio and video hashes ride it.
 
 Results are pinned (:func:`~polars_dataset_spark.session.pin`), so the
-ContextCleaner frees them once the caller drops the frame; a signature
-intermediate read twice in one call is persisted and released in a
-``finally`` block before the call returns.
+ContextCleaner frees them once the caller drops the frame and the JVM
+collects it; a signature intermediate read twice in one call is
+persisted and released in a ``finally`` block before the call returns.
 
 Also :func:`exact_dedup` (one hash group-by; run it before any fuzzy
 pass) and :func:`embedding_neardup` (random-hyperplane buckets + exact
@@ -363,8 +363,6 @@ def simhash_dedup_portable(
     The fast path (:func:`simhash_dedup`) hashes Arrow-side instead."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-
     # The whole signature — tokenize, md5 per UNIQUE token, 64 tf-weighted
     # vote sums, sign-bit packing — is ONE map-only Arrow batch
     # (earlier revisions tried explode + 64 codegen'd sums: correct, but
@@ -402,7 +400,9 @@ def simhash_dedup_portable(
         packed = np.packbits(votes > 0, axis=1, bitorder="little")
         return pd.Series(np.ascontiguousarray(packed).view("<i8").ravel())
 
-    sh = df.select(
+    # only the signature pass needs the spread; the closing anti-join
+    # against the (small, pinned) losers reads the input as it is
+    sh = ensure_parallelism(df).select(
         F.col(id_col), portable_simhash(F.col(text_col)).alias("__sig")
     ).persist()
     try:
@@ -619,24 +619,28 @@ class BandedIndex:
 
     def dup_ids(self, hashed: DataFrame, id_col: str) -> DataFrame:
         """Ids of ``(id, __sig)`` rows within ``max_hamming`` bits of
-        ANY indexed signature (pigeonhole recall 1)."""
+        ANY indexed signature (pigeonhole recall 1), pinned: they stay
+        valid after the index is appended to or unpersisted."""
         probes = _band_rows(
             hashed.filter("__sig IS NOT NULL"), "__sig", self.max_hamming, id_col, "__sig"
         )
         ham = F.bit_count(F.col("__sig").bitwiseXOR(F.col("__csig")))
-        return (
+        dupes = (
             probes.join(self.banded, on=["chunk", "key"])
             .filter(ham <= self.max_hamming)
             .select(id_col)
             .distinct()
         )
+        return pin(dupes, eager=True)
 
     def filter_against(
         self, batch: DataFrame, id_col: str = "media_id", content_col: str = "content"
     ) -> DataFrame:
         """Drop every ``batch`` row within ``max_hamming`` bits of ANY
         indexed blob. Rows that fail to decode are KEPT: an undecodable
-        blob is not evidence of duplication."""
+        blob is not evidence of duplication. The result reads the pinned
+        :meth:`dup_ids`, never ``banded``, so it survives :meth:`append`
+        and :meth:`unpersist`."""
         dupes = self.dup_ids(self.hash(batch, id_col, content_col), id_col)
         return batch.join(dupes, on=id_col, how="left_anti")
 
@@ -648,13 +652,17 @@ class BandedIndex:
         year of appends doesn't accumulate a union tree) BEFORE the old
         generation is unpinned; only the new batch's banded rows are
         deduplicated (batch-sized shuffle — the standing index is never
-        re-shuffled)."""
+        re-shuffled). Unpinning frees the old generation's blocks, and a
+        pin has no lineage to recompute them from: a frame built directly
+        on the old ``banded`` must be consumed first. :meth:`dup_ids` and
+        :meth:`filter_against` results are unaffected (pinned)."""
         new_banded = _index_rows(sigs, sig_col, self.max_hamming)
         merged = pin(self.banded.union(new_banded), eager=True)
         unpin(self.banded)
         self.banded = merged
 
     def unpersist(self) -> None:
+        """Free ``banded`` now (see :meth:`append` for what that ends)."""
         unpin(self.banded)
 
 

@@ -95,10 +95,11 @@ def pin(df, eager: bool = False):
 
     The rule every operator follows:
 
-    - A function's **result** is ``pin(result, eager=True)``. Spark's
-      ContextCleaner frees a pin once the caller drops the frame; it
-      never frees a ``persist``, which the CacheManager holds until
-      ``unpersist``/``clearCache``.
+    - A function's **result** is ``pin(result, eager=True)``. Once the
+      caller drops the frame and the JVM collects it (at the latest at
+      Spark's periodic GC, ``spark.cleaner.periodicGC.interval``), the
+      ContextCleaner frees the pin; it never frees a ``persist``, which
+      the CacheManager holds until ``unpersist``/``clearCache``.
     - An **intermediate** that a function reads twice in one call stays
       a ``persist``; its ``unpersist`` goes in a ``finally`` block.
     - **Index objects** (``NeardupIndex``, ``BandedIndex``) keep an
@@ -129,7 +130,7 @@ def pin(df, eager: bool = False):
     return df.localCheckpoint(eager=eager)
 
 
-def unpin(df, blocking: bool = False) -> None:
+def unpin(df) -> None:
     """Free the blocks of a frame returned by :func:`pin` now, instead of
     when the ContextCleaner collects it. ``DataFrame.unpersist`` cannot:
     it only asks the CacheManager, which never saw the pin. The frame
@@ -137,7 +138,7 @@ def unpin(df, blocking: bool = False) -> None:
     plan = df._jdf.queryExecution().logical()
     if plan.nodeName() != "LogicalRDD":
         raise ValueError(f"unpin needs a frame returned by pin, got {plan.nodeName()}")
-    plan.rdd().unpersist(blocking)
+    plan.rdd().unpersist(False)
 
 
 def ensure_parallelism(df, min_parts: int | None = None):
