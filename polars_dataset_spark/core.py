@@ -30,6 +30,10 @@ from pyspark.sql import types as T
 
 __all__ = ["Dataset"]
 
+# most carry rows rolling_quantiles pulls to the driver: it uses at most
+# this // (window_size - 1) chunks
+_ROLLING_CARRY_ROWS = 100_000
+
 
 def _as_list(x) -> list:
     if x is None:
@@ -1033,8 +1037,9 @@ class Dataset:
         a trace may span chunks), pinned, and each chunk's trailing
         frames are completed with an OVERLAP carry: the last
         ``window_size - 1`` rows of every earlier chunk (collected once
-        — bounded driver data, ``n_chunks x (window_size - 1)`` slim
-        rows, the ``_global_prefix_sum`` precedent) are broadcast and
+        — ``n_chunks x (window_size - 1)`` slim rows, fewer chunks than
+        partitions where that would pass ``_ROLLING_CARRY_ROWS``, the
+        ``_global_prefix_sum`` precedent) are broadcast and
         prepended per chunk, so every row sees exactly its global
         same-trace predecessors. The per-row quantile uses the same
         formula the SQL oracles replay (sort the <= window_size frame,
@@ -1042,7 +1047,8 @@ class Dataset:
         statistics, nulls skipped) via vectorized numpy inside one
         ``mapInPandas``.
 
-        Eager at call time (the carry collect runs two small jobs) and
+        Eager at call time (with more than one chunk, the carry collect
+        runs two small jobs) and
         pinned via :func:`polars_dataset_spark.session.pin` — see its
         fault-tolerance note. Ordering must be total per trace for a
         rows frame to be well-defined (same requirement the window form
@@ -1069,6 +1075,8 @@ class Dataset:
         index = self._index
         spark = self._df.sparkSession
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if w1:
+            n_parts = max(1, min(n_parts, _ROLLING_CARRY_ROWS // w1))
         order_cols = [*keys, index]
         d = pin(
             self._df.repartitionByRange(n_parts, *order_cols).sortWithinPartitions(
@@ -1099,6 +1107,7 @@ class Dataset:
                 return f"{type(v).__name__}\x01{v!r}"
             return [tuple(img(v) for v in row) for row in zip(*cols)]
 
+        # reads TaskContext, keeps a tail across batches (map_rows does not fit)
         def _tails(batches):
             """Last window_size-1 (key, value) rows of this chunk, in
             chunk order — the overlap carry source."""
@@ -1121,7 +1130,7 @@ class Dataset:
             )
 
         carries: "dict[int, tuple[list, list]]" = {}
-        if w1:
+        if w1 and n_parts > 1:  # one chunk has no earlier chunk to carry from
             tail_schema = "__pid int, __seq int, __val double, __keys array<string>"
             collected = sorted(
                 d.mapInPandas(_tails, schema=tail_schema).collect(),
@@ -1150,6 +1159,7 @@ class Dataset:
             ]
             return list(zip(starts, starts[1:] + [len(full_keys)]))
 
+        # reads TaskContext, carries a window across batches (map_rows does not fit)
         def _roll(batches):
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0

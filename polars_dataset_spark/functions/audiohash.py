@@ -46,10 +46,7 @@ surface; this is the driver-mandated multimodal dedup family
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -58,6 +55,7 @@ from polars_dataset_spark.functions.dedup import (
     banded_filter_against,
     banded_neardup_pairs,
 )
+from polars_dataset_spark.rowmap import map_rows
 
 _TARGET_RATE = 8000
 _FRAME = 256
@@ -144,18 +142,12 @@ def audio_fingerprint(
     too-short blobs get null."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.LongType())])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[out_col] = pd.array(
-                [_hash_blob(b) for b in pdf[content_col]], dtype="Int64"
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda blob: (_hash_blob(blob),),
+        [T.StructField(out_col, T.LongType())],
+    )
 
 
 def audio_neardup_pairs(

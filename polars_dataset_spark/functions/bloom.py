@@ -34,13 +34,14 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = ["BloomIndex", "bloom_build", "bloom_probe"]
 
@@ -154,23 +155,19 @@ def bloom_probe(
         on="__bloom_bucket",
         how="left",
     )
-    carry = [f for f in joined.schema.fields if f.name not in
-             ("__bloom_bucket", "__pos", "bitmap")]
-    out_schema = T.StructType(carry + [T.StructField(out_col, T.BooleanType())])
 
-    def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            verdicts = []
-            for bm, pos in zip(pdf["bitmap"], pdf["__pos"]):
-                if bm is None:
-                    verdicts.append(False)
-                    continue
-                bits = np.frombuffer(bytes(bm), dtype=np.uint8)
-                p = np.asarray(pos, dtype=np.int64)
-                hit = bits[p >> 3] & (np.uint8(1) << (p & 7).astype(np.uint8))
-                verdicts.append(bool(np.all(hit != 0)))
-            out = pdf[[f.name for f in carry]].copy()
-            out[out_col] = pd.array(verdicts, dtype="boolean")
-            yield out
+    def probe(bm, pos):
+        if bm is None:
+            return (False,)
+        bits = np.frombuffer(bytes(bm), dtype=np.uint8)
+        p = np.asarray(pos, dtype=np.int64)
+        hit = bits[p >> 3] & (np.uint8(1) << (p & 7).astype(np.uint8))
+        return (bool(np.all(hit != 0)),)
 
-    return joined.mapInPandas(probe_batches, schema=out_schema)
+    return map_rows(
+        joined,
+        ["bitmap", "__pos"],
+        probe,
+        [T.StructField(out_col, T.BooleanType())],
+        drop=["__bloom_bucket", "__pos", "bitmap"],
+    )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from polars_dataset_spark.functions.text import tokenize
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = ["bpe_learn", "bpe_apply", "merge_sequence", "EOW"]
 
@@ -62,13 +63,7 @@ def _vocab(df: DataFrame, text_col: str) -> DataFrame:
     return tok.groupBy("token").agg(F.count("*").alias("cnt"))
 
 
-_SYMS_SCHEMA = T.StructType(
-    [
-        T.StructField("token", T.StringType()),
-        T.StructField("cnt", T.LongType()),
-        T.StructField("syms", T.ArrayType(T.StringType())),
-    ]
-)
+_SYMS_FIELD = T.StructField("syms", T.ArrayType(T.StringType()))
 
 
 def bpe_learn(
@@ -98,15 +93,13 @@ def bpe_learn(
         if merges:
             bm = spark.sparkContext.broadcast(list(merges))
 
-            def apply_merges(batches, _bm=bm):
-                for pdf in batches:
-                    pdf = pdf.copy()
-                    pdf["syms"] = [
-                        _apply_all(list(s), _bm.value) for s in pdf["syms"]
-                    ]
-                    yield pdf
-
-            syms_df = syms_df.mapInPandas(apply_merges, schema=_SYMS_SCHEMA)
+            syms_df = map_rows(
+                syms_df,
+                ["syms"],
+                lambda s, _bm=bm: (_apply_all(list(s), _bm.value),),
+                [_SYMS_FIELD],
+                drop=["syms"],
+            )
         pairs = syms_df.select(
             F.col("cnt"),
             F.explode(
@@ -155,30 +148,22 @@ def bpe_apply(
     rides a broadcast."""
     spark = df.sparkSession
     bm = spark.sparkContext.broadcast([tuple(m) for m in merges])
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
+
+    def enc(text):
+        cache: dict[str, list[str]] = {}
+        pieces: list[str] = []
+        for t in (text or "").lower().split():
+            if t not in cache:
+                cache[t] = _apply_all(list(t) + [EOW], bm.value)
+            pieces.extend(cache[t])
+        return pieces, len(pieces)
+
+    return map_rows(
+        df,
+        [text_col],
+        enc,
+        [
             T.StructField(out_col, T.ArrayType(T.StringType())),
             T.StructField("n_bpe_tokens", T.LongType()),
-        ]
+        ],
     )
-
-    def enc(batches):
-        for pdf in batches:
-            pieces_col, counts = [], []
-            for text in pdf[text_col]:
-                toks = (text or "").lower().split()
-                cache: dict[str, list[str]] = {}
-                pieces: list[str] = []
-                for t in toks:
-                    if t not in cache:
-                        cache[t] = _apply_all(list(t) + [EOW], bm.value)
-                    pieces.extend(cache[t])
-                pieces_col.append(pieces)
-                counts.append(len(pieces))
-            out = pdf.copy()
-            out[out_col] = pieces_col
-            out["n_bpe_tokens"] = counts
-            yield out
-
-    return df.mapInPandas(enc, schema=out_schema)

@@ -20,11 +20,11 @@ surface; this extends the driver-mandated multimodal columns.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 # IFD entry value types -> byte width (TIFF 6.0 §2)
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
@@ -178,25 +178,9 @@ def exif_probe(df: DataFrame, content_col: str = "content") -> DataFrame:
     no entropy decode). Blobs without Exif get all-null fields."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + _EXIF_FIELDS)
-    empty = {f.name: None for f in _EXIF_FIELDS}
-
-    def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[content_col]:
-                info = parse_exif(bytes(blob)) if blob is not None else None
-                rows.append(info or empty)
-            out = pdf.copy()
-            for f in _EXIF_FIELDS:
-                col = [r.get(f.name) for r in rows]
-                if f.name == "orientation":
-                    out[f.name] = pd.array(col, dtype="Int32")
-                elif f.dataType == T.DoubleType():
-                    out[f.name] = pd.array(col, dtype="Float64")
-                else:
-                    out[f.name] = pd.array(col, dtype="object")
-            yield out
-
-    return df.mapInPandas(probe_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda blob: parse_exif(bytes(blob)) if blob is not None else None,
+        _EXIF_FIELDS,
+    )

@@ -31,12 +31,12 @@ surface; this extends the crawl-pipeline family (VERDICT r11 next #5).
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 from xml.etree import ElementTree
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = ["parse_feed", "feed_entries"]
 
@@ -158,48 +158,16 @@ def feed_entries(df: DataFrame, content_col: str = "content") -> DataFrame:
     (the q222 composition)."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != content_col]
-    out_schema = T.StructType(carry + _FEED_FIELDS)
+    def entries(blob):
+        parsed = parse_feed(bytes(blob)) if blob is not None else None
+        if parsed is None:
+            return [None]
+        head = {"kind": parsed["kind"], "feed_title": parsed["title"]}
+        if not parsed["entries"]:
+            return [head]
+        return [{**head, "entry_idx": idx, **e} for idx, e in enumerate(parsed["entries"])]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[content_col]
-                parsed = parse_feed(bytes(blob)) if blob is not None else None
-                base = {f.name: r[f.name] for f in carry}
-                if parsed is None:
-                    rows.append({**base, **{f.name: None for f in _FEED_FIELDS}})
-                    continue
-                if not parsed["entries"]:
-                    rows.append(
-                        {
-                            **base,
-                            "kind": parsed["kind"],
-                            "feed_title": parsed["title"],
-                            "entry_idx": None,
-                            "title": None,
-                            "link": None,
-                            "published": None,
-                            "entry_id": None,
-                        }
-                    )
-                    continue
-                for idx, e in enumerate(parsed["entries"]):
-                    rows.append(
-                        {
-                            **base,
-                            "kind": parsed["kind"],
-                            "feed_title": parsed["title"],
-                            "entry_idx": idx,
-                            **e,
-                        }
-                    )
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            out["entry_idx"] = pd.array(
-                out["entry_idx"] if len(rows) else [], dtype="Int32"
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [content_col], entries, _FEED_FIELDS,
+        explode=True, drop=[content_col],
+    )

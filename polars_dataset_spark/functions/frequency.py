@@ -56,6 +56,7 @@ def mg_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
         [T.StructField("item", T.StringType()), T.StructField("est", T.LongType())]
     )
 
+    # one summary per partition, counters carried across batches (map_rows does not fit)
     def gen(batches):
         counters: dict[str, int] = {}
         for pdf in batches:

@@ -64,11 +64,11 @@ from __future__ import annotations
 import codecs
 import re
 from html.parser import HTMLParser
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 _PRESCAN = 1024  # WHATWG: meta-charset prescan window
 
@@ -364,39 +364,16 @@ def html_to_text(
     NumWordsRules — catches link-free chrome, for prose corpora)."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + _HTML_FIELDS)
+    def extract(blob, ctype):
+        if blob is None:
+            return None
+        raw, charset = decode_html(bytes(blob), None if ctype is None else str(ctype))
+        info = extract_text(raw, drop_boilerplate=drop_boilerplate, mode=boilerplate_mode)
+        return info["text"], info["title"], charset
 
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, titles, charsets = [], [], []
-            ctypes = (
-                pdf[content_type_col]
-                if content_type_col is not None
-                else [None] * len(pdf)
-            )
-            for blob, ctype in zip(pdf[body_col], ctypes):
-                if blob is None:
-                    texts.append(None)
-                    titles.append(None)
-                    charsets.append(None)
-                    continue
-                raw, charset = decode_html(
-                    bytes(blob), None if ctype is None else str(ctype)
-                )
-                info = extract_text(
-                    raw, drop_boilerplate=drop_boilerplate, mode=boilerplate_mode
-                )
-                texts.append(info["text"])
-                titles.append(info["title"])
-                charsets.append(charset)
-            out = pdf.copy()
-            out["text"] = pd.array(texts, dtype="object")
-            out["title"] = pd.array(titles, dtype="object")
-            out["charset"] = pd.array(charsets, dtype="object")
-            yield out
-
-    return df.mapInPandas(extract_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [body_col, content_type_col], extract, _HTML_FIELDS
+    )
 
 
 def html_to_text_modes(
@@ -417,46 +394,25 @@ def html_to_text_modes(
             raise ValueError(f"html_to_text_modes: unknown mode {m!r}")
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("mode", T.StringType())] + _HTML_FIELDS
+    def extract(blob, ctype):
+        if blob is None:
+            return [(m, None, None, None) for m in modes]
+        raw, charset = decode_html(bytes(blob), None if ctype is None else str(ctype))
+        blocks, title = _parse_blocks(raw)  # once per document
+        rows = []
+        for m in modes:
+            drop = _boilerplate_drops(blocks, m)
+            kept = [t for (b, t), d in zip(blocks, drop) if not d]
+            rows.append((m, "\n".join(kept), title, charset))
+        return rows
+
+    return map_rows(
+        ensure_parallelism(df),
+        [body_col, content_type_col],
+        extract,
+        [T.StructField("mode", T.StringType())] + _HTML_FIELDS,
+        explode=True,
     )
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = {n: [] for n in ("mode", "text", "title", "charset")}
-            idx = []
-            ctypes = (
-                pdf[content_type_col]
-                if content_type_col is not None
-                else [None] * len(pdf)
-            )
-            for i, (blob, ctype) in enumerate(zip(pdf[body_col], ctypes)):
-                if blob is None:
-                    for m in modes:
-                        idx.append(i)
-                        out_rows["mode"].append(m)
-                        for n in ("text", "title", "charset"):
-                            out_rows[n].append(None)
-                    continue
-                raw, charset = decode_html(
-                    bytes(blob), None if ctype is None else str(ctype)
-                )
-                blocks, title = _parse_blocks(raw)  # once per document
-                for m in modes:
-                    drop = _boilerplate_drops(blocks, m)
-                    kept = [t for (b, t), d in zip(blocks, drop) if not d]
-                    idx.append(i)
-                    out_rows["mode"].append(m)
-                    out_rows["text"].append("\n".join(kept))
-                    out_rows["title"].append(title)
-                    out_rows["charset"].append(charset)
-            out = pdf.iloc[idx].reset_index(drop=True)
-            for n in ("mode", "text", "title", "charset"):
-                out[n] = pd.array(out_rows[n], dtype="object")
-            yield out
-
-    return df.mapInPandas(extract_batches, schema=out_schema)
 
 
 def warc_text_corpus(
@@ -477,53 +433,43 @@ def warc_text_corpus(
     from polars_dataset_spark.session import ensure_parallelism
     from polars_dataset_spark.sources.warc import parse_warc
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
+    def records(blob):
+        if blob is None:
+            return []
+        rows = []
+        for rec in parse_warc(bytes(blob)):
+            ctype = rec["http_content_type"]
+            if (
+                rec["warc_type"] != "response"
+                or rec["http_status"] != 200
+                # servers emit Text/HTML, TEXT/HTML — case-blind
+                or ctype is None
+                or not ctype.lower().startswith("text/html")
+            ):
+                continue
+            raw, charset = decode_html(rec["payload"], str(ctype))
+            info = extract_text(
+                raw, drop_boilerplate=drop_boilerplate, mode=boilerplate_mode
+            )
+            rows.append(
+                (rec["target_uri"], rec["warc_date"], charset, info["title"], info["text"])
+            )
+        return rows
+
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        records,
         [
             T.StructField("target_uri", T.StringType()),
             T.StructField("warc_date", T.StringType()),
             T.StructField("charset", T.StringType()),
             T.StructField("title", T.StringType()),
             T.StructField("text", T.StringType()),
-        ]
+        ],
+        explode=True,
+        drop=df.columns,
     )
-
-    def corpus_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[content_col]:
-                if blob is None:
-                    continue
-                for rec in parse_warc(bytes(blob)):
-                    ctype = rec["http_content_type"]
-                    if (
-                        rec["warc_type"] != "response"
-                        or rec["http_status"] != 200
-                        # servers emit Text/HTML, TEXT/HTML — case-blind
-                        or ctype is None
-                        or not ctype.lower().startswith("text/html")
-                    ):
-                        continue
-                    raw, charset = decode_html(rec["payload"], str(ctype))
-                    info = extract_text(
-                        raw,
-                        drop_boilerplate=drop_boilerplate,
-                        mode=boilerplate_mode,
-                    )
-                    rows.append(
-                        (
-                            rec["target_uri"],
-                            rec["warc_date"],
-                            charset,
-                            info["title"],
-                            info["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    return df.mapInPandas(corpus_batches, schema=out_schema)
 
 
 class _StructureExtractor(HTMLParser):
@@ -571,40 +517,22 @@ def html_structure(
 
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
+    def structure(blob, ctype):
+        if blob is None:
+            return None
+        raw, _cs = decode_html(bytes(blob), None if ctype is None else str(ctype))
+        tags = html_structure_tags(raw)
+        return hashlib.md5(",".join(tags).encode()).hexdigest(), len(tags)
+
+    return map_rows(
+        ensure_parallelism(df),
+        [body_col, content_type_col],
+        structure,
+        [
             T.StructField("structure_sig", T.StringType()),
             T.StructField("n_tags", T.IntegerType()),
-        ]
+        ],
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs, counts = [], []
-            ctypes = (
-                pdf[content_type_col]
-                if content_type_col is not None
-                else [None] * len(pdf)
-            )
-            for blob, ctype in zip(pdf[body_col], ctypes):
-                if blob is None:
-                    sigs.append(None)
-                    counts.append(None)
-                    continue
-                raw, _cs = decode_html(
-                    bytes(blob), None if ctype is None else str(ctype)
-                )
-                tags = html_structure_tags(raw)
-                sigs.append(hashlib.md5(",".join(tags).encode()).hexdigest())
-                counts.append(len(tags))
-            out = pdf.copy()
-            out["structure_sig"] = pd.array(sigs, dtype="object")
-            out["n_tags"] = pd.array(counts, dtype="Int32")
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
 
 
 class _LinkExtractor(HTMLParser):
@@ -737,39 +665,24 @@ def html_links(
     zero rows."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != body_col]
-    fields = _LINK_FIELDS + ([_ANCHOR_FIELD] if with_text else [])
-    out_schema = T.StructType(carry + fields)
+    def links(blob, ctype, url):
+        if blob is None:
+            return []
+        raw, _cs = decode_html(bytes(blob), None if ctype is None else str(ctype))
+        base = str(url) if url is not None else None
+        return [
+            (i, link, text) if with_text else (i, link)
+            for i, (link, text) in enumerate(extract_links_with_text(raw, base))
+        ]
 
-    def link_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[body_col]
-                if blob is None:
-                    continue
-                raw, _cs = decode_html(
-                    bytes(blob),
-                    None
-                    if content_type_col is None or r[content_type_col] is None
-                    else str(r[content_type_col]),
-                )
-                base = str(r[url_col]) if url_col and r[url_col] is not None else None
-                for i, (link, text) in enumerate(extract_links_with_text(raw, base)):
-                    base_row = {f.name: r[f.name] for f in carry}
-                    base_row["link_idx"] = i
-                    base_row["link_url"] = link
-                    if with_text:
-                        base_row["anchor_text"] = text
-                    rows.append(base_row)
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            out["link_idx"] = pd.array(
-                out["link_idx"] if len(rows) else [], dtype="Int32"
-            )
-            yield out
-
-    return df.mapInPandas(link_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df),
+        [body_col, content_type_col, url_col],
+        links,
+        _LINK_FIELDS + ([_ANCHOR_FIELD] if with_text else []),
+        explode=True,
+        drop=[body_col],
+    )
 
 
 class _MetaExtractor(HTMLParser):
@@ -908,35 +821,15 @@ def html_page_meta(
     scale."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + _META_FIELDS)
-    names = [f.name for f in _META_FIELDS]
+    def meta(blob, ctype):
+        if blob is None:
+            return None
+        raw, _charset = decode_html(bytes(blob), None if ctype is None else str(ctype))
+        return extract_page_meta(raw)
 
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: "dict[str, list]" = {n: [] for n in names}
-            ctypes = (
-                pdf[content_type_col]
-                if content_type_col is not None
-                else [None] * len(pdf)
-            )
-            for blob, ctype in zip(pdf[body_col], ctypes):
-                if blob is None:
-                    for n in names:
-                        cols[n].append(None)
-                    continue
-                raw, _charset = decode_html(
-                    bytes(blob), None if ctype is None else str(ctype)
-                )
-                info = extract_page_meta(raw)
-                for n in names:
-                    cols[n].append(info[n])
-            out = pdf.copy()
-            for n in names:
-                out[n] = pd.array(cols[n], dtype="object")
-            yield out
-
-    return df.mapInPandas(meta_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [body_col, content_type_col], meta, _META_FIELDS
+    )
 
 
 #: robots-meta extraction patterns (RE2/Java-portable: no lookaround;

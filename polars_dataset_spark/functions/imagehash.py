@@ -33,10 +33,7 @@ inventory-vs-decode split ``media_probe`` draws.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -46,6 +43,7 @@ from polars_dataset_spark.functions.dedup import (
     banded_filter_against,
     banded_neardup_pairs,
 )
+from polars_dataset_spark.rowmap import map_rows
 
 
 def _decode_image_auto(data: bytes) -> "np.ndarray | None":
@@ -175,36 +173,23 @@ def _image_hash(
     if algo not in _HASH_FNS:
         raise ValueError(f"algo must be one of {sorted(_HASH_FNS)}, got {algo!r}")
     hash_fn = _HASH_FNS[algo]
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.LongType())]
+    from polars_dataset_spark.functions.exif import parse_exif
+
+    def image_hash(blob):
+        if blob is None:
+            return None
+        data = bytes(blob)
+        img = _decode_image_auto(data)
+        if img is None or img.size < 2:
+            return None
+        if orientation_normalize:
+            info = parse_exif(data)
+            img = normalize_orientation(img, info.get("orientation") if info else None)
+        return (hash_fn(img),)
+
+    return map_rows(
+        ensure_parallelism(df), [content_col], image_hash, [T.StructField(out_col, T.LongType())]
     )
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from polars_dataset_spark.functions.exif import parse_exif
-
-        for pdf in batches:
-            vals: "list[int | None]" = []
-            for blob in pdf[content_col]:
-                if blob is None:
-                    vals.append(None)
-                    continue
-                data = bytes(blob)
-                img = _decode_image_auto(data)
-                if img is None or img.size < 2:
-                    vals.append(None)
-                    continue
-                if orientation_normalize:
-                    info = parse_exif(data)
-                    img = normalize_orientation(
-                        img, info.get("orientation") if info else None
-                    )
-                vals.append(hash_fn(img))
-            out = pdf.copy()
-            out[out_col] = pd.array(vals, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(hash_batches, schema=out_schema)
 
 
 def image_dhash(

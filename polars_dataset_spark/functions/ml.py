@@ -82,6 +82,7 @@ def _gram_partials(df: DataFrame, feat_col: str, label_col: str) -> list:
         ]
     )
 
+    # one reduction per partition, not a per-row map (map_rows does not fit)
     def gen(batches):
         n, b, g, yy = 0, None, None, 0.0
         for pdf in batches:

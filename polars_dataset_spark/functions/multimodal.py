@@ -18,15 +18,13 @@ executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from polars_dataset_spark.functions.containers import probe_av_header
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = [
     "binary_with_metadata",
@@ -196,9 +194,6 @@ def decode_media(
       image.
     """
     n_out = int(np.prod(target_size))
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("decoded", T.ArrayType(T.FloatType()))]
-    )
 
     if decoder == "pil" and not _HAVE_PIL:
         raise NotImplementedError(
@@ -231,30 +226,22 @@ def decode_media(
         "qoi": decode_qoi_gray,
     }.get(decoder)
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = []
-            for blob in pdf[content_col]:
-                if blob is None:
-                    decoded.append(None)
-                    continue
-                if parse is not None:
-                    img = parse(bytes(blob))
-                    decoded.append(None if img is None else _thumbnail(img, *target_size))
-                    continue
-                raw = np.frombuffer(bytes(blob), dtype=np.uint8)
-                if raw.size == 0:
-                    decoded.append(np.zeros(n_out, dtype=np.float32))
-                    continue
-                # deterministic fake decode: tile bytes into the target
-                # shape and scale to [0, 1] — stable across runs/executors
-                tiled = np.resize(raw.astype(np.float32) / 255.0, n_out)
-                decoded.append(tiled)
-            out = pdf.copy()
-            out["decoded"] = decoded
-            yield out
+    def decode(blob):
+        if blob is None:
+            return None
+        if parse is not None:
+            img = parse(bytes(blob))
+            return (None if img is None else _thumbnail(img, *target_size),)
+        raw = np.frombuffer(bytes(blob), dtype=np.uint8)
+        if raw.size == 0:
+            return (np.zeros(n_out, dtype=np.float32),)
+        # deterministic fake decode: tile bytes into the target shape and
+        # scale to [0, 1] — stable across runs/executors
+        return (np.resize(raw.astype(np.float32) / 255.0, n_out),)
 
-    return df.mapInPandas(decode_batches, schema=out_schema)
+    return map_rows(
+        df, [content_col], decode, [T.StructField("decoded", T.ArrayType(T.FloatType()))]
+    )
 
 
 def _decode_audio_blob(data: bytes) -> "tuple[int, int, np.ndarray] | None":
@@ -353,41 +340,32 @@ def decode_audio(
     signal — the audio analogue of the image thumbnail). Unparseable or
     non-PCM blobs yield nulls. Map-only ``mapInPandas``; same scale shape
     as :func:`decode_media`."""
-    out_schema = T.StructType(df.schema.fields + AUDIO_SCHEMA_FIELDS)
+    def decode(blob):
+        parsed = _decode_audio_blob(bytes(blob)) if blob is not None else None
+        if parsed is None:
+            return None
+        rate, nch, frames = parsed
+        mono = frames.mean(axis=1)
+        n = mono.size
+        if n:
+            edges = (np.arange(envelope_bins + 1) * n) // envelope_bins
+            env = [
+                float(np.sqrt((mono[a:b] ** 2).mean())) if b > a else 0.0
+                for a, b in zip(edges[:-1], edges[1:])
+            ]
+        else:
+            env = [0.0] * envelope_bins
+        return (
+            rate,
+            nch,
+            n,
+            n / rate if rate else None,
+            float(np.sqrt((mono**2).mean())) if n else 0.0,
+            float(np.abs(mono).max()) if n else 0.0,
+            np.asarray(env, dtype=np.float32),
+        )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {f.name: [] for f in AUDIO_SCHEMA_FIELDS}
-            for blob in pdf[content_col]:
-                parsed = _decode_audio_blob(bytes(blob)) if blob is not None else None
-                if parsed is None:
-                    for v in cols.values():
-                        v.append(None)
-                    continue
-                rate, nch, frames = parsed
-                mono = frames.mean(axis=1)
-                n = mono.size
-                cols["sample_rate"].append(rate)
-                cols["n_channels"].append(nch)
-                cols["n_frames"].append(n)
-                cols["duration_s"].append(n / rate if rate else None)
-                cols["rms"].append(float(np.sqrt((mono**2).mean())) if n else 0.0)
-                cols["peak"].append(float(np.abs(mono).max()) if n else 0.0)
-                if n:
-                    edges = (np.arange(envelope_bins + 1) * n) // envelope_bins
-                    env = [
-                        float(np.sqrt((mono[a:b] ** 2).mean())) if b > a else 0.0
-                        for a, b in zip(edges[:-1], edges[1:])
-                    ]
-                else:
-                    env = [0.0] * envelope_bins
-                cols["envelope"].append(np.asarray(env, dtype=np.float32))
-            out = pdf.copy()
-            for k, v in cols.items():
-                out[k] = v
-            yield out
-
-    return df.mapInPandas(decode_batches, schema=out_schema)
+    return map_rows(df, [content_col], decode, AUDIO_SCHEMA_FIELDS)
 
 
 def audio_spectrogram(
@@ -415,37 +393,25 @@ def audio_spectrogram(
         T.StructField("spectrogram", T.ArrayType(T.ArrayType(T.FloatType()))),
         T.StructField("mean_spectrum", T.ArrayType(T.FloatType())),
     ]
-    out_schema = T.StructType(df.schema.fields + fields)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {f.name: [] for f in fields}
-            for blob in pdf[content_col]:
-                parsed = _decode_audio_blob(bytes(blob)) if blob is not None else None
-                if parsed is None or parsed[2].shape[0] < frame_size:
-                    for v in cols.values():
-                        v.append(None)
-                    continue
-                rate, _nch, frames = parsed
-                mono = frames.mean(axis=1)
-                n_frames = 1 + (mono.size - frame_size) // hop
-                starts = np.arange(n_frames) * hop
-                mat = np.stack([mono[s : s + frame_size] for s in starts])
-                mags = np.abs(np.fft.rfft(mat * window[None, :], axis=1))
-                cols["sample_rate"].append(rate)
-                cols["n_spec_frames"].append(int(n_frames))
-                cols["spectrogram"].append(
-                    [row.astype(np.float32) for row in mags[:max_frames]]
-                )
-                cols["mean_spectrum"].append(
-                    mags.mean(axis=0).astype(np.float32)
-                )
-            out = pdf.copy()
-            for k, v in cols.items():
-                out[k] = v
-            yield out
+    def spectrogram(blob):
+        parsed = _decode_audio_blob(bytes(blob)) if blob is not None else None
+        if parsed is None or parsed[2].shape[0] < frame_size:
+            return None
+        rate, _nch, frames = parsed
+        mono = frames.mean(axis=1)
+        n_frames = 1 + (mono.size - frame_size) // hop
+        starts = np.arange(n_frames) * hop
+        mat = np.stack([mono[s : s + frame_size] for s in starts])
+        mags = np.abs(np.fft.rfft(mat * window[None, :], axis=1))
+        return (
+            rate,
+            int(n_frames),
+            [row.astype(np.float32) for row in mags[:max_frames]],
+            mags.mean(axis=0).astype(np.float32),
+        )
 
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(df, [content_col], spectrogram, fields)
 
 
 def _parse_y4m(data: bytes) -> "tuple[int, int, float, list[np.ndarray]] | None":
@@ -531,33 +497,17 @@ def sample_frames(
     blobs yield null metadata rather than failing the stage."""
     if every < 1:
         raise ValueError("sample_frames: every must be >= 1")
-    out_schema = T.StructType(df.schema.fields + VIDEO_SCHEMA_FIELDS)
 
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f.name: [] for f in VIDEO_SCHEMA_FIELDS}
-            for blob in pdf[content_col]:
-                parsed = _parse_y4m(bytes(blob)) if blob is not None else None
-                if parsed is None:
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                w, h, fps, frames = parsed
-                idx = list(range(0, len(frames), every))[:max_frames]
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["fps"].append(fps)
-                cols["n_frames_total"].append(len(frames))
-                cols["frame_indices"].append(idx)
-                cols["frames"].append(
-                    [_thumbnail(frames[i], *target_size) / np.float32(255.0) for i in idx]
-                )
-            out = pdf.copy()
-            for k, v in cols.items():
-                out[k] = v
-            yield out
+    def sample(blob):
+        parsed = _parse_y4m(bytes(blob)) if blob is not None else None
+        if parsed is None:
+            return None
+        w, h, fps, frames = parsed
+        idx = list(range(0, len(frames), every))[:max_frames]
+        thumbs = [_thumbnail(frames[i], *target_size) / np.float32(255.0) for i in idx]
+        return w, h, fps, len(frames), idx, thumbs
 
-    return df.mapInPandas(sample_batches, schema=out_schema)
+    return map_rows(df, [content_col], sample, VIDEO_SCHEMA_FIELDS)
 
 
 def extract_features(
@@ -566,24 +516,16 @@ def extract_features(
     """Summary features over the decoded block (mean/std/min/max) — the
     stand-in for a real embedding model, with the exact Spark shape a model
     UDF would have (Arrow in, fixed-width array out)."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("features", T.ArrayType(T.DoubleType()))]
+
+    def feat(arr):
+        if arr is None or len(arr) == 0:
+            return None
+        a = np.asarray(arr, dtype=np.float64)
+        return ([float(a.mean()), float(a.std()), float(a.min()), float(a.max())][:n_features],)
+
+    return map_rows(
+        df, [decoded_col], feat, [T.StructField("features", T.ArrayType(T.DoubleType()))]
     )
-
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for arr in pdf[decoded_col]:
-                if arr is None or len(arr) == 0:
-                    feats.append(None)
-                    continue
-                a = np.asarray(arr, dtype=np.float64)
-                feats.append([float(a.mean()), float(a.std()), float(a.min()), float(a.max())][:n_features])
-            out = pdf.copy()
-            out["features"] = feats
-            yield out
-
-    return df.mapInPandas(feat, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -833,18 +775,4 @@ def media_probe(df: DataFrame, content_col: str = "content") -> DataFrame:
     unrecognized blobs give all-null). Arrow-batched map-only: probing
     reads a fixed-size header per blob, so throughput is I/O bound and
     the plan shape survives any corpus size."""
-    out_schema = T.StructType(df.schema.fields + _PROBE_FIELDS)
-
-    def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {f.name: [] for f in _PROBE_FIELDS}
-            for blob in pdf[content_col]:
-                meta = probe_media_header(blob) or {}
-                for f in _PROBE_FIELDS:
-                    cols[f.name].append(meta.get(f.name))
-            out = pdf.copy()
-            for k, v in cols.items():
-                out[k] = v
-            yield out
-
-    return df.mapInPandas(probe_batches, schema=out_schema)
+    return map_rows(df, [content_col], probe_media_header, _PROBE_FIELDS)

@@ -45,12 +45,12 @@ surface; this extends the multimodal/text family (VERDICT r11 next #2).
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 from xml.etree import ElementTree
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = [
     "parse_zip_entries",
@@ -419,50 +419,19 @@ def zip_inventory(df: DataFrame, content_col: str = "content") -> DataFrame:
     them (the q205 gate rule). One map-only Arrow pass, no shuffle."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != content_col]
-    out_schema = T.StructType(carry + _ZIP_FIELDS)
+    def members(blob):
+        entries = parse_zip_entries(bytes(blob)) if blob is not None else None
+        if entries is None:
+            return [None]
+        return [
+            (idx, e["name"], e["method"], e["uncompressed_size"], e["encrypted"], e["is_dir"])
+            for idx, e in enumerate(entries)
+        ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[content_col]
-                entries = (
-                    parse_zip_entries(bytes(blob)) if blob is not None else None
-                )
-                base = {f.name: r[f.name] for f in carry}
-                if entries is None:
-                    rows.append(
-                        {**base, **{f.name: None for f in _ZIP_FIELDS}}
-                    )
-                else:
-                    for idx, e in enumerate(entries):
-                        rows.append(
-                            {
-                                **base,
-                                "entry_idx": idx,
-                                "entry_name": e["name"],
-                                "method": e["method"],
-                                "uncompressed_size": e["uncompressed_size"],
-                                "encrypted": e["encrypted"],
-                                "is_dir": e["is_dir"],
-                            }
-                        )
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            n = len(rows)
-            out["entry_idx"] = pd.array(
-                out["entry_idx"] if n else [], dtype="Int32"
-            )
-            out["method"] = pd.array(out["method"] if n else [], dtype="Int32")
-            out["uncompressed_size"] = pd.array(
-                out["uncompressed_size"] if n else [], dtype="Int64"
-            )
-            for c in ("encrypted", "is_dir"):
-                out[c] = pd.array(out[c] if n else [], dtype="boolean")
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [content_col], members, _ZIP_FIELDS,
+        explode=True, drop=[content_col],
+    )
 
 
 def docx_text(
@@ -472,24 +441,12 @@ def docx_text(
     map-only Arrow pass, linear in blob bytes."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.StringType())]
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda b: (extract_docx_text(bytes(b)) if b is not None else None,),
+        [T.StructField(out_col, T.StringType())],
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[out_col] = pd.array(
-                [
-                    extract_docx_text(bytes(b)) if b is not None else None
-                    for b in pdf[content_col]
-                ],
-                dtype="object",
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
 
 
 def office_text(
@@ -505,32 +462,12 @@ def office_text(
     directory, the extractor inflates only the text-bearing parts."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField(kind_col, T.StringType()),
-            T.StructField(out_col, T.StringType()),
-        ]
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda b: _office_kind_and_text(bytes(b)) if b is not None else None,
+        [T.StructField(kind_col, T.StringType()), T.StructField(out_col, T.StringType())],
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            kinds, texts = [], []
-            for b in pdf[content_col]:
-                k, t = (
-                    _office_kind_and_text(bytes(b))
-                    if b is not None
-                    else (None, None)
-                )
-                kinds.append(k)
-                texts.append(t)
-            out[kind_col] = pd.array(kinds, dtype="object")
-            out[out_col] = pd.array(texts, dtype="object")
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
 
 
 def build_zip(

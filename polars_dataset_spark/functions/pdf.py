@@ -37,11 +37,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 _VERSION_RE = re.compile(rb"^%PDF-(\d+\.\d+)")
 _PAGES_RE = re.compile(
@@ -170,28 +170,12 @@ def pdf_probe(df: DataFrame, content_col: str = "content") -> DataFrame:
     blobs get all-null fields."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + _PDF_FIELDS)
-    empty = {f.name: None for f in _PDF_FIELDS}
-
-    def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for blob in pdf_batch[content_col]:
-                info = probe_pdf(bytes(blob)) if blob is not None else None
-                rows.append(info or empty)
-            out = pdf_batch.copy()
-            for f in _PDF_FIELDS:
-                col = [r.get(f.name) for r in rows]
-                if f.dataType == T.IntegerType():
-                    out[f.name] = pd.array(col, dtype="Int32")
-                elif f.dataType == T.BooleanType():
-                    out[f.name] = pd.array(col, dtype="boolean")
-                else:
-                    out[f.name] = pd.array(col, dtype="object")
-            yield out
-
-    return df.mapInPandas(probe_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda blob: probe_pdf(bytes(blob)) if blob is not None else None,
+        _PDF_FIELDS,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -768,26 +752,11 @@ def pdf_text(df: DataFrame, content_col: str = "content") -> DataFrame:
     OCR/extraction service tier instead."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != content_col]
-    out_schema = T.StructType(carry + _PDF_TEXT_FIELDS)
+    def pages(blob):
+        texts = extract_pdf_text(bytes(blob)) if blob is not None else None
+        return [None] if texts is None else list(enumerate(texts))
 
-    def text_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for _, r in pdf_batch.iterrows():
-                blob = r[content_col]
-                pages = extract_pdf_text(bytes(blob)) if blob is not None else None
-                base = {f.name: r[f.name] for f in carry}
-                if pages is None:
-                    rows.append({**base, "page_idx": None, "page_text": None})
-                else:
-                    for idx, ptext in enumerate(pages):
-                        rows.append({**base, "page_idx": idx, "page_text": ptext})
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            out["page_idx"] = pd.array(
-                out["page_idx"] if len(rows) else [], dtype="Int32"
-            )
-            yield out
-
-    return df.mapInPandas(text_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [content_col], pages, _PDF_TEXT_FIELDS,
+        explode=True, drop=[content_col],
+    )

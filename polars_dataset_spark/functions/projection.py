@@ -72,6 +72,7 @@ def _partial_moments(df: DataFrame, col: str) -> list:
         ]
     )
 
+    # one reduction per partition, not a per-row map (map_rows does not fit)
     def gen(batches):
         n = 0
         s = o = None

@@ -52,12 +52,12 @@ surface; this is the crawl-pipeline extension family (VERDICT r10 #4).
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = [
     "parse_robots",
@@ -189,7 +189,6 @@ _RULE_FIELDS = [
     T.StructField("allow", T.BooleanType()),
     T.StructField("crawl_delay", T.DoubleType()),
 ]
-_RULE_SCHEMA = T.StructType(_RULE_FIELDS)
 
 
 def robots_rules(
@@ -206,30 +205,27 @@ def robots_rules(
     crawl_delay and distinguish "no robots" from "no matching rule".
     One map-only Arrow pass; robots files are per-host tiny."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, blob in zip(pdf[host_col], pdf[content_col]):
-                if host is None or blob is None:
-                    continue
-                text = (
-                    bytes(blob).decode("utf-8", "replace")
-                    if isinstance(blob, (bytes, bytearray, memoryview))
-                    else str(blob)
-                )
-                parsed = parse_robots(text, user_agent)
-                delay = parsed["crawl_delay"]
-                if not parsed["rules"]:
-                    rows.append((host, None, None, None, delay))
-                for pattern, allow in parsed["rules"]:
-                    rows.append(
-                        (host, pattern_to_regex(pattern), len(pattern), allow, delay)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _RULE_FIELDS]).astype(
-                {"rule_len": "Int32", "allow": "boolean", "crawl_delay": "Float64"}
-            )
 
-    return df.mapInPandas(gen, schema=_RULE_SCHEMA)
+    def rules(host, blob):
+        if host is None or blob is None:
+            return []
+        text = (
+            bytes(blob).decode("utf-8", "replace")
+            if isinstance(blob, (bytes, bytearray, memoryview))
+            else str(blob)
+        )
+        parsed = parse_robots(text, user_agent)
+        delay = parsed["crawl_delay"]
+        if not parsed["rules"]:
+            return [(host, None, None, None, delay)]
+        return [
+            (host, pattern_to_regex(pattern), len(pattern), allow, delay)
+            for pattern, allow in parsed["rules"]
+        ]
+
+    return map_rows(
+        df, [host_col, content_col], rules, _RULE_FIELDS, explode=True, drop=df.columns
+    )
 
 
 def frontier_filter(

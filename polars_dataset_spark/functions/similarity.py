@@ -273,6 +273,7 @@ def _train_quantizer(
     dim = coarse.shape[1]
     per_cell_cap = k2 * 256
 
+    # batch-vectorised, not per row (map_rows does not fit): one argmin per batch
     def assign_coarse(batches):
         for pdf in batches:
             m = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
@@ -523,6 +524,7 @@ def cosine_pairs_block(
         b_mat = spark.sparkContext.broadcast(mat)
         b_norms = spark.sparkContext.broadcast(norms)
 
+        # batch-vectorised, not per row (map_rows does not fit): one matmul per batch
         def score(batches):
             # dot/(|a||b|), matching the per-pair formula (and the SQL
             # oracle) more closely than pre-normalized rows would

@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 from xml.etree import ElementTree
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 __all__ = ["parse_sitemap", "sitemap_entries"]
 
@@ -110,41 +110,18 @@ def sitemap_entries(df: DataFrame, content_col: str = "content") -> DataFrame:
     child sitemaps to fetch next."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != content_col]
-    out_schema = T.StructType(carry + _ENTRY_FIELDS)
+    def entries(blob):
+        parsed = parse_sitemap(bytes(blob)) if blob is not None else None
+        if parsed is None:
+            return [None]
+        if not parsed["entries"]:
+            return [{"kind": parsed["kind"]}]
+        return [
+            {"kind": parsed["kind"], "entry_idx": i, **e}
+            for i, e in enumerate(parsed["entries"])
+        ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[content_col]
-                parsed = (
-                    parse_sitemap(bytes(blob)) if blob is not None else None
-                )
-                base = {f.name: r[f.name] for f in carry}
-                if parsed is None:
-                    rows.append({
-                        **base, "kind": None, "entry_idx": None, "loc": None,
-                        "lastmod": None, "changefreq": None, "priority": None,
-                    })
-                    continue
-                if not parsed["entries"]:
-                    rows.append({
-                        **base, "kind": parsed["kind"], "entry_idx": None,
-                        "loc": None, "lastmod": None, "changefreq": None,
-                        "priority": None,
-                    })
-                    continue
-                for i, e in enumerate(parsed["entries"]):
-                    rows.append({**base, "kind": parsed["kind"], "entry_idx": i, **e})
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            out["entry_idx"] = pd.array(
-                out["entry_idx"] if len(rows) else [], dtype="Int32"
-            )
-            out["priority"] = pd.array(
-                out["priority"] if len(rows) else [], dtype="Float64"
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [content_col], entries, _ENTRY_FIELDS,
+        explode=True, drop=[content_col],
+    )

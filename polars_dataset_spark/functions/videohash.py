@@ -50,10 +50,7 @@ surface; this is the driver-mandated multimodal dedup family.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -62,6 +59,7 @@ from polars_dataset_spark.functions.dedup import (
     banded_filter_against,
     banded_neardup_pairs,
 )
+from polars_dataset_spark.rowmap import map_rows
 
 _N_SEGS = 8
 _N_COLS = 9  # 9 thumbnail columns -> 8 adjacent diffs per segment
@@ -113,18 +111,12 @@ def video_fingerprint(
     too-short blobs get null."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.LongType())])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[out_col] = pd.array(
-                [_hash_blob(b) for b in pdf[content_col]], dtype="Int64"
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df),
+        [content_col],
+        lambda blob: (_hash_blob(blob),),
+        [T.StructField(out_col, T.LongType())],
+    )
 
 
 def video_neardup_pairs(

@@ -13,6 +13,8 @@ implemented here directly:
   target: ``scipy.interpolate.PchipInterpolator``, used by the reference's
   historical ``interpolate_frame``,
   ``/root/reference/build/lib/polars_dataset.py:304-328``).
+- :func:`rfft_trace` and :func:`lomb_scargle_power` — the spectra behind
+  ``operators/fourier.py`` (uniform and uneven sampling).
 
 Everything is vectorized numpy over one trace (one group) at a time; traces
 are small by construction (one sweep), so an O(n) tridiagonal solve (or a
@@ -30,6 +32,7 @@ __all__ = [
     "savgol_coeffs",
     "savgol_smooth",
     "lomb_scargle_power",
+    "rfft_trace",
 ]
 
 
@@ -307,3 +310,17 @@ def lomb_scargle_power(
     cc = (ca * ca).sum(axis=1)
     ss = (sa * sa).sum(axis=1)
     return (c * c / cc + s * s / ss) / (2.0 * var)
+
+
+def rfft_trace(x: np.ndarray, ys: "list[np.ndarray]"):
+    """One-sided FFT of each value series in ``ys`` over one trace's
+    sorted, uniform index ``x``: ``(freqs, spectra)``, the frequencies in
+    cycles per index unit (spacing from the median step) and one complex
+    spectrum per series, NaN samples read as 0. A trace of fewer than two
+    samples has no spectrum: ``None``."""
+    x = np.asarray(x, dtype=np.float64)
+    if x.size < 2:
+        return None
+    step = float(np.median(np.diff(x)))
+    freqs = np.fft.rfftfreq(x.size, d=step)
+    return freqs, [np.fft.rfft(np.nan_to_num(np.asarray(y, dtype=np.float64))) for y in ys]

@@ -290,6 +290,7 @@ def _join_asof_broadcast(
             valid = valid & (np.abs(kq_rows - matched) <= tolerance)
         return np.clip(il, 0, keys.size - 1), valid
 
+    # batch-vectorised searchsorted per key group, not per row (map_rows does not fit)
     def lookup(batches):
         grp = b_groups.value
         for pdf in batches:

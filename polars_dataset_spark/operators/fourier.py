@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.kernels import rfft_trace
 from polars_dataset_spark.operators.structs import sanitize_columns, unnest_structs
 
 __all__ = ["fourier_transform", "lomb_scargle"]
@@ -44,16 +45,16 @@ def fourier_transform(ds: Dataset, value_vars=None, freq_name: str = "frequency"
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(index)
-        xs = pdf[index].to_numpy(dtype=np.float64)
-        n = xs.size
-        if n < 2:
+        got = rfft_trace(
+            pdf[index].to_numpy(dtype=np.float64),
+            [pdf[c].to_numpy(dtype=np.float64) for c in vv],
+        )
+        if got is None:
             return pd.DataFrame({f.name: pd.Series(dtype="float64") for f in out_fields})
-        step = float(np.median(np.diff(xs)))
-        freqs = np.fft.rfftfreq(n, d=step)
+        freqs, spectra = got
         out = {iv: np.repeat(pdf[iv].iloc[0], freqs.size) for iv in id_vars}
         out[freq_name] = freqs
-        for c in vv:
-            spec = np.fft.rfft(np.nan_to_num(pdf[c].to_numpy(dtype=np.float64)))
+        for c, spec in zip(vv, spectra):
             out[f"{c}_re"] = spec.real
             out[f"{c}_im"] = spec.imag
             out[f"{c}_abs"] = np.abs(spec)

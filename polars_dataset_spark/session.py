@@ -1,6 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Defaults target the test harness (``local[$SPARK_GRAFT_CPUS]``) but every
+Defaults target the host it runs on (``local[<host CPUs>]``, half its
+physical memory for the driver; ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` override them) but every
 setting is the one you'd want on a real cluster too: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow for the
 pandas-UDF kernels, UTC session timezone so timestamp semantics are
@@ -17,11 +19,26 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the machine's
+    count: a container may get a share of the machine)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """Half the host's physical memory, at least 1 GiB: in local mode the
+    driver JVM's heap also holds every executor's."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, phys // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else _host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -37,7 +54,7 @@ def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | 
         # behind another query's large FIFO-queued stages. Threads opt
         # into separate pools via the spark.scheduler.pool local property.
         .config("spark.scheduler.mode", "FAIR")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         # connected_components pins every round: delete a reliable
         # checkpoint's files once its DataFrame is garbage-collected

@@ -30,11 +30,12 @@ extension family (SURVEY §2.4).
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
 
 _MAX_HEADER = 64 << 10  # a WARC/HTTP header block beyond 64 KiB is garbage
 
@@ -158,28 +159,15 @@ def warc_records(df: DataFrame, content_col: str = "content") -> DataFrame:
     it is the raw record block."""
     from polars_dataset_spark.session import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    carry = [f for f in df.schema.fields if f.name != content_col]
-    out_schema = T.StructType(carry + _WARC_FIELDS)
+    def records(blob):
+        if blob is None:
+            return []
+        return [{"rec_idx": i, **rec} for i, rec in enumerate(parse_warc(bytes(blob)))]
 
-    def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[content_col]
-                if blob is None:
-                    continue
-                for i, rec in enumerate(parse_warc(bytes(blob))):
-                    base = {f.name: r[f.name] for f in carry}
-                    base["rec_idx"] = i
-                    base.update(rec)
-                    rows.append(base)
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            for f in ("rec_idx", "http_status"):
-                out[f] = pd.array(out[f] if len(rows) else [], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(explode_batches, schema=out_schema)
+    return map_rows(
+        ensure_parallelism(df), [content_col], records, _WARC_FIELDS,
+        explode=True, drop=[content_col],
+    )
 
 
 def build_warc_record(
@@ -484,41 +472,28 @@ def fetch_warc_records(
     joined = ensure_parallelism(
         blobs.join(F.broadcast(wants), on=blob_filename_col, how="inner")
     )
-    carry = [
-        f for f in joined.schema.fields if f.name not in (content_col, "__wants")
-    ]
-    out_schema = T.StructType(
-        carry
-        + [
+
+    def fetch(blob, wants):
+        data = bytes(blob) if blob is not None else b""
+        rows = []
+        for w in wants:
+            off, ln = int(w["o"]), int(w["l"])
+            rec = warc_record_at(data, off, ln)
+            rows.append({"warc_offset": off, "warc_length": ln, **(rec or {})})
+        return rows
+
+    return map_rows(
+        joined,
+        [content_col, "__wants"],
+        fetch,
+        [
             T.StructField("warc_offset", T.LongType()),
             T.StructField("warc_length", T.LongType()),
         ]
-        + [f for f in _WARC_FIELDS if f.name != "rec_idx"]
+        + [f for f in _WARC_FIELDS if f.name != "rec_idx"],
+        explode=True,
+        drop=[content_col, "__wants"],
     )
-
-    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = {f.name: None for f in _WARC_FIELDS if f.name != "rec_idx"}
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = bytes(r[content_col]) if r[content_col] is not None else b""
-                base = {f.name: r[f.name] for f in carry}
-                for w in r["__wants"]:
-                    off, ln = int(w["o"]), int(w["l"])
-                    rec = warc_record_at(blob, off, ln)
-                    rows.append({
-                        **base, "warc_offset": off, "warc_length": ln,
-                        **(rec if rec is not None else empty),
-                    })
-            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-            out["http_status"] = pd.array(
-                out["http_status"] if len(rows) else [], dtype="Int32"
-            )
-            for c in ("warc_offset", "warc_length"):
-                out[c] = pd.array(out[c] if len(rows) else [], dtype="Int64")
-            yield out
-
-    return joined.mapInPandas(fetch_batches, schema=out_schema)
 
 
 def write_wet(

@@ -167,3 +167,47 @@ def test_output_name_collision_raises(spark):
     for name in ("v", "g", "x"):
         with pytest.raises(ValueError, match="already exists"):
             ds.rolling_quantiles("v", {"p50": 0.5, name: 0.9}, 3)
+
+
+@pytest.mark.parametrize("cap", [20, 5])
+def test_carry_pull_stays_under_cap(spark, monkeypatch, cap):
+    """The carry collect pulls n_chunks x (window_size - 1) rows, so the
+    chunk count shrinks to keep that under ``_ROLLING_CARRY_ROWS`` (cap
+    20, window 8: 2 chunks); a cap below one chunk's tail leaves a single
+    chunk and no carry job. Values match the uncapped run (13 chunks)."""
+    from polars_dataset_spark import core
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    sdf = spark.createDataFrame(_frame())
+    ds = Dataset(sdf, index="x", id_vars=["g"])
+
+    def rolled():
+        return ds.rolling_quantiles("v", {"out": 0.5}, 8).df
+
+    def rows(df):
+        return (
+            df.select("g", "x", "out").toPandas().sort_values(["g", "x"]).reset_index(drop=True)
+        )
+
+    try:
+        uncapped = rows(rolled())
+        pulled = []
+        cls = type(sdf)
+        collect = cls.collect
+
+        def spy(self):
+            got = collect(self)
+            pulled.append(len(got))
+            return got
+
+        monkeypatch.setattr(core, "_ROLLING_CARRY_ROWS", cap)
+        monkeypatch.setattr(cls, "collect", spy)
+        capped = rolled()
+        monkeypatch.setattr(cls, "collect", collect)
+        capped = rows(capped)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert sum(pulled) <= cap
+    assert bool(pulled) == (cap // 7 > 1)
+    pd.testing.assert_frame_equal(capped, uncapped)

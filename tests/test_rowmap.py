@@ -1,0 +1,140 @@
+"""``rowmap.map_rows``: the one per-row Python map.
+
+The guardrail reads the package's source: every ``mapInPandas`` call is
+``map_rows``' own or an allowlisted batch loop that is not a per-row map.
+The other tests pin the helper's output frame and that its workers import
+the package.
+"""
+
+import ast
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pandas as pd
+from pyspark.sql import types as T
+
+from polars_dataset_spark.rowmap import map_rows
+
+REPO = Path(__file__).resolve().parents[1]
+PKG = REPO / "polars_dataset_spark"
+
+# (module, function) -> why its batch loop does not go through map_rows
+HAND_ROLLED = {
+    ("rowmap", "map_rows"): "the helper itself",
+    ("core", "Dataset.rolling_quantiles"): "reads TaskContext, carries rows across batches",
+    ("functions.frequency", "mg_candidates"): "one summary per partition",
+    ("functions.ml", "_gram_partials"): "one reduction per partition",
+    ("functions.projection", "_partial_moments"): "one reduction per partition",
+    ("functions.similarity", "_train_quantizer"): "one argmin per batch matrix",
+    ("functions.similarity", "cosine_pairs_block"): "one matmul per batch",
+    ("operators.asof", "_join_asof_broadcast"): "searchsorted per key group of a batch",
+}
+
+
+def _map_in_pandas_sites():
+    sites = set()
+    for path in sorted(PKG.rglob("*.py")):
+        module = ".".join(path.relative_to(PKG).with_suffix("").parts)
+
+        def walk(node, qual):
+            for child in ast.iter_child_nodes(node):
+                q = qual
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    q = f"{qual}.{child.name}" if qual else child.name
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "mapInPandas"
+                ):
+                    sites.add((module, qual))
+                walk(child, q)
+
+        walk(ast.parse(path.read_text(), str(path)), "")
+    return sites
+
+
+def test_map_in_pandas_only_through_map_rows():
+    sites = _map_in_pandas_sites()
+    stray = sites - set(HAND_ROLLED)
+    assert not stray, f"hand-rolled mapInPandas (use rowmap.map_rows): {sorted(stray)}"
+    stale = set(HAND_ROLLED) - sites
+    assert not stale, f"allowlisted sites that no longer call mapInPandas: {sorted(stale)}"
+
+
+def test_map_rows_output_frame(spark):
+    """Tuple, dict and ``None`` rows, typed columns, an absent optional
+    input column, and explode with dropped inputs (zero, one or several
+    rows per input)."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": [1, 2, 3], "s": ["a", None, "bcd"]})
+    ).repartition(2)
+    fields = [
+        T.StructField("n", T.IntegerType()),
+        T.StructField("ok", T.BooleanType()),
+        T.StructField("tag", T.StringType()),
+    ]
+
+    def measure(s, missing):
+        assert missing is None
+        if s is None:
+            return None
+        return (len(s), True, "t") if len(s) > 1 else {"n": len(s)}
+
+    got = map_rows(df, ["s", None], measure, fields).orderBy("id").collect()
+    assert [tuple(r) for r in got] == [
+        (1, "a", 1, None, None),
+        (2, None, None, None, None),
+        (3, "bcd", 3, True, "t"),
+    ]
+
+    chars = map_rows(
+        df,
+        ["s"],
+        lambda s: list(enumerate(s or "")),
+        [T.StructField("i", T.LongType()), T.StructField("c", T.StringType())],
+        explode=True,
+        drop=["s"],
+    )
+    assert chars.columns == ["id", "i", "c"]
+    assert sorted(tuple(r) for r in chars.collect()) == [
+        (1, 0, "a"), (3, 0, "b"), (3, 1, "c"), (3, 2, "d"),
+    ]
+
+
+# A fresh Spark session whose row function is pickled by value and imports
+# nothing: only map_rows' runner can bring the package into the worker.
+_FRESH_WORKER = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+from polars_dataset_spark.rowmap import map_rows
+from polars_dataset_spark.session import apply_session_defaults
+
+spark = apply_session_defaults(
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+
+def loaded(_id):
+    return ("polars_dataset_spark" in sys.modules,)
+
+df = spark.range(1, numPartitions=1)
+print(map_rows(df, ["id"], loaded, [T.StructField("pkg", T.BooleanType())]).first().pkg)
+spark.stop()
+"""
+
+
+def test_map_rows_workers_import_package(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_LOCAL_DIRS"] = str(tmp_path / "local")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_WORKER],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().splitlines()[-1] == "True"

@@ -111,3 +111,57 @@ def test_worker_zipimporter_patched_by_package_import(spark):
     got = spark.range(1, numPartitions=1).mapInPandas(probe, "module string").first()
     assert got.module == "polars_dataset_spark.worker_zipimport"
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_get_spark_defaults_sized_to_host(monkeypatch):
+    """Without overrides, ``local[n]``, the shuffle partitions and the
+    driver heap follow the host (6 CPUs, 16 GiB: 8 GiB heap); the
+    ``SPARK_GRAFT_*`` variables still win."""
+    from types import SimpleNamespace
+
+    from polars_dataset_spark import session
+
+    class Built(Exception):
+        pass
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def master(self, m):
+            self.conf["master"] = m
+            return self
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            raise Built(self.conf)
+
+    def built_conf():
+        monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+        with pytest.raises(Built) as got:
+            session.get_spark()
+        return got.value.args[0]
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(6)), raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    conf = built_conf()
+    assert conf["master"] == "local[6]"
+    assert conf["spark.sql.shuffle.partitions"] == "6"
+    assert conf["spark.driver.memory"] == "8192m"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    conf = built_conf()
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    assert conf["spark.driver.memory"] == "2g"
