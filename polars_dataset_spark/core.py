@@ -43,6 +43,107 @@ def _as_list(x) -> list:
     return list(x)
 
 
+def _rolling_key_rows(keys: list, pdf) -> "list[tuple]":
+    """Canonical trace-key tuple per row: a type-tagged repr string per
+    key value — injective for the supported key types, stable across the
+    tails collect (array<string> transport) and the main pass, and
+    null/NaN-safe (None and NaN each map to one image, so null-keyed and
+    NaN-keyed traces group together, matching the window form's
+    partitioning)."""
+    if not keys:
+        return [()] * len(pdf)
+    cols = [pdf[k].tolist() for k in keys]
+
+    def img(v):
+        if v is None:
+            return "\x00null"
+        if isinstance(v, float) and v != v:
+            return "\x00nan"
+        return f"{type(v).__name__}\x01{v!r}"
+
+    return [tuple(img(v) for v in row) for row in zip(*cols)]
+
+
+def _rolling_tails(keys: list, col: str, w1: int, batches):
+    """Last ``w1`` (key, value) rows of this chunk, in chunk order — the
+    overlap carry source of :meth:`Dataset.rolling_quantiles`."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else 0
+    tail_k: "list[tuple]" = []
+    tail_v: "list[float]" = []
+    for pdf in batches:
+        ks = _rolling_key_rows(keys, pdf)
+        vs = pd.to_numeric(pdf[col], errors="coerce").astype(float).tolist()
+        tail_k = (tail_k + ks)[-w1:]
+        tail_v = (tail_v + vs)[-w1:]
+    yield pd.DataFrame(
+        {
+            "__pid": [pid] * len(tail_v),
+            "__seq": list(range(len(tail_v))),
+            "__val": tail_v,
+            "__keys": [list(k) for k in tail_k],
+        }
+    )
+
+
+def _rolling_window(keys: list, col: str, window_size: int, qs_items: list, b_carries, batches):
+    """The per-row window quantiles of :meth:`Dataset.rolling_quantiles`
+    over one chunk, its carry (``b_carries``) prepended."""
+    import numpy as np
+    import pandas as pd
+    from pyspark import TaskContext
+
+    w1 = window_size - 1
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else 0
+    # carry for THIS chunk, but only rows preceding its first row
+    # — partitions earlier in range order (nothing from this pid)
+    ck, cv = b_carries.value.get(pid, ([], []))
+    buf_k: "list[tuple]" = list(ck)
+    buf_v = np.asarray(cv, dtype=np.float64)
+    for pdf in batches:
+        ks = _rolling_key_rows(keys, pdf)
+        vs = pd.to_numeric(pdf[col], errors="coerce").to_numpy(
+            dtype=np.float64, na_value=np.nan
+        )
+        full_k = buf_k + ks
+        full_v = np.concatenate([buf_v, vs])
+        nbuf = len(buf_k)
+        outs = {n: np.full(len(full_v), np.nan) for n, _ in qs_items}
+        ns = np.zeros(len(full_v))
+        starts = [0] + [i for i in range(1, len(full_k)) if full_k[i] != full_k[i - 1]]
+        for s, e in zip(starts, starts[1:] + [len(full_k)]):
+            seg = full_v[s:e]
+            padded = np.concatenate([np.full(w1, np.nan), seg])
+            win = np.lib.stride_tricks.sliding_window_view(padded, window_size)
+            sw = np.sort(win, axis=1)  # NaN sorts last
+            n = (~np.isnan(win)).sum(axis=1).astype(np.float64)
+            ns[s:e] = n
+            rows = np.arange(len(seg))
+            ni = n.astype(int)
+            for name, q in qs_items:
+                pos = (n - 1.0) * q
+                lo = np.floor(pos)
+                frac = pos - lo
+                loi = np.clip(lo.astype(int), 0, window_size - 1)
+                loi2 = np.clip(np.minimum(loi + 1, ni - 1), 0, window_size - 1)
+                a = sw[rows, loi]
+                b = sw[rows, loi2]
+                outs[name][s:e] = a * (1.0 - frac) + b * frac
+        res = pdf.copy()
+        empty = ns == 0
+        for name, _ in qs_items:
+            arr = pd.array(outs[name][nbuf:], dtype="Float64")
+            arr[empty[nbuf:]] = pd.NA
+            res[name] = arr
+        yield res
+        buf_k = full_k[-w1:] if w1 else []
+        buf_v = full_v[-w1:] if w1 else np.asarray([], dtype=np.float64)
+
+
 class Dataset:
     """A distributed flat table annotated with ``index`` and ``id_vars``.
 
@@ -1054,10 +1155,6 @@ class Dataset:
         rows frame to be well-defined (same requirement the window form
         had); real NaN values (not nulls) are treated as missing,
         where the window form sorted them last."""
-        import numpy as np
-        import pandas as pd
-        from pyspark import TaskContext
-
         from polars_dataset_spark.session import pin
 
         taken = set(self._df.columns)
@@ -1089,51 +1186,14 @@ class Dataset:
         )
         qs_items = list(qs.items())
 
-        def _key_rows(pdf: "pd.DataFrame") -> "list[tuple]":
-            """Canonical trace-key tuple per row: a type-tagged repr
-            string per key value — injective for the supported key types,
-            stable across the tails collect (array<string> transport) and
-            the main pass, and null/NaN-safe (None and NaN each map to
-            one image, so null-keyed and NaN-keyed traces group together,
-            matching the window form's partitioning)."""
-            if not keys:
-                return [()] * len(pdf)
-            cols = [pdf[k].tolist() for k in keys]
-            def img(v):
-                if v is None:
-                    return "\x00null"
-                if isinstance(v, float) and v != v:
-                    return "\x00nan"
-                return f"{type(v).__name__}\x01{v!r}"
-            return [tuple(img(v) for v in row) for row in zip(*cols)]
-
-        # reads TaskContext, keeps a tail across batches (map_rows does not fit)
-        def _tails(batches):
-            """Last window_size-1 (key, value) rows of this chunk, in
-            chunk order — the overlap carry source."""
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
-            tail_k: "list[tuple]" = []
-            tail_v: "list[float]" = []
-            for pdf in batches:
-                ks = _key_rows(pdf)
-                vs = pd.to_numeric(pdf[col], errors="coerce").astype(float).tolist()
-                tail_k = (tail_k + ks)[-w1:]
-                tail_v = (tail_v + vs)[-w1:]
-            yield pd.DataFrame(
-                {
-                    "__pid": [pid] * len(tail_v),
-                    "__seq": list(range(len(tail_v))),
-                    "__val": tail_v,
-                    "__keys": [list(k) for k in tail_k],
-                }
-            )
-
         carries: "dict[int, tuple[list, list]]" = {}
         if w1 and n_parts > 1:  # one chunk has no earlier chunk to carry from
+            # reads TaskContext, keeps a tail across batches (map_rows does not fit)
             tail_schema = "__pid int, __seq int, __val double, __keys array<string>"
             collected = sorted(
-                d.mapInPandas(_tails, schema=tail_schema).collect(),
+                d.mapInPandas(
+                    functools.partial(_rolling_tails, keys, col, w1), schema=tail_schema
+                ).collect(),
                 key=lambda r: (r["__pid"], r["__seq"]),
             )
             # carry for chunk p = the last window_size-1 rows of all
@@ -1151,71 +1211,9 @@ class Dataset:
                 run_v = (run_v + [r["__val"]])[-w1:]
         b_carries = spark.sparkContext.broadcast(carries)
 
-        def _segments(full_keys: "list[tuple]"):
-            starts = [0] + [
-                i
-                for i in range(1, len(full_keys))
-                if full_keys[i] != full_keys[i - 1]
-            ]
-            return list(zip(starts, starts[1:] + [len(full_keys)]))
-
         # reads TaskContext, carries a window across batches (map_rows does not fit)
-        def _roll(batches):
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
-            # carry for THIS chunk, but only rows preceding its first row
-            # — partitions earlier in range order (nothing from this pid)
-            ck, cv = b_carries.value.get(pid, ([], []))
-            buf_k: "list[tuple]" = list(ck)
-            buf_v = np.asarray(cv, dtype=np.float64)
-            for pdf in batches:
-                ks = _key_rows(pdf)
-                vs = pd.to_numeric(pdf[col], errors="coerce").to_numpy(
-                    dtype=np.float64, na_value=np.nan
-                )
-                full_k = buf_k + ks
-                full_v = np.concatenate([buf_v, vs])
-                nbuf = len(buf_k)
-                outs = {
-                    n: np.full(len(full_v), np.nan) for n, _ in qs_items
-                }
-                ns = np.zeros(len(full_v))
-                for s, e in _segments(full_k):
-                    seg = full_v[s:e]
-                    padded = np.concatenate(
-                        [np.full(w1, np.nan), seg]
-                    )
-                    win = np.lib.stride_tricks.sliding_window_view(
-                        padded, window_size
-                    )
-                    sw = np.sort(win, axis=1)  # NaN sorts last
-                    n = (~np.isnan(win)).sum(axis=1).astype(np.float64)
-                    ns[s:e] = n
-                    rows = np.arange(len(seg))
-                    ni = n.astype(int)
-                    for name, q in qs_items:
-                        pos = (n - 1.0) * q
-                        lo = np.floor(pos)
-                        frac = pos - lo
-                        loi = np.clip(lo.astype(int), 0, window_size - 1)
-                        loi2 = np.clip(
-                            np.minimum(loi + 1, ni - 1), 0, window_size - 1
-                        )
-                        a = sw[rows, loi]
-                        b = sw[rows, loi2]
-                        outs[name][s:e] = a * (1.0 - frac) + b * frac
-                res = pdf.copy()
-                empty = ns == 0
-                for name, _ in qs_items:
-                    vals_out = outs[name][nbuf:]
-                    arr = pd.array(vals_out, dtype="Float64")
-                    arr[empty[nbuf:]] = pd.NA
-                    res[name] = arr
-                yield res
-                buf_k = full_k[-w1:] if w1 else []
-                buf_v = full_v[-w1:] if w1 else np.asarray([], dtype=np.float64)
-
-        return self._rewrap(d.mapInPandas(_roll, schema=out_schema))
+        roll = functools.partial(_rolling_window, keys, col, window_size, qs_items, b_carries)
+        return self._rewrap(d.mapInPandas(roll, schema=out_schema))
 
     def update(self, other, on: "list[str] | str | None" = None) -> "Dataset":
         """Update values from ``other`` (polars ``DataFrame.update`` with

@@ -5,12 +5,14 @@ each candidate EXACTLY before anything drops, so pair work is bounded by
 bucket size, never |docs|². There are two banded paths:
 
 - **MinHash** (Jaccard over shingle sets): :func:`minhash_signatures`
-  signs; ``_lsh_pairs`` bands both sides, equi-joins on the band key and
-  verifies Jaccard on the shingle sets joined back. It serves the
-  self-join (:func:`minhash_lsh_candidates`, :func:`minhash_dedup`,
-  :func:`ngram_jaccard_pairs`), the cross-join (:func:`fuzzy_join`) and
-  the probe of a static corpus (:func:`neardup_filter_against`) against
-  a :class:`NeardupIndex`, which carries its LSH parameters.
+  signs and :meth:`NeardupIndex._lsh_rows` cuts a signed frame into band
+  rows and shingle sets; ``_lsh_pairs`` equi-joins two such sides on the
+  band key and verifies Jaccard on the shingle sets joined back. It
+  serves the self-join (:func:`minhash_lsh_candidates`,
+  :func:`minhash_dedup`, :func:`ngram_jaccard_pairs`), the cross-join
+  (:func:`fuzzy_join`) and the probe of a static corpus
+  (:func:`neardup_filter_against`) against a :class:`NeardupIndex`,
+  which carries its LSH parameters and reads its own pinned rows.
 - **Hamming** (any 64-bit fingerprint): :func:`band_key_structs` cuts
   ``max_hamming + 1`` pigeonhole chunks (recall exactly 1) and
   ``bit_count(a XOR b)`` verifies — :func:`hamming_band_pairs`,
@@ -21,6 +23,9 @@ Results are pinned (:func:`~polars_dataset_spark.session.pin`), so the
 ContextCleaner frees them once the caller drops the frame and the JVM
 collects it; a signature intermediate read twice in one call is
 persisted and released in a ``finally`` block before the call returns.
+Both index kinds, :class:`NeardupIndex` and :class:`BandedIndex`, pin
+what they build and release it through
+:func:`~polars_dataset_spark.session.unpin` when retired.
 
 Also :func:`exact_dedup` (one hash group-by; run it before any fuzzy
 pass) and :func:`embedding_neardup` (random-hyperplane buckets + exact
@@ -141,11 +146,10 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_size: int = 3,
     shingle_kind: str = "token",
-    shingles_col: str = "shingles",
-    sig_col: str = "minhash",
-    seed: int = 42,
 ) -> DataFrame:
-    """Attach shingle set + MinHash signature (array<long>).
+    """Attach the shingle set ``shingles`` (array<string>) and the MinHash
+    signature ``minhash`` (array<long>); the band and verify steps read
+    both columns by these names.
 
     ONE 64-bit hash per shingle, then the ``num_hashes`` signature lanes
     are derived as affine re-mixes ``h_j = a_j·h + b_j (mod 2^64)`` with
@@ -158,7 +162,7 @@ def minhash_signatures(
     from polars_dataset_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # shingle+sign is the heavy map stage
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     mult = (rng.randint(1, 2**63, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
     add = rng.randint(0, 2**63, size=num_hashes).astype(np.uint64)
     is_token = shingle_kind == "token"
@@ -218,64 +222,29 @@ def minhash_signatures(
 
     packed = df.withColumn("__sm", shingle_and_sign(F.col(text_col)))
     return packed.withColumns(
-        {shingles_col: F.col("__sm.shingles"), sig_col: F.col("__sm.minhash")}
+        {"shingles": F.col("__sm.shingles"), "minhash": F.col("__sm.minhash")}
     ).drop("__sm")
 
 
-def _band_keys(
-    sigd: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """Explode a signature frame into LSH bucket keys ``(id, band, bh)``:
-    each band of ``num_hashes/bands`` signature lanes hashes to one
-    64-bit bucket key, so identical texts land in identical buckets."""
-    rows = num_hashes // bands
-    return sigd.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("minhash")[i]
-                                for i in range(b * rows, (b + 1) * rows)
-                            ]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.bh")
-
-
-def _lsh_pairs(
-    sig_a: DataFrame,
-    id_a: str,
-    sig_b: DataFrame,
-    id_b: str,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-) -> DataFrame:
+def _lsh_pairs(a: tuple, b: tuple, threshold: float) -> DataFrame:
     """Verified MinHash LSH pairs ``(id_a, id_b, jaccard)`` between two
-    :func:`minhash_signatures` frames, lazily. Band rows carry ONLY
-    ``(id, band, bh)``: shuffling the shingle arrays ``bands`` times
+    sides, lazily. Each side is ``(band rows, shingle sets)``:
+    ``(id, band, bh)`` and ``(id, shingles)``, the id first in both
+    (:meth:`NeardupIndex._lsh_rows`, or a built index's own pins). Band
+    rows carry no shingles: shuffling the shingle arrays ``bands`` times
     through the join would dominate the operator, so the distinct
     candidate pairs join back to one copy of each side's shingle sets for
-    the exact verify. Callers persist the signature frames (each is read
-    twice)."""
+    the exact verify."""
 
-    def side(sig, id_col, out, sh):
-        banded = _band_keys(sig, id_col, num_hashes, bands)
+    def side(rows, out, sh):
+        banded, shingles = rows
         return (
-            banded.select(F.col(id_col).alias(out), "band", "bh"),
-            sig.select(F.col(id_col).alias(out), F.col("shingles").alias(sh)),
+            banded.select(F.col(banded.columns[0]).alias(out), "band", "bh"),
+            shingles.select(F.col(shingles.columns[0]).alias(out), F.col("shingles").alias(sh)),
         )
 
-    band_a, sh_a = side(sig_a, id_a, "id_a", "sh_a")
-    band_b, sh_b = side(sig_b, id_b, "id_b", "sh_b")
+    band_a, sh_a = side(a, "id_a", "sh_a")
+    band_b, sh_b = side(b, "id_b", "sh_b")
     cand = (
         band_a.join(band_b, on=["band", "bh"])
         .select("id_a", "id_b")
@@ -316,11 +285,11 @@ def minhash_lsh_candidates(
     # banding + verify both read it; MEMORY_AND_DISK spills safely
     sigd = lsh.sign(df, id_col, text_col).persist()
     try:
+        rows = lsh._lsh_rows(sigd, id_col)
         # Catalyst pushes id_a < id_b below the candidate dedup into the
         # band join; near-dup pairs are small by contract
         return pin(
-            _lsh_pairs(sigd, id_col, sigd, id_col, num_hashes, bands, threshold)
-            .filter(F.col("id_a") < F.col("id_b")),
+            _lsh_pairs(rows, rows, threshold).filter(F.col("id_a") < F.col("id_b")),
             eager=True,
         )
     finally:
@@ -862,7 +831,7 @@ def fuzzy_join(
     sig_r = lsh.sign(right, right_id, right_text).persist()
     try:
         out = _lsh_pairs(
-            sig_l, left_id, sig_r, right_id, num_hashes, bands, threshold
+            lsh._lsh_rows(sig_l, left_id), lsh._lsh_rows(sig_r, right_id), threshold
         ).select(
             F.col("id_a").alias(left_id + "_l"),
             F.col("id_b").alias(right_id + "_r"),
@@ -875,19 +844,19 @@ def fuzzy_join(
 
 
 class NeardupIndex:
-    """Pre-signed MinHash LSH index of a static corpus
+    """MinHash LSH index of a STATIC text corpus
     (:func:`build_neardup_index`), carrying the LSH parameters it was
     built with: probes always sign through :meth:`sign`, so a probe can
     never band with parameters the index was not built with. Without a
-    corpus it is just the parameters and :meth:`sign`, which the
-    self-join and the cross-join sign both their sides with.
+    corpus it is just the parameters, :meth:`sign` and :meth:`_lsh_rows`,
+    with which the self-join and the cross-join sign and band their sides.
 
-    ``sig`` is the persisted signed corpus ``(__cid, text, shingles,
-    minhash)``; ``banded`` is its persisted band keys ``(__cid, band,
-    bh)``, which the probe's band explode of ``sig`` reads from the
-    cache. Unlike :class:`BandedIndex`, band rows carry no shingles: the
-    verify joins the shingle sets back after candidate dedup.
-    ``unpersist()`` releases both caches when the index is retired."""
+    A built index holds two pins: ``banded``, the corpus band rows
+    ``(__cid, band, bh)``, and ``shingles``, its shingle sets ``(__cid,
+    shingles)``. A probe reads both as they are, so it signs and bands
+    only its own batch. Like :class:`BandedIndex`, :meth:`unpersist`
+    releases the pins through ``unpin``; unlike it, the text index is
+    never appended to."""
 
     def __init__(
         self, num_hashes: int, bands: int, shingle_size: int, shingle_kind: str
@@ -896,7 +865,7 @@ class NeardupIndex:
         self.bands = bands
         self.shingle_size = shingle_size
         self.shingle_kind = shingle_kind
-        self.sig = self.banded = None  # set by build_neardup_index
+        self.banded = self.shingles = None  # pinned by build_neardup_index
 
     def sign(self, df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         """``(id, text, shingles, minhash)`` of ``df``, signed the way
@@ -909,9 +878,23 @@ class NeardupIndex:
             shingle_kind=self.shingle_kind,
         )
 
+    def _lsh_rows(self, sig: DataFrame, id_col: str) -> tuple:
+        """A signed frame's side of :func:`_lsh_pairs`: its band rows
+        ``(id, band, bh)`` (each band of ``num_hashes/bands`` signature
+        lanes hashes to one 64-bit bucket key) and its shingle sets
+        ``(id, shingles)``. Both read ``sig``; the caller persists it."""
+        rows = self.num_hashes // self.bands
+        keys = []
+        for b in range(self.bands):
+            lanes = [F.col("minhash")[i] for i in range(b * rows, (b + 1) * rows)]
+            keys.append(F.struct(F.lit(b).alias("band"), F.xxhash64(*lanes).alias("bh")))
+        banded = sig.select(id_col, F.explode(F.array(*keys)).alias("bk"))
+        return banded.select(id_col, "bk.band", "bk.bh"), sig.select(id_col, "shingles")
+
     def unpersist(self) -> None:
-        self.banded.unpersist()
-        self.sig.unpersist()
+        """Free both pins now."""
+        unpin(self.banded)
+        unpin(self.shingles)
 
 
 def build_neardup_index(
@@ -931,15 +914,20 @@ def build_neardup_index(
     corpus (the big side) is shingled and signed ONE time, then every
     arriving batch pays only its own signatures plus a bucket equi-join
     against this index (see :func:`neardup_filter_against` and
-    ``streaming.stream_neardup_filter``). Both frames are persisted;
-    for an index that outlives a session, write them to parquet and
-    read back. At 100 TB the banded frame is |corpus|·bands rows of
-    three longs — write it bucketed by ``(band, bh)`` and the per-batch
-    probe join is exchange-free on the corpus side."""
+    ``streaming.stream_neardup_filter``). The band rows and the shingle
+    sets are pinned; the signed corpus both are cut from is persisted
+    only while they are. At 100 TB the banded frame is |corpus|·bands
+    rows of three longs — write it bucketed by ``(band, bh)`` and the
+    per-batch probe join is exchange-free on the corpus side."""
     index = NeardupIndex(num_hashes, bands, shingle_size, shingle_kind)
     corpus = corpus.select(F.col(id_col).alias("__cid"), text_col)
-    index.sig = index.sign(corpus, "__cid", text_col).persist()
-    index.banded = _band_keys(index.sig, "__cid", num_hashes, bands).persist()
+    sig = index.sign(corpus, "__cid", text_col).persist()
+    try:
+        index.banded, index.shingles = (
+            pin(rows, eager=True) for rows in index._lsh_rows(sig, "__cid")
+        )
+    finally:
+        sig.unpersist(blocking=False)
     return index
 
 
@@ -955,11 +943,12 @@ def neardup_filter_against(
     reference index (:func:`build_neardup_index`) — dedup of new data
     against an existing corpus, the row-filter complement of
     :func:`fuzzy_join`'s pair output. All other ``docs`` columns pass
-    through. ``docs`` is signed with the index's own LSH parameters."""
+    through. ``docs`` is signed with the index's own LSH parameters and
+    probes the index's pinned band rows and shingle sets."""
     sig_d = index.sign(docs, id_col, text_col).persist()
     try:
         pairs = _lsh_pairs(
-            sig_d, id_col, index.sig, "__cid", index.num_hashes, index.bands, threshold
+            index._lsh_rows(sig_d, id_col), (index.banded, index.shingles), threshold
         )
         hit = pin(pairs.select(F.col("id_a").alias(id_col)).distinct(), eager=True)
     finally:

@@ -32,6 +32,7 @@ distinct-key cardinality.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd
@@ -57,25 +58,25 @@ def mg_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
     )
 
     # one summary per partition, counters carried across batches (map_rows does not fit)
-    def gen(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            vc = pdf[col].dropna().value_counts()
-            for item, c in vc.items():
-                counters[item] = counters.get(item, 0) + int(c)
-            if len(counters) > k:
-                # mergeable-summaries compress: subtract the (k+1)-th
-                # largest counter, drop the non-positive
-                sub = sorted(counters.values(), reverse=True)[k]
-                counters = {i: c - sub for i, c in counters.items() if c > sub}
-        if counters:
-            yield pd.DataFrame(
-                {"item": list(counters), "est": list(counters.values())}
-            )
-
     return df.select(F.col(col).cast("string").alias(col)).mapInPandas(
-        gen, schema=schema
+        functools.partial(_mg_summary, col, k), schema=schema
     )
+
+
+def _mg_summary(col: str, k: int, batches):
+    """One partition's k-counter Misra–Gries summary."""
+    counters: dict[str, int] = {}
+    for pdf in batches:
+        vc = pdf[col].dropna().value_counts()
+        for item, c in vc.items():
+            counters[item] = counters.get(item, 0) + int(c)
+        if len(counters) > k:
+            # mergeable-summaries compress: subtract the (k+1)-th
+            # largest counter, drop the non-positive
+            sub = sorted(counters.values(), reverse=True)[k]
+            counters = {i: c - sub for i, c in counters.items() if c > sub}
+    if counters:
+        yield pd.DataFrame({"item": list(counters), "est": list(counters.values())})
 
 
 def merge_mg_summaries(

@@ -34,6 +34,8 @@ training-data-pipeline extension scope, SURVEY §2.4).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -83,32 +85,34 @@ def _gram_partials(df: DataFrame, feat_col: str, label_col: str) -> list:
     )
 
     # one reduction per partition, not a per-row map (map_rows does not fit)
-    def gen(batches):
-        n, b, g, yy = 0, None, None, 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(np.stack(pdf[feat_col].to_numpy()), dtype=np.float64)
-            y = pdf[label_col].to_numpy(dtype=np.float64)
-            A = np.hstack([X, np.ones((X.shape[0], 1))])
-            if g is None:
-                m = A.shape[1]
-                b, g = np.zeros(m), np.zeros((m, m))
-            n += A.shape[0]
-            b += A.T @ y
-            g += A.T @ A
-            yy += float(y @ y)
-        if n:
-            yield pd.DataFrame(
-                {"n": [n], "b": [b.tolist()], "g": [g.ravel().tolist()], "yy": [yy]}
-            )
-
     return (
         df.select(F.col(feat_col).alias(feat_col), F.col(label_col).alias(label_col))
         .dropna()
-        .mapInPandas(gen, schema=schema)
+        .mapInPandas(functools.partial(_gram_moments, feat_col, label_col), schema=schema)
         .collect()
     )
+
+
+def _gram_moments(feat_col: str, label_col: str, batches):
+    """One partition's ``(n, Aᵀy, AᵀA, yᵀy)``."""
+    n, b, g, yy = 0, None, None, 0.0
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        X = np.asarray(np.stack(pdf[feat_col].to_numpy()), dtype=np.float64)
+        y = pdf[label_col].to_numpy(dtype=np.float64)
+        A = np.hstack([X, np.ones((X.shape[0], 1))])
+        if g is None:
+            m = A.shape[1]
+            b, g = np.zeros(m), np.zeros((m, m))
+        n += A.shape[0]
+        b += A.T @ y
+        g += A.T @ A
+        yy += float(y @ y)
+    if n:
+        yield pd.DataFrame(
+            {"n": [n], "b": [b.tolist()], "g": [g.ravel().tolist()], "yy": [yy]}
+        )
 
 
 def ridge_fit(

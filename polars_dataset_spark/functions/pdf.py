@@ -41,6 +41,7 @@ import zlib
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from polars_dataset_spark.functions.tiff import _lzw_decode
 from polars_dataset_spark.rowmap import map_rows
 
 _VERSION_RE = re.compile(rb"^%PDF-(\d+\.\d+)")
@@ -209,51 +210,6 @@ _PAGES_REF_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
 _FLATE_RE = re.compile(rb"/Filter\s*(?:/FlateDecode\b|\[\s*/FlateDecode\s*\])")
 _LZW_RE = re.compile(rb"/Filter\s*(?:/LZWDecode\b|\[\s*/LZWDecode\s*\])")
 _FILTER_RE = re.compile(rb"/Filter\b")
-
-
-def _lzw_decode(data: bytes, early_change: int = 1) -> "bytes | None":
-    """PDF LZWDecode (ISO 32000 §7.4.4.2 — the TIFF/GIF LZW variant
-    with 9->12-bit variable codes, clear code 256, EOD 257, and the
-    ``EarlyChange`` width bump one code early by default). The filter
-    classic pre-Flate generators (and TIFF-converted documents) used;
-    pure stdlib bit twiddling. Returns None on a malformed stream."""
-    out = bytearray()
-    table: "list[bytes]" = [bytes([i]) for i in range(256)] + [b"", b""]
-    width = 9
-    prev: "bytes | None" = None
-    acc = nbits = 0
-    for byte in data:
-        acc = (acc << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:  # clear table
-                table = [bytes([i]) for i in range(256)] + [b"", b""]
-                width = 9
-                prev = None
-                continue
-            if code == 257:  # EOD
-                return bytes(out[:_MAX_STREAM])
-            if prev is None:
-                if code > 255:
-                    return None
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # the KwKwK case
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                return None
-            out += entry
-            if len(out) > _MAX_STREAM:
-                return bytes(out[:_MAX_STREAM])
-            prev = entry
-            if len(table) + early_change >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out[:_MAX_STREAM])  # EOD missing: tolerate (real files do)
 
 _MAX_OBJECTS = 50_000
 _MAX_STREAM = 8 << 20  # decompressed content-stream cap per page
@@ -489,7 +445,7 @@ def _stream_bytes(obj: bytes, decrypt=None) -> "bytes | None":
     if _LZW_RE.search(head):
         em = _PRED_RE.search(head)  # predictors are legal on LZW too
         ecm = re.search(rb"/EarlyChange\s+(\d+)", head)
-        out = _lzw_decode(raw, int(ecm.group(1)) if ecm else 1)
+        out = _lzw_decode(raw, _MAX_STREAM, int(ecm.group(1)) if ecm else 1)
         if out is None:
             return None
         if em and int(em.group(1)) >= 10:

@@ -25,6 +25,8 @@ training-data-pipeline extension scope, SURVEY §2.4).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -73,23 +75,26 @@ def _partial_moments(df: DataFrame, col: str) -> list:
     )
 
     # one reduction per partition, not a per-row map (map_rows does not fit)
-    def gen(batches):
-        n = 0
-        s = o = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(np.stack(pdf[col].to_numpy()), dtype=np.float64)
-            if s is None:
-                d = X.shape[1]
-                s, o = np.zeros(d), np.zeros((d, d))
-            n += X.shape[0]
-            s += X.sum(axis=0)
-            o += X.T @ X
-        if n:
-            yield pd.DataFrame({"n": [n], "s": [s.tolist()], "o": [o.ravel().tolist()]})
-
+    gen = functools.partial(_moments, col)
     return df.select(F.col(col).alias(col)).dropna().mapInPandas(gen, schema=schema).collect()
+
+
+def _moments(col: str, batches):
+    """One partition's ``(n, Σx, ΣxxT)``."""
+    n = 0
+    s = o = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        X = np.asarray(np.stack(pdf[col].to_numpy()), dtype=np.float64)
+        if s is None:
+            d = X.shape[1]
+            s, o = np.zeros(d), np.zeros((d, d))
+        n += X.shape[0]
+        s += X.sum(axis=0)
+        o += X.T @ X
+    if n:
+        yield pd.DataFrame({"n": [n], "s": [s.tolist()], "o": [o.ravel().tolist()]})
 
 
 def embedding_covariance(

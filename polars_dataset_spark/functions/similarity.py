@@ -28,6 +28,7 @@ Two tiers:
 
 from __future__ import annotations
 
+import functools
 import itertools
 
 import numpy as np
@@ -274,15 +275,8 @@ def _train_quantizer(
     per_cell_cap = k2 * 256
 
     # batch-vectorised, not per row (map_rows does not fit): one argmin per batch
-    def assign_coarse(batches):
-        for pdf in batches:
-            m = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {"__c1": _argmin_cells(m, bc.value).astype(np.int32), "__v": pdf["__v"]}
-            )
-
     assigned = sampled.mapInPandas(
-        assign_coarse,
+        functools.partial(_assign_coarse, bc),
         schema=T.StructType(
             [
                 T.StructField("__c1", T.IntegerType()),
@@ -451,6 +445,15 @@ def ivf_topk(
 _QUADRATIC_PAIR_LIMIT = 10**10
 
 
+def _assign_coarse(bc, batches):
+    """Each sampled vector's coarse cell (``bc``: broadcast centroids)."""
+    for pdf in batches:
+        m = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+        yield pd.DataFrame(
+            {"__c1": _argmin_cells(m, bc.value).astype(np.int32), "__v": pdf["__v"]}
+        )
+
+
 def cosine_pairs_block(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -516,38 +519,15 @@ def cosine_pairs_block(
     if n == 0:
         return spark.createDataFrame([], out_schema)
 
-    def tile_scorer(tile_pdf):
-        ids = tile_pdf[id_col].to_numpy()
-        mat = np.stack(tile_pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_mat = spark.sparkContext.broadcast(mat)
-        b_norms = spark.sparkContext.broadcast(norms)
-
-        # batch-vectorised, not per row (map_rows does not fit): one matmul per batch
-        def score(batches):
-            # dot/(|a||b|), matching the per-pair formula (and the SQL
-            # oracle) more closely than pre-normalized rows would
-            cids, cmat, cnorms = b_ids.value, b_mat.value, b_norms.value
-            for pdf in batches:
-                q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                qn = np.linalg.norm(q, axis=1)
-                sims = (q @ cmat.T) / (qn[:, None] * cnorms[None, :])
-                qids = pdf[id_col].to_numpy()
-                rows_i, rows_j = np.nonzero(sims >= threshold)
-                keep = qids[rows_i] < cids[rows_j]  # dedup + drop self-pairs
-                yield pd.DataFrame(
-                    {
-                        "id_a": qids[rows_i[keep]],
-                        "id_b": cids[rows_j[keep]],
-                        "cosine": np.round(sims[rows_i[keep], rows_j[keep]], round_to),
-                    }
-                )
-
-        return score
-
     if n_tiles == 1:
-        return slim.mapInPandas(tile_scorer(slim.toPandas()), schema=out_schema)
+        tile = slim.toPandas()
+        mat = np.stack(tile[vec_col].to_numpy()).astype(np.float64)
+        bc = spark.sparkContext.broadcast(
+            (tile[id_col].to_numpy(), mat, np.linalg.norm(mat, axis=1))
+        )
+        # batch-vectorised, not per row (map_rows does not fit): one matmul per batch
+        score = functools.partial(_score_tile, bc, id_col, vec_col, threshold, round_to)
+        return slim.mapInPandas(score, schema=out_schema)
 
     # Tiled path, ONE distributed job (r13 — the previous realization
     # collected each tile to the driver SERIALLY and re-scanned the
@@ -602,6 +582,28 @@ def cosine_pairs_block(
         .cogroup(corpus_rep.groupBy("__pb", "__tile"))
         .applyInPandas(score_group, schema=out_schema)
     )
+
+
+def _score_tile(bc, id_col, vec_col, threshold, round_to, batches):
+    """Pairs of each batch against one broadcast tile ``bc = (ids,
+    matrix, norms)`` at cosine >= ``threshold``."""
+    # dot/(|a||b|), matching the per-pair formula (and the SQL oracle)
+    # more closely than pre-normalized rows would
+    cids, cmat, cnorms = bc.value
+    for pdf in batches:
+        q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        qn = np.linalg.norm(q, axis=1)
+        sims = (q @ cmat.T) / (qn[:, None] * cnorms[None, :])
+        qids = pdf[id_col].to_numpy()
+        rows_i, rows_j = np.nonzero(sims >= threshold)
+        keep = qids[rows_i] < cids[rows_j]  # dedup + drop self-pairs
+        yield pd.DataFrame(
+            {
+                "id_a": qids[rows_i[keep]],
+                "id_b": cids[rows_j[keep]],
+                "cosine": np.round(sims[rows_i[keep], rows_j[keep]], round_to),
+            }
+        )
 
 
 def _dot(a: str, b: str):

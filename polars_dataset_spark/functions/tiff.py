@@ -7,8 +7,9 @@ organization (``RowsPerStrip``), 8-bit grayscale (both
 ``PhotometricInterpretation`` polarities) and 8-bit chunky RGB,
 ``Compression`` 1 (none), 32773 (PackBits) and 5 (TIFF-LZW — MSB-first
 bit order, 9→12-bit codes with the spec's EARLY code-width change: the
-width bumps when the next code to assign reaches ``2^w − 1``, one code
-earlier than GIF's variant), plus ``Predictor`` 2 (per-channel
+width bumps when the decoder's next free code reaches ``2^w − 1``, one
+code earlier than GIF's variant; the decoder is shared with PDF's
+``LZWDecode``), plus ``Predictor`` 2 (per-channel
 horizontal differencing, applied after decompression).
 
 Returns float32 grayscale ``(H, W)`` in [0, 1] (RGB → channel mean;
@@ -63,62 +64,53 @@ def _read_ifd_values(buf: bytes, bo: str, typ: int, count: int, field: bytes):
     return None
 
 
-def _lzw_decode(data: bytes, max_out: int) -> "bytearray | None":
-    """TIFF-LZW (spec §13): MSB-first bits, Clear=256, EOI=257, first
-    dictionary code 258, width 9→12 with the EARLY change (encoder at
-    next-code 2^w − 1; decoder one entry earlier again — see below)."""
+def _lzw_decode(data: bytes, max_out: int = 8 << 20, early_change: int = 1) -> "bytes | None":
+    """TIFF-LZW (spec §13), which PDF's ``LZWDecode`` (ISO 32000
+    §7.4.4.2) reuses: MSB-first bits, Clear=256, EOI=257, first
+    dictionary code 258, width 9→12, growing when the next free code
+    reaches ``2^w − early_change`` (1 for TIFF and PDF's default
+    ``EarlyChange``, as libtiff and pdf.js decode). Stops once the output
+    passes ``max_out`` (default: PDF's per-stream cap) and returns it as
+    is: PDF truncates it, TIFF rejects a strip that runs long. A missing
+    EOI is tolerated (real files omit it); a malformed code returns None."""
     out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, width, nxt
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        nxt = 258
-
+    table: "list[bytes]" = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
-    nxt = 258
-    reset()
-    bitpos = 0
-    nbits = len(data) * 8
-    prev: bytes | None = None
-    while bitpos + width <= nbits:
-        byte0 = bitpos >> 3
-        chunk = data[byte0 : byte0 + 3].ljust(3, b"\x00")
-        acc = (chunk[0] << 16) | (chunk[1] << 8) | chunk[2]
-        code = (acc >> (24 - (bitpos & 7) - width)) & ((1 << width) - 1)
-        bitpos += width
-        if code == 257:  # EOI
-            break
-        if code == 256:  # Clear
-            reset()
-            prev = None
-            continue
-        if prev is None:
-            if code >= 256:
+    prev: "bytes | None" = None
+    acc = nbits = 0
+    for byte in data:
+        acc = (acc << 8) | byte
+        nbits += 8
+        while nbits >= width:
+            nbits -= width
+            code = acc >> nbits
+            acc &= (1 << nbits) - 1  # keep only the unread bits: linear time
+            if code == 256:  # Clear
+                table = [bytes([i]) for i in range(256)] + [b"", b""]
+                width = 9
+                prev = None
+                continue
+            if code == 257:  # EOI
+                return bytes(out)
+            if prev is None:
+                if code > 255:
+                    return None
+                entry = table[code]
+            elif code < len(table):
+                entry = table[code]
+                table.append(prev + entry[:1])
+            elif code == len(table):  # the KwKwK case
+                entry = prev + prev[:1]
+                table.append(entry)
+            else:
                 return None
-            entry = table[code]
-        elif code < nxt:
-            entry = table[code]
-            table.append(prev + entry[:1])
-            nxt += 1
-        elif code == nxt:
-            entry = prev + prev[:1]
-            table.append(entry)
-            nxt += 1
-        else:
-            return None
-        out += entry
-        if len(out) > max_out:
-            return None
-        prev = entry
-        # the DECODER's table lags the encoder's by one entry (no add on
-        # the first code after Clear), so it must switch width one entry
-        # earlier still: at 2^w − 2, matching the spec's encoder switch
-        # at 2^w − 1 (libtiff's maxcode = (1<<n) - 2 discipline)
-        if nxt >= (1 << width) - 2 and width < 12:
-            width += 1
-    return out
+            out += entry
+            if len(out) > max_out:
+                return bytes(out)
+            prev = entry
+            if len(table) + early_change >= (1 << width) and width < 12:
+                width += 1
+    return bytes(out)
 
 
 def _packbits_decode(data: bytes, max_out: int) -> "bytearray | None":
@@ -209,6 +201,8 @@ def decode_tiff_gray(blob: bytes) -> "np.ndarray | None":
                 strip = _packbits_decode(raw, expect)
             elif compression == 5:
                 strip = _lzw_decode(raw, expect)
+                if strip is not None and len(strip) > expect:
+                    return None  # a strip that runs long is corrupt
             else:
                 return None
             if strip is None or len(strip) < expect:
@@ -231,16 +225,23 @@ def decode_tiff_gray(blob: bytes) -> "np.ndarray | None":
 # ---------------------------------------------------------------- encoder
 
 def _lzw_encode(data: bytes) -> bytes:
-    """Real dictionary-building TIFF-LZW encoder with the same early
-    code-width change as the decoder; Clear is re-emitted before the
-    table would exceed 12 bits."""
-    out_bits: list[tuple[int, int]] = []  # (code, width)
+    """Real dictionary-building TIFF-LZW encoder, libtiff's discipline:
+    the width grows when the encoder's next free code reaches ``2^w``
+    (the decoder's table lags one entry, so it widens at ``2^w − 1``),
+    and Clear is re-emitted when the next free code reaches 4094."""
+    out = bytearray()
+    acc = nacc = 0
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     width = 9
     nxt = 258
 
-    def emit(code: int) -> None:
-        out_bits.append((code, width))
+    def emit(code: int) -> None:  # MSB-first packing
+        nonlocal acc, nacc
+        acc, nacc = (acc << width) | code, nacc + width
+        while nacc >= 8:
+            nacc -= 8
+            out.append((acc >> nacc) & 0xFF)
+        acc &= (1 << nacc) - 1
 
     emit(256)  # leading Clear per spec
     omega = b""
@@ -252,36 +253,25 @@ def _lzw_encode(data: bytes) -> bytes:
         emit(table[omega])
         table[cand] = nxt
         nxt += 1
-        if nxt == (1 << width) - 1:  # EARLY change, mirror of the decoder
-            if width < 12:
-                width += 1
-            else:
-                emit(256)  # table full: reset
-                table = {bytes([i]): i for i in range(256)}
-                width = 9
-                nxt = 258
+        if nxt == (1 << width) and width < 12:
+            width += 1
+        elif nxt == 4094:  # table full: reset
+            emit(256)
+            table = {bytes([i]): i for i in range(256)}
+            width = 9
+            nxt = 258
         omega = bytes([b])
     if omega:
         emit(table[omega])
-        # the DECODER adds a phantom table entry for this final code (it
-        # can't know no more data follows), so when the table sits exactly
-        # at a 2^w−2 boundary it widens before reading EOI; mirror the
-        # phantom add + width check here (libtiff bumps free_ent before
-        # EOI for precisely this reason) or EOI is emitted one bit short
+        # the DECODER adds a table entry for this final code too (it
+        # can't know no more data follows), so when that entry reaches a
+        # 2^w − 1 boundary it widens before reading EOI; mirror the add
+        # and the width check here (libtiff bumps free_ent before EOI for
+        # precisely this reason) or EOI is emitted one bit short
         nxt += 1
-        if nxt >= (1 << width) - 1 and width < 12:
+        if nxt == (1 << width) and width < 12:
             width += 1
     emit(257)  # EOI
-    # MSB-first packing
-    acc = 0
-    nacc = 0
-    out = bytearray()
-    for code, w in out_bits:
-        acc = (acc << w) | code
-        nacc += w
-        while nacc >= 8:
-            out.append((acc >> (nacc - 8)) & 0xFF)
-            nacc -= 8
     if nacc:
         out.append((acc << (8 - nacc)) & 0xFF)
     return bytes(out)

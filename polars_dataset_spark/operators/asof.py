@@ -26,6 +26,9 @@ ungrouped as-of; prefer passing ``by`` at scale.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -224,7 +227,6 @@ def _join_asof_broadcast(
 ):
     """Broadcast binary-search as-of join (see :func:`join_asof`,
     ``method="broadcast"``)."""
-    import numpy as np
     from pyspark.sql import types as T
 
     was_dataset = isinstance(left, Dataset)
@@ -256,7 +258,6 @@ def _join_asof_broadcast(
         groups[()] = (rp["__k"].to_numpy(np.float64), {c: rp[c].to_numpy() for c in payload})
     b_groups = spark.sparkContext.broadcast(groups)
 
-    lcols = ldf.columns
     out_fields = list(ldf.schema.fields) + [
         T.StructField(renames[c], rdf.schema[c].dataType, True) for c in payload
     ]
@@ -268,56 +269,61 @@ def _join_asof_broadcast(
 
     keyed = ldf.withColumn("__k", _numeric_key(ldf, on))
 
-    def pick(keys, kq_rows):
-        """Matched right-index per query key + validity mask, per strategy
-        (nearest = closer of the backward/forward candidates, ties backward)."""
-        if strategy == "backward":
-            il = np.searchsorted(keys, kq_rows, side="right") - 1
-            valid = il >= 0
-        elif strategy == "forward":
-            il = np.searchsorted(keys, kq_rows, side="left")
-            valid = il < keys.size
-        else:
-            ib = np.searchsorted(keys, kq_rows, side="right") - 1
-            ifw = np.searchsorted(keys, kq_rows, side="left")
-            vb, vf = ib >= 0, ifw < keys.size
-            db = np.where(vb, np.abs(kq_rows - keys[np.clip(ib, 0, keys.size - 1)]), np.inf)
-            dfw = np.where(vf, np.abs(keys[np.clip(ifw, 0, keys.size - 1)] - kq_rows), np.inf)
-            il = np.where(db <= dfw, ib, ifw)
-            valid = vb | vf
-        if tolerance is not None:
-            matched = keys[np.clip(il, 0, keys.size - 1)]
-            valid = valid & (np.abs(kq_rows - matched) <= tolerance)
-        return np.clip(il, 0, keys.size - 1), valid
-
     # batch-vectorised searchsorted per key group, not per row (map_rows does not fit)
-    def lookup(batches):
-        grp = b_groups.value
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            out = pdf.copy()
-            kq = pdf["__k"].to_numpy(np.float64)
-            n = len(pdf)
-            for c in payload:
-                out[renames[c]] = np.full(n, None, dtype=object)
-            row_groups = (
-                pdf.groupby(by, sort=False).indices.items()
-                if by
-                else [((), np.arange(n))]
-            )
-            for key_vals, rows_pos in row_groups:
-                k = key_vals if isinstance(key_vals, tuple) else (key_vals,)
-                if k not in grp or grp[k][0].size == 0:
-                    continue
-                keys, pay = grp[k]
-                il, valid = pick(keys, kq[rows_pos])
-                for c in payload:
-                    col = out[renames[c]].to_numpy()
-                    col[rows_pos[valid]] = pay[c][il[valid]]
-                    out[renames[c]] = col
-            yield out.drop(columns=["__k"])
-
+    lookup = functools.partial(
+        _asof_lookup, b_groups, by, payload, renames, strategy, tolerance
+    )
     result = keyed.mapInPandas(lookup, schema=out_schema)
     if was_dataset:
         return left._rewrap(result)
     return result
+
+
+def _asof_pick(keys, kq_rows, strategy, tolerance):
+    """Matched right-index per query key + validity mask, per strategy
+    (nearest = closer of the backward/forward candidates, ties backward)."""
+    if strategy == "backward":
+        il = np.searchsorted(keys, kq_rows, side="right") - 1
+        valid = il >= 0
+    elif strategy == "forward":
+        il = np.searchsorted(keys, kq_rows, side="left")
+        valid = il < keys.size
+    else:
+        ib = np.searchsorted(keys, kq_rows, side="right") - 1
+        ifw = np.searchsorted(keys, kq_rows, side="left")
+        vb, vf = ib >= 0, ifw < keys.size
+        db = np.where(vb, np.abs(kq_rows - keys[np.clip(ib, 0, keys.size - 1)]), np.inf)
+        dfw = np.where(vf, np.abs(keys[np.clip(ifw, 0, keys.size - 1)] - kq_rows), np.inf)
+        il = np.where(db <= dfw, ib, ifw)
+        valid = vb | vf
+    if tolerance is not None:
+        matched = keys[np.clip(il, 0, keys.size - 1)]
+        valid = valid & (np.abs(kq_rows - matched) <= tolerance)
+    return np.clip(il, 0, keys.size - 1), valid
+
+
+def _asof_lookup(b_groups, by, payload, renames, strategy, tolerance, batches):
+    """Left batches with the matched right payload attached, per key group
+    of each batch."""
+    grp = b_groups.value
+    for pdf in batches:
+        pdf = pdf.reset_index(drop=True)
+        out = pdf.copy()
+        kq = pdf["__k"].to_numpy(np.float64)
+        n = len(pdf)
+        for c in payload:
+            out[renames[c]] = np.full(n, None, dtype=object)
+        row_groups = (
+            pdf.groupby(by, sort=False).indices.items() if by else [((), np.arange(n))]
+        )
+        for key_vals, rows_pos in row_groups:
+            k = key_vals if isinstance(key_vals, tuple) else (key_vals,)
+            if k not in grp or grp[k][0].size == 0:
+                continue
+            keys, pay = grp[k]
+            il, valid = _asof_pick(keys, kq[rows_pos], strategy, tolerance)
+            for c in payload:
+                col = out[renames[c]].to_numpy()
+                col[rows_pos[valid]] = pay[c][il[valid]]
+                out[renames[c]] = col
+        yield out.drop(columns=["__k"])

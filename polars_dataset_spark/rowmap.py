@@ -10,7 +10,8 @@ alternating reps: 0.974 s for ``mapInArrow``, 0.956 s for ``mapInPandas``).
 The batch runner is this module's :func:`_run` bound with
 ``functools.partial``, so cloudpickle sends it by reference: every Python
 worker that runs a row kernel imports the package (and with it
-``worker_zipimport``).
+``worker_zipimport``). The few batch loops this helper does not fit bind
+a module function the same way.
 """
 
 from __future__ import annotations

@@ -36,6 +36,14 @@ def _host_driver_mem() -> str:
 
 def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
+    spark = _builder(app_name, shuffle_partitions).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    _share_package_path(spark)
+    return spark
+
+
+def _builder(app_name: str, shuffle_partitions: int | None = None) -> "SparkSession.Builder":
+    """:func:`get_spark`'s builder, for a caller adding static confs."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else _host_cpus()
@@ -85,10 +93,7 @@ def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | 
     alloc = os.path.join(_PACKAGE_PARENT, "conf", "fairscheduler.xml")
     if os.path.exists(alloc):  # declared pools: no per-pool builder warnings
         builder = builder.config("spark.scheduler.allocation.file", alloc)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    _share_package_path(spark)
-    return spark
+    return builder
 
 
 def _share_package_path(spark: SparkSession) -> None:
@@ -119,9 +124,9 @@ def pin(df, eager: bool = False):
       the CacheManager holds until ``unpersist``/``clearCache``.
     - An **intermediate** that a function reads twice in one call stays
       a ``persist``; its ``unpersist`` goes in a ``finally`` block.
-    - **Index objects** (``NeardupIndex``, ``BandedIndex``) keep an
-      explicit ``unpersist``; a pinned index releases through
-      :func:`unpin`.
+    - **Index objects** (``NeardupIndex``, ``BandedIndex``) pin what
+      they build and release it through :func:`unpin` in their
+      ``unpersist``.
 
     Default: ``localCheckpoint`` — blocks live on executors (spilling
     to disk), which is fast but NOT fault-tolerant: losing an executor

@@ -417,8 +417,9 @@ def stream_neardup_filter(
     Per-batch cost: signatures for the batch only, one bucket equi-join
     against the index (broadcast-sized batch side), exact verify on
     candidates. Each batch is signed with the index's own LSH
-    parameters. State lives in the (static) index, not the stream —
-    nothing grows with stream lifetime."""
+    parameters. The text index stays static: batches are probed against
+    it but never added to it (the media filter, by contrast, appends its
+    survivors to its index), so nothing grows with stream lifetime."""
     from polars_dataset_spark.functions.dedup import neardup_filter_against
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -5,7 +5,8 @@
   would stay in the CacheManager for the whole session.
 - An intermediate read twice in one call is persisted and released in a
   ``finally`` block.
-- Index objects release explicitly; a pinned index through ``unpin``.
+- Index objects (``NeardupIndex``, ``BandedIndex``) pin what they build
+  and release it through ``unpin`` in their ``unpersist``.
 
 The guardrail reads the package's source; the audit runs every dedup
 entry point in the shared test session, drops its result and checks
@@ -20,6 +21,7 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 PKG = Path(__file__).resolve().parents[1] / "polars_dataset_spark"
 
@@ -31,10 +33,9 @@ TWICE_READ = {
     ("functions.dedup", "banded_neardup_pairs"),
     ("functions.dedup", "fuzzy_join"),
     ("functions.dedup", "neardup_filter_against"),
+    ("functions.dedup", "build_neardup_index"),
     ("streaming.ops", "_stream_media_filter.apply_batch"),
 }
-# index builders: ``NeardupIndex.unpersist`` releases what they persist
-INDEX_BUILDERS = {("functions.dedup", "build_neardup_index")}
 
 
 def _scan_package():
@@ -79,9 +80,9 @@ def _scan_package():
 def test_persist_only_at_allowlisted_sites():
     persists, released, names = _scan_package()
     sites = set(persists)
-    stray = sites - TWICE_READ - INDEX_BUILDERS
+    stray = sites - TWICE_READ
     assert not stray, f"persist outside the allowlist (pin results instead): {sorted(stray)}"
-    stale = (TWICE_READ | INDEX_BUILDERS) - sites
+    stale = TWICE_READ - sites
     assert not stale, f"allowlisted sites that no longer persist: {sorted(stale)}"
     unreleased = TWICE_READ - released
     assert not unreleased, f"intermediates without a finally-unpersist: {sorted(unreleased)}"
@@ -221,3 +222,67 @@ def test_banded_index_results_survive_append_and_unpersist(spark):
     append_to_image_index(idx, idx.hash(kept))
     idx.unpersist()
     assert [r.media_id for r in kept.collect()] == [2]
+
+
+def test_neardup_index_unpersist_releases_its_pins(spark):
+    from polars_dataset_spark.functions import build_neardup_index, neardup_filter_against
+
+    _release_all(spark)
+    baseline = _persistent(spark)
+    index = build_neardup_index(_docs(spark).filter("doc_id < 3"))
+    # band rows and shingle sets; the signed corpus is released
+    assert _persistent(spark) == baseline + 2
+    assert _cache_empty(spark)
+    out = neardup_filter_against(_docs(spark), index, threshold=0.5)
+    assert sorted(r.doc_id for r in out.collect()) == [3, 4, 5]
+    index.unpersist()
+    assert _persistent(spark) == baseline + 1  # the probe's own pinned hits
+    del out
+    assert _settled_count(spark, baseline) == baseline
+
+
+def _plan_nodes(spark, node, seen_caches):
+    """Every node under ``node``; a cached relation's plan is walked the
+    first time that cache is met, like Spark computes it once."""
+    yield node
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    if node.nodeName() == "InMemoryRelation":
+        key = spark._jvm.System.identityHashCode(node.cacheBuilder())
+        if key not in seen_caches:
+            seen_caches.add(key)
+            kids.append(node.cacheBuilder().cachedPlan())
+    for kid in kids:
+        yield from _plan_nodes(spark, kid, seen_caches)
+
+
+def test_neardup_probe_signs_and_bands_only_its_batch(spark, monkeypatch):
+    """A probe reads the index's pins, never the corpus: with every cache
+    cleared, its materialized plan holds one sign pass and one band
+    explode, and both read only the batch."""
+    from polars_dataset_spark.functions import build_neardup_index, dedup
+
+    index = build_neardup_index(_docs(spark).filter("doc_id < 3"))
+    spark.catalog.clearCache()
+    # the batch is a Range, so its leaves differ from the corpus's
+    texts = F.array(*[F.lit(t) for t in _TEXTS])
+    batch = spark.range(len(_TEXTS)).select(
+        F.col("id").alias("doc_id"), F.element_at(texts, F.col("id").cast("int") + 1).alias("text")
+    )
+    pinned = []
+    real_pin = dedup.pin
+    monkeypatch.setattr(dedup, "pin", lambda df, **kw: pinned.append(df) or real_pin(df, **kw))
+    out = dedup.neardup_filter_against(batch, index, threshold=0.5)
+    assert sorted(r.doc_id for r in out.collect()) == [3, 4, 5]
+    index.unpersist()
+    (probe,) = pinned
+    plan = probe._jdf.queryExecution().optimizedPlan()
+    nodes = list(_plan_nodes(spark, plan, set()))
+    work = [n for n in nodes if n.nodeName() in ("ArrowEvalPython", "Generate")]
+    assert sorted(n.nodeName() for n in work) == ["ArrowEvalPython", "Generate"]
+    for n in work:
+        leaves = [
+            m.nodeName()
+            for m in _plan_nodes(spark, n, set())
+            if m.children().size() == 0 and m.nodeName() != "InMemoryRelation"
+        ]
+        assert leaves and set(leaves) == {"Range"}, (n.nodeName(), leaves)

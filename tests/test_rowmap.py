@@ -1,7 +1,8 @@
 """``rowmap.map_rows``: the one per-row Python map.
 
-The guardrail reads the package's source: every ``mapInPandas`` call is
-``map_rows``' own or an allowlisted batch loop that is not a per-row map.
+The guardrails read the package's source: every ``mapInPandas`` call is
+``map_rows``' own or an allowlisted batch loop that is not a per-row map,
+and every runner is a module function bound with ``functools.partial``.
 The other tests pin the helper's output frame and that its workers import
 the package.
 """
@@ -61,6 +62,44 @@ def test_map_in_pandas_only_through_map_rows():
     assert not stray, f"hand-rolled mapInPandas (use rowmap.map_rows): {sorted(stray)}"
     stale = set(HAND_ROLLED) - sites
     assert not stale, f"allowlisted sites that no longer call mapInPandas: {sorted(stale)}"
+
+
+def test_map_in_pandas_runners_go_by_reference():
+    """Every ``mapInPandas`` runner is a ``functools.partial`` of a
+    module-level function: cloudpickle sends that by reference, so the
+    workers import the package (and ``worker_zipimport``); a nested
+    closure goes by value and they never do."""
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        top = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            bound = {
+                t.id: a.value
+                for a in ast.walk(fn)
+                if isinstance(a, ast.Assign)
+                for t in a.targets
+                if isinstance(t, ast.Name)
+            }
+            for call in ast.walk(fn):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "mapInPandas"
+                ):
+                    continue
+                run = call.args[0]
+                run = bound.get(run.id, run) if isinstance(run, ast.Name) else run
+                if not (
+                    isinstance(run, ast.Call)
+                    and ast.unparse(run.func) == "functools.partial"
+                    and isinstance(run.args[0], ast.Name)
+                    and run.args[0].id in top
+                ):
+                    bad.append(f"{path.relative_to(PKG)}:{call.lineno}")
+    assert not bad, f"mapInPandas runners pickled by value: {sorted(set(bad))}"
 
 
 def test_map_rows_output_frame(spark):

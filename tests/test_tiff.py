@@ -61,8 +61,9 @@ def test_lzw_width_discipline_hand_packed():
 
 def test_lzw_roundtrip_through_all_widths_and_reset():
     # 60k random bytes force 9->10->11->12-bit codes AND the table-full
-    # Clear/reset path; the decoder's early width change (2^w - 2, one
-    # entry ahead of the encoder's 2^w - 1) is load-bearing here
+    # Clear/reset path; the decoder's early width change (its next free
+    # code at 2^w - 1, one entry behind the encoder's 2^w) is
+    # load-bearing here
     rng = np.random.RandomState(0)
     data = bytes(rng.randint(0, 256, size=60000, dtype=np.uint8).tolist())
     assert bytes(_lzw_decode(_lzw_encode(data), len(data))) == data
@@ -106,12 +107,11 @@ def test_decode_media_tiff_end_to_end(spark):
 
 
 def test_lzw_flush_at_width_boundary():
-    # regression: a stream whose table sits exactly at 2^w - 2 when the
-    # final code flushes made the decoder's phantom add widen BEFORE
-    # reading EOI while the encoder emitted it at the old width — the
-    # whole strip decoded to None. bytes(range(253)) lands the 9->10
-    # boundary at flush; the exhaustive 1..1200 sweep covers every flush
-    # position around the 510/1022 boundaries.
+    # regression: a stream whose table reaches 2^w - 1 with the final
+    # code made the decoder's add widen BEFORE reading EOI while the
+    # encoder emitted it at the old width — the whole strip decoded to
+    # None. The exhaustive 1..1200 sweep covers every flush position
+    # around the 511/1023 boundaries.
     assert bytes(_lzw_decode(_lzw_encode(bytes(range(253))), 253)) == bytes(range(253))
     import numpy as np
 
@@ -121,3 +121,22 @@ def test_lzw_flush_at_width_boundary():
     for n in range(1, 1200):
         d = bytes(i % 256 for i in range(n))
         assert bytes(_lzw_decode(_lzw_encode(d), n)) == d, n
+
+
+def test_lzw_reads_the_pdf_spec_encoder(monkeypatch):
+    # TIFF-LZW is PDF LZWDecode with EarlyChange=1: strips written by an
+    # independent spec encoder (the PDF tests' own) decode, across the
+    # 9->10 width change that 300+ random bytes reach
+    from polars_dataset_spark.functions import tiff
+    from test_pdf_lzw import lzw_encode
+
+    rng = np.random.RandomState(1)
+    for n in (300, 700):
+        data = bytes(rng.randint(0, 256, size=n, dtype=np.uint8).tolist())
+        assert bytes(_lzw_decode(lzw_encode(data, 1), n)) == data, n
+        # short of the table-full reset, both encoders write the same bytes
+        assert _lzw_encode(data) == lzw_encode(data, 1), n
+    monkeypatch.setattr(tiff, "_lzw_encode", lambda d: lzw_encode(d, 1))
+    img = rng.randint(0, 256, size=(24, 25)) / 255.0
+    back = decode_tiff_gray(encode_tiff_gray(img, "lzw", rows_per_strip=12))
+    assert back is not None and np.allclose(back, np.round(img * 255) / 255, atol=1e-6)

@@ -43,30 +43,19 @@ def main() -> int:
     shutil.rmtree(evdir, ignore_errors=True)
     os.makedirs(evdir, exist_ok=True)
 
-    # session with event logging (build BEFORE importing suite's get_spark
-    # defaults so the conf takes)
-    from pyspark.sql import SparkSession
+    # the engine session (host-sized master, shuffle partitions and driver
+    # heap) plus an event log, a static conf set before it starts
+    from polars_dataset_spark import suite
+    from polars_dataset_spark.session import _builder, apply_session_defaults
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("runtime-profile")
+    spark = apply_session_defaults(
+        _builder("runtime-profile")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", evdir)
         .config("spark.eventLog.compress", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.python.worker.reuse", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-
-    from polars_dataset_spark import suite
 
     unknown = [n for n in args if n not in suite.QUERIES]
     if unknown:
