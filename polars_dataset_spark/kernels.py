@@ -64,10 +64,6 @@ def _spline_second_derivatives(x: np.ndarray, y: np.ndarray, bc_type: str) -> np
     delta = np.diff(y) / h
     if bc_type == "natural" or n == 3:
         # n==3 not-a-knot degenerates (both conditions coincide) → natural
-        if n == 3 and bc_type != "natural":
-            # quadratic through 3 points == spline with linear M
-            # fall through to natural which is close; keep simple & stable
-            pass
         # reduced system over interior unknowns M1..M_{n-2} with M0=M_{n-1}=0:
         # off-diagonals couple interior neighbours → h[1:-1] on both sides
         sub = h[1:-1]

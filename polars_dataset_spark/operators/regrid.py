@@ -12,13 +12,14 @@ Reference parity (``/root/reference/polars_dataset.py:212-238`` plus helper
 - groups are processed independently (reference ``map_groups``
   ``:225-229``).
 
-Spark-first realization: ``groupBy(*id_vars).applyInPandas`` — groups are
-hash-shuffled to executors once, handed to Python workers as Arrow batches,
-the numpy kernel (:mod:`polars_dataset_spark.kernels`) runs per group, and
-Arrow carries results back. The grid is a small numpy array captured in the
-UDF closure (broadcast with the task, never a join). Output schema is
-declared up front from the input schema: id_vars keep their types, index
-and value columns become double.
+Spark-first realization: :func:`~polars_dataset_spark.operators.structs.map_traces`,
+the one per-trace grouped map (``groupBy(*id_vars).applyInPandas``) — groups
+are hash-shuffled to executors once, handed to Python workers as Arrow
+batches, the numpy kernel (:mod:`polars_dataset_spark.kernels`) runs per
+group, and Arrow carries results back. The grid is a small numpy array
+captured in the kernel's closure (shipped with the task, never a join).
+Output schema is declared up front from the input schema: id_vars keep
+their types, index and value columns become double.
 
 Scale: one shuffle keyed by id_vars; skewed trace sizes are bounded by
 physics (one sweep), so groups are small and uniform — the ideal
@@ -40,12 +41,7 @@ from pyspark.sql import types as T
 
 from polars_dataset_spark.core import Dataset
 from polars_dataset_spark.kernels import interp_trace
-from polars_dataset_spark.operators.structs import (
-    rebuild_structs,
-    restore_columns,
-    sanitize_columns,
-    unnest_structs,
-)
+from polars_dataset_spark.operators.structs import map_traces
 
 __all__ = ["regrid", "interpolate_frame"]
 
@@ -80,48 +76,7 @@ def regrid(
     the per-trace parallelism contract and the ``partition_hint()``
     recipe for chains of per-trace ops).
     """
-    grid, grid_name = _grid_array(x)
-    name = name or grid_name or ds.index
-
-    if name in ds.id_vars:
-        # role swap: interpolate across the parameter dimension
-        new_ids = [c if c != name else ds.index for c in ds.id_vars]
-        ds = ds.set(index=name, id_vars=new_ids)
-    elif name != ds.index:
-        raise ValueError(f"grid name {name!r} is neither the index nor an id_var")
-
-    flat_df, schema_map = unnest_structs(ds.df)
-    flat_df, dot_map = sanitize_columns(flat_df)  # applyInPandas can't take dotted names
-    index = ds.index
-    id_vars = list(ds.id_vars)
-    vv = list(value_vars) if value_vars else [c for c in flat_df.columns if c not in id_vars and c != index]
-
-    in_schema = flat_df.schema
-    out_fields = [in_schema[c] for c in id_vars]
-    out_fields.append(T.StructField(index, T.DoubleType()))
-    out_fields.extend(T.StructField(c, T.DoubleType()) for c in vv)
-    out_schema = T.StructType(out_fields)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        xs = pdf[index].to_numpy(dtype=np.float64)
-        out = {iv: np.repeat(pdf[iv].iloc[0], grid.size) for iv in id_vars}
-        out[index] = grid
-        for c in vv:
-            out[c] = interp_trace(xs, pdf[c].to_numpy(dtype=np.float64), grid, method=method, bc_type=bc_type)
-        return pd.DataFrame(out)
-
-    if id_vars:
-        result = flat_df.groupBy(*id_vars).applyInPandas(fn, schema=out_schema)
-    else:
-        # single global trace: applyInPandas over a constant key
-        result = (
-            flat_df.withColumn("_g", flat_df[index] * 0)
-            .groupBy("_g")
-            .applyInPandas(lambda p: fn(p.drop(columns=["_g"])), schema=out_schema)
-        )
-    result = rebuild_structs(restore_columns(result, dot_map), schema_map)
-    out = Dataset(result, index=index, id_vars=id_vars)
-    return out.sort_columns()
+    return _interpolate(ds, x, name, method, bc_type, value_vars)
 
 
 def interpolate_frame(
@@ -131,38 +86,37 @@ def interpolate_frame(
 ) -> Dataset:
     """Monotone (PCHIP) per-trace interpolation — historical reference op
     ``interpolate_frame`` (``/root/reference/build/lib/polars_dataset.py:
-    304-328``). Single-point groups pass through unchanged (reference
-    ``:316-317``), so the output grid is only guaranteed for groups with
-    ≥2 samples."""
+    304-328``). ``name`` selects the coordinate as in :func:`regrid`.
+    Single-point groups pass through unchanged (reference ``:316-317``),
+    so the output grid is only guaranteed for groups with ≥2 samples."""
+    return _interpolate(ds, x, name, "pchip", keep_single=True)
+
+
+def _interpolate(ds, x, name, method, bc_type="not-a-knot", value_vars=None, keep_single=False):
+    """Regrid and interpolate_frame: the coordinate, then one kernel per
+    trace; ``keep_single`` passes one-sample traces through."""
     grid, grid_name = _grid_array(x)
     name = name or grid_name or ds.index
-    index = ds.index
-    id_vars = list(ds.id_vars)
-    flat_df, schema_map = unnest_structs(ds.df)
-    flat_df, dot_map = sanitize_columns(flat_df)
-    vv = [c for c in flat_df.columns if c not in id_vars and c != index]
+    if name in ds.id_vars:
+        # role swap: interpolate across the parameter dimension
+        new_ids = [c if c != name else ds.index for c in ds.id_vars]
+        ds = ds.set(index=name, id_vars=new_ids)
+    elif name != ds.index:
+        raise ValueError(f"grid name {name!r} is neither the index nor an id_var")
+    index, vv = ds.index, list(value_vars or ())
 
-    in_schema = flat_df.schema
-    out_fields = [in_schema[c] for c in id_vars]
-    out_fields.append(T.StructField(index, T.DoubleType()))
-    out_fields.extend(T.StructField(c, T.DoubleType()) for c in vv)
-    out_schema = T.StructType(out_fields)
+    def fields(trace_fields):
+        names = vv or [f.name for f in trace_fields[1:]]
+        return [T.StructField(c, T.DoubleType()) for c in [index, *names]]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            out = {iv: pdf[iv].to_numpy() for iv in id_vars}
-            out[index] = pdf[index].to_numpy(dtype=np.float64)
-            for c in vv:
-                out[c] = pdf[c].to_numpy(dtype=np.float64)
-            return pd.DataFrame(out)
-        xs = pdf[index].to_numpy(dtype=np.float64)
-        out = {iv: np.repeat(pdf[iv].iloc[0], grid.size) for iv in id_vars}
-        out[index] = grid
-        for c in vv:
-            out[c] = interp_trace(xs, pdf[c].to_numpy(dtype=np.float64), grid, method="pchip")
-        return pd.DataFrame(out)
+    def kernel(trace: pd.DataFrame):
+        if keep_single and len(trace) < 2:
+            return trace.astype(np.float64)
+        xs = trace[index].to_numpy(dtype=np.float64)
+        out = {index: grid}
+        for c in vv or trace.columns[1:]:
+            ys = trace[c].to_numpy(dtype=np.float64)
+            out[c] = interp_trace(xs, ys, grid, method=method, bc_type=bc_type)
+        return out
 
-    grouped = flat_df.groupBy(*id_vars) if id_vars else flat_df.groupBy()
-    result = grouped.applyInPandas(fn, schema=out_schema)
-    result = rebuild_structs(restore_columns(result, dot_map), schema_map)
-    return Dataset(result, index=index, id_vars=id_vars).sort_columns()
+    return map_traces(ds, kernel, fields)

@@ -1,4 +1,5 @@
-"""Struct flatten / rebuild round-trip.
+"""Struct flatten / rebuild round-trip, and :func:`map_traces`, the one
+per-trace grouped map that every trace-wise kernel runs through.
 
 Reference parity: ``_unnest_structs`` flattens every struct column to
 prefixed scalars ``"{name}.{field}"`` recording a schema map, and
@@ -10,32 +11,61 @@ plan level.
 
 from __future__ import annotations
 
+import functools
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["unnest_structs", "rebuild_structs", "sanitize_columns", "restore_columns"]
+__all__ = ["unnest_structs", "rebuild_structs", "map_traces"]
 
 # applyInPandas resolves its input with df[col], which parses "." as struct
-# access — flattened "{struct}.{field}" names must be made dot-free around
-# any grouped-map operator and restored afterwards.
+# access: map_traces hands it dot-free names and its runner restores them.
 _DOT = "__dot__"
 
 
-def sanitize_columns(df: DataFrame) -> tuple[DataFrame, dict[str, str]]:
-    """Replace '.' in column names with a safe token; returns (df, mapping
-    safe→original)."""
-    mapping = {c.replace(".", _DOT): c for c in df.columns if "." in c}
-    if not mapping:
-        return df, {}
-    return df.toDF(*[c.replace(".", _DOT) for c in df.columns]), mapping
+def map_traces(ds, kernel, out_fields, index: str | None = None):
+    """Run ``kernel`` on every trace of the Dataset ``ds`` in one grouped
+    Arrow pass: ``groupBy(*id_vars).applyInPandas``, or ``groupBy()`` when
+    the whole frame is one trace.
+
+    ``kernel`` takes one trace as a pandas frame sorted by the index: the
+    index, then every other non-id column, structs flattened to
+    ``"{struct}.{field}"``. It returns its output columns as a mapping or a
+    frame, or ``None`` for no rows. ``out_fields`` maps the trace's fields
+    (the same columns, as ``StructField``s) to the kernel's output fields.
+
+    The result holds the trace's id values, repeated, then the kernel's
+    columns; structs whose fields all come back are rebuilt. It is a
+    Dataset indexed by ``index`` (default: ``ds``'s index)."""
+    from polars_dataset_spark.core import Dataset
+
+    flat, schema_map = unnest_structs(ds.df)
+    ids = list(ds.id_vars)
+    fields = [flat.schema[ds.index]] + [
+        f for f in flat.schema.fields if f.name not in ids and f.name != ds.index
+    ]
+    out = list(out_fields(fields))
+    # a module function bound with partial goes to the workers by reference,
+    # so they import the package (as rowmap.map_rows' runner does)
+    run = functools.partial(
+        _run_trace, kernel, ids, [f.name for f in fields], [f.name for f in out]
+    )
+    result = flat.toDF(*[c.replace(".", _DOT) for c in flat.columns]).groupBy(*ids)
+    result = result.applyInPandas(
+        run, schema=T.StructType([flat.schema[c] for c in ids] + out)
+    )
+    return Dataset(rebuild_structs(result, schema_map), index=index or ds.index, id_vars=ids)
 
 
-def restore_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Inverse of :func:`sanitize_columns`."""
-    if not mapping:
-        return df
-    return df.toDF(*[mapping.get(c, c) for c in df.columns])
+def _run_trace(kernel, ids, names, out_names, pdf):
+    pdf.columns = [c.replace(_DOT, ".") for c in pdf.columns]
+    trace = pdf[names].sort_values(names[0], ignore_index=True)
+    out = pd.DataFrame(kernel(trace), columns=out_names)
+    for i, k in enumerate(ids):
+        out.insert(i, k, pdf[k].iloc[0])
+    return out
 
 
 def unnest_structs(df: DataFrame) -> tuple[DataFrame, dict[str, list[str]]]:
@@ -59,13 +89,15 @@ def unnest_structs(df: DataFrame) -> tuple[DataFrame, dict[str, list[str]]]:
 
 def rebuild_structs(df: DataFrame, schema_map: dict[str, list[str]]) -> DataFrame:
     """Re-nest previously flattened ``"{name}.{field}"`` columns, restoring
-    original field names and column positions."""
+    original field names and column positions. A struct some of whose
+    fields are missing stays flat."""
     out_cols = []
     seen: set[str] = set()
+    cols = set(df.columns)
     for c in df.columns:
         if "." in c:
             name = c.split(".", 1)[0]
-            if name in schema_map:
+            if name in schema_map and all(f"{name}.{f}" in cols for f in schema_map[name]):
                 if name not in seen:
                     seen.add(name)
                     out_cols.append(

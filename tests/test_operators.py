@@ -12,6 +12,7 @@ from polars_dataset_spark.operators import (
     fourier_transform,
     interpolate_frame,
     join_asof,
+    lomb_scargle,
     rebuild_structs,
     regrid,
     unnest_structs,
@@ -115,6 +116,49 @@ def test_interpolate_frame_passthrough_single_point(spark):
     # single-point group passes through unchanged (reference H4 :316-317)
     assert len(out[out.g == 1.0]) == 1
     assert len(out[out.g == 2.0]) == 5
+
+
+def test_regrid_one_trace_keeps_nonfinite_index_rows(spark):
+    # no id_vars: the whole frame is one trace, whatever its index values
+    rows = [(0.0, 0.0), (1.0, 1.0), (2.0, 4.0), (3.0, 9.0)]
+    rows += [(math.inf, 16.0), (-math.inf, 1.0), (math.nan, 2.0), (None, 3.0)]
+    ds = Dataset(spark.createDataFrame(rows, "x double, y double"), index="x")
+    grid = [0.5, 1.5, 2.5]
+    for op in (regrid, interpolate_frame):
+        out = op(ds, grid).df.orderBy("x").toPandas()
+        assert out.x.tolist() == grid
+        assert out.y.notna().all()
+    got = regrid(ds, grid).df.orderBy("x").toPandas()
+    assert got.y.tolist() == pytest.approx([0.25, 2.25, 6.25])
+
+
+def test_interpolate_frame_coordinate_name(spark):
+    pdf = pd.DataFrame(
+        {"g": [1.0, 1.0, 2.0, 2.0], "x": [0.0, 1.0, 0.0, 1.0], "y": [1.0, 2.0, 3.0, 4.0]}
+    )
+    ds = Dataset(spark.createDataFrame(pdf), index="x", id_vars=["g"])
+    with pytest.raises(ValueError, match="neither the index nor an id_var"):
+        interpolate_frame(ds, [0.5], name="nope")
+    swapped = interpolate_frame(ds, [1.5], name="g")  # across g, per x
+    assert (swapped.index, swapped.id_vars) == ("g", ["x"])
+    out = swapped.df.orderBy("x").toPandas()
+    assert out.y.tolist() == pytest.approx([2.0, 3.0])
+
+
+def test_dotted_column_names(spark):
+    df = spark.createDataFrame(
+        pd.DataFrame({"g": [1.0] * 4, "x": [0.0, 1.0, 2.0, 3.0], "v": [0.0, 1.0, 0.0, 1.0]})
+    ).withColumn("s", F.struct((F.col("v") * 2).alias("a")))
+    ds = Dataset(df, index="x", id_vars=["g"])
+    flat = ds.unnest("s")
+    assert flat.columns == ["g", "x", "v", "s.a"]
+    assert Dataset(flat.df, index="x", id_vars=["g"]).columns == ["g", "x", "v", "s.a"]
+    assert flat.sort_columns().columns == ["g", "x", "v", "s.a"]
+    ft = fourier_transform(ds)
+    assert ft.columns[-3:] == ["s.a_re", "s.a_im", "s.a_abs"]
+    assert ft.df.select(F.max("`s.a_abs`")).first()[0] == pytest.approx(4.0)
+    ls = lomb_scargle(ds, [0.25, 0.5])
+    assert ls.columns == ["g", "frequency", "v_power", "s.a_power"]
 
 
 def test_fourier_peak(spark):

@@ -1,10 +1,13 @@
-"""``rowmap.map_rows``: the one per-row Python map.
+"""``rowmap.map_rows``: the one per-row Python map, and
+``operators.structs.map_traces``: the one per-trace grouped map.
 
 The guardrails read the package's source: every ``mapInPandas`` call is
 ``map_rows``' own or an allowlisted batch loop that is not a per-row map,
-and every runner is a module function bound with ``functools.partial``.
-The other tests pin the helper's output frame and that its workers import
-the package.
+and every runner is a module function bound with ``functools.partial``;
+every ``applyInPandas`` call is ``map_traces``' own or an allowlisted
+grouped map that is not per trace, and ``map_traces``' runner is bound the
+same way. The other tests pin the helper's output frame and that its
+workers import the package.
 """
 
 import ast
@@ -33,8 +36,17 @@ HAND_ROLLED = {
     ("operators.asof", "_join_asof_broadcast"): "searchsorted per key group of a batch",
 }
 
+# (module, function) -> why its applyInPandas does not go through map_traces
+GROUPED_NOT_TRACES = {
+    ("operators.structs", "map_traces"): "the helper itself",
+    ("sources.warc", "write_warc"): "one archive write per file",
+    ("functions.bloom", "bloom_build"): "one bitmap per bucket",
+    ("functions.similarity", "_train_quantizer"): "training per cell",
+    ("functions.similarity", "cosine_pairs_block"): "scoring per cell",
+}
 
-def _map_in_pandas_sites():
+
+def _sites(attr="mapInPandas"):
     sites = set()
     for path in sorted(PKG.rglob("*.py")):
         module = ".".join(path.relative_to(PKG).with_suffix("").parts)
@@ -47,7 +59,7 @@ def _map_in_pandas_sites():
                 if (
                     isinstance(child, ast.Call)
                     and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "mapInPandas"
+                    and child.func.attr == attr
                 ):
                     sites.add((module, qual))
                 walk(child, q)
@@ -57,24 +69,23 @@ def _map_in_pandas_sites():
 
 
 def test_map_in_pandas_only_through_map_rows():
-    sites = _map_in_pandas_sites()
+    sites = _sites()
     stray = sites - set(HAND_ROLLED)
     assert not stray, f"hand-rolled mapInPandas (use rowmap.map_rows): {sorted(stray)}"
     stale = set(HAND_ROLLED) - sites
     assert not stale, f"allowlisted sites that no longer call mapInPandas: {sorted(stale)}"
 
 
-def test_map_in_pandas_runners_go_by_reference():
-    """Every ``mapInPandas`` runner is a ``functools.partial`` of a
-    module-level function: cloudpickle sends that by reference, so the
-    workers import the package (and ``worker_zipimport``); a nested
-    closure goes by value and they never do."""
+def _runners_by_value(attr, only=None):
+    """``path:line`` of each ``attr`` call (in the functions named ``only``,
+    if given) whose runner is not a ``functools.partial`` of a module-level
+    function."""
     bad = []
     for path in sorted(PKG.rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
         top = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
         for fn in ast.walk(tree):
-            if not isinstance(fn, ast.FunctionDef):
+            if not isinstance(fn, ast.FunctionDef) or (only and fn.name not in only):
                 continue
             bound = {
                 t.id: a.value
@@ -87,7 +98,7 @@ def test_map_in_pandas_runners_go_by_reference():
                 if not (
                     isinstance(call, ast.Call)
                     and isinstance(call.func, ast.Attribute)
-                    and call.func.attr == "mapInPandas"
+                    and call.func.attr == attr
                 ):
                     continue
                 run = call.args[0]
@@ -99,7 +110,35 @@ def test_map_in_pandas_runners_go_by_reference():
                     and run.args[0].id in top
                 ):
                     bad.append(f"{path.relative_to(PKG)}:{call.lineno}")
-    assert not bad, f"mapInPandas runners pickled by value: {sorted(set(bad))}"
+    return sorted(set(bad))
+
+
+def test_map_in_pandas_runners_go_by_reference():
+    """Every ``mapInPandas`` runner is a ``functools.partial`` of a
+    module-level function: cloudpickle sends that by reference, so the
+    workers import the package (and ``worker_zipimport``); a nested
+    closure goes by value and they never do."""
+    bad = _runners_by_value("mapInPandas")
+    assert not bad, f"mapInPandas runners pickled by value: {bad}"
+
+
+def test_apply_in_pandas_only_through_map_traces():
+    """Per-trace grouped maps in ``core`` and ``operators`` (and anywhere
+    else) go through ``map_traces``; the allowlist names the grouped maps
+    whose group is not a trace."""
+    sites = _sites("applyInPandas")
+    stray = sites - set(GROUPED_NOT_TRACES)
+    assert not stray, f"hand-rolled applyInPandas (use structs.map_traces): {sorted(stray)}"
+    stale = set(GROUPED_NOT_TRACES) - sites
+    assert not stale, f"allowlisted sites that no longer call applyInPandas: {sorted(stale)}"
+
+
+def test_map_traces_runner_goes_by_reference():
+    """``map_traces``' runner is a ``functools.partial`` of a module
+    function, as ``map_rows``' is, so its workers import the package."""
+    assert _sites("applyInPandas") >= {("operators.structs", "map_traces")}
+    bad = _runners_by_value("applyInPandas", only={"map_traces"})
+    assert not bad, f"map_traces runner pickled by value: {bad}"
 
 
 def test_map_rows_output_frame(spark):
