@@ -28,11 +28,69 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["Dataset"]
+__all__ = ["Dataset", "exact_sum"]
 
 # most carry rows rolling_quantiles pulls to the driver: it uses at most
 # this // (window_size - 1) chunks
 _ROLLING_CARRY_ROWS = 100_000
+
+# exact_sum splits each row's micro-units n (|n| < 2**50) into n >> 25 and
+# n & (2**25 - 1): both parts lie in [-2**25, 2**25)
+_SPLIT = 25
+
+
+def exact_sum(expr: str) -> Column:
+    """Order-independent exact sum of a double SQL expression (a column
+    name is one): the same ``DECIMAL(38,6)`` value as
+    ``F.sum(F.expr(expr).cast("decimal(28,6)"))``, accumulated in 64-bit
+    integers.
+
+    A plain double sum depends on partition and merge order, so the same
+    query can hash differently between a multi-worker run and a
+    single-threaded oracle. Summing each row at 6 decimal places is exact
+    and order-free. The decimal form does it in a ``DECIMAL(38,6)`` buffer,
+    which Spark keeps as a ``BigDecimal`` per row updated; this form keeps
+    two ``long`` sums. It is one SQL expression because the same tree built
+    from ``Column`` operators costs about 25 ms of driver time per call.
+
+    Per row, with ``x`` the expression's value as a double,
+    ``v = x * 1e6`` and ``n = rint(v)``:
+
+    - null, NaN and ±inf rows count as null (the decimal cast's result);
+    - a row with ``0.5 - |v - n| > |v| * 2**-51`` contributes ``n``. Both
+      ``v`` and the decimal cast's input times 1e6,
+      ``Double.toString(x) * 1e6``, lie within ``|v| * 2**-53`` of the
+      exact ``x * 1e6``, so the cast's HALF_UP rounding is ``n`` too.
+      This accepts every value with at most 6 decimal places and
+      ``|x| < 7e8``, and off-grid values such as 1/3;
+    - any other row raises: a tie at the 7th decimal (``5e-7``), or
+      ``|v| >= 2**50`` (``1e13``), which the same test rejects.
+
+    Overflow: ``|n| < 2**50``, so ``n >> 25`` and ``n & (2**25 - 1)`` both
+    lie in ``[-2**25, 2**25)`` and neither ``long`` sum can overflow below
+    ``2**38`` rows per group. Past that, ``try_sum`` returns null and the
+    group raises, whatever ``spark.sql.ansi.enabled`` says. The two sums
+    are combined into the decimal once per group."""
+    x = f"CAST(({expr}) AS DOUBLE)"
+    v = f"({x} * 1e6D)"
+    # NaN sorts above +inf in Spark, so this test is false or null exactly
+    # on null, NaN and ±inf rows; it must come first, or NaN passes the tie
+    # test
+    finite = f"abs({x}) < double('Infinity')"
+    units = (
+        f"CASE WHEN {finite} THEN"
+        f" CASE WHEN 0.5D - abs({v} - rint({v})) > abs({v}) * {2.0**-51!r}D"
+        f" THEN CAST(rint({v}) AS BIGINT)"
+        f" ELSE raise_error(format_string('exact_sum: %s is too near a tie at the"
+        f" 7th decimal, or too large, to sum exactly', {x})) END END"
+    )
+    # the coalesce's first argument is null when either try_sum overflowed
+    return F.expr(
+        f"CAST(CASE WHEN count_if({finite}) > 0 THEN coalesce("
+        f"(CAST(try_sum(shiftright({units}, {_SPLIT})) AS DECIMAL(38,0)) * {1 << _SPLIT}"
+        f" + try_sum(({units}) & {(1 << _SPLIT) - 1})) * 0.000001BD,"
+        f" raise_error('exact_sum: long sum overflow')) END AS DECIMAL(38,6))"
+    )
 
 
 def _as_list(x) -> list:
@@ -41,6 +99,12 @@ def _as_list(x) -> list:
     if isinstance(x, str):
         return [x]
     return list(x)
+
+
+def _qcol(name: str) -> Column:
+    """The column named ``name``, quoted so a flattened struct field
+    (``"s.a"``) resolves as one name, not as field ``a`` of ``s``."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _rolling_key_rows(keys: list, pdf) -> "list[tuple]":
@@ -754,24 +818,24 @@ class Dataset:
         with many traces (the 100 TB shape), ``partition_hint()`` once
         before a chain of these ops buys exchange reuse on top of full
         parallelism."""
-        return Window.partitionBy(*self._id_vars).orderBy(self._index)
+        return Window.partitionBy(*map(_qcol, self._id_vars)).orderBy(_qcol(self._index))
 
     def cum_sum(self, *cols) -> "Dataset":
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
-            self._df.withColumns({f"{c}_cumsum": F.sum(c).over(w) for c in cols})
+            self._df.withColumns({f"{c}_cumsum": F.sum(_qcol(c)).over(w) for c in cols})
         )
 
     def cum_max(self, *cols) -> "Dataset":
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
-            self._df.withColumns({f"{c}_cummax": F.max(c).over(w) for c in cols})
+            self._df.withColumns({f"{c}_cummax": F.max(_qcol(c)).over(w) for c in cols})
         )
 
     def cum_min(self, *cols) -> "Dataset":
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
-            self._df.withColumns({f"{c}_cummin": F.min(c).over(w) for c in cols})
+            self._df.withColumns({f"{c}_cummin": F.min(_qcol(c)).over(w) for c in cols})
         )
 
     def cum_prod(self, *cols) -> "Dataset":
@@ -783,7 +847,7 @@ class Dataset:
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
             self._df.withColumns(
-                {f"{c}_cumprod": F.product(c).over(w) for c in cols}
+                {f"{c}_cumprod": F.product(_qcol(c)).over(w) for c in cols}
             )
         )
 
@@ -793,7 +857,7 @@ class Dataset:
         cols = cols or self.value_vars
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
-            self._df.withColumns({f"{c}_cumcount": F.count(c).over(w) for c in cols})
+            self._df.withColumns({f"{c}_cumcount": F.count(_qcol(c)).over(w) for c in cols})
         )
 
     def rle_id(self, col: str, out_col: str | None = None) -> "Dataset":
@@ -805,8 +869,8 @@ class Dataset:
         # row_number guard: lag()=null is ambiguous between "no previous
         # row" (not a change — polars ids start at 0) and "previous value
         # was null" (a change)
-        changed = (F.row_number().over(w) > 1) & ~F.col(col).eqNullSafe(
-            F.lag(col, 1).over(w)
+        changed = (F.row_number().over(w) > 1) & ~_qcol(col).eqNullSafe(
+            F.lag(_qcol(col), 1).over(w)
         )
         return self._rewrap(
             self._df.withColumn(
@@ -821,20 +885,20 @@ class Dataset:
         cols = cols or self.value_vars
         w = self._trace_window()
         return self._rewrap(
-            self._df.withColumns({f"{c}_shift": F.lag(c, n).over(w) for c in cols})
+            self._df.withColumns({f"{c}_shift": F.lag(_qcol(c), n).over(w) for c in cols})
         )
 
     def diff(self, *cols) -> "Dataset":
         cols = cols or self.value_vars
         w = self._trace_window()
         return self._rewrap(
-            self._df.withColumns({f"{c}_diff": F.col(c) - F.lag(c, 1).over(w) for c in cols})
+            self._df.withColumns({f"{c}_diff": _qcol(c) - F.lag(_qcol(c), 1).over(w) for c in cols})
         )
 
     def rolling_mean(self, col: str, window_size: int, *, min_samples: int = 1) -> "Dataset":
         w = self._trace_window().rowsBetween(-(window_size - 1), 0)
         out = F.when(
-            F.count(col).over(w) >= min_samples, F.avg(col).over(w)
+            F.count(_qcol(col)).over(w) >= min_samples, F.avg(_qcol(col)).over(w)
         )
         return self._rewrap(self._df.withColumn(f"{col}_rolling_mean", out))
 
@@ -846,7 +910,7 @@ class Dataset:
         return self._rewrap(
             self._df.withColumns(
                 {
-                    f"{c}_pct_change": F.col(c) / F.lag(c, 1).over(w) - F.lit(1.0)
+                    f"{c}_pct_change": _qcol(c) / F.lag(_qcol(c), 1).over(w) - F.lit(1.0)
                     for c in cols
                 }
             )
@@ -855,7 +919,7 @@ class Dataset:
     def clip(self, col: str, lower: float | None = None, upper: float | None = None) -> "Dataset":
         """Clamp a column into [lower, upper] (polars ``clip``); one-sided
         when either bound is None. Pure expression."""
-        c = F.col(col)
+        c = _qcol(col)
         if lower is not None:
             c = F.greatest(c, F.lit(lower))
         if upper is not None:
@@ -1090,7 +1154,7 @@ class Dataset:
         aggf = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max, "std": F.stddev}[fn]
         w = self._trace_window().rowsBetween(-(window_size - 1), 0)
         return self._rewrap(
-            self._df.withColumn(f"{col}_rolling_{fn}", aggf(col).over(w))
+            self._df.withColumn(f"{col}_rolling_{fn}", aggf(_qcol(col)).over(w))
         )
 
     def rolling_median(self, col: str, window_size: int) -> "Dataset":
@@ -1513,8 +1577,8 @@ class Dataset:
 
     def _peak(self, col: str, out_col: str, greater: bool) -> "Dataset":
         w = self._trace_window()
-        prev, nxt = F.lag(col, 1).over(w), F.lead(col, 1).over(w)
-        c = F.col(col)
+        c = _qcol(col)
+        prev, nxt = F.lag(c, 1).over(w), F.lead(c, 1).over(w)
         if greater:
             ok_prev = prev.isNull() | (c > prev)
             ok_next = nxt.isNull() | (c > nxt)

@@ -16,9 +16,11 @@ implemented here directly:
 - :func:`rfft_trace` and :func:`lomb_scargle_power` — the spectra behind
   ``operators/fourier.py`` (uniform and uneven sampling).
 
-Everything is vectorized numpy over one trace (one group) at a time; traces
-are small by construction (one sweep), so an O(n) tridiagonal solve (or a
-dense solve for the not-a-knot rows at small n) is microseconds per group.
+Everything is numpy over one trace (one group) at a time, except the O(n)
+tridiagonal solve of the spline fit, ``_thomas``: its two sweeps are a
+pure-Python loop over the knots, so it costs milliseconds, not microseconds,
+per trace. A 2,500-point trace takes about 5.6 ms in :func:`interp_trace`
+(Intel Xeon, CPython 3.11), about 90 % of it in ``_thomas``.
 """
 
 from __future__ import annotations

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polars_dataset_spark.core import exact_sum
+
 __all__ = [
     "EVENTS_SCHEMA",
     "read_events_stream",
@@ -55,20 +57,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def _dec_sum(col: str):
-    """Order-independent sum of a money-like double column.
-
-    A plain ``F.sum(double)`` depends on partition/merge order — the same
-    query can produce hash-different floats between a multi-worker run and
-    a single-threaded oracle (observed: q25 driver hash-fail round 1).
-    Casting each row to DECIMAL(28,6) first (lossless for the ≤2-dp fixture
-    values) makes the summation exact integer arithmetic, hence identical
-    regardless of order; the final cast back to double is exact while
-    ``|sum| * 1e6 < 2^53``.
-    """
-    return F.sum(F.col(col).cast("decimal(28,6)")).cast("double")
 
 
 def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -137,9 +125,7 @@ def windowed_agg(
     # r9 sf1 sweep caught 2 such rows). floor((2S+n)/(2n)) in exact
     # decimal = round-half-up(S/n); the subtraction-of-pmod quotient is
     # exactly divisible, so the decimal division is exact.
-    s_u = (F.sum(F.col("value").cast("decimal(28,6)")) * F.lit(1_000_000)).cast(
-        "decimal(38,0)"
-    )
+    s_u = (exact_sum("value") * F.lit(1_000_000)).cast("decimal(38,0)")
     n = F.count(F.lit(1))
     a = s_u * 2 + n
     b = n * 2
@@ -148,7 +134,7 @@ def windowed_agg(
         src.groupBy(win.alias("w"), *keys)
         .agg(
             F.count("*").alias("n_events"),
-            _dec_sum("value").alias("sum_value"),
+            exact_sum("value").cast("double").alias("sum_value"),
             (avg_u.cast("double") / F.lit(1_000_000.0)).alias("avg_value"),
         )
         .select(
@@ -176,7 +162,10 @@ def session_agg(
         src = events.withWatermark(ts_col, watermark)
     return (
         src.groupBy(F.session_window(ts_col, gap).alias("s"), *keys)
-        .agg(F.count("*").alias("n_events"), _dec_sum("value").alias("sum_value"))
+        .agg(
+            F.count("*").alias("n_events"),
+            exact_sum("value").cast("double").alias("sum_value"),
+        )
         .select(
             F.col("s.start").alias("session_start"),
             F.col("s.end").alias("session_end"),
@@ -248,7 +237,7 @@ def sessionize_batch(
             F.min(ts_col).alias("session_start"),
             F.max(ts_col).alias("session_end"),
             F.count("*").alias("n_events"),
-            _dec_sum("value").alias("sum_value"),
+            exact_sum("value").cast("double").alias("sum_value"),
         )
     )
 

@@ -33,7 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.core import Dataset, exact_sum
 from polars_dataset_spark.operators import (
     autophase,
     fourier_transform,
@@ -121,28 +121,27 @@ def q01(spark, sf_dir):
     the two grouping keys."""
     _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    # 2-dp money sums accumulate as EXACT DECIMAL and round in decimal:
+    # 2-dp money sums accumulate exactly (exact_sum) and round in decimal:
     # a double sum's order-dependent random-walk error reaches ~0.04 at
     # 60 M rows, past the 2-dp rounding unit (caught by the r9 sf10
     # sweep on q03; quantity sums are integer-valued and already exact
     # in double at any order, so they stay plain)
-    price_d = F.col("l_extendedprice").cast("decimal(28,6)")
-    disc_price_d = disc_price.cast("decimal(28,6)")
-    charge_d = (disc_price * (1 + F.col("l_tax"))).cast("decimal(28,6)")
-    disc_d = F.col("l_discount").cast("decimal(28,6)")
+    price_d = exact_sum("l_extendedprice")
+    disc_price_d = exact_sum("l_extendedprice * (1 - l_discount)")
+    charge_d = exact_sum("l_extendedprice * (1 - l_discount) * (1 + l_tax)")
+    disc_d = exact_sum("l_discount")
     n = F.count(F.lit(1))
     return (
         ds.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
         .group_by("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(price_d), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum(disc_price_d), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(charge_d), 2).cast("double").alias("sum_charge"),
+            F.round(price_d, 2).cast("double").alias("sum_base_price"),
+            F.round(disc_price_d, 2).cast("double").alias("sum_disc_price"),
+            F.round(charge_d, 2).cast("double").alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.sum(price_d).cast("double") / n, 4).alias("avg_price"),
-            F.round(F.sum(disc_d).cast("double") / n, 4).alias("avg_disc"),
+            F.round(price_d.cast("double") / n, 4).alias("avg_price"),
+            F.round(disc_d.cast("double") / n, 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -191,9 +190,9 @@ def q03(spark, sf_dir):
     li = _lineitem_ds(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     joined = li.join(orders, left_on="l_orderkey", right_on="o_orderkey", how="inner")
-    rev_d = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
+    rev_d = exact_sum("l_extendedprice * (1 - l_discount)")
     return joined.group_by("o_orderstatus").agg(
-        F.round(F.sum(rev_d), 2).cast("double").alias("revenue"),
+        F.round(rev_d, 2).cast("double").alias("revenue"),
         F.countDistinct("l_orderkey").alias("n_orders"),
     )
 
@@ -265,7 +264,7 @@ def q06(spark, sf_dir):
         .groupBy("r_name")
         .agg(
             F.round(
-                F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")), 2
+                exact_sum("l_extendedprice * (1 - l_discount)"), 2
             ).cast("double").alias("revenue"),
             F.count("*").alias("n_lineitems"),
         )
@@ -1241,14 +1240,12 @@ def q39(spark, sf_dir):
 
 def _daily_traces(spark, sf_dir):
     """Per-(returnflag, linestatus) daily revenue traces. day = integer
-    days since epoch (exact in both engines); revenue summed as
-    DECIMAL(28,6) (the products are exact 4-dp values) so the result is
-    identical regardless of partition/merge order — the property the
-    regrid/FFT oracles below rely on."""
+    days since epoch (exact in both engines); revenue summed by
+    ``exact_sum`` at 6 decimal places (the products are exact 4-dp
+    values) so the result is identical regardless of partition/merge
+    order — the property the regrid/FFT oracles below rely on."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.sum(
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
-    ).cast("double")
+    rev = exact_sum("l_extendedprice * (1 - l_discount)").cast("double")
     return li.groupBy(
         "l_returnflag",
         "l_linestatus",
@@ -1832,9 +1829,7 @@ def q59(spark, sf_dir):
         ds.group_by_dynamic(10.0)
         .agg(
             F.count("*").alias("n"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(28,6)")), 2)
-            .cast("double")
-            .alias("sum_price"),
+            F.round(exact_sum("l_extendedprice"), 2).cast("double").alias("sum_price"),
         )
         .withColumn("index_start", F.col("index_start").cast("double"))
     )
@@ -2079,11 +2074,9 @@ def q65(spark, sf_dir):
     joined = salted_join(li, od, on="o_orderkey", how="inner", salt=8)
     return joined.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
-        F.round(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")), 2
-        ).cast("double").alias(
-            "revenue"
-        ),
+        F.round(exact_sum("l_extendedprice * (1 - l_discount)"), 2)
+        .cast("double")
+        .alias("revenue"),
     )
 
 
@@ -2284,7 +2277,7 @@ def q72(spark, sf_dir):
     # parallelism capped at 6). Decimal sums are exact and associative,
     # so sum-of-group-sums == sum-of-rows bit-for-bit.
     per_q = li.groupBy(*keys, "l_quantity").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(28,6)")).alias("__qsum")
+        exact_sum("l_extendedprice").alias("__qsum")
     )
     w = (
         Window.partitionBy(*keys)
@@ -3292,9 +3285,7 @@ def q99(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     ship = Dataset(
         li.groupBy(F.to_date("l_shipdate").alias("d")).agg(
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(28,6)")), 2)
-            .cast("double")
-            .alias("revenue")
+            F.round(exact_sum("l_extendedprice"), 2).cast("double").alias("revenue")
         ),
         index="d",
     )
@@ -3552,7 +3543,7 @@ def q107(spark, sf_dir):
     ds = Dataset(ev.select("ts", "value"), index="ts")
     out = ds.group_by_dynamic("15 minutes", period="30 minutes").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
+        exact_sum("value").cast("double").alias("sum_value"),
     )
     return out.select(
         F.date_format("index_start", TS_FMT_SPARK).alias("window_start"),
@@ -3777,9 +3768,7 @@ def q113(spark, sf_dir):
     merged = merge_upsert(o, updates.unionByName(inserts), on="o_orderkey")
     return merged.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(28,6)")), 2)
-        .cast("double")
-        .alias("total"),
+        F.round(exact_sum("o_totalprice"), 2).cast("double").alias("total"),
     )
 
 
@@ -4057,9 +4046,7 @@ def q120(spark, sf_dir):
     integers."""
     _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
-    rev_dec = F.sum(
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
-    )
+    rev_dec = exact_sum("l_extendedprice * (1 - l_discount)")
     traces = li.groupBy(
         "l_returnflag",
         "l_linestatus",
@@ -4273,11 +4260,11 @@ def q126(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     ds = Dataset(o, index="o_orderkey")
     w = ds.winsorize("o_totalprice", p=0.05, out_col="wz")
-    wz_d = F.col("wz").cast("decimal(28,6)")
+    wz_d = exact_sum("wz")
     return w.df.agg(
         F.count("*").alias("n"),
-        F.round(F.sum(wz_d), 2).cast("double").alias("total"),
-        F.round(F.sum(wz_d).cast("double") / F.count(F.lit(1)), 4).alias("mean"),
+        F.round(wz_d, 2).cast("double").alias("total"),
+        F.round(wz_d.cast("double") / F.count(F.lit(1)), 4).alias("mean"),
         F.round(F.min("wz"), 2).alias("mn"),
         F.round(F.max("wz"), 2).alias("mx"),
     )
@@ -4629,9 +4616,8 @@ def q133(spark, sf_dir):
             F.lit(max_ts).cast("double") - F.max("ts").cast("double")
         ).cast("long").alias("recency_s"),
         F.count("*").alias("frequency"),
-        F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("monetary"),
-        (F.sum(F.col("value").cast("decimal(28,6)")) * 1000000)
-        .cast("long").alias("mu"),
+        exact_sum("value").cast("double").alias("monetary"),
+        (exact_sum("value") * 1000000).cast("long").alias("mu"),
     )
     cuts = rfm.agg(
         F.percentile("frequency", F.lit(0.5)).alias("f_med"),
@@ -4745,9 +4731,7 @@ def q135(spark, sf_dir):
 
     li = load_table(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(28,6)")
-        ).alias("revenue")
+        exact_sum("l_extendedprice * (1 - l_discount)").alias("revenue")
     )
     total = pr.agg(F.sum("revenue").alias("t")).first()["t"]
     parts = pr.sparkSession.sparkContext.defaultParallelism
@@ -4798,7 +4782,7 @@ def q136(spark, sf_dir):
     _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(F.date_trunc("week", "ts").alias("wk")).agg(
-        F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("revenue")
+        exact_sum("value").cast("double").alias("revenue")
     )
     w = Window.partitionBy(F.year("wk")).orderBy("wk")
     return wk.select(
@@ -5457,9 +5441,7 @@ def q149(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     upd = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(28,6)")), 2)
-        .cast("double")
-        .alias("c_acctbal")
+        F.round(exact_sum("o_totalprice"), 2).cast("double").alias("c_acctbal")
     )
     ds = Dataset(
         cust.select(

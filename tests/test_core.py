@@ -504,6 +504,37 @@ def test_cumulative_family_and_rle(spark):
     assert [r.v_rle_id for r in rows] == [0, 1, 2, 3, 3, 4]
 
 
+def test_trace_windows_on_flattened_struct_names(spark):
+    """The per-trace window family reads a flattened struct field
+    (``"s.a"``) as one column name, as ewm_mean and smooth do."""
+    df = spark.createDataFrame(
+        [("a", 1.0, (3.0,)), ("a", 2.0, (1.0,)), ("a", 3.0, (4.0,)), ("b", 1.0, (2.0,))],
+        "g string, x double, s struct<a: double>",
+    )
+    ds = Dataset(df, index="x", id_vars=["g"]).unnest("s")
+    out = (
+        ds.cum_sum("s.a").cum_max("s.a").cum_min("s.a").cum_prod("s.a").cum_count("s.a")
+        .rle_id("s.a").shift(1, "s.a").diff("s.a").pct_change("s.a")
+        .rolling_mean("s.a", 2).rolling("s.a", 2, fn="max").peak_max("s.a")
+        .clip("s.a", lower=1.5)
+    )
+    rows = [r.asDict() for r in out.df.filter(F.col("g") == "a").orderBy("x").collect()]
+    col = lambda name: [r[name] for r in rows]  # noqa: E731
+    assert col("s.a_cumsum") == [3.0, 4.0, 8.0]
+    assert col("s.a_cummax") == [3.0, 3.0, 4.0]
+    assert col("s.a_cummin") == [3.0, 1.0, 1.0]
+    assert col("s.a_cumprod") == [3.0, 3.0, 12.0]
+    assert col("s.a_cumcount") == [1, 2, 3]
+    assert col("s.a_rle_id") == [0, 1, 2]
+    assert col("s.a_shift") == [None, 3.0, 1.0]
+    assert col("s.a_diff") == [None, -2.0, 3.0]
+    assert col("s.a_pct_change")[1:] == [pytest.approx(-2 / 3), 3.0]
+    assert col("s.a_rolling_mean") == [3.0, 2.0, 2.5]
+    assert col("s.a_rolling_max") == [3.0, 3.0, 4.0]
+    assert col("s.a_peak_max") == [True, False, True]
+    assert col("s.a") == [3.0, 1.5, 4.0]
+
+
 def test_corr_cov_and_matrix(spark):
     pdf = pd.DataFrame(
         {"g": ["a"] * 5, "x": [1.0, 2.0, 3.0, 4.0, 5.0],
