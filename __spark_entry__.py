@@ -117,7 +117,7 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twins for EVERY query (no rows-only
     entries) — including the LSH family (seeded hyperplanes / seeded
     minhash lanes replayed as literals), regrid (on-knot identity), FFT
-    (O(n²) SQL DFT), simhash (portable md5-bit variant), IVF
+    (O(n²) SQL DFT), simhash (md5-bit construction), IVF
     (fixed-centroid variant), and the off-knot spline pair q76/q77
     (contract oracles: knot-exact endpoint values, grid span, bin/knot
     counts, Nyquist frequency, DC/Nyquist realness, FFT-vs-direct-sum —

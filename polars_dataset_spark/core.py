@@ -982,7 +982,7 @@ class Dataset:
         wall = self._trace_window().rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
-        x0, y0 = F.col(col1).cast("double"), F.col(col2).cast("double")
+        x0, y0 = _qcol(col1).cast("double"), _qcol(col2).cast("double")
         x = x0 - F.avg(x0).over(wall)
         y = y0 - F.avg(y0).over(wall)
         ex, ey = F.avg(x).over(w), F.avg(y).over(w)
@@ -1005,13 +1005,13 @@ class Dataset:
         if not 0 < p < 0.5:
             raise ValueError("winsorize: p must be in (0, 0.5)")
         row = self._df.agg(
-            F.percentile(col, F.lit(p)).alias("lo"),
-            F.percentile(col, F.lit(1 - p)).alias("hi"),
+            F.percentile(_qcol(col), F.lit(p)).alias("lo"),
+            F.percentile(_qcol(col), F.lit(1 - p)).alias("hi"),
         ).first()
         return self.clip(col, lower=row["lo"], upper=row["hi"]) if out_col is None else self._rewrap(
             self._df.withColumn(
                 out_col,
-                F.least(F.greatest(F.col(col), F.lit(row["lo"])), F.lit(row["hi"])),
+                F.least(F.greatest(_qcol(col), F.lit(row["lo"])), F.lit(row["hi"])),
             )
         )
 
@@ -1025,12 +1025,12 @@ class Dataset:
         import operator
 
         keyed = stats.select(
-            *[F.col(c).alias(f"__k_{c}") for c in ids],
+            *[_qcol(c).alias(f"__k_{c}") for c in ids],
             *[c for c in stats.columns if c not in ids],
         )
         cond = functools.reduce(
             operator.and_,
-            [self._df[c].eqNullSafe(keyed[f"__k_{c}"]) for c in ids],
+            [_qcol(c).eqNullSafe(_qcol(f"__k_{c}")) for c in ids],
         )
         return self._df.join(keyed, cond).drop(*[f"__k_{c}" for c in ids])
 
@@ -1058,7 +1058,7 @@ class Dataset:
         invites cancellation, and float inputs have no exact answer to
         preserve."""
         ids = list(self._id_vars)
-        x = F.col(self._index).cast("double")
+        x = _qcol(self._index).cast("double")
         xt = self._df.schema[self._index].dataType
         yt = self._df.schema[col].dataType
         integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -1066,11 +1066,11 @@ class Dataset:
             yt, (T.DecimalType, *integral)
         )
         grouped = (
-            self._df.groupBy(*ids) if ids else self._df.groupBy(F.lit(1).alias("__g"))
+            self._df.groupBy(*map(_qcol, ids)) if ids else self._df.groupBy(F.lit(1).alias("__g"))
         )
         if exact:
             scale = yt.scale if isinstance(yt, T.DecimalType) else 0
-            xc, yc = F.col(self._index), F.col(col)
+            xc, yc = _qcol(self._index), _qcol(col)
             xu = xc.cast("decimal(38,0)")
             yu = (yc * F.lit(10**scale)).cast("decimal(38,0)")
             cond = xc.isNotNull() & yc.isNotNull()
@@ -1096,8 +1096,8 @@ class Dataset:
             )
         else:
             fit = grouped.agg(
-                F.regr_slope(F.col(col).cast("double"), x).alias("__slope"),
-                F.regr_intercept(F.col(col).cast("double"), x).alias("__icept"),
+                F.regr_slope(_qcol(col).cast("double"), x).alias("__slope"),
+                F.regr_intercept(_qcol(col).cast("double"), x).alias("__icept"),
             )
         # no forced broadcast: the fit frame is one row per TRACE, which
         # can itself be huge at scale — AQE broadcasts it when small and
@@ -1107,7 +1107,7 @@ class Dataset:
             if ids
             else self._df.crossJoin(F.broadcast(fit.drop("__g")))
         )
-        resid = F.col(col) - (F.col("__slope") * x + F.col("__icept"))
+        resid = _qcol(col) - (F.col("__slope") * x + F.col("__icept"))
         return self._rewrap(
             joined.withColumn(out_col or f"{col}_detrended", resid).drop(
                 "__slope", "__icept"
@@ -1121,16 +1121,17 @@ class Dataset:
         pipeline applies before training. Degenerate traces (σ=0 or
         max=min) scale to null rather than ±inf."""
         ids = list(self._id_vars)
-        grouped = self._df.groupBy(*ids) if ids else self._df.groupBy(F.lit(1).alias("__g"))
+        grouped = (
+            self._df.groupBy(*map(_qcol, ids)) if ids else self._df.groupBy(F.lit(1).alias("__g"))
+        )
+        v = _qcol(col)
         if method == "zscore":
-            stats = grouped.agg(
-                F.avg(col).alias("__a"), F.stddev_samp(col).alias("__b")
-            )
-            expr = (F.col(col) - F.col("__a")) / F.when(F.col("__b") != 0, F.col("__b"))
+            stats = grouped.agg(F.avg(v).alias("__a"), F.stddev_samp(v).alias("__b"))
+            expr = (v - F.col("__a")) / F.when(F.col("__b") != 0, F.col("__b"))
         elif method == "minmax":
-            stats = grouped.agg(F.min(col).alias("__a"), F.max(col).alias("__b"))
+            stats = grouped.agg(F.min(v).alias("__a"), F.max(v).alias("__b"))
             rng = F.col("__b") - F.col("__a")
-            expr = (F.col(col) - F.col("__a")) / F.when(rng != 0, rng)
+            expr = (v - F.col("__a")) / F.when(rng != 0, rng)
         else:
             raise ValueError(f"normalize: method must be 'zscore' or 'minmax', got {method!r}")
         # per-trace stats frame: same no-forced-broadcast reasoning as
@@ -1146,7 +1147,7 @@ class Dataset:
 
     def rank(self, col: str, method: str = "min") -> "Dataset":
         fn = {"min": F.rank, "dense": F.dense_rank}.get(method, F.rank)
-        w = Window.partitionBy(*self._id_vars).orderBy(col)
+        w = Window.partitionBy(*map(_qcol, self._id_vars)).orderBy(_qcol(col))
         return self._rewrap(self._df.withColumn(f"{col}_rank", fn().over(w)))
 
     def rolling(self, col: str, window_size: int, fn: str = "mean") -> "Dataset":
@@ -1209,6 +1210,7 @@ class Dataset:
         rows frame to be well-defined (same requirement the window form
         had); real NaN values (not nulls) are treated as missing,
         where the window form sorted them last."""
+        from polars_dataset_spark.operators.structs import _DOT
         from polars_dataset_spark.session import pin
 
         taken = set(self._df.columns)
@@ -1222,17 +1224,21 @@ class Dataset:
         if window_size < 1:
             raise ValueError("rolling_quantiles: window_size must be >= 1")
         w1 = window_size - 1
-        keys = list(self._id_vars)
-        index = self._index
+        # mapInPandas resolves its input with df[col], which parses "." as
+        # struct access: the chunks carry dot-free names, restored at the end
+        safe = {c: c.replace(".", _DOT) for c in self._df.columns}
+        keys = [safe[k] for k in self._id_vars]
+        index = safe[self._index]
+        col = safe[col]
         spark = self._df.sparkSession
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if w1:
             n_parts = max(1, min(n_parts, _ROLLING_CARRY_ROWS // w1))
         order_cols = [*keys, index]
         d = pin(
-            self._df.repartitionByRange(n_parts, *order_cols).sortWithinPartitions(
-                *order_cols
-            )
+            self._df.toDF(*safe.values())
+            .repartitionByRange(n_parts, *order_cols)
+            .sortWithinPartitions(*order_cols)
         )
         in_fields = list(d.schema.fields)
         out_schema = T.StructType(
@@ -1267,7 +1273,9 @@ class Dataset:
 
         # reads TaskContext, carries a window across batches (map_rows does not fit)
         roll = functools.partial(_rolling_window, keys, col, window_size, qs_items, b_carries)
-        return self._rewrap(d.mapInPandas(roll, schema=out_schema))
+        return self._rewrap(
+            d.mapInPandas(roll, schema=out_schema).toDF(*self._df.columns, *qs)
+        )
 
     def update(self, other, on: "list[str] | str | None" = None) -> "Dataset":
         """Update values from ``other`` (polars ``DataFrame.update`` with
@@ -1683,10 +1691,10 @@ class Dataset:
             for f in self._df.schema.fields
             if f.name in self.value_vars
         )
-        order = F.col(self._index).asc() if forward else F.col(self._index).desc()
+        order = _qcol(self._index).asc() if forward else _qcol(self._index).desc()
         lo = Window.unboundedPreceding if limit is None else -int(limit)
-        w = Window.partitionBy(*self._id_vars).orderBy(order).rowsBetween(lo, 0)
-        updates = {c: F.last(c, ignorenulls=True).over(w) for c in cols}
+        w = Window.partitionBy(*map(_qcol, self._id_vars)).orderBy(order).rowsBetween(lo, 0)
+        updates = {c: F.last(_qcol(c), ignorenulls=True).over(w) for c in cols}
         return self._rewrap(self._df.withColumns(updates))
 
     def interpolate_nulls(self, *cols) -> "Dataset":
@@ -1700,7 +1708,7 @@ class Dataset:
             for f in self._df.schema.fields
             if f.name in self.value_vars and isinstance(f.dataType, T.NumericType)
         )
-        x = F.col(self._index).cast("double")
+        x = _qcol(self._index).cast("double")
         # Both lookups use GROWING frames ([unboundedPreceding, -1]), which
         # WindowExec aggregates incrementally in O(n); the naive "next"
         # frame ([1, unboundedFollowing]) is a SHRINKING frame that Spark
@@ -1710,13 +1718,13 @@ class Dataset:
         # in-partition sorts.
         w_prev = self._trace_window().rowsBetween(Window.unboundedPreceding, -1)
         w_next = (
-            Window.partitionBy(*self._id_vars)
-            .orderBy(F.col(self._index).desc())
+            Window.partitionBy(*map(_qcol, self._id_vars))
+            .orderBy(_qcol(self._index).desc())
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         updates = {}
         for c in cols:
-            v = F.col(c)
+            v = _qcol(c)
             pv = F.last(v, ignorenulls=True).over(w_prev)
             px = F.last(F.when(v.isNotNull(), x), ignorenulls=True).over(w_prev)
             nv = F.last(v, ignorenulls=True).over(w_next)

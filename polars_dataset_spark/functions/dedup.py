@@ -17,7 +17,7 @@ bucket size, never |docs|². There are two banded paths:
   ``max_hamming + 1`` pigeonhole chunks (recall exactly 1) and
   ``bit_count(a XOR b)`` verifies — :func:`hamming_band_pairs`,
   :func:`banded_neardup_pairs` and the pinned :class:`BandedIndex`.
-  Both SimHash dedups and the image, audio and video hashes ride it.
+  The SimHash dedup and the image, audio and video hashes ride it.
 
 Results are pinned (:func:`~polars_dataset_spark.session.pin`), so the
 ContextCleaner frees them once the caller drops the frame and the JVM
@@ -59,7 +59,6 @@ __all__ = [
     "minhash_dedup",
     "simhash",
     "simhash_dedup",
-    "simhash_dedup_portable",
     "ngram_jaccard_pairs",
     "embedding_neardup",
     "build_neardup_index",
@@ -311,110 +310,50 @@ def minhash_dedup(
     return df.join(losers, on=id_col, how="left_anti")
 
 
-def simhash_dedup_portable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup removal with an ENGINE-PORTABLE hash: token bits
-    come from the md5 hex digest (every engine agrees on md5), extracted
-    per-nibble with substring + strpos arithmetic — so an external SQL
-    engine can replay the exact same simhashes, pair set, and survivor
-    set, value-for-value.
-
-    Construction (classic Charikar, tf-weighted): tokens → per-(doc,
-    token) counts → 64 ± vote sums → the 64 sign bits packed into one
-    ``long`` (bit ``i`` = sign of vote ``i``). Pairs come from
-    :func:`hamming_band_pairs`: shifts, masks and ``bit_count`` on a
-    long never overflow under ANSI mode, and for ``max_hamming=3`` its
-    four band keys are exactly the 16-bit chunks the SQL oracle states.
-    The fast path (:func:`simhash_dedup`) hashes Arrow-side instead."""
-    from polars_dataset_spark.session import ensure_parallelism
-
-    # The whole signature — tokenize, md5 per UNIQUE token, 64 tf-weighted
-    # vote sums, sign-bit packing — is ONE map-only Arrow batch
-    # (earlier revisions tried explode + 64 codegen'd sums: correct, but
-    # Catalyst analysis + janino compile of the 64-expression aggregate
-    # cost ~10 s per cold plan, dwarfing the data). Bit semantics are the
-    # oracle's exactly: bytes of the UTF-8 md5 digest, big-endian,
-    # MSB-first (== the per-hex-nibble rule the SQL states); tokens =
-    # ASCII-\s+ split of space-trimmed lower text, with a '' token for
-    # empty docs (DuckDB string_split parity). Python touches each unique
-    # token once per batch; votes are numpy (unpackbits + reduceat).
-    @F.pandas_udf(T.LongType())
-    def portable_simhash(texts: pd.Series) -> pd.Series:
-        import hashlib
-        import re
-
-        ws = re.compile(r"\s+", re.ASCII)
-        toks_per_doc = []
-        for s in texts:
-            norm = ws.sub(" ", (s or "").strip(" ").lower())
-            toks_per_doc.append(norm.split(" ") if norm else [""])
-        if not toks_per_doc:
-            return pd.Series([], dtype="int64")
-        lens = np.fromiter(map(len, toks_per_doc), dtype=np.int64, count=len(toks_per_doc))
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        flat = np.concatenate([np.asarray(t, dtype=object) for t in toks_per_doc])
-        uniq, inv = np.unique(flat, return_inverse=True)
-        digests = np.empty((len(uniq), 8), dtype=np.uint8)
-        for i, t in enumerate(uniq):
-            digests[i] = np.frombuffer(
-                hashlib.md5(t.encode()).digest()[:8], dtype=np.uint8
-            )
-        signs = np.unpackbits(digests, axis=1).astype(np.int32) * 2 - 1  # (uniq, 64)
-        votes = np.add.reduceat(signs[inv], starts, axis=0)  # (docs, 64)
-        # bit i of the long = sign of vote i (little-endian bit order)
-        packed = np.packbits(votes > 0, axis=1, bitorder="little")
-        return pd.Series(np.ascontiguousarray(packed).view("<i8").ravel())
-
-    # only the signature pass needs the spread; the closing anti-join
-    # against the (small, pinned) losers reads the input as it is
-    sh = ensure_parallelism(df).select(
-        F.col(id_col), portable_simhash(F.col(text_col)).alias("__sig")
-    ).persist()
-    try:
-        pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="__sig", max_hamming=max_hamming)
-        losers = pin(pairs.select(F.col("id_b").alias(id_col)).distinct(), eager=True)
-    finally:
-        sh.unpersist(blocking=False)
-    return df.join(losers, on=id_col, how="left_anti")
-
-
 @F.pandas_udf(T.LongType())
 def _simhash_of_text(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash computed wholly Arrow-side: tokenize, hash tokens
-    (blake2b, 8 bytes; term-frequency-weighted votes — classic Charikar),
-    per-bit ±count votes, sign → bit. One python pass per doc + one numpy
-    matrix op — Spark's interpreted higher-order functions made the JVM
-    tokenize+hash pass the bottleneck, same finding as the MinHash path."""
-    import re
-    from collections import Counter
-    from hashlib import blake2b
+    """64-bit SimHash (classic Charikar, tf-weighted) computed wholly
+    Arrow-side: tokens → per-(doc, token) counts → 64 ± vote sums → the
+    64 sign bits packed into one ``long`` (bit ``i`` = sign of vote
+    ``i``).
 
-    ws = re.compile(r"\s+")
-    bitcols = np.arange(64, dtype=np.uint64)
-    out = np.zeros(len(texts), dtype=np.int64)
-    for i, s in enumerate(texts):
-        norm = ws.sub(" ", (s or "").strip().lower())
-        if not norm:
-            continue
-        counts = Counter(norm.split(" "))
-        arr = np.frombuffer(
-            b"".join(blake2b(t.encode(), digest_size=8).digest() for t in counts),
-            dtype=np.uint64,
-        )
-        w = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
-        bits = ((arr[:, None] >> bitcols) & np.uint64(1)).astype(np.int64)
-        votes = ((2 * bits - 1) * w[:, None]).sum(axis=0)
-        out[i] = np.int64(np.uint64(np.packbits((votes > 0)[::-1]).view(">u8")[0]))
-    return pd.Series(out)
+    Token bits come from md5, which every engine agrees on, so an
+    external SQL engine can replay the exact same simhashes (q38's
+    oracle does): bytes of the UTF-8 md5 digest, big-endian, MSB-first
+    (== the per-hex-nibble rule the SQL states); tokens = ASCII-\\s+
+    split of space-trimmed lower text, with a '' token for empty or null
+    docs (DuckDB string_split parity). One map-only Arrow batch (an
+    explode + 64 codegen'd sums was correct, but Catalyst analysis +
+    janino compile of the 64-expression aggregate cost ~10 s per cold
+    plan); Python touches each unique token once per batch, votes are
+    numpy (unpackbits + reduceat)."""
+    import hashlib
+    import re
+
+    ws = re.compile(r"\s+", re.ASCII)
+    toks_per_doc = []
+    for s in texts:
+        norm = ws.sub(" ", (s or "").strip(" ").lower())
+        toks_per_doc.append(norm.split(" ") if norm else [""])
+    if not toks_per_doc:
+        return pd.Series([], dtype="int64")
+    lens = np.fromiter(map(len, toks_per_doc), dtype=np.int64, count=len(toks_per_doc))
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    flat = np.concatenate([np.asarray(t, dtype=object) for t in toks_per_doc])
+    uniq, inv = np.unique(flat, return_inverse=True)
+    digests = np.empty((len(uniq), 8), dtype=np.uint8)
+    for i, t in enumerate(uniq):
+        digests[i] = np.frombuffer(hashlib.md5(t.encode()).digest()[:8], dtype=np.uint8)
+    signs = np.unpackbits(digests, axis=1).astype(np.int32) * 2 - 1  # (uniq, 64)
+    votes = np.add.reduceat(signs[inv], starts, axis=0)  # (docs, 64)
+    # bit i of the long = sign of vote i (little-endian bit order)
+    packed = np.packbits(votes > 0, axis=1, bitorder="little")
+    return pd.Series(np.ascontiguousarray(packed).view("<i8").ravel())
 
 
 def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    """Attach a 64-bit SimHash of the (distinct) token set — Arrow-batched,
-    map-only."""
+    """Attach the 64-bit SimHash of each text's tf-weighted tokens
+    (:func:`_simhash_of_text`) — Arrow-batched, map-only."""
     from polars_dataset_spark.session import ensure_parallelism
 
     return ensure_parallelism(df).withColumn(out_col, _simhash_of_text(F.col(text_col)))
@@ -655,18 +594,25 @@ def simhash_dedup(
     text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-dup removal by SimHash: :func:`banded_neardup_pairs` with
-    :func:`simhash` as the fingerprint (pigeonhole banding, recall
-    exactly 1, exact ``bit_count(a XOR b) <= k`` verify). Drops the
-    larger id of each pair."""
-    pairs = banded_neardup_pairs(
-        df,
-        lambda d, content_col, out_col: simhash(d, content_col, out_col),
-        id_col,
-        text_col,
-        max_hamming,
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    """Near-dup removal by :func:`simhash`: drops the larger id of each
+    pair within ``max_hamming`` bits. Pairs come from
+    :func:`hamming_band_pairs` (pigeonhole banding, recall exactly 1,
+    exact ``bit_count(a XOR b) <= k`` verify): shifts, masks and
+    ``bit_count`` on a long never overflow under ANSI mode, and for
+    ``max_hamming=3`` its four band keys are exactly the 16-bit chunks
+    q38's SQL oracle states."""
+    from polars_dataset_spark.session import ensure_parallelism
+
+    # only the signature pass needs the spread; the closing anti-join
+    # against the (small, pinned) losers reads the input as it is
+    sh = ensure_parallelism(df).select(
+        F.col(id_col), _simhash_of_text(F.col(text_col)).alias("__sig")
+    ).persist()
+    try:
+        pairs = hamming_band_pairs(sh, id_col=id_col, sig_col="__sig", max_hamming=max_hamming)
+        losers = pin(pairs.select(F.col("id_b").alias(id_col)).distinct(), eager=True)
+    finally:
+        sh.unpersist(blocking=False)
     return df.join(losers, on=id_col, how="left_anti")
 
 

@@ -40,10 +40,7 @@ Scale notes (100 TB / 1000-executor framing):
   bucket membership), so degree is bounded far below the 10^8-row
   single-task regime; a 10^7-degree residual hub is ~80 MB in one
   sorted-spill task, a straggler but not a failure, and it exists for
-  exactly one round before large-star shatters it. If your edge source
-  is raw (no upstream dedup), pass ``pre_contract=True`` — one salted
-  two-level-min + AQE-skew-splittable-join large-star round before the
-  window loop (the r9 docstring's prose escape hatch, now code).
+  exactly one round before large-star shatters it.
 - ``pin`` (eager) truncates lineage each round; without it the plan
   doubles per iteration and the optimizer re-walks ~2^rounds nodes.
   The pinned edges are not deduplicated (the next round's first
@@ -146,32 +143,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _large_star_salted(e: DataFrame, n_salt: int = 64) -> DataFrame:
-    """Skew-armored first large-star round for RAW edge sources
-    (``pre_contract=True``): per-center min via a salted two-level
-    aggregate (every reduce key bounded by deg/n_salt, on top of hash
-    agg's map-side partials), then a JOIN back — the form AQE can
-    skew-split at runtime, unlike a window sort. One round of this
-    shatters any hub (its neighbors re-key to the component min), after
-    which the cheaper window-min rounds run on bounded-degree edges.
-    Same contract as `_large_star`: canonical in, links (m, w) with
-    m < w out, duplicates left to the loop's first large-star."""
-    sym = e.selectExpr(_SYMMETRIC)
-    lvl1 = sym.groupBy(
-        "u", F.pmod(F.xxhash64("v"), F.lit(n_salt)).alias("__salt")
-    ).agg(F.min("v").alias("__v1"))
-    mins = (
-        lvl1.groupBy("u")
-        .agg(F.min("__v1").alias("__mn"))
-        .select("u", F.least(F.col("u"), F.col("__mn")).alias("__m"))
-    )
-    return (
-        sym.join(mins, on="u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("__m").alias("u"), F.col("v"))
-    )
-
-
 def _observed(obs: Observation, out: DataFrame) -> tuple[int, int]:
     """(distinct edges, star violations) of a round's input, read from the
     metrics its checkpoint job recorded. No metrics row comes back when
@@ -191,7 +162,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    pre_contract: bool = False,
 ) -> DataFrame:
     """Components of the undirected graph given as an edge list.
 
@@ -209,23 +179,11 @@ def connected_components(
     that confirms convergence, else ``RuntimeError``. With DEBUG on the
     ``polars_dataset_spark`` logger, each round logs its input's edge
     count and violating nodes (no extra job).
-
-    ``pre_contract=True``: run ONE salted two-level-min large-star
-    round (`_large_star_salted`) before the window-min loop — the
-    escape hatch for RAW edge sources whose degree distribution is
-    unbounded (no upstream exact-dedup / banded candidate generation):
-    a hub key that would be one giant sorted-spill window task instead
-    goes through an AQE-skew-splittable aggregate + join, and exists
-    for exactly that one round. Off by default: this engine's dedup
-    pipelines bound degree upstream, and the extra round costs a fixed
-    ~2 exchanges.
     """
     # One checkpoint per round: pairing two contractions per checkpoint
     # was tried and is a net LOSS (the unrolled plan doubles in depth and
     # Catalyst's planning cost grows superlinearly with plan size).
     e = _canonicalize(edges, id_a, id_b)
-    if pre_contract:
-        e = _large_star_salted(e)
     for rnd in range(1, max_iter + 2):
         obs = Observation()
         e = pin(_small_star(_large_star(e, obs)), eager=True)
@@ -318,7 +276,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """PageRank by power iteration — the crawl-prioritization score
     (Page et al. 1999; OPIC-style frontier ordering): rank mass flows
@@ -334,11 +291,9 @@ def pagerank(
     destination — shuffle ∝ |edges|, never node-quadratic; the
     dangling-mass term is a 1-row aggregate cross-joined back (the
     bounded broadcast class the plan audit allowlists: q124/q144/
-    q195). K is small and fixed (crawl ordering needs ~O(10) rounds);
-    ``checkpoint_every`` > 0 severs lineage every C rounds for long
-    runs (the connected_components precedent). Float note: round
-    downstream, not here — sum order across partitions is engine's
-    choice."""
+    q195). K is small and fixed (crawl ordering needs ~O(10) rounds).
+    Float note: round downstream, not here — sum order across
+    partitions is engine's choice."""
     from polars_dataset_spark.session import ensure_parallelism, pin
 
     if not 0.0 < damping < 1.0:
@@ -367,7 +322,7 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_total)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank"), "__n"
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             e.join(ranks.select("node", "rank"), e["src"] == F.col("node"), "inner")
             .join(outdeg, "src")
@@ -396,6 +351,4 @@ def pagerank(
                 "__n",
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = pin(ranks)
     return ranks.select("node", "rank")

@@ -627,25 +627,24 @@ def cosine_topk(
     probe_id: str = "vec_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k of every probe against the corpus.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k per probe,
     ties broken by neighbor id for determinism. Self-matches (same id) are
     excluded when probe and corpus ids share a namespace."""
-    p = probes.select(
-        F.col(probe_id).alias("query_id"),
-        F.col(vec_col).alias("__pv"),
-        _norm(vec_col).alias("__pn"),
+    p = F.broadcast(
+        probes.select(
+            F.col(probe_id).alias("query_id"),
+            F.col(vec_col).alias("__pv"),
+            _norm(vec_col).alias("__pn"),
+        )
     )
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         _norm(vec_col).alias("__cn"),
     )
-    if broadcast_probes:
-        p = F.broadcast(p)
     joined = p.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
     scored = joined.withColumn(
         "cosine", F.round(_dot("__pv", "__cv") / (F.col("__pn") * F.col("__cn")), 6)

@@ -376,7 +376,6 @@ def with_fingerprint(
     out_col: str = "fingerprint",
     modulus: int = 1_000_000_007,
     base: int = 31,
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Deterministic document fingerprint: polynomial rolling hash of the
     normalized (lowercased, whitespace-collapsed) character codes,
@@ -384,27 +383,13 @@ def with_fingerprint(
     value is reproducible in any engine (the DuckDB oracle computes it with
     the same recurrence).
 
-    ``impl="vectorized"`` (default): normalization stays JVM-side; the
-    recurrence is evaluated in an Arrow-batched pandas UDF as the
-    mathematically identical power sum ``Σ code_i·base^{n-i} mod m`` —
-    UTF-32 decode gives exact code points, numpy does the mod-arithmetic.
-    ~20× faster than ``impl="expr"`` (pure column expressions: Spark's
-    higher-order functions are interpreted per element, not codegen'd) and
-    bit-identical to it; the expr variant remains as the executable spec.
+    Normalization stays JVM-side; the recurrence is evaluated in an
+    Arrow-batched pandas UDF as the mathematically identical power sum
+    ``Σ code_i·base^{n-i} mod m``: UTF-32 decode gives exact code points,
+    numpy does the mod-arithmetic (Spark's higher-order functions would
+    interpret the recurrence per element, not codegen it).
     """
     norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    if impl == "expr":
-        codes = F.transform(
-            F.sequence(F.lit(1), F.length(norm)),
-            lambda i: F.ascii(F.substring(norm, i, 1)).cast("long"),
-        )
-        fp = F.aggregate(
-            codes,
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * F.lit(base) + c) % F.lit(modulus),
-        )
-        # F.sequence(1, 0) is descending — empty text hashes to 0 explicitly
-        return df.withColumn(out_col, F.when(F.length(norm) == 0, F.lit(0)).otherwise(fp))
 
     @F.pandas_udf(T.LongType())
     def poly_hash(texts: pd.Series) -> pd.Series:

@@ -36,6 +36,10 @@ from polars_dataset_spark.core import Dataset
 
 __all__ = ["join_asof"]
 
+# right sides up to this many rows are collected and broadcast; larger
+# ones take the union-sort path (the bound on the driver-side collect)
+_BROADCAST_LIMIT = 1_000_000
+
 
 def _numeric_key(df: DataFrame, name: str):
     """Order-preserving double key: timestamps/dates become epoch seconds
@@ -57,54 +61,36 @@ def join_asof(
     tolerance: float | None = None,
     right_on: str | None = None,
     suffix: str = "_right",
-    method: str = "auto",
-    broadcast_limit: int = 1_000_000,
 ) -> "Dataset | DataFrame":
     """As-of join ``left`` with ``right`` on key ``on`` (``right_on`` if the
     right key is named differently), per ``by`` group, ``backward``,
     ``forward`` or ``nearest``, optionally within ``tolerance`` (in key
     units; timestamps compare as epoch seconds).
 
-    ``method``:
+    The physical path follows the right side's size, probed by a bounded
+    collect (``limit(_BROADCAST_LIMIT + 1)``):
 
-    - ``"auto"`` (default): probe the right side with a bounded collect
-      (``limit(broadcast_limit + 1)``); if it fits, take the broadcast
-      path, else fall back to ``"sort"``. An as-of right side is almost
-      always reference data or a pre-aggregation, so at 100 TB this keeps
-      the common case map-only instead of a global sort — without the
-      caller having to know the right side's size.
-    - ``"sort"``: the union-sort realization described above — both sides
-      arbitrarily large, one shuffle on ``by``. NOTE: with no ``by`` this
-      is a single-partition global sort over |L|+|R| rows; prefer ``auto``.
-    - ``"broadcast"``: collect + broadcast the RIGHT side and answer each
-      left row by binary search (``np.searchsorted``) inside
-      ``mapInPandas`` — MAP-ONLY: no shuffle, no sort, left side any size.
-      The scale path whenever the right side fits in executor memory
-      (reference-data / aggregated-dimension joins, the overwhelmingly
-      common case); also the only method that avoids a single-partition
-      global sort when ``by`` is empty. Raises when the right side
-      exceeds ``broadcast_limit`` rows (driver-OOM guard) — pass
-      ``method="sort"`` for a genuinely large right side.
+    - it fits: collect + broadcast the RIGHT side and answer each left
+      row by binary search (``np.searchsorted``) inside ``mapInPandas``
+      — MAP-ONLY: no shuffle, no sort, left side any size. An as-of right
+      side is almost always reference data or a pre-aggregation, so at
+      100 TB this keeps the common case map-only, and it is the only
+      path that avoids a single-partition global sort when ``by`` is
+      empty;
+    - it does not: the union-sort realization described above — both
+      sides arbitrarily large, one shuffle on ``by``. With no ``by`` this
+      is a single-partition global sort over |L|+|R| rows.
     """
     if strategy not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"strategy must be 'backward', 'forward' or 'nearest', got {strategy!r}"
         )
-    if method not in ("auto", "sort", "broadcast"):
-        raise ValueError(f"method must be 'auto', 'sort' or 'broadcast', got {method!r}")
-    if method in ("auto", "broadcast"):
-        rp = _collect_right(right, on, by, right_on, broadcast_limit)
-        if rp is not None:
-            return _join_asof_broadcast(
-                left, right, on, by=by, strategy=strategy, tolerance=tolerance,
-                right_on=right_on, suffix=suffix, right_pdf=rp,
-            )
-        if method == "broadcast":
-            raise ValueError(
-                f"join_asof(method='broadcast'): right side exceeds "
-                f"broadcast_limit={broadcast_limit} rows; use method='sort' "
-                f"(shuffle-based, both sides arbitrarily large) or raise the limit"
-            )
+    rp = _collect_right(right, on, by, right_on)
+    if rp is not None:
+        return _join_asof_broadcast(
+            left, right, rp, on, by=by, strategy=strategy, tolerance=tolerance,
+            right_on=right_on, suffix=suffix,
+        )
     was_dataset = isinstance(left, Dataset)
     ldf = left.df if isinstance(left, Dataset) else left
     rdf = right.df if isinstance(right, Dataset) else right
@@ -194,22 +180,22 @@ def join_asof(
     return out
 
 
-def _collect_right(right, on: str, by, right_on: str | None, limit: int):
+def _collect_right(right, on: str, by, right_on: str | None):
     """Bounded collect of the as-of right side: select only (by, key,
-    payload), take ``limit + 1`` rows, sort driver-side. Returns the sorted
-    pandas frame, or ``None`` when the right side exceeds ``limit`` (the
-    caller decides: fall back to the shuffle path, or raise). The limit is
-    applied BEFORE any ordering so the probe never pays a global sort."""
+    payload), take ``_BROADCAST_LIMIT + 1`` rows, sort driver-side.
+    Returns the sorted pandas frame, or ``None`` when the right side
+    exceeds the limit. The limit is applied BEFORE any ordering so the
+    probe never pays a global sort."""
     rdf = right.df if isinstance(right, Dataset) else right
     r_on = right_on or on
     by = [by] if isinstance(by, str) else list(by or [])
     payload = [c for c in rdf.columns if c != r_on and c not in by]
     rp = (
         rdf.select(*by, _numeric_key(rdf, r_on).alias("__k"), *payload)
-        .limit(limit + 1)
+        .limit(_BROADCAST_LIMIT + 1)
         .toPandas()
     )
-    if len(rp) > limit:
+    if len(rp) > _BROADCAST_LIMIT:
         return None
     return rp.sort_values([*by, "__k"], ignore_index=True, kind="mergesort")
 
@@ -217,16 +203,17 @@ def _collect_right(right, on: str, by, right_on: str | None, limit: int):
 def _join_asof_broadcast(
     left,
     right,
+    rp,
     on: str,
     by=None,
     strategy: str = "backward",
     tolerance: float | None = None,
     right_on: str | None = None,
     suffix: str = "_right",
-    right_pdf=None,
 ):
-    """Broadcast binary-search as-of join (see :func:`join_asof`,
-    ``method="broadcast"``)."""
+    """Broadcast binary-search as-of join (see :func:`join_asof`) of
+    ``left`` against ``rp``, the right side collected by
+    :func:`_collect_right`."""
     from pyspark.sql import types as T
 
     was_dataset = isinstance(left, Dataset)
@@ -240,14 +227,6 @@ def _join_asof_broadcast(
     # NB: not getActiveSession() — that is thread-local and None when the
     # caller runs in a worker thread (e.g. a concurrent benchmark driver)
     spark = ldf.sparkSession
-    if right_pdf is not None:
-        rp = right_pdf
-    else:
-        rp = (
-            rdf.select(*by, _numeric_key(rdf, r_on).alias("__k"), *payload)
-            .orderBy(*by, "__k")
-            .toPandas()
-        )
     # per-by-group sorted key arrays + aligned payload arrays
     groups: dict = {}
     if by:
@@ -262,10 +241,6 @@ def _join_asof_broadcast(
         T.StructField(renames[c], rdf.schema[c].dataType, True) for c in payload
     ]
     out_schema = T.StructType(out_fields)
-    if strategy not in ("backward", "forward", "nearest"):
-        raise ValueError(
-            f"strategy must be 'backward', 'forward' or 'nearest', got {strategy!r}"
-        )
 
     keyed = ldf.withColumn("__k", _numeric_key(ldf, on))
 

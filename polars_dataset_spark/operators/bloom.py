@@ -15,9 +15,13 @@ builds the equivalent structure from public primitives):
    the word table (≤ m/64 rows — a 2²⁴-bit filter is 2 MiB) and keeps
    rows whose bit is set. Map-side only: the huge side has not shuffled
    yet.
-3. The surviving rows (true matches + ~``2^-bits_per_key``·16/ln2 false
-   positives) flow into the EXACT join, so results are identical to the
-   plain join — the bitset only prunes.
+3. The surviving rows flow into the EXACT join, so results are
+   identical to the plain join — the bitset only prunes. With one hash
+   per key and ``m ≥ 16·n`` bits for ``n`` distinct build keys, a
+   non-matching probe key survives with probability
+   ``1 − e^(−n/m) ≤ 1 − e^(−1/16) ≈ 6%``; past
+   ``_MAX_BITS / _BITS_PER_KEY`` keys the bitset stops growing and the
+   rate rises with ``n``.
 
 At 100 TB this is the difference between shuffling the full fact table
 and shuffling only the fraction that can possibly match — the same
@@ -33,6 +37,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["bitset_prefilter_join"]
 
+_BITS_PER_KEY = 16
+# 2^27 bits = 16 MiB of broadcast words
+_MAX_BITS = 1 << 27
+
 
 def _next_pow2(n: int) -> int:
     p = 1
@@ -46,8 +54,6 @@ def bitset_prefilter_join(
     build: DataFrame,
     on: str,
     how: str = "left_semi",
-    bits_per_key: int = 16,
-    max_bits: int = 1 << 27,
 ) -> DataFrame:
     """Join ``probe`` with ``build`` on column ``on``, pre-filtering the
     probe side through a distributed bitset of the build keys.
@@ -65,7 +71,7 @@ def bitset_prefilter_join(
         )
     how = "left_semi" if how == "semi" else how
     n = build.select(on).distinct().count()
-    m = min(_next_pow2(max(n, 1) * bits_per_key), max_bits)
+    m = min(_next_pow2(max(n, 1) * _BITS_PER_KEY), _MAX_BITS)
     bucket = F.pmod(F.xxhash64(F.col(on)), F.lit(m))
     # the Python shiftleft/shiftright wrappers take only literal shift
     # amounts; the SQL forms accept a column (still whole-stage codegen)

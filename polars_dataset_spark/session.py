@@ -34,23 +34,22 @@ def _host_driver_mem() -> str:
     return f"{max(1024, phys // 2 >> 20)}m"
 
 
-def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "polars_dataset_spark") -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
-    spark = _builder(app_name, shuffle_partitions).getOrCreate()
+    spark = _builder(app_name).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _share_package_path(spark)
     return spark
 
 
-def _builder(app_name: str, shuffle_partitions: int | None = None) -> "SparkSession.Builder":
+def _builder(app_name: str) -> "SparkSession.Builder":
     """:func:`get_spark`'s builder, for a caller adding static confs."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else _host_cpus()
+    parts = int(cpus) if cpus.isdigit() else _host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(parts))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -163,7 +162,7 @@ def unpin(df) -> None:
     plan.rdd().unpersist(False)
 
 
-def ensure_parallelism(df, min_parts: int | None = None):
+def ensure_parallelism(df):
     """Round-robin repartition a DataFrame whose plan currently yields
     fewer partitions than the session's core count — used by operators
     whose next stage does heavy per-row work OUTSIDE a shuffle (Arrow
@@ -177,8 +176,7 @@ def ensure_parallelism(df, min_parts: int | None = None):
     raw bytes and buys full map-side parallelism. Cheap-expression
     pipelines should NOT call this — for them the shuffle outweighs the
     map work."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

@@ -28,6 +28,7 @@ oracle SQL — enforced by tests/test_oracle_types.py.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -65,11 +66,20 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 def query(name: str, oracle: str | None = None):
+    """Register the decorated query as ``QUERIES[name]`` (and its DuckDB
+    twin as ``ORACLES[name]``); every call applies :func:`_prep` to the
+    session first."""
+
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _prep(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = run
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return run
 
     return deco
 
@@ -119,7 +129,6 @@ def q01(spark, sf_dir):
     """TPC-H Q1 shape: the groupBy-agg core (E2 delegation + hash agg).
     Catalyst plans partial+final hash aggregation; the only shuffle is on
     the two grouping keys."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
     # 2-dp money sums accumulate exactly (exact_sum) and round in decimal:
     # a double sum's order-dependent random-walk error reaches ~0.04 at
@@ -160,7 +169,6 @@ def q01(spark, sf_dir):
 def q02(spark, sf_dir):
     """Filter + projection (E3/E4): predicates push to the parquet scan
     (PushedFilters), projection prunes columns (ReadSchema)."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
     out = ds.filter(
         F.col("l_quantity").between(5, 25), F.col("l_discount") > 0.02
@@ -186,7 +194,6 @@ def q02(spark, sf_dir):
 )
 def q03(spark, sf_dir):
     """Equi-join + aggregate (E7): Catalyst/AQE picks the physical join."""
-    _prep(spark)
     li = _lineitem_ds(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     joined = li.join(orders, left_on="l_orderkey", right_on="o_orderkey", how="inner")
@@ -207,7 +214,6 @@ def q03(spark, sf_dir):
 )
 def q04(spark, sf_dir):
     """Semi join (polars how='semi' → Spark left_semi)."""
-    _prep(spark)
     orders = Dataset(load_table(spark, sf_dir, "orders"), index="o_orderdate", id_vars=["o_orderstatus"])
     big = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 49)
     out = orders.join(big, left_on="o_orderkey", right_on="l_orderkey", how="semi")
@@ -223,7 +229,6 @@ def q04(spark, sf_dir):
 )
 def q05(spark, sf_dir):
     """Anti join (polars how='anti' → Spark left_anti)."""
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return cust.join(
@@ -250,7 +255,6 @@ def q06(spark, sf_dir):
     explicitly broadcast (they are small by schema design), so the fact
     table never shuffles — the plan is a chain of BroadcastHashJoins plus
     one final agg exchange. This is the 100 TB-safe shape."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -283,7 +287,6 @@ def q06(spark, sf_dir):
 def q07(spark, sf_dir):
     """Pivot (E6): supplying ``values`` up front avoids the distinct-
     discovery job — the whole pivot is one hash aggregation."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir).select(
         "l_returnflag", "l_linestatus", "l_shipdate", "l_quantity"
     )
@@ -305,7 +308,6 @@ def q07(spark, sf_dir):
 )
 def q08(spark, sf_dir):
     """Unpivot/melt (delegated surface): wide → long."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
@@ -343,7 +345,6 @@ _TRACE_ORDER_COLS = (
 def q09(spark, sf_dir):
     """Per-trace cumulative sum — the idiomatic id_vars/index window op
     this data model exists for (SURVEY §2.3 windows)."""
-    _prep(spark)
     w = (
         Window.partitionBy("l_returnflag", "l_linestatus")
         .orderBy(*_TRACE_ORDER_COLS)
@@ -368,7 +369,6 @@ def q09(spark, sf_dir):
 )
 def q10(spark, sf_dir):
     """Per-trace first difference (shift/diff via lag)."""
-    _prep(spark)
     w = Window.partitionBy("l_returnflag", "l_linestatus").orderBy(*_TRACE_ORDER_COLS)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
@@ -389,7 +389,6 @@ def q10(spark, sf_dir):
 )
 def q11(spark, sf_dir):
     """Rolling mean over a 7-row trace window."""
-    _prep(spark)
     w = (
         Window.partitionBy("l_returnflag", "l_linestatus")
         .orderBy(*_TRACE_ORDER_COLS)
@@ -414,7 +413,6 @@ def q11(spark, sf_dir):
 )
 def q12(spark, sf_dir):
     """Ranking windows (rank / dense_rank)."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     return o.select(
@@ -434,7 +432,6 @@ def q12(spark, sf_dir):
 def q13(spark, sf_dir):
     """Top-k (E: top_k → orderBy+limit): Catalyst plans
     TakeOrderedAndProject — per-partition heaps, no global sort."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey")).limit(10).select(
         "o_orderkey", "o_totalprice"
@@ -447,7 +444,6 @@ def q13(spark, sf_dir):
 )
 def q14(spark, sf_dir):
     """Distinct coordinate values (E16, sorted-coordinate variant)."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
     coord = ds.coord("l_shipdate", maintain_order=False)
     return coord.select(F.date_format("l_shipdate", TS_FMT_SPARK).alias("ship_s"))
@@ -463,7 +459,6 @@ def q14(spark, sf_dir):
 )
 def q15(spark, sf_dir):
     """Global aggregate row (E17 extrema generalized)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.min("l_quantity").alias("min_qty"),
@@ -479,7 +474,6 @@ def q15(spark, sf_dir):
 )
 def q16(spark, sf_dir):
     """Distinct rows over a subset (unique/dropDuplicates)."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
     return ds.fetch("l_returnflag", "l_linestatus").distinct()
 
@@ -495,7 +489,6 @@ def q16(spark, sf_dir):
 )
 def q17(spark, sf_dir):
     """Exact median / interpolated quantiles (delegated agg surface)."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.round(F.median("o_totalprice"), 4).alias("med_price"),
@@ -518,7 +511,6 @@ def q17(spark, sf_dir):
 def q18(spark, sf_dir):
     """NaN-vs-null duality (E20 drop_nan): IEEE NaN rows filtered, nulls
     untouched — the polars semantics mapped onto F.isnan."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(
         li.select(
@@ -543,7 +535,6 @@ def q18(spark, sf_dir):
 )
 def q19(spark, sf_dir):
     """Null handling (fill_null/fillna)."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     ds = Dataset(
         o.select(
@@ -566,7 +557,6 @@ def q19(spark, sf_dir):
 def q20(spark, sf_dir):
     """with_row_index: Spark has no implicit row order, so the index is
     defined over an explicit (id_vars, index) ordering."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     ds = Dataset(o.select("o_orderkey"), index="o_orderkey")
     return ds.with_row_index("rn").fetch("o_orderkey", "rn")
@@ -585,7 +575,6 @@ def q20(spark, sf_dir):
 def q21(spark, sf_dir):
     """Diagonal concat (pl.concat(how='diagonal') →
     unionByName(allowMissingColumns=True))."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select(
         F.col("l_orderkey").alias("k"), F.col("l_quantity").alias("qty")
@@ -609,13 +598,12 @@ def q21(spark, sf_dir):
     """,
 )
 def q22(spark, sf_dir):
-    """As-of join (polars join_asof, backward). method='auto' probes the
+    """As-of join (polars join_asof, backward). join_asof probes the
     right side and — here, a small pre-aggregation — takes the broadcast
     binary-search path: MAP-ONLY over the left side, no shuffle, and in
     particular no single-partition global sort (which is what the
     union-sort realization degrades to when `by` is empty). The right
     side is pre-aggregated per key so ties are deterministic."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate"
     )
@@ -644,7 +632,6 @@ def q22(spark, sf_dir):
 def q23(spark, sf_dir):
     """Struct build → unnest round-trip (E13/E14): pure projections that
     Catalyst collapses — the flattened output equals the plain projection."""
-    _prep(spark)
     from polars_dataset_spark.operators import rebuild_structs, unnest_structs
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -685,7 +672,6 @@ def q23(spark, sf_dir):
 def q24(spark, sf_dir):
     """Tumbling event-time window aggregation — the batch twin of the
     streaming plan (same code path runs on readStream + watermark)."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     out = windowed_agg(ev, window="1 hour")
     return out.select(
@@ -718,7 +704,6 @@ def q24(spark, sf_dir):
 )
 def q25(spark, sf_dir):
     """Batch sessionization (lag + cumsum gap-break), 30-minute gap."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     out = sessionize_batch(ev, gap_seconds=1800)
     return out.select(
@@ -753,7 +738,6 @@ def q25(spark, sf_dir):
 def q26(spark, sf_dir):
     """F.session_window semantics (end = last event + gap): the native
     Structured-Streaming session operator run in batch mode."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     out = session_agg(ev, gap="30 minutes")
     return out.select(
@@ -776,7 +760,6 @@ def q26(spark, sf_dir):
 )
 def q27(spark, sf_dir):
     """Semi-structured access: JSON property extraction + aggregate."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.avg(F.get_json_object("props", "$.k").cast("long")), 4).alias("avg_k"),
@@ -805,7 +788,6 @@ def q27(spark, sf_dir):
 )
 def q28(spark, sf_dir):
     """Token counting + quality stats: pure codegen'd expressions."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = with_text_stats(docs)
     return out.select(
@@ -842,7 +824,6 @@ def _duck_langid_sql() -> str:
 def q29(spark, sf_dir):
     """Language identification (stopword-hit heuristic), counts per
     detected language."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.trim("text") != "")
     out = with_language_id(docs)
     return out.groupBy("lang_pred").agg(F.count("*").alias("n"))
@@ -875,7 +856,6 @@ def q29(spark, sf_dir):
 )
 def q30(spark, sf_dir):
     """Heuristic quality scoring, aggregated per source."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = with_quality_score(docs)
     return out.groupBy("source").agg(
@@ -901,7 +881,6 @@ def q30(spark, sf_dir):
 )
 def q31(spark, sf_dir):
     """Document fingerprint: engine-reproducible polynomial rolling hash."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     return with_fingerprint(docs).select("doc_id", "fingerprint")
 
@@ -916,7 +895,6 @@ def q31(spark, sf_dir):
 )
 def q32(spark, sf_dir):
     """Exact dedup: representative (min id) per normalized text."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     return (
@@ -938,7 +916,6 @@ def q32(spark, sf_dir):
 def q33(spark, sf_dir):
     """Multimodal column shape: opaque binary payload + typed metadata
     (size, content hash) — all JVM-side."""
-    _prep(spark)
     from polars_dataset_spark.functions import binary_with_metadata
 
     docs = load_table(spark, sf_dir, "documents")
@@ -968,7 +945,6 @@ def q33(spark, sf_dir):
 )
 def q34(spark, sf_dir):
     """Exact brute-force cosine top-k — the ANN correctness baseline."""
-    _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
     return cosine_topk(probes, emb, k=5)
@@ -995,7 +971,6 @@ def q35(spark, sf_dir):
     (BLAS), ~20× faster than expression-based pairwise dot products.
     Threshold tuned to the fixture's random-vector similarity range so
     the result set is non-trivial."""
-    _prep(spark)
     from polars_dataset_spark.functions import cosine_pairs_block
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1057,7 +1032,6 @@ def q36(spark, sf_dir):
     candidate generation + exact verify. The seeded hyperplanes are inlined
     in the oracle as literals, so the WHOLE algorithm — bucket collisions
     included — is driver-checked, not just executed."""
-    _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup(emb, threshold=0.32, planes=8)
 
@@ -1131,7 +1105,6 @@ def q37(spark, sf_dir):
     LSH output ⊆ exact set always, and on this fixture the near-dups sit
     far above the banding s-curve (64 hashes / 16 bands), so recall is 1
     and the sets coincide — checked as full equality."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_candidates(docs, threshold=0.6)
 
@@ -1192,11 +1165,8 @@ def q38(spark, sf_dir):
     banding at all — pigeonhole blocking has recall exactly 1 for
     hamming <= k, so the brute-force O(n²) pair set the oracle computes
     IS the operator's pair set."""
-    _prep(spark)
-    from polars_dataset_spark.functions import simhash_dedup_portable
-
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_dedup_portable(docs, max_hamming=3).select("doc_id", "source", "lang")
+    return simhash_dedup(docs, max_hamming=3).select("doc_id", "source", "lang")
 
 
 @query(
@@ -1232,7 +1202,6 @@ def q39(spark, sf_dir):
     Oracle replays the full algorithm in SQL: literal seeded hyperplanes,
     the same 93 multi-probe bucket flips, exact re-rank inside the
     candidate set — so the approximation itself is driver-checked."""
-    _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
     return lsh_bucketed_topk(probes, emb, k=5)
@@ -1299,7 +1268,6 @@ def q40(spark, sf_dir):
     shuffle, kernel solve, grid contract — is driver-checked against the
     raw daily aggregation. The uniform-grid interpolating variant (points
     OFF the knots) is q76."""
-    _prep(spark)
     import numpy as np
 
     # one materialized rollup, two consumers (common-day probe + regrid)
@@ -1358,7 +1326,6 @@ def q41(spark, sf_dir):
     the FFT kernel, per-trace grouping, frequency axis and spectra are all
     value-checked. The spline-regrid→FFT composition (no SQL twin) is
     q77. `+ 0.0` normalizes -0.0 across engines."""
-    _prep(spark)
     import numpy as np
 
     # one materialized rollup, two consumers (common-day probe + DFT input)
@@ -1410,7 +1377,6 @@ def q41(spark, sf_dir):
 def q42(spark, sf_dir):
     """Autophase (H2): closed-form global phase from three distributed
     second moments, then a plain column rotation — no iterative fit."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(
         li.select("l_orderkey", "l_linenumber", "l_shipdate", "l_discount", "l_tax"),
@@ -1442,7 +1408,6 @@ def q42(spark, sf_dir):
 )
 def q43(spark, sf_dir):
     """explode (list namespace): token frequency via explode(split(...))."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.trim("text") != "")
     toks = docs.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
@@ -1466,7 +1431,6 @@ def q43(spark, sf_dir):
 def q44(spark, sf_dir):
     """str.* namespace parity: upper/length/contains/replace/substr/
     starts_with as built-in codegen'd expressions."""
-    _prep(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -1494,7 +1458,6 @@ def q44(spark, sf_dir):
 def q45(spark, sf_dir):
     """dt.* namespace parity: year/month/dow/truncate/offset. Spark dayofweek
     is 1=Sunday; duckdb dow is 0=Sunday — aligned by subtraction."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -1514,7 +1477,6 @@ def q45(spark, sf_dir):
 )
 def q46(spark, sf_dir):
     """Cross join (polars how='cross')."""
-    _prep(spark)
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -1532,7 +1494,6 @@ def q47(spark, sf_dir):
     """Theta/inequality join (polars join_where): equi-key plus inequality
     residual — Catalyst keeps the hash join on the equi part and applies
     the inequality as a post-filter (no nested-loop blowup)."""
-    _prep(spark)
     s = load_table(spark, sf_dir, "supplier")
     c = load_table(spark, sf_dir, "customer")
     return s.join(
@@ -1552,7 +1513,6 @@ def q47(spark, sf_dir):
 def q48(spark, sf_dir):
     """Set ops (intersect — native in Spark, expressible as semi join in
     polars)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select("l_orderkey")
     r = li.filter(F.col("l_returnflag") == "R").select("l_orderkey")
@@ -1570,7 +1530,6 @@ def q48(spark, sf_dir):
 )
 def q49(spark, sf_dir):
     """Multiple exact distinct aggregates in one pass (n_unique)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.countDistinct("l_orderkey").alias("d_orders"),
@@ -1590,7 +1549,6 @@ def q49(spark, sf_dir):
 def q50(spark, sf_dir):
     """Cube (multidimensional agg — free in Spark, beyond the polars
     surface; SURVEY §2.3 notes it as available)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count("*").alias("n")
@@ -1609,7 +1567,6 @@ def q50(spark, sf_dir):
 )
 def q51(spark, sf_dir):
     """Conditional expressions (when/otherwise) + agg."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 1000, "small")
@@ -1632,7 +1589,6 @@ def q51(spark, sf_dir):
 def q52(spark, sf_dir):
     """implode/collect_list parity: per-group sorted distinct list,
     emitted as a joined string for engine-neutral comparison."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.array_join(F.array_sort(F.collect_set("l_linestatus")), ",").alias("statuses")
@@ -1652,7 +1608,6 @@ def q52(spark, sf_dir):
 )
 def q53(spark, sf_dir):
     """Distribution windows: ntile / percent_rank / cume_dist."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     return o.select(
@@ -1690,7 +1645,6 @@ def q54(spark, sf_dir):
     the ordered unbounded frame ARE the quantities at the min/max order
     key — and DISTINCT over per-trace-constant columns is one row per
     trace, exactly the groupBy output."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     key = F.struct(*[F.col(c) for c in _TRACE_ORDER_COLS])
     return li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -1715,7 +1669,6 @@ def q55(spark, sf_dir):
     §7 hard-parts #2). Routed through Dataset.slice, which rides the
     two-pass distributed prefix sum — no single-partition window even
     when the input is large enough to need an exchange."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders")
     ds = Dataset(o.select("o_orderkey", "o_totalprice"), index="o_orderkey")
     return ds.slice(100, 20).fetch("o_orderkey", "o_totalprice")
@@ -1731,7 +1684,6 @@ def q55(spark, sf_dir):
 )
 def q56(spark, sf_dir):
     """Regex extraction (str.extract)."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.filter(F.col("props").isNotNull()).select(
         "event_id", F.regexp_extract("props", r'"k": (\d+)', 1).alias("k_str")
@@ -1749,7 +1701,6 @@ def q56(spark, sf_dir):
 def q57(spark, sf_dir):
     """BPE-ish token counting (LLM-token budget proxy): identical RE2
     pattern evaluated by both engines."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_token_count
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1798,7 +1749,6 @@ def q58(spark, sf_dir):
     3-cell probing, in-cell exact cosine rank — replays exactly in SQL;
     production use omits ``centroids`` and gets the sampled-KMeans
     quantizer (same plan shape, driver-trained on a bounded sample)."""
-    _prep(spark)
     from polars_dataset_spark.functions import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1822,7 +1772,6 @@ def q58(spark, sf_dir):
 def q59(spark, sf_dir):
     """Dynamic group-by (polars ``group_by_dynamic``): tumbling numeric-
     index buckets per trace, one hash aggregation."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(li, index="l_quantity", id_vars=["l_returnflag", "l_linestatus"])
     return (
@@ -1848,7 +1797,6 @@ def q61(spark, sf_dir):
     inherently O(|S|·|C|) work but no shuffle; the selective predicate
     keeps output small. At scale: add any equi conjunct (see q47) or
     bucketize the range key to regain a hash join."""
-    _prep(spark)
     s = load_table(spark, sf_dir, "supplier")
     c = load_table(spark, sf_dir, "customer")
     return s.join(c, s["s_acctbal"] < c["c_acctbal"] - 9000).select(
@@ -1871,7 +1819,6 @@ def q61(spark, sf_dir):
 def q62(spark, sf_dir):
     """fill_nan (the complement of q18's drop_nan): NaN → 0 replacement,
     nulls untouched — polars NaN/null duality again."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(
         li.select(
@@ -1971,7 +1918,6 @@ def q60(spark, sf_dir):
     q29/q30/q32/q57; the fuzzy stage via the exact-Jaccard pair set,
     recall-1 on this fixture per q37's argument) — so stage ORDERING and
     interaction are value-checked, not just each stage alone."""
-    _prep(spark)
     from polars_dataset_spark.functions import clean_corpus
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1995,7 +1941,6 @@ def q63(spark, sf_dir):
     for naive propagation), so every node's true component is its
     group minimum, which the oracle states directly while the Spark
     side actually runs the iterative contraction."""
-    _prep(spark)
     from polars_dataset_spark.functions import chain_edges, connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2039,7 +1984,6 @@ def q64(spark, sf_dir):
     (recall 1 on this fixture, same argument as q37) closed transitively
     with a recursive CTE — so the LSH+CC composition is value-checked
     end-to-end, not just its stages."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         dedup_by_components,
         minhash_lsh_candidates,
@@ -2064,7 +2008,6 @@ def q65(spark, sf_dir):
     orders replicated per salt, joined on (key, salt) — value-matched
     against the plain equi-join, proving the salt never changes the
     result, only the shuffle distribution."""
-    _prep(spark)
     from polars_dataset_spark.operators import salted_join
 
     li = load_table(spark, sf_dir, "lineitem").withColumnRenamed(
@@ -2097,7 +2040,6 @@ def q66(spark, sf_dir):
     engine-portable capped data-mixing draw. Value-matched because both
     engines compute the identical md5 hex, so they pick the identical
     rows."""
-    _prep(spark)
     from polars_dataset_spark.functions import stratified_sample
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2119,7 +2061,6 @@ def q67(spark, sf_dir):
     state): fraction 0.1 → 60-bit threshold 0.1·16^15 = 0x19999…, which
     the oracle states as a fixed-length hex-string compare — the same
     set either way."""
-    _prep(spark)
     from polars_dataset_spark.functions import hash_sample
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2143,7 +2084,6 @@ def q68(spark, sf_dir):
     assignment for pretraining — per-lang streams ordered by doc_id,
     4096-token budget, each doc gets its window index and offset from
     one prefix sum (exact-integer value match)."""
-    _prep(spark)
     from polars_dataset_spark.functions import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2171,7 +2111,6 @@ def q69(spark, sf_dir):
     within-partition windows, functions/packing._global_prefix_sum) —
     value-matching proves the scale path computes the identical global
     running total with no single-reducer stage."""
-    _prep(spark)
     from polars_dataset_spark.functions import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2198,7 +2137,6 @@ def q70(spark, sf_dir):
     bucketing the time axis at the max window length turns it into an
     equi hash join on the bucket (each pair meets in exactly one bucket,
     so no dedup) — value-matched against DuckDB's plain theta join."""
-    _prep(spark)
     from polars_dataset_spark.operators import range_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -2228,7 +2166,6 @@ def q71(spark, sf_dir):
     suppression with state EVICTED past the watermark, the only dedup
     that stays bounded on an unbounded stream; parity with this batch
     plan is pinned in tests/test_streaming.py."""
-    _prep(spark)
     from polars_dataset_spark.streaming import stream_dedup
 
     ev = load_table(spark, sf_dir, "events")
@@ -2261,7 +2198,6 @@ def q72(spark, sf_dir):
     lesson) — the r10 sampled sf10 sweep caught this query's double
     random-walk error crossing the 2-dp rounding unit at a 10 M-row
     window partition (0.04 at ~6.4e10)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     keys = ["l_returnflag", "l_linestatus"]
     # Two-level realization (guide §2.3 "aggregate before you shuffle" /
@@ -2311,7 +2247,6 @@ def q73(spark, sf_dir):
     recipe as one map-only CASE threshold on the id hash. 0.4·16^15 =
     0x6666…6 (15 digits), 0.1·16^15 = 0x19999…9; the src1 threshold
     exceeds any 15-digit hash, keeping all."""
-    _prep(spark)
     from polars_dataset_spark.functions import hash_sample_by
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2335,7 +2270,6 @@ def q74(spark, sf_dir):
     status), per flag, and grand total in ONE pass — Catalyst expands
     grouping sets into a single Expand + hash aggregate, not three
     scans."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -2365,7 +2299,6 @@ def q75(spark, sf_dir):
     rank inside each partition, keep k — one shuffle on the group key,
     per-partition heap via the window sort; the id tiebreak makes the
     cut deterministic in both engines."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -2410,7 +2343,6 @@ def q76(spark, sf_dir):
     overshoot reaches ~1× the range, while a broken kernel or accidental
     extrapolation blows far past 3×. Off-knot numerics are pinned by
     pytest/hypothesis on the kernel."""
-    _prep(spark)
     import numpy as np
 
     # Materialize the daily aggregate ONCE: four downstream consumers
@@ -2491,7 +2423,6 @@ def q77(spark, sf_dir):
     DC 0.0; the DC and Nyquist bins of a real-input rFFT are purely real;
     and the DC bin's real part equals the plain sum of the interpolated
     samples (FFT-vs-direct-sum cross-check)."""
-    _prep(spark)
     import numpy as np
 
     # one materialized rollup (span probe + regrid input), and the regrid
@@ -2559,7 +2490,6 @@ def q78(spark, sf_dir):
     n/accuracy. The sketch's picked VALUE is engine-specific, so the
     driver-checked contract is the guarantee itself: each returned value's
     true rank interval must overlap [⌊(p−ε)n⌋, ⌈(p+ε)n⌉]."""
-    _prep(spark)
     import math
 
     o = load_table(spark, sf_dir, "orders")
@@ -2600,7 +2530,6 @@ def q79(spark, sf_dir):
     the sort key — realized as union + one shuffle-sort (Spark has no
     order-preserving merge primitive; pre-sortedness is a physical
     property Catalyst re-derives, not an API input)."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     even = Dataset(od.filter(F.col("o_orderkey") % 2 == 0), index="o_orderkey")
     odd = od.filter(F.col("o_orderkey") % 2 == 1)
@@ -2632,7 +2561,6 @@ def q80(spark, sf_dir):
     6.2 s CPU across 5 single-core tasks at sf0.1); the chunked pass
     range-partitions on (trace, index) with an overlap carry, so
     parallelism scales with the cluster (guide §2.6)."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     ds = Dataset(
         od.select("o_orderkey", "o_orderpriority", "o_totalprice"),
@@ -2665,7 +2593,6 @@ def q81(spark, sf_dir):
     TakeOrderedAndProject (per-partition top-n, merge), so no global sort
     materializes; md5 is bit-identical in Spark and DuckDB, which is what
     makes an exact-sample oracle possible at all."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     ds = Dataset(od, index="o_orderkey")
     return ds.sample(n=100, seed=7).df.select("o_orderkey", "o_totalprice")
@@ -2703,7 +2630,6 @@ def q82(spark, sf_dir):
     interpolation against the index within each trace; leading/trailing
     nulls stay null. Pure window expressions (prev/next known value+index
     via ignorenulls frames) — no Python, one shuffle on the trace key."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     sel = od.select(
         "o_orderkey",
@@ -2736,7 +2662,6 @@ def q82(spark, sf_dir):
 def q83(spark, sf_dir):
     """polars ``cut``: fixed-break binning as one map-only CASE chain
     (labels match polars' interval spelling), then a count per bin."""
-    _prep(spark)
     ds = _lineitem_ds(spark, sf_dir)
     binned = ds.cut("l_quantity", [10, 25, 40], out_col="bin")
     return binned.df.groupBy("bin").agg(F.count("*").alias("n"))
@@ -2750,7 +2675,6 @@ def q83(spark, sf_dir):
 )
 def q84(spark, sf_dir):
     """polars ``value_counts``: frequency table of one column."""
-    _prep(spark)
     od = load_table(spark, sf_dir, "orders")
     return Dataset(od, index="o_orderkey").value_counts("o_orderpriority")
 
@@ -2776,7 +2700,6 @@ def q85(spark, sf_dir):
     """List namespace parity (polars ``.list.*`` → Spark array functions):
     size / element access / membership / lambda filter, all JVM-side
     expressions over the tokenized text."""
-    _prep(spark)
     from polars_dataset_spark.functions.text import tokenize
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2815,7 +2738,6 @@ def q86(spark, sf_dir):
     loop), missing days inserted as nulls, then forward-filled with an
     O(n) growing frame. Unrounded: both engines carry the same decimal-
     exact revenue doubles, and the fill only SELECTS existing values."""
-    _prep(spark)
     traces = _daily_traces(spark, sf_dir)
     ds = Dataset(
         traces.withColumn("day", F.col("day").cast("double")),
@@ -2845,7 +2767,6 @@ def q87(spark, sf_dir):
     both sides carry watermarks and Spark bounds the join state to the
     interval (see test_interval_join_stream_matches_batch); in batch it
     is this equi-join + range predicate."""
-    _prep(spark)
     from polars_dataset_spark.streaming import interval_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -2871,7 +2792,6 @@ def q87(spark, sf_dir):
 def q88(spark, sf_dir):
     """polars ``pct_change`` per trace: x/lag(x) − 1; null at trace
     starts. One window, tie-safe composite order."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_returnflag", "l_linestatus").orderBy(*_TRACE_ORDER_COLS)
     return li.select(
@@ -2911,7 +2831,6 @@ def q89(spark, sf_dir):
     25 stands in for the benchmark). The benchmark's distinct n-grams
     broadcast; the corpus side is map-only explode + broadcast hash join
     — no corpus-sized shuffle, no pairwise comparison."""
-    _prep(spark)
     from polars_dataset_spark.functions import contamination_flags
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2954,7 +2873,6 @@ def q90(spark, sf_dir):
     + two partial-aggregated hash aggs — cost ∝ token count). The classic
     boilerplate/spam signals a pretraining filter needs beyond n-gram
     dedup."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_repetition_stats
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2991,7 +2909,6 @@ def q91(spark, sf_dir):
     sources, scaled so overall keep ≈ 50%). One tiny count aggregation +
     a map-only deterministic id-hash filter; the oracle recomputes the
     exact rates and replays the same md5-threshold in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import temperature_mix
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3021,7 +2938,6 @@ def q92(spark, sf_dir):
     id-hash priority order until the cumulative BPE-ish token count
     would pass 20k — exact, order/retry-stable (md5 is engine-portable,
     so even the selected SET is oracle-checked)."""
-    _prep(spark)
     from polars_dataset_spark.functions import take_until_token_budget, with_token_count
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3072,7 +2988,6 @@ def q93(spark, sf_dir):
     (functions/corpus.py chunk_documents) — the segmentation step of a
     pretraining pipeline. Map-only explode; the oracle replays the exact
     window arithmetic over DuckDB list slices."""
-    _prep(spark)
     from polars_dataset_spark.functions import chunk_documents
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3098,7 +3013,6 @@ def q94(spark, sf_dir):
     ties) + per-document out-of-vocabulary accounting. The vocab is
     broadcast against the token stream — one aggregation + TakeOrdered
     for the build, map-side join + per-doc agg for the accounting."""
-    _prep(spark)
     from polars_dataset_spark.functions import build_vocab, with_oov_rate
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3126,7 +3040,6 @@ def q95(spark, sf_dir):
     corpus unigram distribution) — the classic cheap perplexity-style
     quality signal. Per-token bits rounded to 7 and summed as DECIMAL so
     the mean is partitioning- and engine-stable."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_surprisal
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3166,7 +3079,6 @@ def q96(spark, sf_dir):
     phone from doc_id before scrubbing — the oracle checks the full
     redacted text, not just the counts. RE2-and-Java-compatible
     patterns; map-only codegen'd regexes."""
-    _prep(spark)
     from polars_dataset_spark.functions import redact_pii
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3210,7 +3122,6 @@ def q97(spark, sf_dir):
     INTEGER-deterministic (tf desc, doc-frequency asc, token asc); the
     float tf-idf rides along as a value column but never decides order,
     so the result replays exactly on any engine."""
-    _prep(spark)
     from polars_dataset_spark.functions import tfidf_top_terms
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3250,7 +3161,6 @@ def q98(spark, sf_dir):
     """Passage-level exact dedup (C4/RefinedWeb-style): 32-token windows
     with stride 24, keep the first occurrence of every distinct chunk
     text — chunking composed with a hash-partitioned keep-first window."""
-    _prep(spark)
     from polars_dataset_spark.functions import chunk_documents, dedup_chunks
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3280,7 +3190,6 @@ def q99(spark, sf_dir):
     delegation (`how="full"` → full_outer) plus null-coalescing of the
     join key itself. Both sides pre-aggregate before the join, so the
     shuffled row count is days, not line items."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     ship = Dataset(
@@ -3319,7 +3228,6 @@ def q100(spark, sf_dir):
     """Pairwise Pearson correlation matrix in ONE aggregate pass (all
     co-moment accumulators run together — no per-pair jobs). Tidy long
     output, mirrored across the diagonal like the SQL oracle."""
-    _prep(spark)
     ds = Dataset(
         load_table(spark, sf_dir, "lineitem"),
         index="l_shipdate",
@@ -3349,7 +3257,6 @@ def q101(spark, sf_dir):
     sweep exclusion, VERDICT r10 #6), and the distinct scan is skipped:
     the whole query is one map-only codegen projection, zero
     exchanges."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus"
     )
@@ -3383,7 +3290,6 @@ def q102(spark, sf_dir):
     ``is_first_distinct``) over normalized document text: one count
     window + one row_number window on the same partitioning — a single
     hash shuffle, no self-join."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.regexp_replace(F.trim(F.lower("text")), r"\s+", " ").alias("norm"),
@@ -3408,7 +3314,6 @@ def q103(spark, sf_dir):
     without a single-partition global window: two-pass distributed
     prefix sum (range partition → per-partition counts → offset map),
     the same machinery as global sequence packing."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     ds = Dataset(ev, index="event_id")
     return ds.gather_every(1000, offset=7).df.select("event_id", "event_type", "value")
@@ -3431,7 +3336,6 @@ def q104(spark, sf_dir):
     """Local-peak detection per user series (polars ``peak_max``) then a
     per-user peak count: lag/lead window arithmetic in codegen, one
     shuffle on the trace key shared by the window and the aggregate."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     ds = Dataset(ev, index="event_id", id_vars=["user_id"])
     out = ds.peak_max("value")
@@ -3457,7 +3361,6 @@ def q105(spark, sf_dir):
     configured 5% relative error of the exact count (checked on the
     Spark side against Spark's own exact count; the oracle recomputes
     the exact count and asserts the flag)."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     est = ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.01).alias("approx_users")
@@ -3494,7 +3397,6 @@ def q106(spark, sf_dir):
     ``mean_horizontal`` / ``min_horizontal`` / ``max_horizontal``. Pure
     map-only projection, no shuffle; the whole query is one codegen'd
     scan stage."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax"
     )
@@ -3538,7 +3440,6 @@ def q107(spark, sf_dir):
     (window=period, slide=every) — the same Expand-based operator the
     streaming path uses, one shuffle on the window key. Decimal
     summation keeps the money total order-independent (q24 policy)."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     ds = Dataset(ev.select("ts", "value"), index="ts")
     out = ds.group_by_dynamic("15 minutes", period="30 minutes").agg(
@@ -3578,7 +3479,6 @@ def q108(spark, sf_dir):
     pack_sequences with two aggregations; a doc straddling a boundary
     counts toward the window it STARTS in, so per-bin tokens can exceed
     the budget and fill is capped at 1 (matching the SQL replay)."""
-    _prep(spark)
     from polars_dataset_spark.functions import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3613,7 +3513,6 @@ def q109(spark, sf_dir):
     (how much of the corpus is exact-duplicated, and in what cluster
     sizes). Two hash aggregations, the second over at most |distinct
     texts| rows."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     clusters = docs.select(
         F.regexp_replace(F.trim(F.lower("text")), r"\s+", " ").alias("norm")
@@ -3639,7 +3538,6 @@ def q110(spark, sf_dir):
     its join shuffle — built with one aggregation, broadcast as ≤ m/64
     bitset words, probed map-side. The oracle is the PLAIN semi join:
     the bitset only prunes, results are identical by construction."""
-    _prep(spark)
     from polars_dataset_spark.operators import bitset_prefilter_join
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3678,7 +3576,6 @@ def q111(spark, sf_dir):
     joins of per-user scalars — no per-user event sort, no session
     window; each stage's frame shrinks so AQE promotes the later joins
     to broadcast."""
-    _prep(spark)
     from polars_dataset_spark.functions import funnel_counts
 
     ev = load_table(spark, sf_dir, "events")
@@ -3704,7 +3601,6 @@ def q112(spark, sf_dir):
     event; cells count distinct users active N weeks later. Two hash
     aggregations + one user-key join of per-user scalars — the standard
     retention matrix without windows or per-user sorts."""
-    _prep(spark)
     from polars_dataset_spark.functions import cohort_retention
 
     ev = load_table(spark, sf_dir, "events")
@@ -3740,7 +3636,6 @@ def q113(spark, sf_dir):
     updates replace colliding keys, inserts append — one key anti-join
     (broadcast for small update sets) plus a union. The aggregate
     proves replaced rows are gone and new rows landed."""
-    _prep(spark)
     from polars_dataset_spark.operators import merge_upsert
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -3801,7 +3696,6 @@ def q114(spark, sf_dir):
     insert/delete/update. The synthetic 'new' snapshot drops keys
     divisible by 7, bumps prices on keys divisible by 50, and adds one
     row — the diff must recover exactly those changes."""
-    _prep(spark)
     from polars_dataset_spark.operators import snapshot_diff
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -3843,7 +3737,6 @@ def q115(spark, sf_dir):
     SELECTED SET is deterministic, topology-independent, and replayable
     by the oracle — both engines pick the same 50 documents. Plans as
     TakeOrderedAndProject (per-partition heaps, no full sort)."""
-    _prep(spark)
     from polars_dataset_spark.functions import weighted_sample
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -3865,7 +3758,6 @@ def q116(spark, sf_dir):
     type) — the SLO/latency-report shape. One hash aggregation; exact
     interpolated percentiles for oracle parity, with q78's
     percentile_approx as the documented sketch path at 100 TB."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(0.50)), 4).alias("p50"),
@@ -3893,7 +3785,6 @@ def q117(spark, sf_dir):
     scoring pass, one count aggregate. No window over the raw events;
     the moments frame is the only shuffled data besides the group
     keys."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
@@ -3926,7 +3817,6 @@ def q118(spark, sf_dir):
     consistency check (stored n_chars vs actual length) and key
     uniqueness — the great-expectations-style contract a 100 TB ingest
     runs before anything else, with no second scan per rule."""
-    _prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.agg(
         F.count("*").alias("n_rows"),
@@ -3982,7 +3872,6 @@ def q119(spark, sf_dir):
     the INTERIOR convolution with the exact (-2,3,6,7,6,3,-2)/21
     weights via lag/lead; edge rows (terminal-window polynomial fits)
     are filtered on both sides, and pytest pins their semantics."""
-    _prep(spark)
     traces = _daily_traces(spark, sf_dir)
     ds = Dataset(traces, index="day", id_vars=["l_returnflag", "l_linestatus"])
     sm = ds.smooth("revenue", window=7, polyorder=2).df
@@ -4044,7 +3933,6 @@ def q120(spark, sf_dir):
     formula over HUGEINT micro-units with the identical cast/divide
     sequence, so both engines run the same IEEE ops on the same exact
     integers."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     rev_dec = exact_sum("l_extendedprice * (1 - l_discount)")
     traces = li.groupBy(
@@ -4078,7 +3966,6 @@ def q121(spark, sf_dir):
     """Per-group feature scaling (z-score + min-max in one pass each):
     tiny per-group stats broadcast back, map-side arithmetic — the
     standard pre-training normalization shape."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     ds = Dataset(ev, index="event_id", id_vars=["event_type"])
     out = ds.normalize("value", method="zscore", out_col="z").normalize(
@@ -4113,7 +4000,6 @@ def q122(spark, sf_dir):
     """Per-trace autocorrelation at lags 1 and 7 (weekly seasonality
     probe): one keyed window for the lags, then corr accumulators — the
     shuffle is on the trace key only, shared by window and aggregate."""
-    _prep(spark)
     traces = _daily_traces(spark, sf_dir)
     w = Window.partitionBy("l_returnflag", "l_linestatus").orderBy("day")
     lagged = traces.select(
@@ -4146,7 +4032,6 @@ def q123(spark, sf_dir):
     — the financial downsampling staple with no window or sort. (ts is
     unique per (type, day) in this fixture, so min_by/arg_min ties
     cannot differ across engines.)"""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -4189,7 +4074,6 @@ def q124(spark, sf_dir):
     vocabulary-sized; the group totals and corpus total broadcast. A
     uniform synthetic corpus gives near-zero divergences — the point is
     the oracle checks the full computation, not the magnitude."""
-    _prep(spark)
     from polars_dataset_spark.functions import kl_divergence_by
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4225,7 +4109,6 @@ def q125(spark, sf_dir):
     (~1e-4/row) at sf0.001; 4 dp puts the collision odds below 1e-7
     per row while staying far tighter than any analytic use of a
     correlation needs."""
-    _prep(spark)
     traces = _daily_traces(spark, sf_dir).withColumn(
         "day_d", F.col("day").cast("double")
     )
@@ -4256,7 +4139,6 @@ def q126(spark, sf_dir):
     """Winsorized summary (5% tails clipped to the exact quantiles):
     robust-statistics tail treatment as one percentile aggregate (two
     scalars) + a map-only clip + one summary aggregate."""
-    _prep(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     ds = Dataset(o, index="o_orderkey")
     w = ds.winsorize("o_totalprice", p=0.05, out_col="wz")
@@ -4290,7 +4172,6 @@ def q127(spark, sf_dir):
     themselves, unlike q117's moments): two exact-median aggregation
     passes + a map-side flag. 1.4826·MAD estimates σ under normality —
     the standard robust z-score."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(F.median("value").alias("m"))
     mad = (
@@ -4334,7 +4215,6 @@ def q128(spark, sf_dir):
     for the per-user deltas, then a summary aggregate — the
     arrival-process statistics behind session-gap and rate-limit
     choices. epoch deltas keep sub-second precision as exact doubles."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w)
@@ -4366,7 +4246,6 @@ def q129(spark, sf_dir):
     dedup to (type, user) pairs first — the self-join is on user_id over
     the DEDUPED frame, so its size is users·types, not raw events; per-
     type distinct counts broadcast for the union denominator."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     a = ev.select("event_type", "user_id").distinct()
     sizes = a.groupBy("event_type").agg(F.countDistinct("user_id").alias("sz"))
@@ -4459,7 +4338,6 @@ def q130(spark, sf_dir):
     fixture's near-dups sit far above the s-curve, so recall is 1 and
     the oracle (exact all-pairs cross Jaccard) matches as equality —
     the q37 argument applied across tables."""
-    _prep(spark)
     from polars_dataset_spark.functions import fuzzy_join
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4500,7 +4378,6 @@ def q131(spark, sf_dir):
     driver collect, any dimensionality) then each vector's cosine to
     its own centroid via a dim-aligned join + per-vector reduce. Two
     shuffles total, both keyed; entirely built-in expressions, no UDF."""
-    _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", "label", F.posexplode(F.col("embedding")).alias("i", "v")
@@ -4547,7 +4424,6 @@ def q132(spark, sf_dir):
     centroids — q131's intra-cluster complement, together the
     silhouette picture): the self-join runs on the CENTROID frame
     (labels·dims rows), never on the vectors."""
-    _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label", F.posexplode(F.col("embedding")).alias("i", "v")
@@ -4608,7 +4484,6 @@ def q133(spark, sf_dir):
     3-scalar aggregate, then a map-side CASE bucketing and the segment
     rollup. The corpus max timestamp is a 1-row scalar subquery on both
     engines."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts").alias("mx")).first()["mx"]
     rfm = ev.groupBy("user_id").agg(
@@ -4679,7 +4554,6 @@ def q134(spark, sf_dir):
     user sequence): one keyed window for the successor, one count
     aggregation, row-normalized probabilities via a tiny keyed window
     over the 5×5 count frame."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -4726,7 +4600,6 @@ def q135(spark, sf_dir):
     value-ordered global cumsum rides the two-pass distributed prefix
     sum (range partition on the NEGATED revenue — no single-partition
     window over the part frame); revenue itself is decimal-stable."""
-    _prep(spark)
     from polars_dataset_spark.functions.packing import _global_prefix_sum
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -4779,7 +4652,6 @@ def q136(spark, sf_dir):
     PARTITIONED by year (first week of a year gets null growth — the
     standard YoY-boundary convention) so even this post-aggregate step
     keeps the suite's zero-single-partition invariant."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(F.date_trunc("week", "ts").alias("wk")).agg(
         exact_sum("value").cast("double").alias("revenue")
@@ -4813,7 +4685,6 @@ def q137(spark, sf_dir):
     (one aggregate, a per-user scalar frame) joined to the deduped
     (user, week) activity — the growth-accounting companion to cohort
     retention (q112)."""
-    _prep(spark)
     ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("first_wk")
@@ -4844,7 +4715,6 @@ def q138(spark, sf_dir):
     converges in ~2 rounds here vs O(log diameter) on the path graph;
     benching both pins the expected AND the worst-case cost
     (tests/test_graph_convergence.py asserts the round counts)."""
-    _prep(spark)
     from polars_dataset_spark.functions import chain_edges, connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4888,7 +4758,6 @@ def q139(spark, sf_dir):
     Spark's streaming merge and DuckDB's two-pass differ at ~1e-12
     relative, far below the boundary. Upgrades skew/kurtosis from
     test-only to value-oracled (VERDICT r02 "What's missing" #4)."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # + 0.0 collapses IEEE -0.0 to +0.0 on both sides (the q41/q125
     # lesson): a skew of -1e-17 rounds to -0.0 in one engine, 0.0 in the
@@ -4947,7 +4816,6 @@ def q140(spark, sf_dir):
     ``2^rn ≤ 2^367 ≪`` double overflow; both engines agree to ~1e-12,
     rounded at 4 dp (the averages policy). Upgrades ewm_mean from
     test-only (tests/test_core.py pandas parity) to value-oracled."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-01-01"))
@@ -4997,7 +4865,6 @@ def q141(spark, sf_dir):
     it. Oracle: exact all-pairs cross-Jaccard anti-filter (recall 1 on
     this fixture — the q37/q130 s-curve argument at 64 hashes / 16
     bands)."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         build_neardup_index,
         neardup_filter_against,
@@ -5046,7 +4913,6 @@ def q142(spark, sf_dir):
     projected variance equals the top-k eigenvalue sum, and whitened
     covariance is I (< 1e-5). Numerics additionally pinned against a
     direct numpy PCA in tests/test_projection.py."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import (
@@ -5124,7 +4990,6 @@ def q143(spark, sf_dir):
     restates the full feature pipeline and sigmoid in SQL; the only
     cross-engine slack is libm ``exp`` (≤1 ulp), far under the 6-dp
     boundary."""
-    _prep(spark)
     from polars_dataset_spark.functions.text import with_model_quality
 
     docs = load_table(spark, sf_dir, "documents")
@@ -5155,7 +5020,6 @@ def q144(spark, sf_dir):
     and the MG superset guarantee (Agarwal et al. mergeable summaries)
     makes the final output EXACT — so the oracle is the plain exact
     token-frequency SQL, a full value match, not a contract."""
-    _prep(spark)
     from polars_dataset_spark.functions import heavy_hitters
 
     docs = load_table(spark, sf_dir, "documents")
@@ -5207,7 +5071,6 @@ def q145(spark, sf_dir):
     context are excluded (the QUALIFY twin of the count guard). At
     scale: one hash shuffle on the trace key, all frames computed in a
     single WindowExec pass per ordering."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-01-01"))
@@ -5259,7 +5122,6 @@ def q146(spark, sf_dir):
     IVF exists for — and (c) every query must return its full k results.
     Computing recall requires the exact baseline, so this query is the
     audit harness itself; at 100 TB you run it on a sampled slice."""
-    _prep(spark)
     from polars_dataset_spark.functions import cosine_topk, ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5319,7 +5181,6 @@ def q147(spark, sf_dir):
     subtraction/division/floor on both sides), empty bins zero-filled
     from a range frame, top value clamped into the last bin. One
     partial+final count aggregate — no sort, no window."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(
         li.select("l_shipdate", "l_returnflag", "l_extendedprice"),
@@ -5392,7 +5253,6 @@ def q148(spark, sf_dir):
     expression association as the numpy kernel, so both engines evaluate
     identical IEEE expressions; only summation order differs (~1e-13
     relative), far under the 4-dp boundary."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.operators import lomb_scargle
@@ -5437,7 +5297,6 @@ def q149(spark, sf_dir):
     preserved. Here: customer balances overridden by each customer's
     summed order value (decimal-stable sum), customers with no orders
     keep their original balance. One hash join, no window."""
-    _prep(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     upd = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
@@ -5500,7 +5359,6 @@ def q150(spark, sf_dir):
     partitioning- and engine-independent, same policy as q95. The
     oracle replays the whole pipeline: tokenize, per-doc lag, bigram +
     unigram counts, vocabulary scalar, smoothed log2, decimal mean."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_bigram_surprisal
 
     docs = load_table(spark, sf_dir, "documents")
@@ -5526,7 +5384,6 @@ def q151(spark, sf_dir):
     against the raw daily aggregation in SQL. Off-knot monotonicity and
     no-overshoot are pinned by hypothesis
     (tests/test_properties.py::test_pchip_monotone_and_bounded)."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.operators import interpolate_frame
@@ -5565,7 +5422,6 @@ def q152(spark, sf_dir):
     the index but prunes the rest, sort_columns canonicalizes. Any
     metadata-propagation regression in the chain breaks the output
     columns and fails the hash."""
-    _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
     ds = Dataset(
         li.select(
@@ -5611,7 +5467,6 @@ def q153(spark, sf_dir):
     re-emitted per-pixel — the oracle restates the closed form in SQL, so
     every pixel is a full value match. The 256-level gray palette makes
     the 8-bit round-trip exact (float32 v/255·255 rounds back to v)."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -5650,7 +5505,6 @@ def q154(spark, sf_dir):
     Booleans/ints only cross the float32 storage channel; the magnitude
     numerics are pinned by
     tests/test_functions.py::test_audio_spectrogram_tone_peaks."""
-    _prep(spark)
     import struct
 
     import numpy as np
@@ -5719,7 +5573,6 @@ def q155(spark, sf_dir):
     oracle is q144's plain token-frequency SQL — a genuine value match
     for the streaming machinery. The ≤⌈1/phi⌉-row result is collected so
     the scratch stream/state dirs can be deleted before returning."""
-    _prep(spark)
     import shutil
     import tempfile
 
@@ -5777,7 +5630,6 @@ def q156(spark, sf_dir):
     per-pixel; the oracle restates the closed form in SQL, a full value
     match. VP8L is lossless, so float32 v/255·255 rounds back to v
     exactly (same argument as q153)."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -5844,7 +5696,6 @@ def q157(spark, sf_dir):
     — replays exactly in SQL, the cell-count rule included via a scalar
     subquery; production use omits ``centroids`` and gets the
     sampled-KMeans quantizer."""
-    _prep(spark)
     import math
 
     from polars_dataset_spark.functions import semantic_dedup
@@ -5888,7 +5739,6 @@ def q158(spark, sf_dir):
     map-only ``linear_score`` + avg((y−ŷ)²) — to 1e-9, cross-verifying
     ``AᵀA``/``Aᵀy`` against the scorer. Coefficient numerics are pinned
     against a direct numpy lstsq in tests/test_ml.py."""
-    _prep(spark)
     from polars_dataset_spark.functions import linear_score, ridge_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5953,7 +5803,6 @@ def q159(spark, sf_dir):
     engines (float32→double exact, ×8 a power of two, floor) and lands
     ~17 distinct values over the corpus, so average-rank tie handling
     carries real weight in the value."""
-    _prep(spark)
     from polars_dataset_spark.functions import binary_auc
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5990,7 +5839,6 @@ def q160(spark, sf_dir):
     entropy symbols) stays above 0.4 and above the repeated page.
     Monotonicity (more repetition → lower ratio) tested in
     tests/test_functions.py."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_compression_ratio
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6089,7 +5937,6 @@ def q161(spark, sf_dir):
     identity, and the rebuilt text is compared string-exact per doc —
     the near-dup documents in the fixture share long real spans, so
     removal carries weight, while unique docs prove no false positives."""
-    _prep(spark)
     from polars_dataset_spark.functions import remove_repeated_substrings
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6142,7 +5989,6 @@ def q162(spark, sf_dir):
     value oracle as q64 (exact-Jaccard pair graph closed with a
     recursive CTE), with the per-component argmax keep rule replayed in
     SQL — so q64 and q162 together pin BOTH keep policies."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         dedup_by_components,
         minhash_lsh_candidates,
@@ -6171,7 +6017,6 @@ def q163(spark, sf_dir):
     values must match the source table EXACTLY — a full value oracle over
     the whole write->parse->infer->load path. The reference's no-throw
     missing-file contract (load -> None) is asserted in the same gate."""
-    _prep(spark)
     import shutil
     import tempfile
 
@@ -6220,7 +6065,6 @@ def q164(spark, sf_dir):
     values attached by joining the path manifest on input_file_name().
     The oracle restates the closed form, so every cell — including the
     per-file literal id column — is a full value match."""
-    _prep(spark)
     import shutil
     import tempfile
 
@@ -6270,7 +6114,6 @@ def q165(spark, sf_dir):
     files lands near 25% each). Exact per-file boundaries are
     quantile-dependent, hence a contract — the layout plan itself is
     asserted Exchange-by-Exchange in tests/test_plans.py."""
-    _prep(spark)
     import shutil
     import tempfile
 
@@ -6351,7 +6194,6 @@ def q166(spark, sf_dir):
     Output is posexploded to scalar ``(cell, n, dim, val, inertia)``
     rows: the driver's canonicalizer hashes stringified pandas cells and
     cannot sort ``array<double>`` columns (r5's one red row)."""
-    _prep(spark)
     from polars_dataset_spark.functions import kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -6411,7 +6253,6 @@ def q167(spark, sf_dir):
     first/last doc per shard — any reordering or reassignment breaks a
     value. The physical writer (one hash shuffle, per-task sorted
     hive-partitioned output) is exercised in tests/test_functions.py."""
-    _prep(spark)
     from pyspark.sql import Window
 
     from polars_dataset_spark.functions import assign_training_shards
@@ -6488,7 +6329,6 @@ def q168(spark, sf_dir):
     stopword rules all carry discriminating weight; the boolean
     comparisons are engine-exact because both engines divide the same
     integers). Map-only codegen'd expressions, no UDF."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_gopher_rules
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6538,7 +6378,6 @@ def q169(spark, sf_dir):
     (salt, id). Full value oracle: the exact kept SET replays via the
     q66/q67 portable-hash arithmetic; every source holds 25 docs at
     sf0.01 so the 17-cap bites everywhere (kept set = 20x17 = 340)."""
-    _prep(spark)
     from polars_dataset_spark.functions import cap_per_group
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6565,7 +6404,6 @@ def q170(spark, sf_dir):
     and the crash-safe Hadoop-FS staging swap. The oracle pins the exact
     row count, the before/after file counts, that the POST-swap physical
     listing equals the plan, and row preservation through the rewrite."""
-    _prep(spark)
     import shutil
     import tempfile
 
@@ -6616,7 +6454,6 @@ def q171(spark, sf_dir):
     Script/style contents, the comment and all tags must vanish;
     ``&lt;tag&gt;`` must survive as VISIBLE ``<tag>`` (strip-then-decode
     order); every byte of the output is value-checked per doc."""
-    _prep(spark)
     from polars_dataset_spark.functions import strip_markup
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6678,7 +6515,6 @@ def q172(spark, sf_dir):
     interaction are value-checked, not just each stage alone. Note the
     cap and the shard assignment share one portable hash — the oracle
     proves they compose without re-ranking surprises."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         assign_training_shards,
         cap_per_group,
@@ -6727,7 +6563,6 @@ def q173(spark, sf_dir):
     per-pixel; the oracle restates the closed form, so every pixel is a
     full value match through decompression, prediction and strip
     reassembly. The 8-bit gray round-trip is exact (v/255·255 → v)."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -6774,7 +6609,6 @@ def q174(spark, sf_dir):
     so rms/peak/duration match to round-6 across engines; any bit error
     anywhere in subframe decode, stereo reconstruction or rice coding
     shifts rms/peak and fails the value hash."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_audio
@@ -6863,7 +6697,6 @@ def q175(spark, sf_dir):
     to 7 and sum as DECIMAL so the per-doc sums are exact on both
     engines. Scale: one instance-keyed shuffle (map-side combined),
     bucket marginals collapse to ≤1024 rows, ratio table broadcast."""
-    _prep(spark)
     from polars_dataset_spark.functions import dsir_score
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6916,7 +6749,6 @@ def q176(spark, sf_dir):
     boundaries (0.8 → 'ccccccccccccccc'). Scale: CC is the
     large/small-star contraction; the split itself is one left join +
     map-only hash compare."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         leakage_safe_split,
         minhash_lsh_candidates,
@@ -6964,7 +6796,6 @@ def q177(spark, sf_dir):
     decoder at every quantization level, through the real WAV container
     path (format tags 6/7) on the executor. Any wrong bit anywhere in
     either companding law shifts rms/peak and fails the value hash."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_audio
@@ -7029,7 +6860,6 @@ def q178(spark, sf_dir):
     both ratios restated in SQL. The fixture exposes all three regimes:
     doc_id uniform-unique (skew 1.0), source balanced, lang skewed
     ('en' ≈ 44%)."""
-    _prep(spark)
     from polars_dataset_spark.functions import key_skew_profile
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7095,7 +6925,6 @@ def q179(spark, sf_dir):
     blocklist. Full value oracle: the identical regexes, suffix rules
     and blocklist restated in SQL. Map-only + broadcast — zero corpus
     shuffles."""
-    _prep(spark)
     from polars_dataset_spark.functions import filter_url_blocklist, with_url_parts
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7154,7 +6983,6 @@ def q180(spark, sf_dir):
     re-emitted per pixel; the oracle restates the closed form, so every
     pixel is a full value match through packet decode, BGR channel
     mean (all three channels equal → exact) and the vertical flip."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -7209,7 +7037,6 @@ def q181(spark, sf_dir):
     oracle: explode, md5-keyed first-occurrence window with the same
     (doc, pos) tie order, ordered string_agg rebuild — all restated in
     SQL, texts compared string-exact."""
-    _prep(spark)
     from polars_dataset_spark.functions import dedup_lines
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7286,7 +7113,6 @@ def q182(spark, sf_dir):
     variance-from-integer-sums, entropy identity
     ``H = log2 n − Σc·log2 c / n`` and all four booleans restated in
     SQL. Two keyed shuffles, no UDFs."""
-    _prep(spark)
     from polars_dataset_spark.functions import flag_bots
 
     events = load_table(spark, sf_dir, "events")
@@ -7319,7 +7145,6 @@ def q183(spark, sf_dir):
     statistics from the closed form. Channel-mean mono values are exact
     dyadic rationals, so rms/peak match to round-6; a wrong bit in the
     extended-float parse shifts sample_rate/duration and fails too."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_audio
@@ -7357,7 +7182,6 @@ def q184(spark, sf_dir):
     member (the spec's 0-means-256 sizing included in the walk), hand
     it to the full PNG decoder, and every pixel value-matches the
     closed form restated by the oracle."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -7396,7 +7220,6 @@ def q185(spark, sf_dir):
     765 recovers the exact integer sum), so every pixel of every
     channel is value-checked through the running hash table and
     wraparound arithmetic."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_media
@@ -7455,7 +7278,6 @@ def q186(spark, sf_dir):
     (25 docs each) are removed everywhere; bodies stay unless the
     corpus has them in ≥3 docs. Full value oracle, texts
     string-exact."""
-    _prep(spark)
     from polars_dataset_spark.functions import drop_frequent_lines
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7550,7 +7372,6 @@ def q187(spark, sf_dir):
     counts, the deterministic tie-break, and the left-to-right merge
     fold — replayed in SQL via list_reduce; the q166-style one-step
     precedent upgraded to the whole training loop."""
-    _prep(spark)
     from polars_dataset_spark.functions import bpe_learn
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7566,7 +7387,6 @@ def q188(spark, sf_dir):
     step to the final symbol table, joined back onto each document's
     token stream — so the Arrow-batched apply path (cache, rank-order
     merge loop) is value-checked against the SQL fold for every doc."""
-    _prep(spark)
     from polars_dataset_spark.functions import bpe_apply, bpe_learn
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7598,7 +7418,6 @@ def q189(spark, sf_dir):
     the G.711 bit-field arithmetic (the q177 oracle, new container
     path). A wrong header field (offset/encoding/rate) or any decode
     bit shifts rate/duration/rms and fails the hash."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import decode_audio
@@ -7661,7 +7480,6 @@ def q190(spark, sf_dir):
     curly-quote mojibake prefix); the oracle counts with the IDENTICAL
     pattern constants (imported, not copied). Map-only, zero
     shuffles."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_encoding_anomalies
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7718,7 +7536,6 @@ def q191(spark, sf_dir):
     contract: integer x, round-6 DECIMAL-accumulated y, so every sum
     is exact and the slope/intercept doubles are pure functions of
     exact inputs — the whole computation restates in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import groupwise_linear_trend
 
     events = load_table(spark, sf_dir, "events")
@@ -7765,7 +7582,6 @@ def q192(spark, sf_dir):
     aggregation pass (min/max computed on the native type, THEN
     rendered as strings — a numeric column profiles numerically). Full
     value oracle over a string, a bigint and a categorical column."""
-    _prep(spark)
     from polars_dataset_spark.functions import column_profile
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7794,7 +7610,6 @@ def q193(spark, sf_dir):
     verify — recall 1 by construction); the oracle brute-forces ALL
     pairs, so blocking recall and the distance metric are both
     value-checked."""
-    _prep(spark)
     from polars_dataset_spark.functions import edit_distance_join
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7822,7 +7637,6 @@ def q194(spark, sf_dir):
     under-k flag — the privacy gate a training-data release pipeline
     runs before shipping. k=7 splits the fixture's ~100 classes both
     ways. One map-side-combined shuffle; full value oracle."""
-    _prep(spark)
     from polars_dataset_spark.functions import k_anonymity_audit
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7865,7 +7679,6 @@ def q195(spark, sf_dir):
     the cut is a TakeOrdered — no corpus-cardinality shuffle, no global
     sort. Scores round to 6 with an id tiebreak, so the top-k set and
     values replay exactly in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7908,7 +7721,6 @@ def q196(spark, sf_dir):
     map-side combine bounds the shuffle at depth*width rows no matter
     the corpus size; the oracle replays the md5 bucketing, the min over
     hash rows, and the never-underestimates bound, all value-exact."""
-    _prep(spark)
     from polars_dataset_spark.functions import cms_estimate
 
     docs = load_table(spark, sf_dir, "documents")
@@ -7979,7 +7791,6 @@ def q197(spark, sf_dir):
     alpha*m^2 form). The exact distinct count rides along for the
     rel_ok accuracy contract. Complements q105 (Spark's JVM-internal
     HLL++, contract oracle only)."""
-    _prep(spark)
     from polars_dataset_spark.functions import hll_summary
 
     ev = load_table(spark, sf_dir, "events")
@@ -8021,7 +7832,6 @@ def q198(spark, sf_dir):
     rows flag at sf0.01, so the rule splits the fixture both ways. Both
     medians are exact percentiles of integers (dyadic), c=2.0 is exact,
     so every comparison replays bit-for-bit in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import numeric_outliers
 
     docs = load_table(spark, sf_dir, "documents")
@@ -8071,7 +7881,6 @@ def q199(spark, sf_dir):
     md5-per-position constant is the operator's declared cost and needs
     no more than 50 docs to value-check; the sf0.1 bench would otherwise
     spend its whole wall on this one scan."""
-    _prep(spark)
     from polars_dataset_spark.functions import cdc_chunks
 
     docs = (
@@ -8140,7 +7949,6 @@ def q200(spark, sf_dir):
     groupBy and the top-k cut is a window PARTITIONED BY query (never a
     single partition). Same rounded-score + id tiebreak determinism as
     q195, so set, scores AND ranks replay exactly in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import bm25_topk_many
 
     docs = load_table(spark, sf_dir, "documents")
@@ -8178,7 +7986,6 @@ def q201(spark, sf_dir):
     Contract oracle: the literal expected rows (same style as the
     codec family's closed-form oracles). Map-only Arrow batch; fixed
     bytes read per blob."""
-    _prep(spark)
     import struct
 
     import numpy as np
@@ -8261,7 +8068,6 @@ def q202(spark, sf_dir):
     the literal expected table (same contract style as q201). Map-only
     Arrow batch; fixed bytes read per blob — the 100 TB story is a scan,
     not a codec stack."""
-    _prep(spark)
     import struct
 
     from polars_dataset_spark.functions import media_probe
@@ -8407,7 +8213,6 @@ def q203(spark, sf_dir):
     excluded). Contract oracle: the literal expected pair set (q201
     style). The 100 TB story: one map-only Arrow decode pass + one
     banded equi-join."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import image_neardup_pairs
@@ -8519,7 +8324,6 @@ def q204(spark, sf_dir):
     content — the endian round-trip is the test), a GPS-less variant,
     an Exif-less JPEG, junk. Contract oracle: literal expected table
     (q201 style)."""
-    _prep(spark)
     from polars_dataset_spark.functions import exif_probe
 
     rows = [
@@ -8585,7 +8389,6 @@ def q206(spark, sf_dir):
     with payload length + md5 standing in for the binary column (the
     driver canonicalizer cannot hash binary). One map-only Arrow pass,
     bounded header scans, malformed tails dropped not raised."""
-    _prep(spark)
     import gzip
 
     from polars_dataset_spark.sources import warc_records
@@ -8694,7 +8497,6 @@ def q205(spark, sf_dir):
     linearized file, a REAL xref-stream+ObjStm 1.5 file, a damaged
     hidden-tree file, junk. Contract oracle: literal expected table
     (q201 style)."""
-    _prep(spark)
     from polars_dataset_spark.functions import pdf_probe
 
     rows = [
@@ -8775,7 +8577,6 @@ def q207(spark, sf_dir):
     zero exchanges); the oracle replays every step in ANSI SQL over the
     SAME synthesized messy URLs (the CASE expression is shared
     verbatim), so this is a FULL value oracle at every SF."""
-    _prep(spark)
     from polars_dataset_spark.functions import canonicalize_url
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -8837,7 +8638,6 @@ def q208(spark, sf_dir):
     sweep). Every third document is replaced by a code snippet (shared
     verbatim CASE), so both classes are exercised; FULL value oracle.
     Map-only, no UDF, staged projections."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_code_score
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -8865,7 +8665,6 @@ def q209(spark, sf_dir):
     image (kept), and a junk blob (kept: an undecodable blob is not
     evidence of duplication). Contract oracle: the literal survivor
     set."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import (
@@ -8986,7 +8785,6 @@ def q211(spark, sf_dir):
     One map-only Arrow pass, linear in blob bytes, no shuffle; the
     explode is per-page within the row. Contract oracle: literal
     expected table validated value-exact in-session."""
-    _prep(spark)
     from polars_dataset_spark.functions import pdf_text
 
     s1 = (
@@ -9151,7 +8949,6 @@ def q216(spark, sf_dir):
     (doc 3) and junk (doc 4) yield one null row each. Same map-only
     Arrow pass as q211; all decoding stdlib zlib. Contract oracle:
     literal expected table validated value-exact in-session."""
-    _prep(spark)
     from polars_dataset_spark.functions import pdf_text
 
     s1 = (
@@ -9239,7 +9036,6 @@ def q217(spark, sf_dir):
     undecodable blobs hash null and pair with nothing. Decode runs once
     per blob; map-only except the banded equi-join. Contract oracle:
     the exact expected pair table."""
-    _prep(spark)
     import numpy as np
 
     from polars_dataset_spark.functions import video_neardup_pairs
@@ -9369,7 +9165,6 @@ def q218(spark, sf_dir):
     disallows — longer wins). FULL value oracle: the host/path CASEs
     are shared verbatim and the oracle replays precedence over the
     literal rule table, so every row is value-checked at every SF."""
-    _prep(spark)
     from polars_dataset_spark.functions import frontier_filter, robots_rules
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -9412,7 +9207,6 @@ def q219(spark, sf_dir):
     the max_hamming=4 budget); a novel clip, a too-short-to-fingerprint
     clip, and an undecodable blob are KEPT (absence of evidence is not
     duplication). Contract oracle: the exact surviving-id table."""
-    _prep(spark)
     from polars_dataset_spark.functions import build_video_index, video_filter_against
 
     A = _video_clip_fixture()
@@ -9494,7 +9288,6 @@ def q212(spark, sf_dir):
     base, 32 bits away) and undecodable/null blobs must pair with
     nothing. Decode runs once per blob; map-only except the banded
     equi-join. Contract oracle: the exact expected pair table."""
-    _prep(spark)
     from polars_dataset_spark.functions import audio_neardup_pairs
     from polars_dataset_spark.functions.aiff import encode_aiff
     from polars_dataset_spark.functions.flac import encode_flac
@@ -9542,7 +9335,6 @@ def q215(spark, sf_dir):
     and a page whose messy absolute link must canonicalize (case,
     default port, slash runs, utm strip, param sort). Contract oracle:
     literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import canonicalize_url, html_links
 
     p0 = (
@@ -9592,7 +9384,6 @@ def q214(spark, sf_dir):
     too-short-to-fingerprint clip, and an undecodable blob are KEPT
     (absence of evidence is not duplication). Contract oracle: the
     exact surviving-id table."""
-    _prep(spark)
     from polars_dataset_spark.functions import audio_filter_against, build_audio_index
     from polars_dataset_spark.functions.aiff import encode_aiff
     from polars_dataset_spark.functions.flac import encode_flac
@@ -9652,7 +9443,6 @@ def q213(spark, sf_dir):
     Arrow pass over utf-8 bytes; the oracle is just the original text
     whitespace-normalized. Catches Arrow-batch/fragmentation bugs a
     6-row fixture never would."""
-    _prep(spark)
     from polars_dataset_spark.functions import html_to_text
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -9719,7 +9509,6 @@ def q210(spark, sf_dir):
     stdlib, one map-only Arrow pass after the record explode (zero
     exchanges; linear in crawl bytes at any SF). Contract oracle:
     literal expected table validated value-exact in-session."""
-    _prep(spark)
     import gzip
 
     from polars_dataset_spark.functions import warc_text_corpus
@@ -9792,7 +9581,6 @@ def q220(spark, sf_dir):
     classifiers run over the shared block list — the former per-mode
     union decoded and parsed every page once per mode. Contract
     oracle: literal expected text per (page, mode)."""
-    _prep(spark)
     from polars_dataset_spark.functions import html_to_text_modes
 
     p0 = (
@@ -9885,7 +9673,6 @@ def q221(spark, sf_dir):
     IDENTICAL RE2-portable pattern strings from the module (one
     source of truth) in the identical order — counts and scrubbed
     text value-checked at every SF."""
-    _prep(spark)
     from polars_dataset_spark.functions import scrub_pii, with_pii_counts
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -9929,7 +9716,6 @@ def q222(spark, sf_dir):
     rule). One map-only Arrow pass, stdlib gzip + ElementTree (no
     external entity resolution), 50 MB protocol cap. Contract oracle:
     literal expected table."""
-    _prep(spark)
     import gzip as _gzip
 
     ns = 'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"'
@@ -10000,7 +9786,6 @@ def q223(spark, sf_dir):
     pages cross-linking with differing anchors (dup links on one page
     count twice in n_inlinks, once in n_pages), an image-only link,
     an external link. Contract oracle: literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import canonicalize_url, html_links
 
     p0 = (
@@ -10062,7 +9847,6 @@ def q224(spark, sf_dir):
     SPLITTABLE (one task per block, not per file). FULL value oracle:
     the round-tripped frame must equal the source table exactly, with
     the measured quarantine count carried on every row."""
-    _prep(spark)
     import json as _json
     import shutil
     import tempfile
@@ -10155,7 +9939,6 @@ def q225(spark, sf_dir):
     the whole q218 filter chain replays in SQL and the schedule is a
     row_number window over the allowed rows — every row value-checked
     at every SF."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         frontier_filter,
         robots_rules,
@@ -10206,7 +9989,6 @@ def q226(spark, sf_dir):
     Plan: map-only signature pass + ONE count aggregate on the
     signature + broadcast join back — the natural template-frequency
     job at any scale. Contract oracle: literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import html_structure
 
     tmpl = (
@@ -10322,7 +10104,6 @@ def q227(spark, sf_dir):
     shared verbatim; the oracle replays tokenization, JSON fields, and
     every SURT step in SQL — parsing AND the key transform
     value-checked at every SF."""
-    _prep(spark)
     from polars_dataset_spark.functions import cdxj_lines, surt_col
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -10363,7 +10144,6 @@ def q228(spark, sf_dir):
     plus one BOGUS range (null-fields row — gate, not guess), and a
     plain uncompressed WARC fetching its middle record. Contract
     oracle: literal expected table."""
-    _prep(spark)
     import gzip as _gzip
 
     from polars_dataset_spark.sources import fetch_warc_records
@@ -10586,7 +10366,6 @@ def q229(spark, sf_dir):
     encrypt/2.B chain on classic T-tables — inside the existing
     map-only Arrow pass; per-blob work, zero exchanges. FULL value
     oracle: literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import pdf_text
 
     s1 = (
@@ -10690,7 +10469,6 @@ def q230(spark, sf_dir):
     gates NULL), and junk (all-null row, the q205 gate rule). One
     map-only Arrow pass per surface, zero exchanges. FULL value
     oracle: literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import build_zip, docx_text, zip_inventory
 
     blobs = [
@@ -10746,7 +10524,6 @@ def q231(spark, sf_dir):
     index collapses to array rows, broadcasts, and the fetch is
     map-only per file — blob bytes never shuffle. FULL value oracle:
     the fetched corpus must equal the source documents exactly."""
-    _prep(spark)
     from polars_dataset_spark.functions import cdxj_line_col, cdxj_lines
     from polars_dataset_spark.sources import fetch_warc_records, write_warc
 
@@ -10831,7 +10608,6 @@ def q232(spark, sf_dir):
     matching); an EMPTY Atom feed (one null-entry row); junk (one
     null-kind row — the q205 gate rule). One map-only Arrow pass, zero
     exchanges. Contract oracle: literal expected table."""
-    _prep(spark)
     import zlib as _zlib
 
     from polars_dataset_spark.functions import feed_entries
@@ -10977,7 +10753,6 @@ def q233(spark, sf_dir):
     swap). Output is dimension-table sized: one row per domain,
     broadcastable back onto the corpus for the drop. FULL value
     oracle."""
-    _prep(spark)
     from polars_dataset_spark.functions import domain_quality_profile
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11046,7 +10821,6 @@ def q234(spark, sf_dir):
     runs per slide in name order, slides blank-line separated. One
     map-only Arrow pass, zero exchanges. Contract oracle: literal
     expected table (fixtures from the in-repo build_zip encoder)."""
-    _prep(spark)
     from polars_dataset_spark.functions import build_zip, office_text
 
     blobs = [
@@ -11123,7 +10897,6 @@ def q235(spark, sf_dir):
     Composition story: ZIP reader (q230) x HTML extractor (q210) —
     zero new parsing machinery at the text layer. One map-only Arrow
     pass, zero exchanges. Contract oracle: literal expected table."""
-    _prep(spark)
     from polars_dataset_spark.functions import build_zip, office_text
 
     epub = build_zip([
@@ -11189,7 +10962,6 @@ def q236(spark, sf_dir):
     dedup grouping itself), the q231 file-packing shuffle, then a
     map-only parse. FULL value oracle: identical-payload groups
     replayed with a window over the payload text."""
-    _prep(spark)
     from polars_dataset_spark.sources import mark_revisits, warc_records, write_warc
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11305,7 +11077,6 @@ def q237(spark, sf_dir):
     the broadcast drop removes. FULL value oracle: the whole
     profile+drop chain replayed (planting CASEs shared verbatim, PII
     patterns interpolated from the module)."""
-    _prep(spark)
     from polars_dataset_spark.functions import domain_quality_profile
     from polars_dataset_spark.functions.domains import apply_domain_prior
 
@@ -11403,7 +11174,6 @@ def q238(spark, sf_dir):
     not guess). FULL value oracle: planting arithmetic replayed, the
     chain walk as a bounded recursive CTE, terminals by anti-semijoin
     on the source domain."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         extract_redirect_edges,
         resolve_redirects,
@@ -11519,7 +11289,6 @@ def q239(spark, sf_dir):
     output is frontier-sized (one row per url), broadcastable into
     schedule_frontier. FULL value oracle: planting + lag + estimator
     replayed (same positive-log form — never -0.0)."""
-    _prep(spark)
     from polars_dataset_spark.functions import estimate_change_rate
 
     # 2026-01-01T00:00:00Z epoch; fetch day number scales with SF
@@ -11630,7 +11399,6 @@ def q240(spark, sf_dir):
     ONE full-data pass (the (true,pred) two-phase count); every later
     join runs on the K×K confusion matrix. FULL value oracle: the
     stopword-hit classifier AND the metric derivations replayed."""
-    _prep(spark)
     from polars_dataset_spark.functions import classification_audit
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11712,7 +11480,6 @@ def q241(spark, sf_dir):
     map-only Arrow pass over the binary bodies, charset ladder per
     row, zero exchanges at any SF. FULL value oracle: the planted
     head permutations re-extracted with anchored regexes in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import html_page_meta
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11783,7 +11550,6 @@ def q242(spark, sf_dir):
     classes vs HAND-DERIVED expected strings from the public NFKC
     tables (ﬁ→fi, ①→1, fullwidth→ASCII, NFD→NFC, ½→1⁄2) — the
     library's own normalizer never computes the oracle side."""
-    _prep(spark)
     from polars_dataset_spark.functions import normalize_unicode
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11860,7 +11626,6 @@ def q243(spark, sf_dir):
     dominant = argmax with first-in-dict tie-break, fractions of
     non-whitespace chars. Map-only, zero exchanges at any SF. FULL
     value oracle: the IDENTICAL pattern strings replayed in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_script_profile
     from polars_dataset_spark.functions.text import SCRIPT_RANGES
 
@@ -11904,7 +11669,6 @@ def q244(spark, sf_dir):
     parse. FULL value oracle: url/kind/content-type/text replayed
     straight off the planted inputs — any framing or encoding defect
     breaks the hash."""
-    _prep(spark)
     from polars_dataset_spark.sources import warc_records, write_wet
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -11987,7 +11751,6 @@ def q245(spark, sf_dir):
     token-boundary rlikes — 'noindexing' does not trip), map-only,
     zero exchanges. FULL value oracle: the IDENTICAL pattern strings
     replayed in SQL over the planted permutations."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_robots_directives
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -12024,7 +11787,6 @@ def q246(spark, sf_dir):
     stated guarantees — zero false negatives (structural) and measured
     FP ≤ 3× the 1% target on disjoint keys; the suite pins geometry
     and determinism in tests/test_bloom.py."""
-    _prep(spark)
     from polars_dataset_spark.functions import bloom_build, bloom_probe
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -12115,7 +11877,6 @@ def q247(spark, sf_dir):
     shuffle on the url key + a codegen status projection; no window,
     no second pass. FULL value oracle: planting + FULL JOIN + status
     CASE replayed."""
-    _prep(spark)
     from polars_dataset_spark.functions import crawl_diff
 
     docs = load_table(spark, sf_dir, "documents")
@@ -12197,7 +11958,6 @@ def q248(spark, sf_dir):
     UNROLLED as three chained CTE iterations over the planted graph —
     teleport, damping, dangling redistribution all value-checked at
     round-6."""
-    _prep(spark)
     from polars_dataset_spark.functions import pagerank
 
     edges = load_table(spark, sf_dir, "documents").select(
@@ -12259,7 +12019,6 @@ def q249(spark, sf_dir):
     headers lie in both directions, so this emits columns to weigh,
     not a schedule. Pure codegen, map-only, zero exchanges. FULL
     value oracle: identical pattern strings replayed in SQL."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_cache_hints
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -12322,7 +12081,6 @@ def q250(spark, sf_dir):
     ``mixed.рф`` no. Map-only, zero exchanges. FULL value oracle with
     HAND-DERIVED expected strings (the library never computes the
     oracle side)."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         decode_idn_hosts,
         flag_homograph_hosts,
@@ -12380,7 +12138,6 @@ def q251(spark, sf_dir):
     bandwidth budget. ONE window shuffle on the url key,
     frontier-sized output. FULL value oracle: planting + max-day
     selection replayed."""
-    _prep(spark)
     from polars_dataset_spark.functions import revalidation_headers
 
     docs = (
@@ -12427,7 +12184,6 @@ def q252(spark, sf_dir):
     head fields re-derived from the planting with q241's anchored
     regexes — any extraction, serialization or framing defect breaks
     the hash."""
-    _prep(spark)
     from polars_dataset_spark.functions import html_page_meta
     from polars_dataset_spark.sources import warc_records, write_wat
 
@@ -12533,7 +12289,6 @@ def q253(spark, sf_dir):
     nothing to audit). ONE full-data pass (the (declared, predicted)
     two-phase count). FULL value oracle: attribute regex + classifier
     + rollup replayed."""
-    _prep(spark)
     from polars_dataset_spark.functions import with_declared_lang
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -12608,7 +12363,6 @@ def q254(spark, sf_dir):
     terminal), so neither layer alone resolves them. Same
     pointer-jumping plan as q238. FULL value oracle: the unified edge
     arithmetic walked by a bounded recursive CTE."""
-    _prep(spark)
     from polars_dataset_spark.functions import (
         extract_meta_refresh_edges,
         extract_redirect_edges,
@@ -12669,7 +12423,6 @@ def q255(spark, sf_dir):
     totals are bounded 1-row broadcasts (q124 class, allowlisted).
     FULL value oracle: the whole apportionment replayed in SQL (the
     oracle may single-partition sort; the engine may not)."""
-    _prep(spark)
     from polars_dataset_spark.functions import allocate_budget
 
     weights = (
@@ -12687,7 +12440,6 @@ def q255(spark, sf_dir):
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """entry() query: the star join (q06) through the Dataset API —
     construct, join, filter, aggregate, sort in one plan."""
-    _prep(spark)
     return (
         q06(spark, sf_dir)
         .orderBy(F.col("revenue").desc())

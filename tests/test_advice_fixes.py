@@ -1,46 +1,12 @@
-"""Regression tests for the round-2 ADVICE findings: null trace keys in
-detrend/normalize (eqNullSafe join), null tokens in the global prefix
-sum, key-only / dtype-mismatched snapshot_diff, and 0-row no-header
-transpose."""
+"""Regression tests for the round-2 ADVICE findings: null tokens in the
+global prefix sum, key-only / dtype-mismatched snapshot_diff, and 0-row
+no-header transpose."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from polars_dataset_spark.core import Dataset
 from polars_dataset_spark.functions import pack_sequences
 from polars_dataset_spark.operators.merge import snapshot_diff
-
-
-def test_detrend_keeps_null_trace_keys(spark):
-    df = spark.createDataFrame(
-        [(None, 0.0, 1.0), (None, 1.0, 2.0), ("a", 0.0, 5.0), ("a", 1.0, 7.0)],
-        "grp string, x double, y double",
-    )
-    ds = Dataset(df, index="x", id_vars=["grp"])
-    out = ds.detrend("y").df
-    assert out.count() == 4  # null-keyed rows preserved, not dropped
-    nullrows = out.filter(F.col("grp").isNull()).collect()
-    assert len(nullrows) == 2
-    # perfect line y = x + 1 -> residuals ~ 0 within the null group
-    for r in nullrows:
-        assert abs(r["y_detrended"]) < 1e-9
-
-
-def test_normalize_keeps_null_trace_keys(spark):
-    df = spark.createDataFrame(
-        [(None, 0.0, 1.0), (None, 1.0, 3.0), ("a", 0.0, 5.0)],
-        "grp string, x double, y double",
-    )
-    ds = Dataset(df, index="x", id_vars=["grp"])
-    out = ds.normalize("y", method="minmax").df
-    assert out.count() == 3
-    got = {
-        (r["grp"], r["y"]): r["y_norm"]
-        for r in out.collect()
-    }
-    assert got[(None, 1.0)] == 0.0
-    assert got[(None, 3.0)] == 1.0
-    assert got[("a", 5.0)] is None  # degenerate single-row trace
 
 
 def test_global_prefix_sum_null_tokens(spark):

@@ -508,8 +508,13 @@ def test_trace_windows_on_flattened_struct_names(spark):
     """The per-trace window family reads a flattened struct field
     (``"s.a"``) as one column name, as ewm_mean and smooth do."""
     df = spark.createDataFrame(
-        [("a", 1.0, (3.0,)), ("a", 2.0, (1.0,)), ("a", 3.0, (4.0,)), ("b", 1.0, (2.0,))],
-        "g string, x double, s struct<a: double>",
+        [
+            ("a", 1.0, (3.0, 10.0)),
+            ("a", 2.0, (1.0, None)),
+            ("a", 3.0, (4.0, 30.0)),
+            ("b", 1.0, (2.0, None)),
+        ],
+        "g string, x double, s struct<a: double, b: double>",
     )
     ds = Dataset(df, index="x", id_vars=["g"]).unnest("s")
     out = (
@@ -533,6 +538,22 @@ def test_trace_windows_on_flattened_struct_names(spark):
     assert col("s.a_rolling_max") == [3.0, 3.0, 4.0]
     assert col("s.a_peak_max") == [True, False, True]
     assert col("s.a") == [3.0, 1.5, 4.0]
+
+    out = (
+        ds.rank("s.a").rolling_corr("s.a", "x", 2).detrend("s.a")
+        .normalize("s.a", method="minmax").winsorize("s.a", p=0.25, out_col="s.a_w")
+        .rolling_median("s.a", 2)
+    )
+    rows = [r.asDict() for r in out.df.filter(F.col("g") == "a").orderBy("x").collect()]
+    assert col("s.a_rank") == [2, 1, 3]
+    assert col("s.a_x_rolling_corr") == [None, pytest.approx(-1.0), pytest.approx(1.0)]
+    assert col("s.a_detrended") == pytest.approx([5 / 6, -5 / 3, 5 / 6])
+    assert col("s.a_norm") == pytest.approx([2 / 3, 0.0, 1.0])
+    assert col("s.a_w") == [3.0, 1.75, 3.25]
+    assert col("s.a_rolling_median") == [3.0, 2.0, 2.5]
+    filled = lambda d: [r["s.b"] for r in d.df.orderBy("g", "x").collect()]  # noqa: E731
+    assert filled(ds.fill_forward("s.b")) == [10.0, 10.0, 30.0, None]
+    assert filled(ds.interpolate_nulls("s.b")) == [10.0, 20.0, 30.0, None]
 
 
 def test_corr_cov_and_matrix(spark):
@@ -740,6 +761,64 @@ def test_detrend_and_normalize(spark):
     assert [r.v_norm for r in mm if r.g == "a"] == [0.0, 0.25, 0.5, 0.75, 1.0]
     with pytest.raises(ValueError):
         ds.normalize("v", method="robust")
+
+
+def test_detrend_keeps_null_trace_keys(spark):
+    df = spark.createDataFrame(
+        [(None, 0.0, 1.0), (None, 1.0, 2.0), ("a", 0.0, 5.0), ("a", 1.0, 7.0)],
+        "grp string, x double, y double",
+    )
+    ds = Dataset(df, index="x", id_vars=["grp"])
+    out = ds.detrend("y").df
+    assert out.count() == 4  # null-keyed rows preserved, not dropped
+    nullrows = out.filter(F.col("grp").isNull()).collect()
+    assert len(nullrows) == 2
+    # perfect line y = x + 1 -> residuals ~ 0 within the null group
+    for r in nullrows:
+        assert abs(r["y_detrended"]) < 1e-9
+
+
+def test_normalize_keeps_null_trace_keys(spark):
+    df = spark.createDataFrame(
+        [(None, 0.0, 1.0), (None, 1.0, 3.0), ("a", 0.0, 5.0)],
+        "grp string, x double, y double",
+    )
+    ds = Dataset(df, index="x", id_vars=["grp"])
+    out = ds.normalize("y", method="minmax").df
+    assert out.count() == 3
+    got = {
+        (r["grp"], r["y"]): r["y_norm"]
+        for r in out.collect()
+    }
+    assert got[(None, 1.0)] == 0.0
+    assert got[(None, 3.0)] == 1.0
+    assert got[("a", 5.0)] is None  # degenerate single-row trace
+
+
+def test_detrend_exact_path_partition_invariant(spark):
+    """Decimal measure + integer index takes the exact-moments fit (r9):
+    residuals must be BIT-identical under any repartitioning — the
+    property the regr_slope co-moment path lacks (last-ulp drift under
+    different merge orders, caught by the sf1 oracle sweep on q120)."""
+    import decimal
+
+    from polars_dataset_spark.core import Dataset
+
+    rows = [
+        (g, d, decimal.Decimal(f"{(d * 37 + g * 11) % 1000}.{(d * 7) % 100:02d}0000"))
+        for g in (0, 1)
+        for d in range(200)
+    ]
+    df = spark.createDataFrame(rows, "g int, day int, rev decimal(28,6)")
+
+    def resids(frame):
+        ds = Dataset(frame, index="day", id_vars=["g"])
+        out = ds.detrend("rev", out_col="r")
+        return {(r.g, r.day): r.r for r in out.df.collect()}
+
+    a = resids(df.repartition(1))
+    b = resids(df.repartition(32, "day"))
+    assert a == b
 
 
 def test_rolling_corr_and_winsorize(spark):

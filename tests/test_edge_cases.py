@@ -49,11 +49,15 @@ def test_similarity_ops_empty(spark):
     assert embedding_neardup(empty_emb, dim=8).count() == 0
 
 
-def test_asof_empty(spark):
+def test_asof_empty(spark, monkeypatch):
+    from polars_dataset_spark.operators import asof
+
     lft = spark.createDataFrame([], "k double")
     rgt = spark.createDataFrame([], "k double, v double")
     assert join_asof(lft, rgt, on="k").count() == 0
-    assert join_asof(lft, rgt, on="k", method="broadcast").count() == 0
+    # below any size, so even an empty right side takes the sort path
+    monkeypatch.setattr(asof, "_BROADCAST_LIMIT", -1)
+    assert join_asof(lft, rgt, on="k").count() == 0
 
 
 def test_round2_methods_empty(empty_traces, spark):

@@ -102,6 +102,46 @@ def test_simhash_near_dups(docs):
     assert 1 not in survivors and 5 not in survivors and 0 in survivors
 
 
+def _simhash_reference(text):
+    """Charikar SimHash as q38's SQL oracle states it: tokens of the
+    space-trimmed, lowercased, ASCII-whitespace-collapsed text ('' for an
+    empty or null one); bit j is the sign of the tf-weighted vote of bit
+    ``3 - j % 4`` of hex digit ``j // 4`` of each token's md5."""
+    import collections
+    import hashlib
+    import re
+
+    norm = re.sub(r"\s+", " ", (text or "").strip(" ").lower(), flags=re.ASCII)
+    tf = collections.Counter(norm.split(" ") if norm else [""])
+    hexes = {t: hashlib.md5(t.encode()).hexdigest() for t in tf}
+    sig = 0
+    for j in range(64):
+        vote = sum(
+            c * (1 if int(hexes[t][j // 4], 16) >> (3 - j % 4) & 1 else -1)
+            for t, c in tf.items()
+        )
+        if vote > 0:
+            sig |= 1 << j
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+
+def test_simhash_matches_md5_reference(spark):
+    texts = [
+        "",
+        None,
+        "   ",
+        "spam spam spam eggs",
+        "spam eggs",
+        "a \t\n  b\r\x0cc  ",
+        "\tleading tab",
+        "Naïve CAFÉ déjà-vu 東京 東京 ÜBER",
+        "a\u00a0b",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {r.doc_id: r.simhash for r in simhash(df).collect()}
+    assert got == {i: _simhash_reference(t) for i, t in enumerate(texts)}
+
+
 @pytest.fixture(scope="module")
 def vecs(spark):
     rng = np.random.RandomState(7)
@@ -337,11 +377,9 @@ def test_repetition_stats(spark):
 
 
 def test_simhash_portable_matches_semantics(docs):
-    from polars_dataset_spark.functions import simhash_dedup_portable
-
     # exact dups (0/1/5 share text) have hamming 0 -> larger ids dropped;
     # unrelated docs 3/4 survive
-    kept = sorted(r.doc_id for r in simhash_dedup_portable(docs, max_hamming=3).collect())
+    kept = sorted(r.doc_id for r in simhash_dedup(docs, max_hamming=3).collect())
     assert 0 in kept and 1 not in kept and 5 not in kept
     assert 3 in kept and 4 in kept
 

@@ -76,6 +76,27 @@ def test_cc_empty_edges(spark):
     assert connected_components(empty).count() == 0
 
 
+def test_star_input_skips_contraction(spark):
+    # already a min-rooted star union: must converge with ZERO
+    # contraction rounds (max_iter=0 succeeds only via the early-exit)
+    rows = [(0, i) for i in range(1, 5)] + [(10, j) for j in range(11, 14)]
+    edges = spark.createDataFrame(rows, "id_a long, id_b long")
+    out = connected_components(edges, max_iter=0)
+    got = {r["id"]: r["component"] for r in out.collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10, 12: 10, 13: 10}
+
+
+def test_vunique_chain_not_mistaken_for_star(spark):
+    # (1,2),(2,3): every v unique, but 2 is both parent and child — the
+    # disjointness probe must reject it and the loop must run
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="no convergence"):
+        connected_components(edges, max_iter=0)
+    out = connected_components(edges, max_iter=25)
+    assert {r["component"] for r in out.collect()} == {1}
+    assert out.count() == 3
+
+
 def test_dedup_by_components_transitive_chain(spark):
     # 1~2, 2~3, 3~4: one cluster, representative 1 survives; 5 untouched.
     docs = spark.createDataFrame(
@@ -149,36 +170,3 @@ def test_dedup_by_components_quality_keep(spark):
     # default rule unchanged: min id per cluster
     kept_min = {r["doc_id"] for r in dedup_by_components(docs, pairs).collect()}
     assert kept_min == {1, 4, 6, 8}
-
-
-@pytest.mark.parametrize(
-    "edges",
-    [
-        [(i, i + 1) for i in range(30)],            # path
-        [(0, i) for i in range(1, 20)],             # hub/star (the pre_contract target)
-        [(i, (i + 1) % 17) for i in range(17)],     # cycle
-        [(5, 5), (1, 2), (2, 1), (2, 3)],           # self-loops + dups
-    ],
-    ids=["path", "hub", "cycle", "loops-dups"],
-)
-def test_cc_pre_contract_same_answer(spark, edges):
-    """pre_contract=True (salted two-level-min + join large-star first
-    round, the raw-edge skew escape hatch) must be answer-identical."""
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    base = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    pre = {
-        r["id"]: r["component"]
-        for r in connected_components(df, pre_contract=True).collect()
-    }
-    assert pre == base
-
-
-def test_cc_pre_contract_hub_converges_in_one_probe(spark):
-    """A raw hub graph is a star after ONE salted large-star round: the
-    loop must not be entered at all (max_iter=0 still converges)."""
-    df = spark.createDataFrame(
-        [(i, 0) for i in range(1, 40)], "id_a long, id_b long"
-    )
-    out = connected_components(df, max_iter=0, pre_contract=True)
-    got = {r["id"]: r["component"] for r in out.collect()}
-    assert got == {i: 0 for i in range(40)}

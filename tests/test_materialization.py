@@ -29,7 +29,7 @@ PKG = Path(__file__).resolve().parents[1] / "polars_dataset_spark"
 # one call: each must release it in a ``finally`` block
 TWICE_READ = {
     ("functions.dedup", "minhash_lsh_candidates"),
-    ("functions.dedup", "simhash_dedup_portable"),
+    ("functions.dedup", "simhash_dedup"),
     ("functions.dedup", "banded_neardup_pairs"),
     ("functions.dedup", "fuzzy_join"),
     ("functions.dedup", "neardup_filter_against"),
@@ -170,7 +170,6 @@ def _entry_points():
         "minhash_dedup": lambda s: fn.minhash_dedup(_docs(s), threshold=0.5),
         "ngram_jaccard_pairs": lambda s: fn.ngram_jaccard_pairs(_docs(s), threshold=0.5),
         "simhash_dedup": lambda s: fn.simhash_dedup(_docs(s)),
-        "simhash_dedup_portable": lambda s: fn.simhash_dedup_portable(_docs(s)),
         "fuzzy_join": lambda s: fn.fuzzy_join(
             _docs(s), _docs(s), left_id="doc_id", right_id="doc_id", threshold=0.5
         ),

@@ -234,9 +234,11 @@ def test_join_asof_equal_keys_inclusive(spark):
     assert out[0].val == 7.0
 
 
-def test_join_asof_broadcast_matches_sort(spark, sf_dir):
+def test_join_asof_broadcast_matches_sort(spark, sf_dir, monkeypatch):
     import pandas as pd
     from pyspark.sql import functions as F
+
+    from polars_dataset_spark.operators import asof
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_returnflag"
@@ -248,8 +250,10 @@ def test_join_asof_broadcast_matches_sort(spark, sf_dir):
     )
     kw = dict(on="l_shipdate", right_on="o_orderdate")
     for strategy in ("backward", "forward", "nearest"):
-        a = join_asof(li, od, strategy=strategy, method="sort", **kw)
-        b = join_asof(li, od, strategy=strategy, method="broadcast", **kw)
+        with monkeypatch.context() as m:
+            m.setattr(asof, "_BROADCAST_LIMIT", 0)
+            a = join_asof(li, od, strategy=strategy, **kw)
+        b = join_asof(li, od, strategy=strategy, **kw)
         # NB: (l_orderkey, l_linenumber) is NOT unique in the synthetic
         # data — compare whole frames sorted by every column
         cols = sorted(a.columns)
@@ -267,13 +271,13 @@ def test_join_asof_broadcast_by_and_tolerance(spark):
     )
     got = {
         (r.g, r.k): r.val
-        for r in join_asof(left, right, on="k", by="g", strategy="backward", method="broadcast").collect()
+        for r in join_asof(left, right, on="k", by="g", strategy="backward").collect()
     }
     assert got == {("a", 1.0): None, ("a", 5.0): 20.0, ("b", 5.0): None}
     got = {
         (r.g, r.k): r.val
         for r in join_asof(
-            left, right, on="k", by="g", strategy="forward", tolerance=2.0, method="broadcast"
+            left, right, on="k", by="g", strategy="forward", tolerance=2.0
         ).collect()
     }
     assert got == {("a", 1.0): 10.0, ("a", 5.0): None, ("b", 5.0): None}
@@ -295,10 +299,14 @@ def test_join_asof_nearest(spark):
     assert got == {1.0: 10.0, 2.9: 10.0, 3.0: 10.0, 100.0: None}
 
 
-def test_join_asof_nearest_sort_path(spark):
+def test_join_asof_nearest_sort_path(spark, monkeypatch):
     # same semantics as the broadcast nearest (ties -> backward), via the
     # union-sort realization (large-right path, previously unsupported)
     import pandas as pd
+
+    from polars_dataset_spark.operators import asof
+
+    monkeypatch.setattr(asof, "_BROADCAST_LIMIT", 0)
 
     left = spark.createDataFrame(
         pd.DataFrame({"g": ["x", "x", "x", "y"], "k": [1.0, 2.9, 3.0, 3.0]})
@@ -309,7 +317,7 @@ def test_join_asof_nearest_sort_path(spark):
     got = {
         (r.g, r.k): r.val
         for r in join_asof(
-            left, right, on="k", by="g", strategy="nearest", method="sort"
+            left, right, on="k", by="g", strategy="nearest"
         ).collect()
     }
     assert got == {
@@ -321,8 +329,7 @@ def test_join_asof_nearest_sort_path(spark):
     got = {
         (r.g, r.k): r.val
         for r in join_asof(
-            left, right, on="k", by="g", strategy="nearest", method="sort",
-            tolerance=0.6,
+            left, right, on="k", by="g", strategy="nearest", tolerance=0.6,
         ).collect()
     }
     assert got == {
@@ -333,21 +340,22 @@ def test_join_asof_nearest_sort_path(spark):
     }
 
 
-def test_join_asof_auto_fallback_and_guard(spark):
+def test_join_asof_auto_fallback_and_guard(spark, monkeypatch):
     import pandas as pd
-    import pytest
+
+    from polars_dataset_spark.operators import asof
 
     left = spark.createDataFrame(pd.DataFrame({"k": [1.0, 5.0]}))
     right = spark.createDataFrame(
         pd.DataFrame({"k": [0.0, 2.0, 4.0], "val": [1.0, 2.0, 3.0]})
     )
-    # auto with a tiny limit → falls back to the sort path, same answer
-    a = join_asof(left, right, on="k", method="auto", broadcast_limit=1)
-    b = join_asof(left, right, on="k", method="sort")
+    b = join_asof(left, right, on="k")
+    # a right side over the collect bound → the sort path, same answer
+    monkeypatch.setattr(asof, "_BROADCAST_LIMIT", 2)
+    a = join_asof(left, right, on="k")
+    assert "MapInPandas" in b._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in a._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # explicit broadcast over the limit → loud error, not a driver OOM
-    with pytest.raises(ValueError, match="broadcast_limit"):
-        join_asof(left, right, on="k", method="broadcast", broadcast_limit=1)
 
 
 def test_bitset_prefilter_join_exact(spark):

@@ -71,14 +71,6 @@ def test_duplicate_edges_collapse(spark):
         assert abs(a[v] - b[v]) < 1e-12
 
 
-def test_checkpoint_path_same_values(spark):
-    a = {r.node: round(r.rank, 10) for r in
-         pagerank(_edges(spark, CHAIN), iterations=4).collect()}
-    b = {r.node: round(r.rank, 10) for r in
-         pagerank(_edges(spark, CHAIN), iterations=4, checkpoint_every=2).collect()}
-    assert a == b
-
-
 def test_bad_args(spark):
     with pytest.raises(ValueError):
         pagerank(_edges(spark, CHAIN), damping=1.5)
