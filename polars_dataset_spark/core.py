@@ -101,10 +101,36 @@ def _as_list(x) -> list:
     return list(x)
 
 
-def _qcol(name: str) -> Column:
-    """The column named ``name``, quoted so a flattened struct field
-    (``"s.a"``) resolves as one name, not as field ``a`` of ``s``."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _qname(name: str) -> str:
+    """``name`` quoted, so a flattened struct field (``"s.a"``) resolves as
+    one name, not as field ``a`` of ``s``: the one resolver of every column
+    name a ``Dataset`` method touches, directly or through :func:`_qcol`."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _qcol(name) -> Column:
+    """The column named ``name``; a ``Column`` passes through."""
+    return F.col(_qname(name)) if isinstance(name, str) else name
+
+
+# applyInPandas grouping, mapInPandas input and DataFrame.summary resolve
+# names unquoted inside themselves, parsing "." as struct access: frames
+# handed to them carry _undot names, restored with _redot
+def _undot(name: str) -> str:
+    return name.replace(".", "__dot__")
+
+
+def _redot(name: str) -> str:
+    return name.replace("__dot__", ".")
+
+
+def _positions(df: DataFrame, order_cols: list) -> DataFrame:
+    """``df`` plus ``__cum`` (and ``__one``, ``__pid``), each row's 1-based
+    position in ``order_cols`` order: the eager ``_global_prefix_sum``."""
+    from polars_dataset_spark.functions.packing import _global_prefix_sum
+
+    parts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    return _global_prefix_sum(df.withColumn("__one", F.lit(1)), "__one", order_cols, parts)
 
 
 def _rolling_key_rows(keys: list, pdf) -> "list[tuple]":
@@ -444,19 +470,19 @@ class Dataset:
     def select(self, *exprs) -> "Dataset":
         """Arbitrary projection (reference ``select`` :145-148). Dropping
         the index raises; dropped id_vars prune."""
-        return self._rewrap(self._df.select(*exprs))
+        return self._rewrap(self._df.select(*map(_qcol, exprs)))
 
     def select_data(self, *exprs) -> "Dataset":
         """Projection that always keeps ``id_vars + [index]`` and appends
         the newly selected value columns (reference ``select_data``
         :153-158)."""
         keep = [*self._id_vars, self._index]
-        return self._rewrap(self._df.select(*keep, *exprs))
+        return self._rewrap(self._df.select(*map(_qcol, [*keep, *exprs])))
 
     def fetch(self, *exprs) -> DataFrame:
         """Escape hatch: projection returning the raw, unwrapped Spark
         DataFrame (reference ``fetch`` :160-161)."""
-        return self._df.select(*exprs)
+        return self._df.select(*map(_qcol, exprs))
 
     def pivot(self, on: str, index=None, values=None, aggregate_function: str = "first") -> DataFrame:
         """Wide reshape; returns a plain DataFrame (reference ``pivot``
@@ -467,10 +493,10 @@ class Dataset:
         idx = [c for c in idx if c in self._df.columns and c != on]
         vals = _as_list(values) or None
         agg_col = [c for c in self.value_vars if c != on]
-        gp = self._df.groupBy(*idx)
-        pv = gp.pivot(on, vals) if vals else gp.pivot(on)
+        gp = self._df.groupBy(*map(_qcol, idx))
+        pv = gp.pivot(_qname(on), vals) if vals else gp.pivot(_qname(on))
         aggf = getattr(F, aggregate_function)
-        return pv.agg(*[aggf(c).alias(c) for c in agg_col])
+        return pv.agg(*[aggf(_qcol(c)).alias(c) for c in agg_col])
 
     def join(self, other, **kwargs) -> "Dataset":
         """Join with another Dataset or DataFrame (reference ``join``
@@ -490,7 +516,7 @@ class Dataset:
             lo, ro = _as_list(left_on), _as_list(right_on)
             cond = functools.reduce(
                 lambda a, b: a & b,
-                [self._df[l] == other[r] for l, r in zip(lo, ro)],
+                [self._df[_qname(l)] == other[_qname(r)] for l, r in zip(lo, ro)],
             )
             joined = self._df.join(other, cond, how)
         elif how == "cross":
@@ -543,20 +569,22 @@ class Dataset:
         a min-rowid trick; for an ordered coordinate prefer
         ``maintain_order=False`` (plain distinct + sort — cheaper: no
         monotonic id, fully codegen'd)."""
+        c = _qcol(name)
         if maintain_order:
             return (
                 self._df.withColumn("_rid", F.monotonically_increasing_id())
-                .groupBy(name)
+                .groupBy(c)
                 .agg(F.min("_rid").alias("_o"))
                 .orderBy("_o")
-                .select(name)
+                .select(c)
             )
-        return self._df.select(name).distinct().orderBy(name)
+        return self._df.select(c).distinct().orderBy(c)
 
     def extrema(self, colname: str) -> tuple:
         """(min, max) of one column (reference ``extrema`` :277-280).
         Single aggregate job; collapses to one row — safe at any scale."""
-        row = self._df.agg(F.min(colname).alias("mn"), F.max(colname).alias("mx")).first()
+        c = _qcol(colname)
+        row = self._df.agg(F.min(c).alias("mn"), F.max(c).alias("mx")).first()
         return (row["mn"], row["mx"])
 
     def sort(self, *args, auto: bool = True, **kwargs) -> "Dataset":
@@ -580,7 +608,7 @@ class Dataset:
                 f"sort: descending has {len(desc)} entries for {len(keys)} keys"
             )
         def order(k, d):
-            c = F.col(k)
+            c = _qcol(k)
             if d:
                 return c.desc_nulls_last() if nulls_last else c.desc()
             return c.asc_nulls_last() if nulls_last else c.asc()
@@ -592,8 +620,7 @@ class Dataset:
         ids = [c for c in self._id_vars if c in df.columns]
         keyed = set(ids) | {self._index}
         rest = [c for c in df.columns if c not in keyed]
-        # quoted: a flattened struct field's name holds a dot
-        return df.select(*[F.col(f"`{c}`") for c in [*ids, self._index, *rest]])
+        return df.select(*map(_qcol, [*ids, self._index, *rest]))
 
     def sort_columns(self) -> "Dataset":
         """Canonical column order ``id_vars, index, value_vars`` (reference
@@ -609,11 +636,11 @@ class Dataset:
         preds = []
         for field in self._df.schema.fields:
             if isinstance(field.dataType, (T.FloatType, T.DoubleType)):
-                preds.append(F.isnan(F.col(field.name)))
+                preds.append(F.isnan(_qcol(field.name)))
             elif isinstance(field.dataType, T.StructType):
                 for sub in field.dataType.fields:
                     if isinstance(sub.dataType, (T.FloatType, T.DoubleType)):
-                        preds.append(F.isnan(F.col(f"{field.name}.{sub.name}")))
+                        preds.append(F.isnan(F.col(f"{_qname(field.name)}.{_qname(sub.name)}")))
         if not preds:
             return self._rewrap(self._df)
         any_nan = functools.reduce(lambda a, b: a | b, preds)
@@ -629,13 +656,13 @@ class Dataset:
         The Spark analog: one explicit shuffle here lets a following chain
         of per-trace operators (windows over id_vars, ``applyInPandas``
         groupings) reuse the exchange instead of each inserting its own."""
-        parts = [F.col(c) for c in self._id_vars] or [F.col(self._index)]
+        parts = [*map(_qcol, self._id_vars)] or [_qcol(self._index)]
         df = (
             self._df.repartition(num_partitions, *parts)
             if num_partitions
             else self._df.repartition(*parts)
         )
-        return self._rewrap(df.sortWithinPartitions(self._index))
+        return self._rewrap(df.sortWithinPartitions(_qcol(self._index)))
 
     # -- polars-name shims (delegated-surface parity, SURVEY §2.3/§3) -------
 
@@ -666,13 +693,7 @@ class Dataset:
         (range partition → per-partition counts → offset map, same
         machinery as global sequence packing), so no stage sees more than
         one partition's rows."""
-        from polars_dataset_spark.functions.packing import _global_prefix_sum
-
-        order_cols = [*self._id_vars, self._index]
-        parts = self._df.sparkSession.sparkContext.defaultParallelism
-        d = _global_prefix_sum(
-            self._df.withColumn("__one", F.lit(1)), "__one", order_cols, max(parts, 1)
-        )
+        d = _positions(self._df, [*self._id_vars, self._index])
         return self._rewrap(
             d.withColumn(name, (F.col("__cum") - 1 + offset).cast("long")).drop(
                 "__one", "__cum", "__pid"
@@ -680,7 +701,7 @@ class Dataset:
         )
 
     def group_by(self, *keys):
-        return self._df.groupBy(*keys)
+        return self._df.groupBy(*map(_qcol, keys))
 
     def unique(self, subset=None, keep: str = "any") -> "Dataset":
         """Distinct rows over ``subset``. ``keep="any"`` maps to
@@ -693,10 +714,10 @@ class Dataset:
             return self._rewrap(self._df.dropDuplicates(sub) if sub else self._df.dropDuplicates())
         if keep not in ("first", "last"):
             raise ValueError(f"keep must be 'any', 'first' or 'last', got {keep!r}")
-        order_cols = [F.col(c) for c in [*self._id_vars, self._index]]
+        order_cols = [*map(_qcol, [*self._id_vars, self._index])]
         if keep == "last":
             order_cols = [c.desc() for c in order_cols]
-        w = Window.partitionBy(*sub).orderBy(*order_cols)
+        w = Window.partitionBy(*map(_qcol, sub)).orderBy(*order_cols)
         return self._rewrap(
             self._df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -705,7 +726,7 @@ class Dataset:
 
     def n_unique(self, subset=None) -> int:
         sub = _as_list(subset) or self._df.columns
-        return self._df.select(*sub).distinct().count()
+        return self._df.select(*map(_qcol, sub)).distinct().count()
 
     def head(self, n: int = 5) -> "Dataset":
         return self._rewrap(self._df.limit(n))
@@ -715,12 +736,12 @@ class Dataset:
     def top_k(self, k: int, by, descending: bool = True) -> "Dataset":
         """Top-k by column(s) — Catalyst plans TakeOrderedAndProject (no
         full sort; per-partition heaps then a k-merge)."""
-        keys = [F.col(c).desc() if descending else F.col(c).asc() for c in _as_list(by)]
+        keys = [_qcol(c).desc() if descending else _qcol(c).asc() for c in _as_list(by)]
         return self._rewrap(self._df.orderBy(*keys).limit(k))
 
     def unpivot(self, on=None, index=None, variable_name: str = "variable", value_name: str = "value") -> "Dataset":
-        ids = _as_list(index) or [*self._id_vars, self._index]
-        vals = _as_list(on) or [c for c in self.value_vars]
+        ids = [*map(_qcol, _as_list(index) or [*self._id_vars, self._index])]
+        vals = [*map(_qcol, _as_list(on) or self.value_vars)]
         return self._rewrap(self._df.unpivot(ids, vals, variable_name, value_name))
 
     melt = unpivot
@@ -730,17 +751,17 @@ class Dataset:
 
     def fill_nan(self, value) -> "Dataset":
         cols = {
-            f.name: F.when(F.isnan(F.col(f.name)), F.lit(value)).otherwise(F.col(f.name))
+            f.name: F.when(F.isnan(_qcol(f.name)), F.lit(value)).otherwise(_qcol(f.name))
             for f in self._df.schema.fields
             if isinstance(f.dataType, (T.FloatType, T.DoubleType))
         }
         return self._rewrap(self._df.withColumns(cols)) if cols else self._rewrap(self._df)
 
     def drop_nulls(self, subset=None) -> "Dataset":
-        return self._rewrap(self._df.dropna(subset=_as_list(subset) or None))
+        return self._rewrap(self._df.dropna(subset=[*map(_qname, _as_list(subset))] or None))
 
     def cast(self, mapping: Mapping[str, str]) -> "Dataset":
-        cols = {c: F.col(c).cast(t) for c, t in mapping.items()}
+        cols = {c: _qcol(c).cast(t) for c, t in mapping.items()}
         return self._rewrap(self._df.withColumns(cols))
 
     def explode(self, *cols, outer: bool = False) -> "Dataset":
@@ -749,7 +770,7 @@ class Dataset:
         fn = F.explode_outer if outer else F.explode
         df = self._df
         for c in cols:
-            df = df.withColumn(c, fn(c))
+            df = df.withColumn(c, fn(_qcol(c)))
         return self._rewrap(df)
 
     def null_count(self) -> DataFrame:
@@ -757,7 +778,7 @@ class Dataset:
         ``null_count``). One aggregate job; NaN is NOT null (duality)."""
         return self._df.agg(
             *[
-                F.count(F.when(F.col(c).isNull(), 1)).alias(c)
+                F.count(F.when(_qcol(c).isNull(), 1)).alias(c)
                 for c in self._df.columns
             ]
         )
@@ -790,14 +811,16 @@ class Dataset:
         bounded memory, mergeable map-side, rank error ≤ n/``accuracy``.
         Prefer it for anything bigger than a bench fixture unless exact
         oracle parity is required."""
+        c = _qcol(colname)
         if exact:
-            return self._df.agg(F.percentile(colname, F.lit(q)).alias("q")).first()["q"]
+            return self._df.agg(F.percentile(c, F.lit(q)).alias("q")).first()["q"]
         return self._df.agg(
-            F.percentile_approx(colname, F.lit(q), F.lit(accuracy)).alias("q")
+            F.percentile_approx(c, F.lit(q), F.lit(accuracy)).alias("q")
         ).first()["q"]
 
     def describe(self) -> DataFrame:
-        return self._df.summary()
+        out = self._df.toDF(*map(_undot, self._df.columns)).summary()
+        return out.toDF(*map(_redot, out.columns))
 
     # -- per-trace window helpers (the ops this data model exists for) ------
 
@@ -820,45 +843,33 @@ class Dataset:
         parallelism."""
         return Window.partitionBy(*map(_qcol, self._id_vars)).orderBy(_qcol(self._index))
 
-    def cum_sum(self, *cols) -> "Dataset":
+    def _cumulative(self, fn, suffix: str, cols) -> "Dataset":
+        """``fn`` over each column's growing trace window, as ``{col}_{suffix}``."""
         w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
         return self._rewrap(
-            self._df.withColumns({f"{c}_cumsum": F.sum(_qcol(c)).over(w) for c in cols})
+            self._df.withColumns({f"{c}_{suffix}": fn(_qcol(c)).over(w) for c in cols})
         )
+
+    def cum_sum(self, *cols) -> "Dataset":
+        return self._cumulative(F.sum, "cumsum", cols)
 
     def cum_max(self, *cols) -> "Dataset":
-        w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
-        return self._rewrap(
-            self._df.withColumns({f"{c}_cummax": F.max(_qcol(c)).over(w) for c in cols})
-        )
+        return self._cumulative(F.max, "cummax", cols)
 
     def cum_min(self, *cols) -> "Dataset":
-        w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
-        return self._rewrap(
-            self._df.withColumns({f"{c}_cummin": F.min(_qcol(c)).over(w) for c in cols})
-        )
+        return self._cumulative(F.min, "cummin", cols)
 
     def cum_prod(self, *cols) -> "Dataset":
         """Running product per trace (polars ``cum_prod``):
         ``F.product`` over the unbounded-preceding trace window — a
         native JVM aggregate, no log/exp detour (which would lose signs
         and zeros)."""
-        cols = cols or self.value_vars
-        w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
-        return self._rewrap(
-            self._df.withColumns(
-                {f"{c}_cumprod": F.product(_qcol(c)).over(w) for c in cols}
-            )
-        )
+        return self._cumulative(F.product, "cumprod", cols or self.value_vars)
 
     def cum_count(self, *cols) -> "Dataset":
         """Running count of NON-NULL values per trace (polars
         ``cum_count``)."""
-        cols = cols or self.value_vars
-        w = self._trace_window().rowsBetween(Window.unboundedPreceding, 0)
-        return self._rewrap(
-            self._df.withColumns({f"{c}_cumcount": F.count(_qcol(c)).over(w) for c in cols})
-        )
+        return self._cumulative(F.count, "cumcount", cols or self.value_vars)
 
     def rle_id(self, col: str, out_col: str | None = None) -> "Dataset":
         """Run-length id per trace (polars ``rle_id``): increments whenever
@@ -932,13 +943,8 @@ class Dataset:
         ``map_traces`` pass per trace (vectorized ``pandas.ewm``
         inside) — the same single-shuffle grouped-map profile as regrid;
         traces are bounded, so no group exceeds executor memory."""
-        from polars_dataset_spark.operators.structs import map_traces
-
-        out_name = f"{col}_ewm_mean"
-        return map_traces(
-            self,
-            lambda t: t.assign(**{out_name: t[col].ewm(alpha=alpha, adjust=adjust).mean()}),
-            lambda fields: [*fields, T.StructField(out_name, T.DoubleType())],
+        return self._per_trace_column(
+            f"{col}_ewm_mean", lambda t: t[col].ewm(alpha=alpha, adjust=adjust).mean()
         )
 
     def smooth(self, col: str, window: int = 7, polyorder: int = 2) -> "Dataset":
@@ -951,15 +957,20 @@ class Dataset:
         one Arrow batch per trace, numpy inside; parallelism = trace
         cardinality (see ``_trace_window``)."""
         from polars_dataset_spark.kernels import savgol_smooth
+
+        return self._per_trace_column(
+            f"{col}_smooth",
+            lambda t: savgol_smooth(t[col].to_numpy(dtype=float), window, polyorder),
+        )
+
+    def _per_trace_column(self, name: str, values) -> "Dataset":
+        """Double column ``name``, ``values(trace frame)``, via ``map_traces``."""
         from polars_dataset_spark.operators.structs import map_traces
 
-        out_name = f"{col}_smooth"
         return map_traces(
             self,
-            lambda t: t.assign(
-                **{out_name: savgol_smooth(t[col].to_numpy(dtype=float), window, polyorder)}
-            ),
-            lambda fields: [*fields, T.StructField(out_name, T.DoubleType())],
+            lambda t: t.assign(**{name: values(t)}),
+            lambda fields: [*fields, T.StructField(name, T.DoubleType())],
         )
 
     def rolling_corr(
@@ -1015,22 +1026,30 @@ class Dataset:
             )
         )
 
-    def _join_trace_stats(self, stats, ids: list[str]):
+    def _trace_stats_grouped(self):
+        """Per-trace stats' grouping: the id_vars, or one group ``__g``."""
+        if not self._id_vars:
+            return self._df.groupBy(F.lit(1).alias("__g"))
+        return self._df.groupBy(*map(_qcol, self._id_vars))
+
+    def _join_trace_stats(self, stats):
         """Row-preserving join of a per-trace stats frame back onto the
         raw rows: ``eqNullSafe`` on every trace key, so rows whose trace
         key is NULL keep their (null-keyed) group's stats instead of
         being silently dropped (Spark's ``on=ids`` join treats
-        NULL != NULL; polars keeps null groups)."""
-        import functools
-        import operator
-
+        NULL != NULL; polars keeps null groups). No forced broadcast: the
+        frame is one row per TRACE, which can itself be huge at scale —
+        AQE broadcasts it when small and shuffle-joins on the trace key
+        otherwise."""
+        ids = self._id_vars
+        if not ids:
+            return self._df.crossJoin(F.broadcast(stats.drop("__g")))
         keyed = stats.select(
             *[_qcol(c).alias(f"__k_{c}") for c in ids],
             *[c for c in stats.columns if c not in ids],
         )
         cond = functools.reduce(
-            operator.and_,
-            [_qcol(c).eqNullSafe(_qcol(f"__k_{c}")) for c in ids],
+            lambda a, b: a & b, [_qcol(c).eqNullSafe(_qcol(f"__k_{c}")) for c in ids]
         )
         return self._df.join(keyed, cond).drop(*[f"__k_{c}" for c in ids])
 
@@ -1057,7 +1076,6 @@ class Dataset:
         co-moments remain the right tool: raw-moment OLS in doubles
         invites cancellation, and float inputs have no exact answer to
         preserve."""
-        ids = list(self._id_vars)
         x = _qcol(self._index).cast("double")
         xt = self._df.schema[self._index].dataType
         yt = self._df.schema[col].dataType
@@ -1065,9 +1083,7 @@ class Dataset:
         exact = isinstance(xt, integral) and isinstance(
             yt, (T.DecimalType, *integral)
         )
-        grouped = (
-            self._df.groupBy(*map(_qcol, ids)) if ids else self._df.groupBy(F.lit(1).alias("__g"))
-        )
+        grouped = self._trace_stats_grouped()
         if exact:
             scale = yt.scale if isinstance(yt, T.DecimalType) else 0
             xc, yc = _qcol(self._index), _qcol(col)
@@ -1090,7 +1106,7 @@ class Dataset:
             # op order mirrors the SQL oracles verbatim (cast/cast/div/
             # div) so both engines execute the identical IEEE sequence
             fit = agg.select(
-                *[c for c in agg.columns if not c.startswith("__f")],
+                *[_qcol(c) for c in agg.columns if not c.startswith("__f")],
                 F.when(den != 0, num_s / den / sf).alias("__slope"),
                 F.when(den != 0, num_b / den / sf).alias("__icept"),
             )
@@ -1099,14 +1115,7 @@ class Dataset:
                 F.regr_slope(_qcol(col).cast("double"), x).alias("__slope"),
                 F.regr_intercept(_qcol(col).cast("double"), x).alias("__icept"),
             )
-        # no forced broadcast: the fit frame is one row per TRACE, which
-        # can itself be huge at scale — AQE broadcasts it when small and
-        # shuffle-joins on the trace key otherwise
-        joined = (
-            self._join_trace_stats(fit, ids)
-            if ids
-            else self._df.crossJoin(F.broadcast(fit.drop("__g")))
-        )
+        joined = self._join_trace_stats(fit)
         resid = _qcol(col) - (F.col("__slope") * x + F.col("__icept"))
         return self._rewrap(
             joined.withColumn(out_col or f"{col}_detrended", resid).drop(
@@ -1120,10 +1129,7 @@ class Dataset:
         then a map-side expression — the grouped scaling a feature
         pipeline applies before training. Degenerate traces (σ=0 or
         max=min) scale to null rather than ±inf."""
-        ids = list(self._id_vars)
-        grouped = (
-            self._df.groupBy(*map(_qcol, ids)) if ids else self._df.groupBy(F.lit(1).alias("__g"))
-        )
+        grouped = self._trace_stats_grouped()
         v = _qcol(col)
         if method == "zscore":
             stats = grouped.agg(F.avg(v).alias("__a"), F.stddev_samp(v).alias("__b"))
@@ -1134,13 +1140,7 @@ class Dataset:
             expr = (v - F.col("__a")) / F.when(rng != 0, rng)
         else:
             raise ValueError(f"normalize: method must be 'zscore' or 'minmax', got {method!r}")
-        # per-trace stats frame: same no-forced-broadcast reasoning as
-        # :meth:`detrend`
-        joined = (
-            self._join_trace_stats(stats, ids)
-            if ids
-            else self._df.crossJoin(F.broadcast(stats.drop("__g")))
-        )
+        joined = self._join_trace_stats(stats)
         return self._rewrap(
             joined.withColumn(out_col or f"{col}_norm", expr).drop("__a", "__b")
         )
@@ -1210,7 +1210,6 @@ class Dataset:
         rows frame to be well-defined (same requirement the window form
         had); real NaN values (not nulls) are treated as missing,
         where the window form sorted them last."""
-        from polars_dataset_spark.operators.structs import _DOT
         from polars_dataset_spark.session import pin
 
         taken = set(self._df.columns)
@@ -1224,9 +1223,8 @@ class Dataset:
         if window_size < 1:
             raise ValueError("rolling_quantiles: window_size must be >= 1")
         w1 = window_size - 1
-        # mapInPandas resolves its input with df[col], which parses "." as
-        # struct access: the chunks carry dot-free names, restored at the end
-        safe = {c: c.replace(".", _DOT) for c in self._df.columns}
+        # the chunks carry dot-free names (mapInPandas), restored at the end
+        safe = {c: _undot(c) for c in self._df.columns}
         keys = [safe[k] for k in self._id_vars]
         index = safe[self._index]
         col = safe[col]
@@ -1299,14 +1297,14 @@ class Dataset:
         if missing:
             raise ValueError(f"update: join keys absent from other: {missing}")
         renamed = other_df.select(
-            *[F.col(k) for k in keys],
-            *[F.col(c).alias(f"__upd_{c}") for c in shared],
+            *map(_qcol, keys),
+            *[_qcol(c).alias(f"__upd_{c}") for c in shared],
         )
         joined = self._df.join(renamed, on=keys, how="left")
         out = joined.withColumns(
-            {c: F.coalesce(F.col(f"__upd_{c}"), F.col(c)) for c in shared}
+            {c: F.coalesce(_qcol(f"__upd_{c}"), _qcol(c)) for c in shared}
         ).drop(*[f"__upd_{c}" for c in shared])
-        return self._rewrap(out.select(self._df.columns))
+        return self._rewrap(out.select(*map(_qcol, self._df.columns)))
 
     def merge_sorted(self, other, key: str | None = None) -> "Dataset":
         """Union with ``other`` ordered by ``key`` (polars
@@ -1316,7 +1314,7 @@ class Dataset:
         of input pre-sortedness."""
         other_df = other._df if isinstance(other, Dataset) else other
         key = key or self._index
-        return self._rewrap(self._df.unionByName(other_df).orderBy(key))
+        return self._rewrap(self._df.unionByName(other_df).orderBy(_qcol(key)))
 
     def partition_by(
         self, *by, include_key: bool = True, max_groups: int = 10_000
@@ -1336,7 +1334,7 @@ class Dataset:
             raise ValueError("partition_by: no keys (no id_vars and none given)")
         keys = [
             tuple(r)
-            for r in self._df.select(*by).distinct().limit(max_groups + 1).collect()
+            for r in self._df.select(*map(_qcol, by)).distinct().limit(max_groups + 1).collect()
         ]
         if len(keys) > max_groups:
             raise ValueError(
@@ -1350,7 +1348,7 @@ class Dataset:
             pred = functools.reduce(
                 lambda a, b: a & b,
                 [
-                    F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
+                    _qcol(c).isNull() if v is None else (_qcol(c) == F.lit(v))
                     for c, v in zip(by, kt)
                 ],
             )
@@ -1370,8 +1368,8 @@ class Dataset:
             raise ValueError("sample: pass exactly one of n= or fraction=")
         if fraction is not None:
             return self.sample_hash(fraction, salt=str(seed))
-        key = F.md5(F.concat_ws("|", F.col(self._index).cast("string"), F.lit(str(seed))))
-        ranked = self._df.orderBy(key, *[F.col(c) for c in self._df.columns]).limit(int(n))
+        key = F.md5(F.concat_ws("|", _qcol(self._index).cast("string"), F.lit(str(seed))))
+        ranked = self._df.orderBy(key, *map(_qcol, self._df.columns)).limit(int(n))
         return self._rewrap(ranked)
 
     def cut(
@@ -1395,7 +1393,7 @@ class Dataset:
                 labels = [f"({lo}, {hi}]" for lo, hi in zip(edges[:-1], edges[1:])]
         if len(labels) != len(bs) + 1:
             raise ValueError(f"cut: need {len(bs) + 1} labels, got {len(labels)}")
-        c = F.col(col)
+        c = _qcol(col)
         expr = None
         for b, lab in zip(bs, labels[:-1]):
             cond = c < F.lit(b) if left_closed else c <= F.lit(b)
@@ -1409,27 +1407,27 @@ class Dataset:
         breaks — q−1 scalars — then the same map-only CASE as :meth:`cut`)."""
         probs = [i / q for i in range(1, q)]
         row = self._df.agg(
-            *[F.percentile(col, F.lit(p)).alias(f"b{i}") for i, p in enumerate(probs)]
+            *[F.percentile(_qcol(col), F.lit(p)).alias(f"b{i}") for i, p in enumerate(probs)]
         ).first()
         return self.cut(col, [row[f"b{i}"] for i in range(len(probs))], labels=labels, out_col=out_col)
 
     def value_counts(self, col: str, sort: bool = True) -> DataFrame:
         """Frequency table of one column (polars ``value_counts``):
         ``(col, count)``, most frequent first with value tie-break."""
-        out = self._df.groupBy(col).agg(F.count("*").alias("count"))
+        out = self._df.groupBy(_qcol(col)).agg(F.count("*").alias("count"))
         if sort:
-            out = out.orderBy(F.col("count").desc(), F.col(col).asc_nulls_last())
+            out = out.orderBy(F.col("count").desc(), _qcol(col).asc_nulls_last())
         return out
 
     def mode(self, col: str) -> DataFrame:
         """All modal values of one column (polars ``mode``: every value
         tied for the highest frequency). Two aggregates, no collect of
         data rows."""
-        counts = self._df.groupBy(col).agg(F.count("*").alias("count"))
+        counts = self._df.groupBy(_qcol(col)).agg(F.count("*").alias("count"))
         top = counts.agg(F.max("count").alias("mx"))
         return (
             counts.join(F.broadcast(top), on=counts["count"] == top["mx"], how="inner")
-            .select(col)
+            .select(_qcol(col))
         )
 
     def corr(self, col1: str, col2: str) -> float:
@@ -1437,13 +1435,13 @@ class Dataset:
         ``pl.corr``). One aggregate job — Catalyst's ``corr`` is a
         single-pass mergeable accumulator (co-moments), so this scales as
         a plain partial+final aggregation."""
-        return self._df.agg(F.corr(col1, col2).alias("c")).first()["c"]
+        return self._df.agg(F.corr(_qcol(col1), _qcol(col2)).alias("c")).first()["c"]
 
     def cov(self, col1: str, col2: str, ddof: int = 1) -> float:
         """Sample (``ddof=1``) or population (``ddof=0``) covariance of
         two columns (polars ``cov``)."""
         fn = F.covar_samp if ddof else F.covar_pop
-        return self._df.agg(fn(col1, col2).alias("c")).first()["c"]
+        return self._df.agg(fn(_qcol(col1), _qcol(col2)).alias("c")).first()["c"]
 
     def corr_matrix(self, *cols) -> DataFrame:
         """Pairwise Pearson correlation matrix over ``cols`` (default:
@@ -1454,7 +1452,7 @@ class Dataset:
         aggs = []
         for i, a in enumerate(cols):
             for b in cols[i:]:
-                aggs.append(F.corr(a, b).alias(f"{a}::{b}"))
+                aggs.append(F.corr(_qcol(a), _qcol(b)).alias(f"{a}::{b}"))
         row = self._df.agg(*aggs).first()
         spark = self._df.sparkSession
         data = []
@@ -1502,7 +1500,7 @@ class Dataset:
             if categories is not None and c in categories:
                 values = list(categories[c])
             else:
-                values = [r[0] for r in df.select(c).distinct().collect()]
+                values = [r[0] for r in df.select(_qcol(c)).distinct().collect()]
             if len(values) > 10_000:
                 raise ValueError(
                     f"to_dummies: column {c!r} has {len(values)} distinct values; "
@@ -1513,45 +1511,50 @@ class Dataset:
                 non_null = non_null[1:]
             for v in non_null:
                 new[f"{c}{separator}{v}"] = (
-                    F.when(F.col(c) == F.lit(v), 1).otherwise(0).cast("tinyint")
+                    F.when(_qcol(c) == F.lit(v), 1).otherwise(0).cast("tinyint")
                 )
             if None in values:
                 new[f"{c}{separator}null"] = (
-                    F.when(F.col(c).isNull(), 1).otherwise(0).cast("tinyint")
+                    F.when(_qcol(c).isNull(), 1).otherwise(0).cast("tinyint")
                 )
-        return self._rewrap(df.select(*out_cols, *[e.alias(n) for n, e in new.items()]))
+        return self._rewrap(
+            df.select(*map(_qcol, out_cols), *[e.alias(n) for n, e in new.items()])
+        )
 
     def is_duplicated(self, subset=None, out_col: str = "is_duplicated") -> "Dataset":
         """Boolean flag per row: does any OTHER row share its ``subset``
         values (polars ``is_duplicated``)? One count window over the
         subset keys — a single hash shuffle, no self-join."""
-        sub = _as_list(subset) or self._df.columns
-        w = Window.partitionBy(*[F.col(c) for c in sub])
-        return self._rewrap(self._df.withColumn(out_col, F.count("*").over(w) > 1))
+        return self._subset_flag(subset, out_col, lambda w: F.count("*").over(w) > 1)
 
     def is_unique(self, subset=None, out_col: str = "is_unique") -> "Dataset":
         """Negation of :meth:`is_duplicated` (polars ``is_unique``)."""
+        return self._subset_flag(subset, out_col, lambda w: F.count("*").over(w) == 1)
+
+    def _subset_flag(self, subset, out_col: str, flag) -> "Dataset":
+        """``flag(window partitioned by subset)`` as ``out_col``."""
         sub = _as_list(subset) or self._df.columns
-        w = Window.partitionBy(*[F.col(c) for c in sub])
-        return self._rewrap(self._df.withColumn(out_col, F.count("*").over(w) == 1))
+        return self._rewrap(
+            self._df.withColumn(out_col, flag(Window.partitionBy(*map(_qcol, sub))))
+        )
 
     def is_first_distinct(self, subset=None, out_col: str = "is_first_distinct") -> "Dataset":
         """True on the first occurrence of each distinct ``subset`` value
         in canonical (id_vars, index) order (polars ``is_first_distinct``
         — polars uses row order; Spark has none, so the canonical order
         defines "first")."""
-        sub = _as_list(subset) or self._df.columns
-        order = [F.col(c) for c in [*self._id_vars, self._index]]
-        w = Window.partitionBy(*[F.col(c) for c in sub]).orderBy(*order)
-        return self._rewrap(self._df.withColumn(out_col, F.row_number().over(w) == 1))
+        order = [*map(_qcol, [*self._id_vars, self._index])]
+        return self._subset_flag(
+            subset, out_col, lambda w: F.row_number().over(w.orderBy(*order)) == 1
+        )
 
     def is_last_distinct(self, subset=None, out_col: str = "is_last_distinct") -> "Dataset":
         """True on the last occurrence of each distinct ``subset`` value
         in canonical (id_vars, index) order."""
-        sub = _as_list(subset) or self._df.columns
-        order = [F.col(c).desc() for c in [*self._id_vars, self._index]]
-        w = Window.partitionBy(*[F.col(c) for c in sub]).orderBy(*order)
-        return self._rewrap(self._df.withColumn(out_col, F.row_number().over(w) == 1))
+        order = [_qcol(c).desc() for c in [*self._id_vars, self._index]]
+        return self._subset_flag(
+            subset, out_col, lambda w: F.row_number().over(w.orderBy(*order)) == 1
+        )
 
     def gather_every(self, n: int, offset: int = 0) -> "Dataset":
         """Every ``n``-th row in canonical (id_vars, index) order starting
@@ -1562,13 +1565,7 @@ class Dataset:
         map), so no stage sees more than one partition's rows."""
         if n < 1:
             raise ValueError("gather_every: n must be >= 1")
-        from polars_dataset_spark.functions.packing import _global_prefix_sum
-
-        order_cols = [*self._id_vars, self._index]
-        parts = self._df.sparkSession.sparkContext.defaultParallelism
-        d = _global_prefix_sum(
-            self._df.withColumn("__one", F.lit(1)), "__one", order_cols, max(parts, 1)
-        )
+        d = _positions(self._df, [*self._id_vars, self._index])
         keep = ((F.col("__cum") - 1 - offset) % n == 0) & (F.col("__cum") - 1 >= offset)
         return self._rewrap(d.filter(keep).drop("__one", "__cum", "__pid"))
 
@@ -1601,7 +1598,7 @@ class Dataset:
         stays in codegen."""
         cols = list(cols) or self.value_vars
         expr = functools.reduce(
-            lambda a, b: a + b, [F.coalesce(F.col(c), F.lit(0)) for c in cols]
+            lambda a, b: a + b, [F.coalesce(_qcol(c), F.lit(0)) for c in cols]
         )
         return self._rewrap(self._df.withColumn(out_col, expr))
 
@@ -1611,11 +1608,11 @@ class Dataset:
         count)."""
         cols = list(cols) or self.value_vars
         total = functools.reduce(
-            lambda a, b: a + b, [F.coalesce(F.col(c).cast("double"), F.lit(0.0)) for c in cols]
+            lambda a, b: a + b, [F.coalesce(_qcol(c).cast("double"), F.lit(0.0)) for c in cols]
         )
         n = functools.reduce(
             lambda a, b: a + b,
-            [F.when(F.col(c).isNotNull(), 1).otherwise(0) for c in cols],
+            [F.when(_qcol(c).isNotNull(), 1).otherwise(0) for c in cols],
         )
         return self._rewrap(
             self._df.withColumn(out_col, F.when(n > 0, total / n))
@@ -1625,19 +1622,19 @@ class Dataset:
         """Row-wise minimum (polars ``min_horizontal``); ``least`` skips
         nulls like polars does."""
         cols = list(cols) or self.value_vars
-        return self._rewrap(self._df.withColumn(out_col, F.least(*[F.col(c) for c in cols])))
+        return self._rewrap(self._df.withColumn(out_col, F.least(*map(_qcol, cols))))
 
     def max_horizontal(self, *cols, out_col: str = "max_horizontal") -> "Dataset":
         """Row-wise maximum (polars ``max_horizontal``)."""
         cols = list(cols) or self.value_vars
-        return self._rewrap(self._df.withColumn(out_col, F.greatest(*[F.col(c) for c in cols])))
+        return self._rewrap(self._df.withColumn(out_col, F.greatest(*map(_qcol, cols))))
 
     def search_sorted(self, col: str, value) -> int:
         """Insertion index of ``value`` in ``col``'s sorted order (polars
         ``search_sorted``, side="left"): the number of values strictly
         below. One counting aggregate — no sort, no collect."""
         return self._df.agg(
-            F.count(F.when(F.col(col) < F.lit(value), 1)).alias("n")
+            F.count(F.when(_qcol(col) < F.lit(value), 1)).alias("n")
         ).first()["n"]
 
     def hash_rows(self, subset=None, out_col: str = "row_hash", seed: int = 42) -> "Dataset":
@@ -1646,7 +1643,7 @@ class Dataset:
         Python in the loop."""
         sub = _as_list(subset) or self._df.columns
         return self._rewrap(
-            self._df.withColumn(out_col, F.xxhash64(*[F.col(c) for c in sub], F.lit(seed)))
+            self._df.withColumn(out_col, F.xxhash64(*map(_qcol, sub), F.lit(seed)))
         )
 
     def upsample(self, every: float = 1.0) -> "Dataset":
@@ -1658,14 +1655,14 @@ class Dataset:
         integer-valued indexes (grid points are ``min + i·every``)."""
         ids = list(self._id_vars)
         idx = self._index
-        b = self._df.groupBy(*ids).agg(
-            F.min(idx).alias("__mn"), F.max(idx).alias("__mx")
+        b = self._df.groupBy(*map(_qcol, ids)).agg(
+            F.min(_qcol(idx)).alias("__mn"), F.max(_qcol(idx)).alias("__mx")
         )
         n = F.floor((F.col("__mx") - F.col("__mn")) / F.lit(float(every))).cast("long")
         grid = (
-            b.select(*ids, "__mn", F.explode(F.sequence(F.lit(0).cast("long"), n)).alias("__i"))
+            b.select(*map(_qcol, ids), "__mn", F.explode(F.sequence(F.lit(0).cast("long"), n)).alias("__i"))
             .select(
-                *ids,
+                *map(_qcol, ids),
                 (F.col("__mn") + F.col("__i").cast("double") * F.lit(float(every)))
                 .cast(self._df.schema[idx].dataType)
                 .alias(idx),
@@ -1739,21 +1736,9 @@ class Dataset:
     def unnest(self, *cols) -> "Dataset":
         """Flatten struct columns to ``{name}.{field}`` scalars (polars
         ``unnest``); omit ``cols`` to flatten every struct column."""
-        from polars_dataset_spark.operators.structs import unnest_structs
+        from polars_dataset_spark.operators.structs import _flatten
 
-        if not cols:
-            flat, _ = unnest_structs(self._df)
-            return self._rewrap(flat)
-        out_cols = []
-        for field in self._df.schema.fields:
-            if field.name in cols and isinstance(field.dataType, T.StructType):
-                for sub in field.dataType.fields:
-                    out_cols.append(
-                        F.col(f"`{field.name}`.`{sub.name}`").alias(f"{field.name}.{sub.name}")
-                    )
-            else:
-                out_cols.append(F.col(f"`{field.name}`"))
-        return self._rewrap(self._df.select(*out_cols))
+        return self._rewrap(_flatten(self._df, cols)[0])
 
     def tail(self, n: int = 5) -> "Dataset":
         """Last n rows in canonical (id_vars, index) order: one count job
@@ -1767,13 +1752,7 @@ class Dataset:
         no implicit row order — defined over (id_vars, index)). Uses the
         two-pass distributed prefix sum instead of a single-partition
         global window, so positional slicing scales to any row count."""
-        from polars_dataset_spark.functions.packing import _global_prefix_sum
-
-        order_cols = [*self._id_vars, self._index]
-        parts = self._df.sparkSession.sparkContext.defaultParallelism
-        d = _global_prefix_sum(
-            self._df.withColumn("__one", F.lit(1)), "__one", order_cols, max(parts, 1)
-        )
+        d = _positions(self._df, [*self._id_vars, self._index])
         return self._rewrap(
             d.filter((F.col("__cum") - 1).between(offset, offset + length - 1)).drop(
                 "__one", "__cum", "__pid"
@@ -1792,31 +1771,19 @@ class Dataset:
         two counts + a join): prefer a keyed ``join``; the reference's
         own internal use (select_data) reduces to a plain projection and
         avoids this path."""
-        from polars_dataset_spark.functions.packing import _global_prefix_sum
-
         other_df = other._df if isinstance(other, Dataset) else other
         n_self, n_other = self._df.count(), other_df.count()
         if n_self != n_other:
             raise ValueError(f"hstack: row counts differ ({n_self} vs {n_other})")
-        parts = max(self._df.sparkSession.sparkContext.defaultParallelism, 1)
-        a = _global_prefix_sum(
-            self._df.withColumn("__one", F.lit(1)),
-            "__one",
-            [*self._id_vars, self._index],
-            parts,
-        ).withColumnRenamed("__cum", "__pos").drop("__one", "__pid")
-        b = _global_prefix_sum(
-            other_df.withColumn("__one", F.lit(1)),
-            "__one",
-            list(other_df.columns),
-            parts,
-        ).withColumnRenamed("__cum", "__pos").drop("__one", "__pid")
+        a = _positions(self._df, [*self._id_vars, self._index])
+        b = _positions(other_df, other_df.columns)
+        a, b = (d.withColumnRenamed("__cum", "__pos").drop("__one", "__pid") for d in (a, b))
         return self._rewrap(a.join(b, on="__pos", how="inner").drop("__pos"))
 
     def approx_n_unique(self, *cols) -> DataFrame:
         cols = cols or tuple(self._df.columns)
         return self._df.agg(
-            *[F.approx_count_distinct(c).alias(f"{c}_approx_n_unique") for c in cols]
+            *[F.approx_count_distinct(_qcol(c)).alias(f"{c}_approx_n_unique") for c in cols]
         )
 
     def _agg_value_vars(self, fn) -> DataFrame:
@@ -1825,7 +1792,7 @@ class Dataset:
             for f in self._df.schema.fields
             if f.name in self.value_vars and isinstance(f.dataType, T.NumericType)
         ]
-        return self._df.agg(*[fn(c).alias(c) for c in numeric])
+        return self._df.agg(*[fn(_qcol(c)).alias(c) for c in numeric])
 
     def sum(self) -> DataFrame:
         """Single-row frame of per-column sums over numeric value_vars
@@ -1883,15 +1850,15 @@ class Dataset:
             raise ValueError(f"bins must be >= 1, got {bins}")
         if lower is None or upper is None:
             row = self._df.agg(
-                F.min(F.col(col).cast("double")).alias("lo"),
-                F.max(F.col(col).cast("double")).alias("hi"),
+                F.min(_qcol(col).cast("double")).alias("lo"),
+                F.max(_qcol(col).cast("double")).alias("hi"),
             ).first()
             lower = float(row["lo"]) if lower is None else lower
             upper = float(row["hi"]) if upper is None else upper
         if not upper > lower:
             raise ValueError(f"upper ({upper}) must exceed lower ({lower})")
         width = (upper - lower) / bins
-        x = F.col(col).cast("double")
+        x = _qcol(col).cast("double")
         bin_id = F.least(
             F.floor((x - F.lit(lower)) / F.lit(width)).cast("long"),
             F.lit(bins - 1),
@@ -1955,8 +1922,8 @@ class Dataset:
         if not int_cols:
             return self
         row = self._df.agg(
-            *[F.min(c).alias(f"mn_{c}") for c in int_cols],
-            *[F.max(c).alias(f"mx_{c}") for c in int_cols],
+            *[F.min(_qcol(c)).alias(f"mn_{c}") for c in int_cols],
+            *[F.max(_qcol(c)).alias(f"mx_{c}") for c in int_cols],
         ).first()
         casts = {}
         for c in int_cols:
@@ -1969,7 +1936,7 @@ class Dataset:
                 ("int", -2147483648, 2147483647),
             ):
                 if lo <= mn and mx <= hi:
-                    casts[c] = F.col(c).cast(t)
+                    casts[c] = _qcol(c).cast(t)
                     break
         return self._rewrap(self._df.withColumns(casts)) if casts else self
 
@@ -1990,14 +1957,14 @@ class Dataset:
         ``index_start`` plus the id_vars; call ``.agg(...)`` on it."""
         dt = self._df.schema[self._index].dataType
         if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-            win = F.window(self._index, period or every, every)
+            win = F.window(_qcol(self._index), period or every, every)
             keyed = self._df.withColumn("__w", win).withColumn(
                 "index_start", F.col("__w.start")
             ).drop("__w")
         elif period is None or float(period) == float(every):
             every = float(every)
             bucket = (
-                F.floor((F.col(self._index) - F.lit(offset)) / F.lit(every)) * F.lit(every)
+                F.floor((_qcol(self._index) - F.lit(offset)) / F.lit(every)) * F.lit(every)
                 + F.lit(offset)
             )
             keyed = self._df.withColumn("index_start", bucket)
@@ -2005,7 +1972,7 @@ class Dataset:
             every, period = float(every), float(period)
             if period < every:
                 raise ValueError("group_by_dynamic: period must be >= every")
-            x = F.col(self._index)
+            x = _qcol(self._index)
             # covering starts s = offset + k·every with x - period < s <= x
             k_lo = F.floor((x - F.lit(period) - F.lit(offset)) / F.lit(every)) + 1
             k_hi = F.floor((x - F.lit(offset)) / F.lit(every))
@@ -2014,7 +1981,7 @@ class Dataset:
                 lambda k: k.cast("double") * F.lit(every) + F.lit(offset),
             )
             keyed = self._df.withColumn("index_start", F.explode(starts))
-        return keyed.groupBy(*self._id_vars, "index_start")
+        return keyed.groupBy(*map(_qcol, self._id_vars), "index_start")
 
     # -- operator methods (reference calls these on the Dataset itself) ------
 

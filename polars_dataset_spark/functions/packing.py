@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_dataset_spark.core import _qcol
 from polars_dataset_spark.session import pin
 
 __all__ = ["pack_sequences"]
@@ -54,12 +55,12 @@ def _global_prefix_sum(
     results; use ``checkpoint()`` to reliable storage for long-lived
     results on a real cluster)."""
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    d = df.repartitionByRange(num_parts, *[F.col(c) for c in order_cols]).withColumn(
+    d = df.repartitionByRange(num_parts, *map(_qcol, order_cols)).withColumn(
         "__pid", F.spark_partition_id()
     )
     d = pin(d)  # pin partition ids across reuse
     totals = (
-        d.groupBy("__pid").agg(F.sum(F.col(tokens_col)).alias("__t")).collect()
+        d.groupBy("__pid").agg(F.sum(_qcol(tokens_col)).alias("__t")).collect()
     )
     offsets = {}
     acc = 0
@@ -76,14 +77,14 @@ def _global_prefix_sum(
     ) if offsets else F.lit(0)
     w = (
         Window.partitionBy("__pid")
-        .orderBy(*[F.col(c) for c in order_cols])
+        .orderBy(*map(_qcol, order_cols))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # coalesce: a window frame whose tokens are all NULL (e.g. a sparse
     # range partition whose first rows carry null tokens) sums to NULL,
     # not 0 — null tokens contribute 0 to the running total
     return d.withColumn(
-        "__cum", F.coalesce(F.sum(F.col(tokens_col)).over(w), F.lit(0)) + off
+        "__cum", F.coalesce(F.sum(_qcol(tokens_col)).over(w), F.lit(0)) + off
     )
 
 
@@ -111,19 +112,19 @@ def pack_sequences(
         raise ValueError("budget must be >= 1")
     if stream_cols:
         w = (
-            Window.partitionBy(*[F.col(c) for c in stream_cols])
-            .orderBy(F.col(order_col))
+            Window.partitionBy(*map(_qcol, stream_cols))
+            .orderBy(_qcol(order_col))
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         out = df.withColumn(
-            "__cum", F.coalesce(F.sum(F.col(tokens_col)).over(w), F.lit(0))
+            "__cum", F.coalesce(F.sum(_qcol(tokens_col)).over(w), F.lit(0))
         )
     else:
         parts = df.sparkSession.sparkContext.defaultParallelism
         out = _global_prefix_sum(df, tokens_col, order_col, max(parts, 1))
     # null tokens contribute 0, so a null-token doc still has a
     # well-defined start position (= the running total itself)
-    before = F.col("__cum") - F.coalesce(F.col(tokens_col), F.lit(0))
+    before = F.col("__cum") - F.coalesce(_qcol(tokens_col), F.lit(0))
     return (
         out.withColumns(
             {

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_dataset_spark.core import _qcol
+
 __all__ = [
     "hash_sample",
     "hash_sample_by",
@@ -34,7 +36,7 @@ __all__ = [
 
 
 def _hash_key(id_col: str, salt: str) -> "F.Column":
-    return F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    return F.md5(F.concat(F.lit(salt), _qcol(id_col).cast("string")))
 
 
 def portable_hash_long(id_col: str, salt: str = "") -> "F.Column":
@@ -173,8 +175,8 @@ def stratified_sample(
     and retries; changing ``salt`` rotates which rows are kept."""
     if quota < 1:
         raise ValueError("quota must be >= 1")
-    w = Window.partitionBy(*[F.col(c) for c in strata]).orderBy(
-        _hash_key(id_col, salt), F.col(id_col)
+    w = Window.partitionBy(*map(_qcol, strata)).orderBy(
+        _hash_key(id_col, salt), _qcol(id_col)
     )
     return (
         df.withColumn("__rn", F.row_number().over(w))

@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.core import Dataset, _qcol, _redot, _undot
 
 __all__ = ["join_asof"]
 
@@ -48,8 +48,8 @@ def _numeric_key(df: DataFrame, name: str):
 
     dt = df.schema[name].dataType
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        return F.unix_micros(F.col(name).cast("timestamp")) / F.lit(1e6)
-    return F.col(name).cast("double")
+        return F.unix_micros(_qcol(name).cast("timestamp")) / F.lit(1e6)
+    return _qcol(name).cast("double")
 
 
 def join_asof(
@@ -104,7 +104,7 @@ def join_asof(
     l_sel = ldf.select(
         F.lit(1).alias("__side"),
         _numeric_key(ldf, on).alias("__key"),
-        *[F.col(c) for c in lcols],
+        *map(_qcol, lcols),
         F.lit(None).cast("double").alias("__rkey"),
         *[F.lit(None).cast(rdf.schema[c].dataType).alias(renames[c]) for c in payload],
     )
@@ -112,11 +112,11 @@ def join_asof(
         F.lit(0).alias("__side"),
         _numeric_key(rdf, r_on).alias("__key"),
         *[
-            (F.col(c) if c in by else F.lit(None).cast(ldf.schema[c].dataType)).alias(c)
+            (_qcol(c) if c in by else F.lit(None).cast(ldf.schema[c].dataType)).alias(c)
             for c in lcols
         ],
         _numeric_key(rdf, r_on).alias("__rkey"),
-        *[F.col(c).alias(renames[c]) for c in payload],
+        *[_qcol(c).alias(renames[c]) for c in payload],
     )
     unioned = l_sel.unionByName(r_sel)
 
@@ -124,7 +124,7 @@ def join_asof(
     # one exchange, two in-partition window sorts — then picks per row
     # whichever match is closer (ties go backward, matching the
     # broadcast path's searchsorted tie rule).
-    base = Window.partitionBy(*by) if by else Window.partitionBy()
+    base = Window.partitionBy(*map(_qcol, by))
     wb = base.orderBy(F.col("__key").asc(), F.col("__side").asc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -135,12 +135,12 @@ def join_asof(
     def _carry(w, tag):
         cols = [F.last("__rkey", ignorenulls=True).over(w).alias(f"__{tag}key")]
         cols += [
-            F.last(renames[c], ignorenulls=True).over(w).alias(f"__{tag}_{renames[c]}")
+            F.last(_qcol(renames[c]), ignorenulls=True).over(w).alias(f"__{tag}_{renames[c]}")
             for c in payload
         ]
         return cols
 
-    sel = ["__side", "__key", *lcols]
+    sel = ["__side", "__key", *map(_qcol, lcols)]
     if strategy in ("backward", "nearest"):
         sel += _carry(wb, "b")
     if strategy in ("forward", "nearest"):
@@ -150,10 +150,10 @@ def join_asof(
 
     if strategy == "backward":
         mkey = F.col("__bkey")
-        mpay = {c: F.col(f"__b_{renames[c]}") for c in payload}
+        mpay = {c: _qcol(f"__b_{renames[c]}") for c in payload}
     elif strategy == "forward":
         mkey = F.col("__fkey")
-        mpay = {c: F.col(f"__f_{renames[c]}") for c in payload}
+        mpay = {c: _qcol(f"__f_{renames[c]}") for c in payload}
     else:
         bkey, fkey = F.col("__bkey"), F.col("__fkey")
         use_b = bkey.isNotNull() & (
@@ -162,8 +162,8 @@ def join_asof(
         )
         mkey = F.when(use_b, bkey).otherwise(fkey)
         mpay = {
-            c: F.when(use_b, F.col(f"__b_{renames[c]}")).otherwise(
-                F.col(f"__f_{renames[c]}")
+            c: F.when(use_b, _qcol(f"__b_{renames[c]}")).otherwise(
+                _qcol(f"__f_{renames[c]}")
             )
             for c in payload
         }
@@ -172,7 +172,7 @@ def join_asof(
     if tolerance is not None:
         matched = matched & (F.abs(F.col("__key") - mkey) <= F.lit(float(tolerance)))
     out = out.select(
-        *lcols,
+        *map(_qcol, lcols),
         *[F.when(matched, mpay[c]).alias(renames[c]) for c in payload],
     )
     if was_dataset:
@@ -191,7 +191,7 @@ def _collect_right(right, on: str, by, right_on: str | None):
     by = [by] if isinstance(by, str) else list(by or [])
     payload = [c for c in rdf.columns if c != r_on and c not in by]
     rp = (
-        rdf.select(*by, _numeric_key(rdf, r_on).alias("__k"), *payload)
+        rdf.select(*map(_qcol, by), _numeric_key(rdf, r_on).alias("__k"), *map(_qcol, payload))
         .limit(_BROADCAST_LIMIT + 1)
         .toPandas()
     )
@@ -240,15 +240,20 @@ def _join_asof_broadcast(
     out_fields = list(ldf.schema.fields) + [
         T.StructField(renames[c], rdf.schema[c].dataType, True) for c in payload
     ]
-    out_schema = T.StructType(out_fields)
+    out_schema = T.StructType(
+        [T.StructField(_undot(f.name), f.dataType, f.nullable) for f in out_fields]
+    )
 
+    # mapInPandas gets dot-free names, restored on its output
     keyed = ldf.withColumn("__k", _numeric_key(ldf, on))
+    keyed = keyed.toDF(*map(_undot, keyed.columns))
 
     # batch-vectorised searchsorted per key group, not per row (map_rows does not fit)
     lookup = functools.partial(
         _asof_lookup, b_groups, by, payload, renames, strategy, tolerance
     )
     result = keyed.mapInPandas(lookup, schema=out_schema)
+    result = result.toDF(*map(_redot, result.columns))
     if was_dataset:
         return left._rewrap(result)
     return result
@@ -283,6 +288,7 @@ def _asof_lookup(b_groups, by, payload, renames, strategy, tolerance, batches):
     grp = b_groups.value
     for pdf in batches:
         pdf = pdf.reset_index(drop=True)
+        pdf.columns = [_redot(c) for c in pdf.columns]
         out = pdf.copy()
         kq = pdf["__k"].to_numpy(np.float64)
         n = len(pdf)
@@ -301,4 +307,6 @@ def _asof_lookup(b_groups, by, payload, renames, strategy, tolerance, batches):
                 col = out[renames[c]].to_numpy()
                 col[rows_pos[valid]] = pay[c][il[valid]]
                 out[renames[c]] = col
-        yield out.drop(columns=["__k"])
+        out = out.drop(columns=["__k"])
+        out.columns = [_undot(c) for c in out.columns]
+        yield out

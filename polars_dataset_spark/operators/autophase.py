@@ -25,14 +25,14 @@ import math
 
 from pyspark.sql import functions as F
 
-from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.core import Dataset, _qcol
 
 __all__ = ["autophase", "zero_quadrature", "fit_phase"]
 
 
 def fit_phase(ds: Dataset, x_col: str, y_col: str) -> float:
     """The global phase φ minimizing Σ(X sinφ + Y cosφ)², closed form."""
-    X, Y = F.col(x_col), F.col(y_col)
+    X, Y = _qcol(x_col), _qcol(y_col)
     row = ds.df.agg(
         F.sum(X * X).alias("sxx"),
         F.sum(Y * Y).alias("syy"),
@@ -56,7 +56,7 @@ def autophase(ds: Dataset, x_col: str, y_col: str, phi: float | None = None) -> 
     if phi is None:
         phi = fit_phase(ds, x_col, y_col)
     s, c = math.sin(phi), math.cos(phi)
-    X, Y = F.col(x_col), F.col(y_col)
+    X, Y = _qcol(x_col), _qcol(y_col)
     return ds.with_columns(
         **{
             x_col: (X * F.lit(c) - Y * F.lit(s)).alias(x_col),

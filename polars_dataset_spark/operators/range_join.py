@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polars_dataset_spark.core import _qcol, _qname
+
 __all__ = ["range_join"]
 
 
@@ -49,8 +51,8 @@ def range_join(
 
     def to_num(df: DataFrame, c: str) -> Column:
         if dict(df.dtypes)[c].startswith("timestamp"):
-            return F.unix_micros(F.col(c).cast("timestamp"))
-        return F.col(c).cast("double")
+            return F.unix_micros(_qcol(c).cast("timestamp"))
+        return _qcol(c).cast("double")
 
     p_num = to_num(points, point_col)
     s_num = to_num(intervals, start_col)
@@ -64,7 +66,7 @@ def range_join(
 
     def num_ref(df: DataFrame, src: DataFrame, c: str) -> Column:
         # disambiguated reference into a join side (names may collide)
-        ref = df[c]
+        ref = df[_qname(c)]
         if dict(src.dtypes)[c].startswith("timestamp"):
             return F.unix_micros(ref.cast("timestamp"))
         return ref.cast("double")

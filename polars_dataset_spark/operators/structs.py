@@ -18,11 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["unnest_structs", "rebuild_structs", "map_traces"]
+from polars_dataset_spark.core import _qcol, _qname, _redot, _undot
 
-# applyInPandas resolves its input with df[col], which parses "." as struct
-# access: map_traces hands it dot-free names and its runner restores them.
-_DOT = "__dot__"
+__all__ = ["unnest_structs", "rebuild_structs", "map_traces"]
 
 
 def map_traces(ds, kernel, out_fields, index: str | None = None):
@@ -52,7 +50,8 @@ def map_traces(ds, kernel, out_fields, index: str | None = None):
     run = functools.partial(
         _run_trace, kernel, ids, [f.name for f in fields], [f.name for f in out]
     )
-    result = flat.toDF(*[c.replace(".", _DOT) for c in flat.columns]).groupBy(*ids)
+    # applyInPandas gets dot-free names, which its runner restores
+    result = flat.toDF(*map(_undot, flat.columns)).groupBy(*map(_undot, ids))
     result = result.applyInPandas(
         run, schema=T.StructType([flat.schema[c] for c in ids] + out)
     )
@@ -60,7 +59,7 @@ def map_traces(ds, kernel, out_fields, index: str | None = None):
 
 
 def _run_trace(kernel, ids, names, out_names, pdf):
-    pdf.columns = [c.replace(_DOT, ".") for c in pdf.columns]
+    pdf.columns = [_redot(c) for c in pdf.columns]
     trace = pdf[names].sort_values(names[0], ignore_index=True)
     out = pd.DataFrame(kernel(trace), columns=out_names)
     for i, k in enumerate(ids):
@@ -74,16 +73,23 @@ def unnest_structs(df: DataFrame) -> tuple[DataFrame, dict[str, list[str]]]:
     Returns the flattened frame and a ``{struct_name: [field, ...]}`` map
     for :func:`rebuild_structs`.
     """
+    return _flatten(df, ())
+
+
+def _flatten(df: DataFrame, names) -> tuple[DataFrame, dict[str, list[str]]]:
+    """:func:`unnest_structs` of the structs in ``names`` (all when empty)."""
     schema_map: dict[str, list[str]] = {}
     cols = []
     for field in df.schema.fields:
-        if isinstance(field.dataType, T.StructType):
+        if isinstance(field.dataType, T.StructType) and (not names or field.name in names):
             subfields = [f.name for f in field.dataType.fields]
             schema_map[field.name] = subfields
             for sub in subfields:
-                cols.append(F.col(f"`{field.name}`.`{sub}`").alias(f"{field.name}.{sub}"))
+                cols.append(
+                    F.col(f"{_qname(field.name)}.{_qname(sub)}").alias(f"{field.name}.{sub}")
+                )
         else:
-            cols.append(F.col(f"`{field.name}`"))
+            cols.append(_qcol(field.name))
     return df.select(*cols), schema_map
 
 
@@ -102,9 +108,9 @@ def rebuild_structs(df: DataFrame, schema_map: dict[str, list[str]]) -> DataFram
                     seen.add(name)
                     out_cols.append(
                         F.struct(
-                            *[F.col(f"`{name}.{f}`").alias(f) for f in schema_map[name]]
+                            *[_qcol(f"{name}.{f}").alias(f) for f in schema_map[name]]
                         ).alias(name)
                     )
                 continue
-        out_cols.append(F.col(f"`{c}`"))
+        out_cols.append(_qcol(c))
     return df.select(*out_cols)

@@ -7,6 +7,12 @@ setting is the one you'd want on a real cluster too: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow for the
 pandas-UDF kernels, UTC session timezone so timestamp semantics are
 oracle-stable.
+
+PySpark's call-site capture is off: on pyspark 4.1 it wraps every
+``Column``/``functions`` call (``pyspark/errors/utils.py:_with_origin``)
+in Py4J round trips that record the Python file:line, half of a query's
+build round trips. Analysis errors lose that file:line, which nothing
+here reads.
 """
 
 from __future__ import annotations
@@ -63,6 +69,7 @@ def _builder(app_name: str) -> "SparkSession.Builder":
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # connected_components pins every round: delete a reliable
         # checkpoint's files once its DataFrame is garbage-collected
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
@@ -185,7 +192,10 @@ def ensure_parallelism(df):
 def apply_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine defaults to an externally provided
     session (e.g. one a host application built). Only touches dynamic
-    confs, plus the Python workers' path to this package."""
+    confs, plus the Python workers' path to this package.
+
+    Call-site capture cannot be turned off reliably here: PySpark caches
+    its flag at the process's first ``Column`` call (``is_debugging_enabled``)."""
     _share_package_path(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -18,6 +18,7 @@ from polars_dataset_spark.operators import (
     unnest_structs,
     zero_quadrature,
 )
+from polars_dataset_spark.operators.merge import snapshot_diff
 
 
 @pytest.fixture(scope="module")
@@ -423,3 +424,19 @@ def test_dataset_smooth_savgol(spark):
     out = ds.smooth("y", window=7, polyorder=2).df.orderBy("g", "x").toPandas()
     # polynomials of degree <= polyorder pass through unchanged, per trace
     assert np.allclose(out["y_smooth"].to_numpy(), pdf.sort_values(["g", "x"])["y"].to_numpy(), atol=1e-9)
+
+
+def test_snapshot_diff_key_only(spark):
+    old = spark.createDataFrame([(1,), (2,)], "k long")
+    new = spark.createDataFrame([(2,), (3,)], "k long")
+    out = snapshot_diff(old, new, on="k")
+    got = {(r["k"], r["change_type"]) for r in out.collect()}
+    assert got == {(1, "delete"), (3, "insert")}
+    assert out.columns == ["k", "change_type"]
+
+
+def test_snapshot_diff_dtype_mismatch_raises(spark):
+    old = spark.createDataFrame([(1, 1)], "k long, v long")
+    new = spark.createDataFrame([(1, "1")], "k long, v string")
+    with pytest.raises(ValueError, match="schemas differ on columns \\['v'\\]"):
+        snapshot_diff(old, new, on="k")

@@ -187,3 +187,19 @@ def test_snapshot_diff_tags(spark):
     import pytest as _pt
     with _pt.raises(ValueError):
         snapshot_diff(old, new.withColumnRenamed("v", "w"), on="k")
+
+
+def test_global_prefix_sum_null_tokens(spark):
+    # a null token value inside some range partition must contribute 0,
+    # not crash the driver-side offset fold (TypeError: int + NoneType)
+    rows = [(i, None if i % 7 == 3 else i % 5 + 1) for i in range(100)]
+    df = spark.createDataFrame(rows, "doc_id long, toks long")
+    out = pack_sequences(df, budget=10, tokens_col="toks", order_col="doc_id")
+    pdf = out.orderBy("doc_id").toPandas()
+    assert len(pdf) == 100
+    # running total equals the null-skipping cumulative sum
+    expect = 0
+    for _, r in pdf.iterrows():
+        if r["toks"] is not None and not (r["toks"] != r["toks"]):
+            expect += int(r["toks"])
+        assert int(r["cum_tokens"]) == expect

@@ -51,6 +51,15 @@ def test_get_spark_cleans_reliable_checkpoints(spark):
     assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
 
 
+def test_get_spark_turns_call_site_capture_off(spark):
+    # PySpark's per-Column-call capture of the Python call site costs
+    # several Py4J round trips per expression node
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", "true") == "false"
+    assert not is_debugging_enabled()
+
+
 def test_workers_import_package_from_any_cwd(tmp_path):
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_LOCAL_DIRS"] = str(tmp_path / "local")

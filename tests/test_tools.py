@@ -1,52 +1,5 @@
-"""Regression tests for the round-2 ADVICE findings: null tokens in the
-global prefix sum, key-only / dtype-mismatched snapshot_diff, and 0-row
-no-header transpose."""
-
-import pytest
-
-from polars_dataset_spark.core import Dataset
-from polars_dataset_spark.functions import pack_sequences
-from polars_dataset_spark.operators.merge import snapshot_diff
-
-
-def test_global_prefix_sum_null_tokens(spark):
-    # a null token value inside some range partition must contribute 0,
-    # not crash the driver-side offset fold (TypeError: int + NoneType)
-    rows = [(i, None if i % 7 == 3 else i % 5 + 1) for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, toks long")
-    out = pack_sequences(df, budget=10, tokens_col="toks", order_col="doc_id")
-    pdf = out.orderBy("doc_id").toPandas()
-    assert len(pdf) == 100
-    # running total equals the null-skipping cumulative sum
-    expect = 0
-    for _, r in pdf.iterrows():
-        if r["toks"] is not None and not (r["toks"] != r["toks"]):
-            expect += int(r["toks"])
-        assert int(r["cum_tokens"]) == expect
-
-
-def test_snapshot_diff_key_only(spark):
-    old = spark.createDataFrame([(1,), (2,)], "k long")
-    new = spark.createDataFrame([(2,), (3,)], "k long")
-    out = snapshot_diff(old, new, on="k")
-    got = {(r["k"], r["change_type"]) for r in out.collect()}
-    assert got == {(1, "delete"), (3, "insert")}
-    assert out.columns == ["k", "change_type"]
-
-
-def test_snapshot_diff_dtype_mismatch_raises(spark):
-    old = spark.createDataFrame([(1, 1)], "k long, v long")
-    new = spark.createDataFrame([(1, "1")], "k long, v string")
-    with pytest.raises(ValueError, match="schemas differ on columns \\['v'\\]"):
-        snapshot_diff(old, new, on="k")
-
-
-def test_transpose_empty_no_header_has_no_columns(spark):
-    df = spark.createDataFrame([], "a string, b long")
-    ds = Dataset(df, index="b")
-    out = ds.transpose(include_header=False)
-    assert out.columns == []
-    assert out.count() == 0
+"""The repository's tools: bench.py's run order and the off-scale
+fixture's letter maps."""
 
 
 def test_bench_order_unmeasured_not_tailed():
