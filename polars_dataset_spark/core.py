@@ -1660,7 +1660,9 @@ class Dataset:
         )
         n = F.floor((F.col("__mx") - F.col("__mn")) / F.lit(float(every))).cast("long")
         grid = (
-            b.select(*map(_qcol, ids), "__mn", F.explode(F.sequence(F.lit(0).cast("long"), n)).alias("__i"))
+            b.select(
+                *map(_qcol, ids), "__mn", F.explode(F.sequence(F.lit(0).cast("long"), n)).alias("__i")
+            )
             .select(
                 *map(_qcol, ids),
                 (F.col("__mn") + F.col("__i").cast("double") * F.lit(float(every)))
