@@ -849,7 +849,11 @@ def test_transpose_empty_frame(spark):
     out = ds.transpose()
     assert {r.column for r in out.collect()} == {"g", "x", "v"}
     assert ds.transpose(include_header=False).count() == 0
-    # 0 rows and no header: zero columns too
+
+
+def test_transpose_empty_no_header_has_no_columns(spark):
+    df = spark.createDataFrame([], "a string, b long")
+    ds = Dataset(df, index="b")
     out = ds.transpose(include_header=False)
     assert out.columns == []
     assert out.count() == 0
